@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from pprl_spark.spark.session import resplit
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -28,18 +30,6 @@ TABLES = (
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _resplit(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Re-split ONLY when the scan has fewer splits than the cluster has
-    slots (the whole table is 1-4 parquet splits at test scale factors,
-    which would serialize downstream gram/explode stages).  At production
-    split counts this is a no-op — an unconditional repartition would
-    instead add a full-corpus shuffle and coalesce DOWN."""
-    parallelism = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        return df.repartition(parallelism)
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -59,11 +49,10 @@ def _flagship_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pprl_spark.spark.mask import mask
     from pprl_spark.spark.match import match_lsh
 
-    docs = _resplit(
+    docs = resplit(
         _load(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("string").alias("id"), F.col("text")
         ),
-        spark,
     )
     # Config notes, tuned on the testdata similarity distribution:
     # * q=4 grams — the synthetic word-salad corpus has ~146 distinct
@@ -236,14 +225,14 @@ def distinct_users_exact(spark, sf_dir):
 def _doc_tokens(spark, sf_dir):
     from pprl_spark.spark.stats import with_tokens
 
-    return with_tokens(_resplit(_load(spark, sf_dir, "documents"), spark),
+    return with_tokens(resplit(_load(spark, sf_dir, "documents")),
                        "text", q=2, padding="_")
 
 
 def token_frequencies(spark, sf_dir):
     from pprl_spark.spark.stats import token_frequencies as tf
 
-    docs = _resplit(_load(spark, sf_dir, "documents"), spark)
+    docs = resplit(_load(spark, sf_dir, "documents"))
     return tf(docs.select("text"), "text", q=2, padding="_")
 
 
@@ -278,7 +267,7 @@ def corpus_token_stats(spark, sf_dir):
     the r3 shape ran the padded tokenizer over the corpus twice."""
     from pprl_spark.spark.stats import padded_qgram_tokens
 
-    docs = _resplit(_load(spark, sf_dir, "documents"), spark)
+    docs = resplit(_load(spark, sf_dir, "documents"))
     toks = docs.select(
         padded_qgram_tokens(F.col("text"), 2, "_").alias("tokens")
     ).localCheckpoint(eager=False)
@@ -312,9 +301,7 @@ def contamination_report_query(spark, sf_dir):
     hash-dedup, or join bug breaks the driver row."""
     from pprl_spark.spark.decontaminate import contamination_report
 
-    docs = _resplit(
-        _load(spark, sf_dir, "documents").select("doc_id", "text"), spark
-    )
+    docs = resplit(_load(spark, sf_dir, "documents").select("doc_id", "text"))
     evalset = docs.where(
         (F.col("doc_id") % 101 == 0) & (F.col("doc_id") > 0)
     ).select("text")
@@ -327,7 +314,7 @@ def contamination_report_query(spark, sf_dir):
 
 
 def dedup_exact(spark, sf_dir):
-    # deliberately NOT _resplit (r6 measured 0.50 → 0.80 s with it at
+    # deliberately NOT resplit (r6 measured 0.50 → 0.80 s with it at
     # sf1.0): the map side is one cheap hash pass, so shuffling the full
     # text round-robin first costs more than the single-split partial
     # aggregate it parallelizes; the groupBy's own exchange already
@@ -352,11 +339,11 @@ def text_quality(spark, sf_dir):
         whitespace_token_count,
     )
 
-    # _resplit: this query is a pure projection, but its regex family
+    # resplit: this query is a pure projection, but its regex family
     # (quality/PII counts + redact chain) is the second-most expensive
     # map work in the bench — on a 1-row-group parquet scan it would run
     # on ONE core (r6: the sf1.0 documents table is a single split)
-    docs = _resplit(_load(spark, sf_dir, "documents"), spark)
+    docs = resplit(_load(spark, sf_dir, "documents"))
     aug = F.concat(
         F.col("text"),
         F.lit(" contact user"), F.col("doc_id").cast("string"),
@@ -413,9 +400,9 @@ def fingerprint_jaccard(spark, sf_dir):
     from pprl_spark.spark.dedup import ngram_jaccard, qgram_tokens
     from pprl_spark.spark.webtext import remove_boilerplate_lines
 
-    # _resplit: the 3-gram tokenize + line explode otherwise serialize
+    # resplit: the 3-gram tokenize + line explode otherwise serialize
     # on the scan's single split at test scale (r6)
-    docs = _resplit(_load(spark, sf_dir, "documents"), spark)
+    docs = resplit(_load(spark, sf_dir, "documents"))
     aug_docs = docs.select(
         "doc_id",
         F.concat(
@@ -484,9 +471,9 @@ def lm_perplexity(spark, sf_dir):
 def embedding_topk(spark, sf_dir):
     from pprl_spark.spark.ann import brute_force_topk
 
-    # _resplit: the 100k-pair cosine cross join otherwise runs on the
+    # resplit: the 100k-pair cosine cross join otherwise runs on the
     # embeddings scan's single split at test scale (r6)
-    emb = _resplit(_load(spark, sf_dir, "embeddings"), spark)
+    emb = resplit(_load(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -735,11 +722,10 @@ def pprl_mask_documents(spark, sf_dir):
     from pprl_spark.config import CLKFilter, HashConfig, HashFunctionConfig, MaskConfig
     from pprl_spark.spark.mask import mask_b64
 
-    docs = _resplit(
+    docs = resplit(
         _load(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("string").alias("id"), "text"
         ),
-        spark,
     )
     cfg = MaskConfig(
         filter=CLKFilter(1024, 5),
@@ -782,7 +768,7 @@ def documents_split(spark, sf_dir):
     from pprl_spark.spark.sampling import hash_split
     from pprl_spark.spark.textstats import whitespace_token_count
 
-    docs = _resplit(_load(spark, sf_dir, "documents"), spark).select(
+    docs = resplit(_load(spark, sf_dir, "documents")).select(
         "doc_id", whitespace_token_count(F.col("text")).alias("n_tokens")
     )
     sharded = assign_shards(docs, "doc_id", "n_tokens", budget=2000)
@@ -835,7 +821,7 @@ def dedup_components(spark, sf_dir):
 def simhash_dup_pairs(spark, sf_dir):
     from pprl_spark.spark.dedup import simhash_pairs
 
-    docs = _resplit(_load(spark, sf_dir, "documents"), spark)
+    docs = resplit(_load(spark, sf_dir, "documents"))
     # 8 chunks of 8 bits: pigeonhole guarantees recall for hamming <= 7,
     # so the <= 6 threshold is exact (ADVICE r1); pushing it into
     # simhash_pairs applies it before the pair dedup
@@ -988,12 +974,6 @@ def quality_filter(spark, sf_dir):
     docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
     out = filter_documents(
         docs,
-        # ngram_mode="udf": one Arrow-vectorized Counter pass for the
-        # whole n-gram family — parity-tested field-identical to the
-        # pure-Catalyst "project" mode and the "shuffle" aggregate mode
-        # (tests/test_round6.py), measured 3x faster composed at sf0.1
-        # (2.1 s vs 6.6 s steady); the plan stays map-only either way
-        ngram_mode="udf",
         rules=FilterRules(
             min_tokens=12,
             max_tokens=60,
@@ -1314,11 +1294,10 @@ def _hardened_mask_query(spark, sf_dir, chain):
                                    MaskConfig)
     from pprl_spark.spark.mask import mask_b64
 
-    docs = _resplit(
+    docs = resplit(
         _load(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("string").alias("id"), "text"
         ),
-        spark,
     )
     cfg = MaskConfig(
         filter=CLKFilter(512, 5),
@@ -1378,11 +1357,10 @@ def pprl_mask_rbf(spark, sf_dir):
                                    RBFFilter, WeightedAttributeConfig)
     from pprl_spark.spark.mask import mask_b64
 
-    docs = _resplit(
+    docs = resplit(
         _load(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("string").alias("id"), "text", "lang"
         ),
-        spark,
     )
     cfg = MaskConfig(
         filter=RBFFilter(hash_values=4, seed=727),
@@ -1403,11 +1381,10 @@ def pprl_mask_clkrbf(spark, sf_dir):
                                    MaskConfig, WeightedAttributeConfig)
     from pprl_spark.spark.mask import mask_b64
 
-    docs = _resplit(
+    docs = resplit(
         _load(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("string").alias("id"), "text", "lang"
         ),
-        spark,
     )
     cfg = MaskConfig(
         filter=CLKRBFFilter(hash_values=3),
@@ -2195,7 +2172,7 @@ FROM decided
 
 
 def _sql_simhash_pairs() -> str:
-    """Mirror of dedup.simhash_fingerprints/simhash_pairs: md5-derived
+    """Mirror of dedup.simhash_fingerprints_udf/simhash_pairs: md5-derived
     64-bit majority-vote fingerprints (bit j = nibble j//4, in-nibble
     position 3-(j%4)), 8×8-bit chunk banding, Hamming ≤ 6."""
     sums = ",\n         ".join(

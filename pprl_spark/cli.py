@@ -257,7 +257,7 @@ def _cmd_quality(args, spark) -> None:
             else ()
         ),
     )
-    out = filter_documents(docs, rules, ngram_mode=args.ngram_mode).select(
+    out = filter_documents(docs, rules).select(
         "doc_id", "n_tokens", "lang_pred",
         F.round("quality", 6).alias("quality"),
         F.round("dup_word_fraction", 6).alias("dup_word_fraction"),
@@ -564,13 +564,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--max-dup-line-fraction", type=float, default=1.0)
     p.add_argument("--max-dup-paragraph-fraction", type=float, default=1.0)
     p.add_argument("--max-dup-line-char-fraction", type=float, default=1.0)
-    p.add_argument(
-        "--ngram-mode", choices=("project", "udf", "shuffle"), default="udf",
-        help="n-gram signal engine: 'udf' (one Arrow pass, fastest, "
-             "default), 'project' (pure Catalyst, no Python worker), "
-             "'shuffle' (explode+aggregate, for multi-GB single docs); "
-             "all three are field-identical",
-    )
     p.add_argument("--max-dup-paragraph-char-fraction", type=float,
                    default=1.0)
     p.add_argument("--gopher-ngrams", action="store_true",

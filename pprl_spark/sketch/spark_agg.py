@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..spark.session import resplit
 from .base import Sketch, deserialize
 
 __all__ = [
@@ -67,10 +68,7 @@ def prepare_input(df: DataFrame, column: str, factory: Callable[[], Sketch]) -> 
         out = df.filter(F.col(column).isNotNull()).select(
             F.col(column).cast("double").alias("__in")
         )
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if out.rdd.getNumPartitions() < parallelism:
-        out = out.repartition(parallelism)
-    return out
+    return resplit(out)
 
 
 def _partials_map(factory: Callable[[], Sketch], group_cols: list[str]):
@@ -187,10 +185,8 @@ def sketch_grouped(
     else:
         in_col = F.col(column).cast("double").alias("__in")
     prepared = df.filter(F.col(column).isNotNull()).select(*group_cols, in_col)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if prepared.rdd.getNumPartitions() < parallelism:
-        # narrow (group, 8B) rows only — see prepare_input's rationale
-        prepared = prepared.repartition(parallelism)
+    # narrow (group, 8B) rows only — see prepare_input's rationale
+    prepared = resplit(prepared)
 
     group_schema = ", ".join(
         f"{name} {dtype}" for name, dtype in prepared.select(*group_cols).dtypes
@@ -248,9 +244,7 @@ def profile_column(
     if any(m == "value" for m in modes.values()):
         cols.append(F.col(column).cast("double").alias("__value"))
     prepared = df.filter(F.col(column).isNotNull()).select(*cols)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if prepared.rdd.getNumPartitions() < parallelism:
-        prepared = prepared.repartition(parallelism)
+    prepared = resplit(prepared)
     col_for = {"hash": "__hash", "raw": "__raw", "value": "__value"}
 
     def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,26 +1,24 @@
 """Deduplication operators for web-scale training-data pipelines.
 
-Five families, each chosen to stay JVM-side (whole-stage codegen) wherever
-the semantics allow:
+Five families:
 
 * **exact** — hash-groupBy on the content (one shuffle, map-side combine).
-* **MinHash + LSH** — q-gram shingles → per-seed min of ``xxhash64(seed,
-  token)`` → band hashes → explode + self-equi-join.  Everything up to the
-  join is pure Catalyst expressions (no Python in the hot path).
+* **MinHash + LSH** — per document, one Arrow-vectorized pass turns the
+  distinct q-gram shingles into md5-derived band buckets; the banded
+  (id, band, bucket) rows then self-equi-join on (band, bucket).
 * **n-gram Jaccard** — exact verify step for candidate pairs (JVM set ops
   ``array_intersect`` / ``array_union``).
-* **SimHash** — 64-bit sign-aggregated fingerprint computed entirely
-  JVM-side: explode grams → ``md5`` → per-nibble bit votes as 64 map-side-
-  combined ``sum`` aggregations → majority bits, banded into 8×8-bit
-  chunks for Hamming-≤-k candidate joins.  md5-derived bits make the whole
-  operator DuckDB-oracle-expressible; no Python anywhere.
+* **SimHash** — 64-bit majority-vote fingerprint over the md5 bits of the
+  distinct q-grams, one Arrow-vectorized pass per document, banded into
+  8×8-bit chunks for Hamming-≤-k candidate joins.
 * **embedding cosine** — near-duplicate pairs over an embedding column via
   random-hyperplane LSH buckets + exact cosine verify (see also ann.py).
 
 All shuffles key on content-derived hashes → uniformly distributed by
 construction; duplicate-cluster skew (one document repeated 10^6×) is the
 residual hazard, handled by AQE skew-join plus the ``max_bucket_size``
-escape hatch on the join stage.
+escape hatch on the join stage.  MinHash and SimHash bits are md5-derived,
+so both operators stay DuckDB-oracle-expressible.
 """
 
 from __future__ import annotations
@@ -29,16 +27,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .session import resplit
+
 __all__ = [
     "qgram_raw_windows",
     "qgram_tokens",
     "word_tokens",
     "exact_dedup",
-    "minhash_signature",
+    "minhash_band_keys",
     "minhash_lsh_pairs",
     "ngram_jaccard",
     "jaccard_verify",
-    "simhash_fingerprints",
     "simhash_fingerprints_udf",
     "simhash_pairs",
     "embedding_cosine_pairs",
@@ -49,9 +48,8 @@ __all__ = [
 
 def qgram_raw_windows(col: Column | str, q: int = 5) -> Column:
     """ALL character q-gram windows, duplicates kept — the explode feed.
-    Consumers whose math is duplicate-invariant (MinHash minima) explode
-    this directly — cheaper than distinct-ing first.  Consumers that
-    need set semantics explode ``array_distinct`` of it: on Spark 4.1.2
+    Consumers that need set semantics explode ``array_distinct`` of it
+    (see :func:`qgram_tokens`): on Spark 4.1.2
     GenerateExec evaluates the generator once per INPUT row, so
     ``explode(array_distinct(...))`` is linear (r5 re-measured; the
     r2-era per-OUTPUT-row re-evaluation no longer reproduces)."""
@@ -97,21 +95,6 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
 
 # ---------------------------------------------------------------- minhash
 
-def minhash_signature(tokens: Column, num_hashes: int = 64) -> Column:
-    """array<long> MinHash signature: per seed j, min over tokens of
-    xxhash64(j, token).  Pure Catalyst — fine for modest num_hashes when
-    the result is consumed *once*; the LSH pipeline below instead uses the
-    explode + multi-min aggregate form, because Catalyst inlines
-    deterministic expressions and would otherwise re-evaluate the whole
-    signature (and the tokenizer under it) once per band hash."""
-    return F.array(
-        *[
-            F.array_min(F.transform(tokens, lambda t, j=j: F.xxhash64(F.lit(j), t)))
-            for j in range(num_hashes)
-        ]
-    )
-
-
 _MERSENNE31 = 2147483647  # 2^31 - 1, the minhash field modulus
 
 
@@ -136,64 +119,27 @@ def minhash_coefficients(num_hashes: int) -> list:
     ]
 
 
-def _minhash_lanes(hex_col):
-    """(h1, h2) base hashes from one md5: the digest's two 32-bit halves
-    reduced mod 2^31-1.  One md5 per gram replaces num_hashes xxhash64
-    calls AND keeps the operator DuckDB-oracle-expressible."""
-    h1 = F.conv(F.substring(hex_col, 1, 8), 16, 10).cast("long") % F.lit(_MERSENNE31)
-    h2 = F.conv(F.substring(hex_col, 9, 8), 16, 10).cast("long") % F.lit(_MERSENNE31)
-    return h1, h2
+def minhash_band_keys(
+    col: Column | str, q: int = 5, num_hashes: int = 64, bands: int = 16
+) -> Column:
+    """Per-row ``array<string>`` of the ``bands`` MinHash band buckets.
 
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    q: int = 5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket_size: int | None = None,
-    df_other: DataFrame | None = None,
-    signature_mode: str = "udf",
-) -> DataFrame:
-    """Candidate near-duplicate pairs via MinHash banding.
-
-    rows-per-band r = num_hashes/bands; collision prob of a pair with
-    Jaccard s is 1-(1-s^r)^b.  Output: (id_a, id_b) with id_a < id_b,
-    deduplicated.  Feed to :func:`jaccard_verify` for the exact check.
-
-    ``df_other`` switches to CROSS-CORPUS mode — the incremental-ingest
-    shape (dedup a new batch AGAINST an existing corpus without
-    re-pairing the corpus with itself): ``id_a`` comes from ``df``,
-    ``id_b`` from ``df_other`` (same ``id_col``/``text_col`` names), both
-    sides banded with the SAME hash family so buckets are comparable, and
-    the ``id_a < id_b`` self-pair filter is skipped.  At 100 TB the batch
-    side is typically orders of magnitude smaller than the corpus: its
-    banded rows are slim (id, band, bucket) triples, and the equi-join
-    shuffles only ids — the corpus text never moves.
-
-    Plan shape: tokenize once → explode → ``num_hashes`` map-side-combined
-    ``min`` aggregations keyed on the (uniform) doc id — one shuffle whose
-    rows are (id, 64×8B), independent of document length — then band
-    hashes and the (band, bucket) self-join.
-    """
+    Per document, hash each distinct q-gram once with md5; its two 32-bit
+    halves mod 2^31-1 are the base lanes (h1, h2), and ``min_j`` is the
+    min over grams of ``(a_j·h1 + b_j·h2 + j) mod (2^31-1)``
+    (:func:`minhash_coefficients`).  Band bucket = md5 hex of the band's
+    ``num_hashes/bands`` mins joined with ``_`` (NULL text → md5 of "")."""
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    if signature_mode not in ("udf", "agg"):
-        raise ValueError(
-            f"signature_mode must be 'udf' or 'agg', got {signature_mode!r}"
-        )
+    col = F.col(col) if isinstance(col, str) else col
     r = num_hashes // bands
     coeffs = minhash_coefficients(num_hashes)
-    n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
 
     @F.pandas_udf("array<string>")
     def _keys_udf(texts: pd.Series) -> pd.Series:
-        # per-ROW signature engine (default): hashlib.md5 per distinct
-        # gram (identical to JVM md5) + one numpy (num_hashes, n_grams)
-        # lane matrix min — bit-identical band buckets to the agg engine
-        # (parity-tested), no gram rows, no vote shuffle.  a·h1+b·h2+j <
-        # 2·(2³¹−2)² + 127 < 2⁶³−1: int64-safe, same as the JVM longs.
+        # hashlib.md5 per distinct gram (identical to JVM/DuckDB md5) +
+        # one numpy (num_hashes, n_grams) lane matrix min.  a·h1+b·h2+j <
+        # 2·(2³¹−2)² + 127 < 2⁶³−1: int64-safe.
         # The two 32-bit base lanes are read straight off the binary
         # digests with one big-endian frombuffer view — int(hexdigest[...],
         # 16) per gram cost ~2 Python int-parses per gram (r6 measured
@@ -240,68 +186,55 @@ def minhash_lsh_pairs(
     # optimizer from pushing the posexplode's implicit `size(keys) > 0`
     # filter below the parallelism-restoring exchange, which DUPLICATED
     # this UDF onto the raw scan — at test scale a 1-split scan, so the
-    # duplicate ran single-threaded (guide §4.4; r6 measured 36 s → 6 s
+    # duplicate ran single-threaded (r6 measured 36 s → 6 s
     # for the candidate stage at sf1.0/local[32]).
-    _keys_udf = _keys_udf.asNondeterministic()
+    return _keys_udf.asNondeterministic()(col)
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    q: int = 5,
+    num_hashes: int = 64,
+    bands: int = 16,
+    max_bucket_size: int | None = None,
+    df_other: DataFrame | None = None,
+) -> DataFrame:
+    """Candidate near-duplicate pairs via MinHash banding.
+
+    rows-per-band r = num_hashes/bands; collision prob of a pair with
+    Jaccard s is 1-(1-s^r)^b.  Output: (id_a, id_b) with id_a < id_b,
+    deduplicated.  Feed to :func:`jaccard_verify` for the exact check.
+
+    ``df_other`` switches to CROSS-CORPUS mode — the incremental-ingest
+    shape (dedup a new batch AGAINST an existing corpus without
+    re-pairing the corpus with itself): ``id_a`` comes from ``df``,
+    ``id_b`` from ``df_other`` (same ``id_col``/``text_col`` names), both
+    sides banded with the SAME hash family so buckets are comparable, and
+    the ``id_a < id_b`` self-pair filter is skipped.  At 100 TB the batch
+    side is typically orders of magnitude smaller than the corpus: its
+    banded rows are slim (id, band, bucket) triples, and the equi-join
+    shuffles only ids — the corpus text never moves.
+
+    Plan shape: one Arrow-vectorized UDF (:func:`minhash_band_keys`)
+    computes each row's ``bands`` bucket keys (no gram rows, no per-gram
+    shuffle) → id-keyed exchange → posexplode to (id, band, bucket) →
+    optional bucket-size cap → the (band, bucket) self-join → pair dedup.
+    """
+    keys_col = minhash_band_keys(text_col, q, num_hashes, bands)
+    n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
 
     def _banded(frame: DataFrame) -> DataFrame:
-        # Re-split ONLY when the scan has fewer splits than the cluster
-        # has slots: a small parquet table lands in 1-4 splits, and the
-        # EXPENSIVE map side (explode + md5 per gram + 128 partial-min
-        # updates per lane row) would run serialized on those few cores —
-        # measured 12.6 s → ~1 s at sf0.1/local[32].  At production split
-        # counts this is a no-op; an unconditional repartition would add
-        # a full-corpus shuffle and coalesce DOWN.
-        if frame.rdd.getNumPartitions() < n_parts:
-            frame = frame.repartition(n_parts)
-        if signature_mode == "udf":
-            keys = frame.select(
-                F.col(id_col).alias("__id"),
-                _keys_udf(F.col(text_col)).alias("__keys"),
-            ).repartition(n_parts, "__id")
-            return _cap_buckets(
-                keys.select("__id", F.posexplode("__keys").alias("band", "bucket"))
-            )
-        # per-row distinct grams: a duplicate gram cannot change any
-        # min_j, but every exploded row pays one md5 + 128 lane-min
-        # updates in the aggregate — array_distinct (linear JVM, safe to
-        # explode on Spark 4.1.2, see qgram_raw_windows) halves the
-        # aggregate's input on natural-language corpora (r5: 1.47M raw →
-        # 0.71M distinct gram rows at sf0.1)
-        toks = frame.select(
-            F.col(id_col).alias("__id"),
-            F.explode(F.array_distinct(qgram_raw_windows(F.col(text_col), q))).alias(
-                "__t"
-            ),
-        )
-        hexed = toks.select("__id", F.md5("__t").alias("__hx"))
-        h1, h2 = _minhash_lanes(F.col("__hx"))
-        lanes = hexed.select("__id", h1.alias("__h1"), h2.alias("__h2"))
-        sig = lanes.groupBy("__id").agg(
-            *[
-                F.min(
-                    (F.lit(a) * F.col("__h1") + F.lit(b) * F.col("__h2") + F.lit(j))
-                    % F.lit(_MERSENNE31)
-                ).alias(f"h{j}")
-                for j, (a, b) in enumerate(coeffs)
-            ]
-        )
-        # band bucket = md5 of the band's r mins — an engine-independent
-        # key (the former xxhash64 fold is not reproducible in the SQL
-        # oracle).  The key array is computed BELOW the id-keyed exchange:
-        # the exchange (1) materializes it so the posexplode Generate
-        # reads an attribute instead of re-evaluating 16 md5s per output
-        # row, and (2) lets the band self-join's two sides reuse ONE
-        # signature computation (AQE ReusedExchange) instead of re-running
-        # the whole pipeline.
-        keys = sig.select(
-            "__id",
-            F.array(
-                *[
-                    F.md5(F.concat_ws("_", *[F.col(f"h{band * r + k}") for k in range(r)]))
-                    for band in range(bands)
-                ]
-            ).alias("__keys"),
+        # small-scan guard: the md5-per-gram UDF would otherwise run
+        # serialized on a small parquet table's 1-4 splits (measured
+        # 12.6 s → ~1 s at sf0.1/local[32])
+        frame = resplit(frame, n_parts)
+        # the id-keyed exchange materializes the key array, so the
+        # posexplode reads an attribute, and lets the self-join's two
+        # sides reuse ONE signature computation (ReusedExchange)
+        keys = frame.select(
+            F.col(id_col).alias("__id"), keys_col.alias("__keys")
         ).repartition(n_parts, "__id")
         return _cap_buckets(
             keys.select("__id", F.posexplode("__keys").alias("band", "bucket"))
@@ -352,12 +285,9 @@ def jaccard_verify(
 ) -> DataFrame:
     """Join candidate (id_a, id_b) pairs back to their token sets and keep
     those with exact q-gram Jaccard ≥ threshold."""
-    n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    if df.rdd.getNumPartitions() < n_parts:
-        # same small-scan guard as the banding path: both join sides
-        # evaluate the per-doc distinct-gram arrays over the scan's
-        # splits — 1-4 splits at test scale would serialize that work
-        df = df.repartition(n_parts)
+    # same small-scan guard as the banding path: both join sides evaluate
+    # the per-doc distinct-gram arrays over the scan's splits
+    df = resplit(df, max(df.sparkSession.sparkContext.defaultParallelism, 8))
     toks = df.select(
         F.col(id_col).alias("__jid"), qgram_tokens(F.col(text_col), q).alias("__jtok")
     )
@@ -379,24 +309,26 @@ def simhash_fingerprints_udf(
     q: int = 3,
     chunks: int = 8,
 ) -> DataFrame:
-    """Per-row SimHash — one Arrow-vectorized UDF, ZERO shuffle.
+    """64-bit SimHash per record — one Arrow-vectorized UDF, ZERO shuffle.
 
-    Bit-identical to :func:`simhash_fingerprints` (same md5-derived
-    bits, same majority/tie rule, same chunk keys — parity-tested): per
-    document, hash its distinct q-grams with ``hashlib.md5`` (identical
-    output to JVM ``md5``), fold the digest bits into 64 vote counters
-    with one ``np.unpackbits`` + column sum, threshold at
-    ``votes*2 >= n``.  The agg form shuffles ~#grams slim vote rows and
-    pays one JVM md5 + 64 bit-extractions + 22 codegen sums per gram;
-    here the same work is a C-speed loop (r5 measured: fingerprints
-    ~6.5 s → ~1 s at sf0.1).  Per-row memory is one document's distinct
-    gram set — at multi-GB single documents prefer the agg form."""
+    Bit ``j`` of the fingerprint is the majority vote (ties → 1) of bit
+    ``j`` of ``md5(gram)`` over the record's distinct q-grams, MSB-first
+    over the digest's first 8 bytes (hex chars 1-16).  Per document: hash
+    the distinct q-grams with ``hashlib.md5`` (identical output to JVM and
+    DuckDB ``md5``), fold the digest bits into 64 vote counters with one
+    ``np.unpackbits`` + column sum, threshold at ``votes*2 >= n``.  The
+    former explode + vote-aggregate form shuffled ~#grams rows; this C-speed
+    loop measured ~6.5 s → ~1 s at sf0.1 (r5).  Per-row memory is one
+    document's distinct gram set.
+
+    Output: ``(__id, hi, lo, keys array<long>)`` — hi/lo are the two
+    32-bit halves (Hamming distance = bit_count(hi⊕hi')+bit_count(lo⊕lo'))
+    and ``keys`` the ``chunks`` equal-width band keys for candidate joins.
+    """
     if 64 % chunks:
         raise ValueError("chunks must divide 64")
     width = 64 // chunks
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        df = df.repartition(parallelism)
+    df = resplit(df)
 
     @F.pandas_udf("struct<hi: bigint, lo: bigint, keys: array<bigint>>")
     def _fp(texts: pd.Series) -> pd.DataFrame:
@@ -407,8 +339,8 @@ def simhash_fingerprints_udf(
         rows = []
         for t in texts:
             if t is None:
-                # mirror the agg form: md5(NULL) is NULL, sums stay NULL,
-                # every majority test is false → all-zero fingerprint
+                # md5(NULL) is NULL in SQL, so no vote passes: the
+                # all-zero fingerprint (what the DuckDB oracle computes)
                 rows.append({"hi": 0, "lo": 0, "keys": [0] * chunks})
                 continue
             if len(t) >= q:
@@ -420,7 +352,7 @@ def simhash_fingerprints_udf(
                 hashlib.md5(g.encode("utf-8")).digest() for g in grams
             )
             # the fingerprint votes over the digest's FIRST 64 bits
-            # (hex chars 1-16), matching the agg form's two conv() halves
+            # (hex chars 1-16)
             bits = np.unpackbits(
                 np.frombuffer(digs, dtype=np.uint8).reshape(len(grams), 16)[:, :8],
                 axis=1,
@@ -447,133 +379,6 @@ def simhash_fingerprints_udf(
     ).select("__id", "__s.hi", "__s.lo", "__s.keys")
 
 
-def simhash_fingerprints(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    q: int = 3,
-    chunks: int = 8,
-) -> DataFrame:
-    """64-bit SimHash per record, computed entirely JVM-side.
-
-    Bit ``j`` of the fingerprint is the majority vote (ties → 1) of bit
-    ``j`` of ``md5(gram)`` over the record's distinct q-grams, where bit j
-    lives in hex nibble ``j//4`` at in-nibble position ``3-(j%4)``
-    (MSB-first over the digest's hex string).  The plan is: explode grams
-    → ``md5`` → 16 nibble ints via ``conv`` → 64 map-side-combined ``sum``
-    aggregations keyed on the id — one shuffle of (id, 64 small ints),
-    independent of document length.  md5-derived bits keep the operator
-    DuckDB-expressible (the driver oracle mirrors this arithmetic).
-    Small scans are re-split first (see ``_banded``'s guard) so the
-    map-side vote sums never serialize on 1-4 parquet splits.
-
-    Output: ``(__id, hi, lo, keys array<long>)`` — hi/lo are the two
-    32-bit halves (Hamming distance = bit_count(hi⊕hi')+bit_count(lo⊕lo'))
-    and ``keys`` the ``chunks`` equal-width band keys for candidate joins.
-    """
-    if 64 % chunks:
-        raise ValueError("chunks must divide 64")
-    width = 64 // chunks
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        df = df.repartition(parallelism)
-    # per-row dedup (array_distinct, linear) + direct explode: Spark
-    # 4.1.2's GenerateExec evaluates the generator once per INPUT row, so
-    # explode(array_distinct(...)) is safe and beats the old explode-raw
-    # + dropDuplicates shape by a full (id, gram-string) shuffle + two
-    # hash aggregates (r5 measured: 0.6s vs 0.9s for the gram feed alone,
-    # and the votes aggregate below becomes the ONLY shuffle)
-    grams = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(F.array_distinct(qgram_raw_windows(F.col(text_col), q))).alias(
-            "__t"
-        ),
-    )
-    # one md5 per gram, two conv() string→int conversions; everything after
-    # is integer arithmetic.  The 64 per-bit vote counters are PACKED
-    # three to a long (21-bit lanes → safe to 2,097,151 distinct grams
-    # per document, i.e. multi-megabyte pages; beyond that the lane sums
-    # would carry and corrupt neighbors) so the aggregate has 23 output
-    # fields, safely inside whole-stage codegen's field limit; a naive
-    # 64-sum aggregate falls back to the interpreted path and ran ~6x
-    # slower at sf0.1.
-    lane_bits, lanes_per_col = 21, 3
-    n_cols = (64 + lanes_per_col - 1) // lanes_per_col
-    halves = grams.select("__id", F.md5("__t").alias("__hx")).select(
-        "__id",
-        F.conv(F.substring("__hx", 1, 8), 16, 10).cast("long").alias("__h32"),
-        F.conv(F.substring("__hx", 9, 8), 16, 10).cast("long").alias("__l32"),
-    )
-
-    def digest_bit(j):
-        """Bit j (0..63, MSB-first over the hex string) of the digest:
-        nibble j//4 at in-nibble position 3-(j%4)."""
-        n = j // 4
-        src = F.col("__h32") if n < 8 else F.col("__l32")
-        nib = F.shiftright(src, 4 * (7 - n % 8)).bitwiseAND(F.lit(15))
-        return F.shiftright(nib, 3 - (j % 4)).bitwiseAND(F.lit(1))
-
-    def packed_col(c):
-        """Bits j = c*lanes_per_col .. +lanes_per_col-1 in 21-bit lanes."""
-        out = None
-        for t in range(lanes_per_col):
-            j = c * lanes_per_col + t
-            if j >= 64:
-                break
-            term = digest_bit(j) * F.lit(1 << (lane_bits * t)).cast("long")
-            out = term if out is None else out + term
-        return out
-
-    packed_votes = halves.select(
-        "__id", *[packed_col(c).alias(f"p{c}") for c in range(n_cols)]
-    )
-    votes = packed_votes.groupBy("__id").agg(
-        F.count(F.lit(1)).alias("__cnt"),
-        *[F.sum(f"p{c}").alias(f"S{c}") for c in range(n_cols)],
-    )
-    # runtime guard for the 21-bit lane capacity: a record with more than
-    # 2^21-1 distinct q-grams would carry into the neighboring vote lane
-    # and silently corrupt the fingerprint (ADVICE r2) — fail loudly with
-    # the offending id instead.  __cnt is already aggregated, so the guard
-    # costs one comparison per record, not per gram.
-    lane_cap = (1 << lane_bits) - 1
-    votes = votes.withColumn(
-        "__cnt",
-        F.when(
-            F.col("__cnt") > lane_cap,
-            F.raise_error(
-                F.concat(
-                    F.lit("simhash vote-lane overflow: record "),
-                    F.col("__id").cast("string"),
-                    F.lit(f" has more than {lane_cap} distinct q-grams"),
-                )
-            ).cast("long"),
-        ).otherwise(F.col("__cnt")),
-    )
-
-    def bit(j):
-        s = F.shiftright(
-            F.col(f"S{j // lanes_per_col}"), lane_bits * (j % lanes_per_col)
-        ).bitwiseAND(F.lit((1 << lane_bits) - 1))
-        return F.when(s * 2 >= F.col("__cnt"), F.lit(1)).otherwise(F.lit(0))
-
-    def packed(js):
-        """Big-endian fold of bits js into a long."""
-        out = F.lit(0).cast("long")
-        for i, j in enumerate(js):
-            out = out + bit(j).cast("long") * F.lit(1 << (len(js) - 1 - i)).cast("long")
-        return out
-
-    return votes.select(
-        "__id",
-        packed(list(range(0, 32))).alias("hi"),
-        packed(list(range(32, 64))).alias("lo"),
-        F.array(
-            *[packed(list(range(c * width, (c + 1) * width))) for c in range(chunks)]
-        ).alias("keys"),
-    )
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str,
@@ -581,7 +386,6 @@ def simhash_pairs(
     q: int = 3,
     chunks: int = 8,
     max_hamming: int | None = None,
-    fingerprint_mode: str = "udf",
 ) -> DataFrame:
     """Candidate pairs whose SimHash agrees on ≥1 of ``chunks`` equal-width
     chunks (pigeonhole: Hamming distance < chunks ⇒ some chunk equal —
@@ -607,19 +411,9 @@ def simhash_pairs(
     """
     # id-keyed exchange → both sides of the self-join reuse ONE
     # fingerprint computation (ReusedExchange) instead of recomputing the
-    # md5+vote aggregation per side
+    # md5 UDF per side
     n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    if fingerprint_mode == "udf":
-        # default: per-row Arrow fingerprints, zero shuffle before the
-        # id-keyed exchange below (bit-identical to the agg form)
-        fp_fn = simhash_fingerprints_udf
-    elif fingerprint_mode == "agg":
-        fp_fn = simhash_fingerprints
-    else:
-        raise ValueError(
-            f"fingerprint_mode must be 'udf' or 'agg', got {fingerprint_mode!r}"
-        )
-    fp = fp_fn(df, id_col, text_col, q=q, chunks=chunks).repartition(
+    fp = simhash_fingerprints_udf(df, id_col, text_col, q=q, chunks=chunks).repartition(
         n_parts, "__id"
     )
     width = 64 // chunks

@@ -50,6 +50,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .session import resplit
+
 __all__ = [
     "train_stupid_backoff",
     "stupid_backoff_scores",
@@ -76,11 +78,9 @@ def _token_positions(
     sentinels).  ``sequence(1, 0)`` descends in Spark, hence the
     ``size >= 1`` filter before building positions.
     """
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        # small-scan guard (see dedup._banded): the explode + gram aggs
-        # otherwise run on the parquet scan's 1-4 splits
-        df = df.repartition(parallelism)
+    # small-scan guard: the explode + gram aggs otherwise run on the
+    # parquet scan's 1-4 splits
+    df = resplit(df)
     ws = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
     base = df.select(F.col(id_col), ws.alias("__ws")).filter(
         F.size("__ws") >= 1

@@ -12,8 +12,9 @@ Three matchers, mirroring the reference's `/match` methods
   ``max_bucket_size`` drops degenerate buckets (classic LSH practice —
   documented recall trade-off, disabled by default).
 
-Similarity is a vectorized Arrow UDF over packed bytes (popcount LUT), so
-per-pair work is a few numpy ops, not per-row Python.
+``match_pairwise``/``match_crosswise`` score with a vectorized Arrow UDF
+over packed bytes (popcount LUT), so per-pair work is a few numpy ops, not
+per-row Python; ``match_lsh`` scores in Catalyst (see its docstring).
 """
 
 from __future__ import annotations
@@ -177,7 +178,6 @@ def match_lsh(
     id_col: str = "id",
     bloom_col: str = "bloom",
     max_bucket_size: int | None = None,
-    score_engine: str = "auto",
 ) -> DataFrame:
     """LSH-blocked match.  ``df_range=None`` → self-dedup mode (emit each
     unordered pair once, ``domain_id < range_id``).
@@ -188,28 +188,17 @@ def match_lsh(
     outnumber the corpus by orders of magnitude, so the candidate shuffles
     carry 16-byte id pairs, not 2×m-bit vectors.
 
-    ``score_engine``:
-
-    * ``"auto"`` / ``"jvm"`` (default) — similarity is evaluated in pure
-      Catalyst: each vector is decomposed ONCE per id into 4-byte words +
-      a popcount, candidates attach the words by id, and the per-pair
-      score is Σ bit_count(wa & wb) folded into the measure formula
-      (double-identical to the kernel, see :func:`_similarity_expr`).
-      The r5 shape shipped both packed vectors of every candidate through
-      an Arrow UDF — ~2×128 B × candidate count across the Python
-      boundary (23 GB at sf1.0, r6 measured) — and pair-deduplicated ALL
-      candidates before scoring (a ~90M-row shuffle for 2.5k matches).
-      Scoring in the join stage lets the dedup run on the thresholded
-      matches instead.  Requires vectors of exactly ceil(num_bits/8)
-      bytes (runtime-checked, loud error).
-    * ``"udf"`` — the r5 Arrow-kernel path (any vector length whose bits
-      beyond ``lsh.num_bits`` still count; multi-GB-vector escape hatch).
+    Similarity is evaluated in pure Catalyst: each vector is decomposed
+    ONCE per id into 4-byte words + a popcount, candidates attach the
+    words by id, and the per-pair score is Σ bit_count(wa & wb) folded
+    into the measure formula (double-identical to the kernel, see
+    :func:`_similarity_expr`).  Shipping both packed vectors of every
+    candidate through an Arrow UDF instead costs ~2×128 B × candidate
+    count across the Python boundary (23 GB at sf1.0, r6 measured), and
+    scoring in the join stage lets the pair dedup run on the thresholded
+    matches rather than on every candidate.  Vectors must be exactly
+    ceil(lsh.num_bits/8) bytes (runtime-checked, loud error).
     """
-    if score_engine not in ("auto", "jvm", "udf"):
-        raise ValueError(f"unknown score_engine `{score_engine}`")
-    use_jvm = score_engine in ("auto", "jvm") and cfg.measure in (
-        "dice", "cosine", "jaccard"
-    )
     # The id-keyed repartition is load-bearing twice over: (1) it puts a
     # stage boundary between the caller's encode UDF and the band UDF —
     # two Arrow UDFs chained in ONE stage run two Python workers per core
@@ -224,9 +213,9 @@ def match_lsh(
         n_parts, "domain_id"
     )
     # localCheckpoint the slim (id, vector) projection: the banding
-    # branch, the bucket-size aggregate, and (jvm engine) the popcount
-    # word table all re-read it.  Exchange reuse USED to make that one
-    # encode evaluation, but constraint-inferred isnotnull filters below
+    # branch, the bucket-size aggregate, and the popcount word table all
+    # re-read it.  Exchange reuse USED to make that one encode
+    # evaluation, but constraint-inferred isnotnull filters below
     # the exchange de-canonicalize the subtrees — r6 plans showed the
     # encode UDF running 3x.  Materializing the KB/row projection once is
     # robust where ReusedExchange is fragile; non-eager, so it computes
@@ -238,10 +227,6 @@ def match_lsh(
         "__b",
     ).select("domain_id", "band", "sig")
     if df_range is None:
-        rng_vec = dom_vec.select(
-            F.col("domain_id").alias("range_id"),
-            F.col("__domain_bloom").alias("__range_bloom"),
-        )
         rng_side = dom.select(
             F.col("domain_id").alias("range_id"), "band", "sig"
         )
@@ -279,14 +264,6 @@ def match_lsh(
         rng_side = rng_side.join(ok_rng, on=["band", "sig"], how="inner")
 
     cand = dom.join(rng_side, on=["band", "sig"], how="inner").filter(pair_filter)
-    if not use_jvm:
-        pairs = (
-            cand.select("domain_id", "range_id")
-            .dropDuplicates(["domain_id", "range_id"])
-            .join(dom_vec, "domain_id")
-            .join(rng_vec, "range_id")
-        )
-        return _score_and_filter(pairs, cfg)
 
     # JVM scoring: decompose each id's vector once into a words array +
     # popcount (a 3-col, popcount-only projection of the corpus —
@@ -309,11 +286,13 @@ def match_lsh(
             F.raise_error(
                 F.concat(
                     F.lit(
-                        f"match_lsh jvm scoring expects {n_bytes}-byte vectors "
+                        f"match_lsh expects {n_bytes}-byte vectors "
                         "(= ceil(lsh.num_bits/8)); got "
                     ),
                     F.length(bloom).cast("string"),
-                    F.lit(" bytes — pass score_engine='udf' for odd-sized vectors"),
+                    F.lit(
+                        " bytes — set lsh.num_bits to the vector's bit length"
+                    ),
                 )
             ),
         ).otherwise(bloom)

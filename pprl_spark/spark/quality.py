@@ -10,13 +10,11 @@ ingestion and dedup.
 Scale notes:
 
 * Every signal — including the full n-gram family — is a per-document
-  computation, so the default filter plan is MAP-ONLY: one projection,
-  zero shuffles, no joins (r5; ``ngram_mode``).  The per-document mode
-  statistics use a sorted-gram run-length walk (``ngram_char_stats_col``,
-  linearithmic per document) or a C-speed Counter pass
-  (``ngram_mode="udf"``); the explode → (id, gram) hash aggregate →
-  join-back form survives as ``ngram_mode="shuffle"`` for corpora whose
-  single documents are too large for one task.
+  computation, so with n-gram rules the filter plan is MAP-ONLY: one
+  projection, zero shuffles, no joins (r5).  The n-gram statistics are
+  one C-speed ``Counter`` pass per document in an Arrow-vectorized UDF
+  (``ngram_char_stats_udf``); the explode → (id, gram) hash aggregate
+  form (``ngram_char_stats``) is its reference.
 * The filter itself is a pure projection over those signals — predicate
   pushdown applies to any upstream scan, and ``keep`` can drive
   partition-pruning writes (``partitionBy("keep")``).
@@ -30,6 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .session import resplit
 from .textstats import (
     bind_once,
     lang_id_col,
@@ -151,9 +150,7 @@ def line_dup_stats(
     (id, kind, unit) → (id, kind, unit) hash aggregate with map-side
     combine → per-id conditional sums → slim join back to (id,
     len(text)).  Dense output: one row per input id, 0.0 when absent."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        df = df.repartition(parallelism)
+    df = resplit(df)
     col = F.col(text_col)
     lines = F.filter(F.split(col, r"\n"), lambda s: F.trim(s) != "")
     paras = F.filter(F.split(col, r"\n{2,}"), lambda s: F.trim(s) != "")
@@ -344,17 +341,18 @@ def ngram_char_stats(
     SAME explode as reserved lanes n=0 (line) / n=1 (paragraph) — grams
     start at n=2, so the lanes cannot collide — emitting
     ``dup_line_char_frac`` / ``dup_para_char_frac`` without a second
-    corpus scan."""
+    corpus scan.
+
+    :func:`filter_documents` computes the same fields per row with
+    :func:`ngram_char_stats_udf`; this aggregate form is its reference."""
     all_ns = sorted({int(n) for n in (*top_ns, *dup_ns)})
     if with_top_bigram_occurrence and 2 not in all_ns:
         all_ns = sorted([2, *all_ns])
     if not all_ns or min(all_ns) < 2:
         raise ValueError("n-gram sizes must be >= 2")
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        # small-scan guard (see dedup._banded): the explode otherwise
-        # runs on the parquet scan's 1-4 splits
-        df = df.repartition(parallelism)
+    # small-scan guard: the explode otherwise runs on the parquet scan's
+    # 1-4 splits
+    df = resplit(df)
     col = F.col(text_col)
     members = [_words(col).alias("w")]
     if with_line_paragraph:
@@ -490,149 +488,6 @@ def ngram_char_stats(
     return joined.select(*out_cols)
 
 
-def _lane_run_stats(arr: Column) -> Column:
-    """Run-length statistics over ONE document's gram/unit array, as a
-    single Catalyst ``aggregate`` over the sorted array — the per-row
-    (zero-shuffle) equivalent of the (id, gram) hash aggregate in
-    :func:`ngram_char_stats`:
-
-    * ``best`` — max over grams of ``count·2^30 + min(len, 2^30−1)``
-      (the modal-gram packing, ties by longest gram),
-    * ``num`` / ``den`` — duplicated / total occurrence char mass,
-    * ``maxrun`` — modal count, ``cnt`` — total occurrences.
-
-    Sorting clusters equal grams so one O(n) walk yields exact counts;
-    any total order works (only equality matters).  NULL array → NULL
-    struct (callers coalesce to 0.0, mirroring the agg form's left-join
-    NULLs)."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("bigint").alias("run"),
-        F.lit(0).cast("bigint").alias("best"),
-        F.lit(0).cast("bigint").alias("num"),
-        F.lit(0).cast("bigint").alias("den"),
-        F.lit(0).cast("bigint").alias("maxrun"),
-        F.lit(0).cast("bigint").alias("cnt"),
-    )
-
-    def _step(acc: Column, g: Column) -> Column:
-        ln = F.least(F.length(g), F.lit(_PACK - 1)).cast("bigint")
-        run = F.when(acc["prev"].eqNullSafe(g), acc["run"] + 1).otherwise(
-            F.lit(1).cast("bigint")
-        )
-        return F.struct(
-            g.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run * _PACK + ln).alias("best"),
-            (
-                acc["num"]
-                + F.when(run == 2, 2 * ln)
-                .when(run > 2, ln)
-                .otherwise(F.lit(0).cast("bigint"))
-            ).alias("num"),
-            (acc["den"] + ln).alias("den"),
-            F.greatest(acc["maxrun"], run).alias("maxrun"),
-            (acc["cnt"] + 1).alias("cnt"),
-        )
-
-    return F.aggregate(F.array_sort(arr), init, _step)
-
-
-def ngram_char_stats_col(
-    col: Column | str,
-    top_ns: tuple = (2, 3, 4),
-    dup_ns: tuple = (5, 6, 7, 8, 9, 10),
-    with_top_bigram_occurrence: bool = False,
-    with_line_paragraph: bool = False,
-) -> Column:
-    """Per-row STRUCT of the same Gopher n-gram signals as
-    :func:`ngram_char_stats` (field values bit-identical), as ONE pure
-    Catalyst projection — ZERO shuffle.
-
-    Every signal here is a function of a single document, so the
-    explode → (id, gram) hash aggregate → per-id aggregate → join-back
-    shape of :func:`ngram_char_stats` shuffles ~2× the corpus size only
-    to count *within* each document.  This form sorts each per-row gram
-    array (``array_sort``, O(g log g) JVM-side) and walks runs with one
-    ``aggregate`` (see :func:`_lane_run_stats`) — at 100 TB the filter
-    stage becomes map-only.  Trade-off: a single pathological document's
-    gram array must fit in one task (the agg form spreads one document's
-    grams across reducers); keep the shuffle form for corpora with
-    multi-GB single documents."""
-    col = F.col(col) if isinstance(col, str) else col
-    all_ns = sorted({int(n) for n in (*top_ns, *dup_ns)})
-    if with_top_bigram_occurrence and 2 not in all_ns:
-        all_ns = sorted([2, *all_ns])
-    if not all_ns or min(all_ns) < 2:
-        raise ValueError("n-gram sizes must be >= 2")
-    members = [_words(col).alias("w")]
-    if with_line_paragraph:
-        members.extend([_lines(col).alias("l"), _paras(col).alias("p")])
-    tlen = F.length(col)
-
-    def _stats(s: Column) -> Column:
-        w = s["w"]
-        nw = F.size(w)
-
-        def _grams(n: int) -> Column:
-            def _window(i: Column) -> Column:
-                return F.concat_ws(" ", F.slice(w, i, n))
-
-            return F.when(
-                nw >= n, F.transform(F.sequence(F.lit(1), nw - n + 1), _window)
-            ).otherwise(F.array().cast("array<string>"))
-
-        lanes = [_lane_run_stats(_grams(n)).alias(f"s{n}") for n in all_ns]
-        if with_line_paragraph:
-            lanes.append(_lane_run_stats(s["l"]).alias("sl"))
-            lanes.append(_lane_run_stats(s["p"]).alias("sp"))
-        return F.struct(*lanes)
-
-    def _finish(st: Column) -> Column:
-        fields = []
-        for n in top_ns:
-            best = st[f"s{n}"]["best"]
-            fields.append(
-                F.when(
-                    best.isNull() | (best <= 0) | (tlen <= 0), F.lit(0.0)
-                )
-                .otherwise(
-                    (F.shiftright(best, 30) * (best % _PACK) / tlen).cast(
-                        "double"
-                    )
-                )
-                .alias(f"top_{n}gram_char_frac")
-            )
-        for n in dup_ns:
-            num, den = st[f"s{n}"]["num"], st[f"s{n}"]["den"]
-            fields.append(
-                F.when(den.isNull() | (den <= 0), F.lit(0.0))
-                .otherwise((num / den).cast("double"))
-                .alias(f"dup_{n}gram_char_frac")
-            )
-        if with_top_bigram_occurrence:
-            mx, tot = st["s2"]["maxrun"], st["s2"]["cnt"]
-            fields.append(
-                F.when(tot.isNull() | (tot <= 0), F.lit(0.0))
-                .otherwise((mx / tot).cast("double"))
-                .alias("top_bigram_fraction")
-            )
-        if with_line_paragraph:
-            for key, alias in (("sl", "dup_line_char_frac"), ("sp", "dup_para_char_frac")):
-                num = st[key]["num"]
-                fields.append(
-                    F.when(num.isNull() | (tlen <= 0), F.lit(0.0))
-                    .otherwise((num / tlen).cast("double"))
-                    .alias(alias)
-                )
-        return F.struct(*fields)
-
-    # two-level bind: the split arrays evaluate once, then the 9-11 lane
-    # aggregate structs evaluate once each before the final fractions
-    # reference them (each finish field reads 1-2 lane fields)
-    return _bind(_bind(F.struct(*members), _stats), _finish)
-
-
 def ngram_char_stats_udf(
     col: Column | str,
     top_ns: tuple = (2, 3, 4),
@@ -643,10 +498,10 @@ def ngram_char_stats_udf(
     """Per-row STRUCT of the same Gopher n-gram signals as
     :func:`ngram_char_stats`, as one Arrow-vectorized scalar UDF — the
     stateless-projection form for streaming plans (the batch aggregate
-    shape would be a stream-stream self-join) and the fastest batch form
-    (``filter_documents(ngram_mode="udf")`` — r5 measured ~2× the pure
-    Catalyst per-row form: the per-gram work is a C-speed ``Counter``
-    pass instead of interpreted higher-order expressions).  Tokenizes
+    shape would be a stream-stream self-join) and the batch form
+    :func:`filter_documents` runs (r5 measured ~2× a pure-Catalyst
+    per-row form: the per-gram work is a C-speed ``Counter`` pass instead
+    of interpreted higher-order expressions).  Tokenizes
     with the Java ``\\s+`` (ASCII) convention so decisions are
     row-identical to batch; the packed (count, len) tie-break is
     reproduced exactly.  ``with_top_bigram_occurrence`` adds the legacy
@@ -761,19 +616,14 @@ def filter_documents(
     rules: FilterRules = FilterRules(),
     id_col: str = "doc_id",
     text_col: str = "text",
-    ngram_mode: str = "project",
 ) -> DataFrame:
     """Quality-filter decision per document: signals + ``keep`` boolean +
     ``reject_reason`` ('ok' when kept — NULL-free by design so the frame
     survives engine-comparison hashing)."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        # small-scan guard (see ngram_char_stats): the scalar-signal
-        # projection (split-heavy, interpreted higher-order exprs) is
-        # expensive map-side work and otherwise runs serialized on the
-        # parquet scan's 1-4 splits at test scale factors; no-op at
-        # production split counts
-        df = df.repartition(parallelism)
+    # small-scan guard: the scalar-signal projection (split-heavy,
+    # interpreted higher-order exprs) is expensive map-side work and
+    # otherwise runs serialized on the parquet scan's 1-4 splits
+    df = resplit(df)
     with_para = rules.max_dup_paragraph_fraction < 1.0
     # every scalar signal rides ONE struct evaluated once per row (one
     # words/lines/paras split each — see _scalar_signals); the struct
@@ -800,35 +650,16 @@ def filter_documents(
             with_top_bigram_occurrence=True,
             with_line_paragraph=needs_units,
         )
-        if ngram_mode in ("project", "udf"):
-            # both forms are map-only (zero shuffle, no join — the filter
-            # stage is one projection end-to-end).  "project" stays pure
-            # Catalyst (interpreted higher-order run-length walk);
-            # "udf" is one Arrow-vectorized pass (C-speed Counter,
-            # r5 measured ~2× faster) at the cost of a Python worker —
-            # both field-identical to the "shuffle" aggregate form.
-            ng = (
-                ngram_char_stats_col(F.col(text_col), **ng_kw)
-                if ngram_mode == "project"
-                else ngram_char_stats_udf(F.col(text_col), **ng_kw)
-            )
-            sig = narrow.withColumn("__ng", ng)
-            ng_fields = [f for f in sig.schema["__ng"].dataType.fieldNames()]
-            sig = sig.select(
-                *[F.col(c) for c in narrow.columns],
-                *[F.col("__ng")[f].alias(f) for f in ng_fields],
-            )
-        elif ngram_mode == "shuffle":
-            # explode + (id, gram) hash aggregate + join back: one gram
-            # shuffle, but a single document's grams spread across
-            # reducers — keep for corpora with pathological multi-GB
-            # single documents whose gram arrays won't fit in one task
-            ng = ngram_char_stats(df, id_col, text_col, **ng_kw)
-            sig = narrow.join(ng, id_col, "left")
-        else:
-            raise ValueError(
-                f"ngram_mode must be 'project', 'udf' or 'shuffle', got {ngram_mode!r}"
-            )
+        # map-only: one Arrow-vectorized pass (zero shuffle, no join —
+        # the filter stage is one projection end-to-end)
+        sig = narrow.withColumn(
+            "__ng", ngram_char_stats_udf(F.col(text_col), **ng_kw)
+        )
+        ng_fields = sig.schema["__ng"].dataType.fieldNames()
+        sig = sig.select(
+            *[F.col(c) for c in narrow.columns],
+            *[F.col("__ng")[f].alias(f) for f in ng_fields],
+        )
     else:
         tops = _top_bigram_per_doc(df, id_col, text_col)
         sig = narrow.join(tops, id_col, "left").withColumn(

@@ -10,9 +10,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["get_spark"]
+__all__ = ["get_spark", "resplit"]
 
 
 def get_spark(
@@ -42,9 +42,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # wide aggregates (MinHash's 128 min() lanes) must stay inside
-        # whole-stage codegen; the default 100-field cap silently drops
-        # them to the interpreted path (~6x slower measured at sf0.1)
+        # wide projections/aggregates must stay inside whole-stage
+        # codegen; the default 100-field cap silently drops them to the
+        # interpreted path (~6x slower measured at sf0.1)
         .config("spark.sql.codegen.maxFields", "256")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
@@ -52,3 +52,17 @@ def get_spark(
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def resplit(df: DataFrame, floor: int | None = None) -> DataFrame:
+    """Round-robin ``df`` up to ``floor`` partitions (default
+    ``defaultParallelism``) ONLY when it has fewer: a small parquet table
+    lands in 1-4 scan splits, which would serialize the expensive map-side
+    work that follows (explode, md5, Arrow UDFs) on a few cores.  At
+    production split counts this is a no-op; an unconditional repartition
+    would add a full-corpus shuffle and coalesce DOWN."""
+    if floor is None:
+        floor = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < floor:
+        return df.repartition(floor)
+    return df

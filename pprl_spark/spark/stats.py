@@ -71,12 +71,13 @@ def padded_qgram_tokens(col, q: int = 2, padding: str = "_"):
 
 
 def qgram_windows(col, q: int = 2, padding: str = "_"):
-    """ALL padded q-gram windows (duplicates kept) — the cheap explode
-    feed.  ``explode(array_distinct(...))`` must be avoided: Generate
-    inlines and re-evaluates its child expression per OUTPUT row, turning
-    the per-row dedup quadratic (measured 8x on sf0.1).  Consumers that
-    need set semantics deduplicate after the explode, where it is a
-    map-side aggregate."""
+    """ALL padded q-gram windows (duplicates kept) — the explode feed for
+    consumers that count every occurrence.  Consumers that need set
+    semantics may explode ``array_distinct`` of it (or
+    :func:`padded_qgram_tokens`, as :func:`token_frequencies` does): on
+    Spark 4.1.2 Generate evaluates its child once per INPUT row, so the
+    per-row dedup is linear (r5 re-measured; the older per-OUTPUT-row
+    re-evaluation that made it quadratic no longer reproduces)."""
     col = F.col(col) if isinstance(col, str) else col
     pad = F.lit(padding * (q - 1))
     padded = F.concat(pad, col, pad)

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .session import resplit
+
 __all__ = [
     "whitespace_token_count",
     "bpe_ish_token_count",
@@ -192,11 +194,9 @@ def lang_id_col(col: Column | str) -> Column:
 def _word_explode(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, term) rows — whitespace words, empties dropped, duplicates
     kept (term frequency is the point)."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        # small-scan guard (see dedup._banded): the explode + downstream
-        # tf aggregation otherwise run on the scan's 1-4 splits
-        df = df.repartition(parallelism)
+    # small-scan guard: the explode + downstream tf aggregation
+    # otherwise run on the scan's 1-4 splits
+    df = resplit(df)
     return df.select(
         F.col(id_col),
         F.explode(

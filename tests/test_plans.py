@@ -14,10 +14,6 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _optimized_plan(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def test_q1_pushes_shipdate_filter_to_scan(spark):
     plan = _executed_plan(E.q1_pricing_summary(spark, SF))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
@@ -111,22 +107,6 @@ def test_embedding_dup_pairs_is_jvm_side(spark):
     assert "EvalPython" not in plan
 
 
-def test_simhash_is_jvm_side_with_partial_agg(spark):
-    # VERDICT r1 asked for no per-gram Python hashing; the agg engine
-    # keeps that contract — md5 + vote sums pure Catalyst with map-side
-    # combine (2x HashAggregate).  (The r5 DEFAULT engine is the
-    # measured-faster per-ROW Arrow fingerprint — see the next test.)
-    from pprl_spark.spark.dedup import simhash_pairs
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _executed_plan(
-        simhash_pairs(docs, "doc_id", "text", q=3, max_hamming=6,
-                      fingerprint_mode="agg")
-    )
-    assert "EvalPython" not in plan
-    assert plan.count("HashAggregate") >= 2
-
-
 def test_simhash_default_engine_is_one_arrow_pass(spark):
     # r5: the default fingerprint engine is ONE vectorized Arrow UDF per
     # row (never row-at-a-time BatchEvalPython), and the only exchanges
@@ -152,12 +132,30 @@ def test_flagship_banding_is_jvm_side(spark):
     assert "conv(hex(substring" in plan
 
 
+def _final_plan_after_collect(df) -> str:
+    """The adaptive plan's final form, after running the query: stages
+    AQE reused show up as ``ReusedExchange``, not as a second copy."""
+    qe = df._jdf.queryExecution()
+    df.collect()
+    return qe.executedPlan().toString().split("== Initial Plan ==")[0]
+
+
 def test_minhash_signature_single_shuffle(spark):
+    """The signature UDF evaluates once per corpus side: the self-join's
+    two sides share one signature exchange, and no copy of the UDF is
+    pushed onto the raw scan below the parallelism-restoring exchange."""
+    from pyspark.sql import functions as F
+
     from pprl_spark.spark.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sig_plan = _optimized_plan(
-        minhash_lsh_pairs(docs, "doc_id", "text", q=5, num_hashes=16, bands=4)
+    kw = dict(q=5, num_hashes=16, bands=4)
+    self_plan = _final_plan_after_collect(
+        minhash_lsh_pairs(docs, "doc_id", "text", **kw)
     )
-    # tokenizer must appear once, not once per hash seed
-    assert sig_plan.count("array_distinct") <= 2
+    assert self_plan.count("ArrowEvalPython [_keys_udf(") == 1, self_plan
+    other = docs.where(F.col("doc_id") % 7 == 0)
+    cross_plan = _final_plan_after_collect(
+        minhash_lsh_pairs(docs, "doc_id", "text", df_other=other, **kw)
+    )
+    assert cross_plan.count("ArrowEvalPython [_keys_udf(") == 2, cross_plan

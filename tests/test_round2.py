@@ -1,6 +1,6 @@
 """Round-2 additions: JSON config serde (reference wire parity),
 multi-file matching, lazy bit-vector validation, zero-denominator
-similarity policy, JVM SimHash parity, chunked-LSH signature parity,
+similarity policy, SimHash replay parity, chunked-LSH signature parity,
 generator-driven weight estimation."""
 
 import hashlib
@@ -253,24 +253,31 @@ def _simhash_replay(text, q=3):
     return [1 if 2 * s >= len(grams) else 0 for s in sums]
 
 
+def _simhash_replay_ints(text, q=3, chunks=8):
+    """(hi, lo, chunk keys) of the replayed fingerprint; NULL text → 0s
+    (md5(NULL) is NULL in SQL, so no vote passes)."""
+    bits = [0] * 64 if text is None else _simhash_replay(text, q)
+    width = 64 // chunks
+    hi = sum(b << (31 - j) for j, b in enumerate(bits[:32]))
+    lo = sum(b << (31 - j) for j, b in enumerate(bits[32:]))
+    keys = [
+        sum(b << (width - 1 - j) for j, b in enumerate(bits[c * width:(c + 1) * width]))
+        for c in range(chunks)
+    ]
+    return hi, lo, keys
+
+
 def test_simhash_fingerprints_match_straight_line_replay(spark):
-    from pprl_spark.spark.dedup import simhash_fingerprints
+    from pprl_spark.spark.dedup import simhash_fingerprints_udf
 
     texts = ["hello world", "the quick brown fox", "aaa", "x"]
     df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
     got = {
         r["__id"]: (r["hi"], r["lo"], list(r["keys"]))
-        for r in simhash_fingerprints(df, "id", "text", q=3, chunks=8).collect()
+        for r in simhash_fingerprints_udf(df, "id", "text", q=3, chunks=8).collect()
     }
     for i, text in enumerate(texts):
-        bits = _simhash_replay(text)
-        hi = sum(b << (31 - j) for j, b in enumerate(bits[:32]))
-        lo = sum(b << (31 - j) for j, b in enumerate(bits[32:]))
-        keys = [
-            sum(b << (7 - j) for j, b in enumerate(bits[c * 8:(c + 1) * 8]))
-            for c in range(8)
-        ]
-        assert got[i] == (hi, lo, keys), f"text {i}"
+        assert got[i] == _simhash_replay_ints(text), f"text {i}"
 
 
 # ------------------------------------------------ chunked LSH parity

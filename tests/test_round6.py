@@ -233,20 +233,40 @@ def test_ngram_char_stats_batch_matches_reference(spark):
 
 
 def test_ngram_char_stats_udf_matches_batch(spark):
-    """Streaming (UDF) path row-identical to the batch aggregate,
-    including unicode-whitespace documents (Java \\s+ convention)."""
+    """Per-row (UDF) path field-identical to the batch aggregate,
+    including unicode-whitespace documents (Java \\s+ convention), NULL /
+    whitespace-only / line-and-paragraph rows, and the optional
+    top-bigram-occurrence and line/paragraph lanes."""
     from pprl_spark.spark.quality import ngram_char_stats, ngram_char_stats_udf
 
-    rows = _GOPHER_TEXTS + [(9, "p\xa0q p\xa0q p\xa0q r s t u v w x y z")]
+    rows = _GOPHER_TEXTS + [(9, "p\xa0q p\xa0q p\xa0q r s t u v w x y z")] + [
+        (10 + i, t) for i, t in enumerate([
+            "the cat sat on the mat the cat sat on the mat again and again",
+            "one two three four five six seven eight nine ten eleven twelve",
+            "dup dup dup dup dup dup dup dup dup dup dup dup",
+            "",
+            None,
+            "single",
+            "a b",
+            "line one\nline one\nline two\n\npara\n\npara",
+            "  \n \n  ",  # whitespace only
+            "x " * 40,
+        ])
+    ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    batch = {r["doc_id"]: r.asDict() for r in ngram_char_stats(df).collect()}
-    udf_rows = df.select(
-        "doc_id", ngram_char_stats_udf("text").alias("s")
-    ).collect()
-    for r in udf_rows:
-        got = r["s"].asDict()
-        for k, v in got.items():
-            assert v == pytest.approx(batch[r["doc_id"]][k]), (r["doc_id"], k)
+    for kw in (
+        {},
+        dict(top_ns=(2, 3, 4), dup_ns=(5, 6, 7, 8, 9, 10),
+             with_top_bigram_occurrence=True, with_line_paragraph=True),
+    ):
+        batch = {r["doc_id"]: r.asDict() for r in
+                 ngram_char_stats(df, "doc_id", "text", **kw).collect()}
+        udf = {r["doc_id"]: r.asDict() for r in
+               df.select("doc_id", ngram_char_stats_udf("text", **kw).alias("s"))
+               .select("doc_id", "s.*").collect()}
+        assert set(batch) == set(udf) == {i for i, _ in rows}
+        for k in batch:
+            assert batch[k] == udf[k], (kw, k, batch[k], udf[k])
 
 
 def test_filter_documents_with_ngram_rules(spark):
@@ -2520,39 +2540,10 @@ def test_stream_job_boilerplate_stage(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_ngram_char_stats_col_matches_shuffle_form(spark):
-    from pprl_spark.spark.quality import ngram_char_stats, ngram_char_stats_col
-
-    rows = [
-        (0, "the cat sat on the mat the cat sat on the mat again and again"),
-        (1, "one two three four five six seven eight nine ten eleven twelve"),
-        (2, "dup dup dup dup dup dup dup dup dup dup dup dup"),
-        (3, ""),
-        (4, None),
-        (5, "single"),
-        (6, "a b"),
-        (7, "line one\nline one\nline two\n\npara\n\npara"),
-        (8, "  \n \n  "),  # whitespace only
-        (9, "x " * 40),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(
-        top_ns=(2, 3, 4),
-        dup_ns=(5, 6, 7, 8, 9, 10),
-        with_top_bigram_occurrence=True,
-        with_line_paragraph=True,
-    )
-    agg = {r["doc_id"]: r.asDict() for r in
-           ngram_char_stats(df, "doc_id", "text", **kw).collect()}
-    col = {r["doc_id"]: r.asDict() for r in
-           df.select("doc_id", ngram_char_stats_col(F.col("text"), **kw)
-                     .alias("s")).select("doc_id", "s.*").collect()}
-    assert set(agg) == set(col)
-    for k in agg:
-        assert agg[k] == col[k], (k, agg[k], col[k])
-
-
-def test_filter_documents_ngram_modes_agree(spark):
+def test_filter_documents_ngram_rules_regression(spark):
+    """Pinned decisions and n-gram signals of the full Gopher rule set on
+    edge rows (NULL text passes: every NULL signal comparison is unknown,
+    so no rule fires)."""
     from pprl_spark.spark.quality import FilterRules, filter_documents
 
     rows = [(i, t) for i, t in enumerate([
@@ -2574,18 +2565,25 @@ def test_filter_documents_ngram_modes_agree(spark):
         max_dup_line_char_fraction=0.20,
         max_dup_paragraph_char_fraction=0.20,
     )
-    a = {r["doc_id"]: r.asDict() for r in
-         filter_documents(df, rules, ngram_mode="project").collect()}
-    b = {r["doc_id"]: r.asDict() for r in
-         filter_documents(df, rules, ngram_mode="shuffle").collect()}
-    u = {r["doc_id"]: r.asDict() for r in
-         filter_documents(df, rules, ngram_mode="udf").collect()}
-    assert set(a) == set(b) == set(u)
-    for k in a:
-        assert a[k] == b[k], (k, a[k], b[k])
-        assert a[k] == u[k], (k, a[k], u[k])
-    with pytest.raises(ValueError, match="ngram_mode"):
-        filter_documents(df, rules, ngram_mode="nope")
+    cols = ["keep", "reject_reason", "top_2gram_char_frac",
+            "top_3gram_char_frac", "top_4gram_char_frac",
+            "dup_5gram_char_frac", "dup_8gram_char_frac",
+            "dup_10gram_char_frac", "dup_line_char_frac",
+            "dup_para_char_frac", "top_bigram_fraction"]
+    got = {r["doc_id"]: tuple(r[c] for c in cols)
+           for r in filter_documents(df, rules).collect()}
+    assert got == {
+        0: (False, "repetition_top3gram", 0.1746031746031746,
+            0.23809523809523808, 0.3333333333333333, 0.0, 0.0, 0.0, 0.0,
+            0.0, 0.08333333333333333),
+        1: (False, "repetition_words", 1.6875, 2.40625, 2.96875, 1.0, 1.0,
+            1.0, 0.0, 0.0, 1.0),
+        2: (False, "too_short", 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0),
+        3: (True, "ok", 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0),
+        4: (False, "repetition_lines", 0.1694915254237288,
+            0.3389830508474576, 0.423728813559322, 0.0, 0.0, 0.0,
+            0.1016949152542373, 0.0, 0.18181818181818182),
+    }
 
 
 def test_bind_once_equivalence_against_unbound_forms(spark):
@@ -2704,15 +2702,14 @@ def test_bind_once_equivalence_against_unbound_forms(spark):
 
 
 def test_simhash_udf_fingerprints_bit_identical(spark):
-    """The per-row Arrow fingerprint engine must equal the explode+agg
-    engine bit-for-bit (hi, lo, every chunk key) including the NULL /
-    empty / shorter-than-q edge rows, and simhash_pairs must return the
-    same pair set under either engine."""
-    from pprl_spark.spark.dedup import (
-        simhash_fingerprints,
-        simhash_fingerprints_udf,
-        simhash_pairs,
-    )
+    """The per-row Arrow fingerprints must equal the straight-line md5
+    majority-vote replay bit-for-bit (hi, lo, every chunk key), including
+    the NULL / empty / shorter-than-q / CJK / duplicate edge rows, and
+    simhash_pairs must return exactly the replayed pairs within the
+    Hamming bound."""
+    from test_round2 import _simhash_replay_ints
+
+    from pprl_spark.spark.dedup import simhash_fingerprints_udf, simhash_pairs
 
     rows = [(0, "the cat sat on the mat and then sat some more right here"),
             (1, "the cat sat on the mat and then sat some more right there"),
@@ -2721,54 +2718,87 @@ def test_simhash_udf_fingerprints_bit_identical(spark):
             (7, "日本語テキストの処理とハッシュ"),
             (8, "the cat sat on the mat and then sat some more right here")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r["__id"]: (r["hi"], r["lo"], tuple(r["keys"])) for r in
-         simhash_fingerprints(df, "doc_id", "text", q=3).collect()}
-    b = {r["__id"]: (r["hi"], r["lo"], tuple(r["keys"])) for r in
-         simhash_fingerprints_udf(df, "doc_id", "text", q=3).collect()}
-    assert a == b
-    pa = {(r["id_a"], r["id_b"]) for r in
-          simhash_pairs(df, "doc_id", "text", q=3, max_hamming=6,
-                        fingerprint_mode="agg").collect()}
-    pu = {(r["id_a"], r["id_b"]) for r in
-          simhash_pairs(df, "doc_id", "text", q=3, max_hamming=6,
-                        fingerprint_mode="udf").collect()}
-    assert pa == pu and (0, 8) in pu
-    with pytest.raises(ValueError, match="fingerprint_mode"):
-        simhash_pairs(df, "doc_id", "text", fingerprint_mode="nope")
+    got = {r["__id"]: (r["hi"], r["lo"], list(r["keys"])) for r in
+           simhash_fingerprints_udf(df, "doc_id", "text", q=3).collect()}
+    want = {i: _simhash_replay_ints(t) for i, t in rows}
+    assert got == want
+
+    def hamming(a, b):
+        return bin(want[a][0] ^ want[b][0]).count("1") + bin(
+            want[a][1] ^ want[b][1]).count("1")
+
+    expect = {(a, b, hamming(a, b)) for a in want for b in want
+              if a < b and hamming(a, b) <= 6}
+    pairs = {tuple(r) for r in
+             simhash_pairs(df, "doc_id", "text", q=3, max_hamming=6).collect()}
+    assert pairs == expect and (0, 8, 0) in pairs
+
+
+def _minhash_replay_buckets(text, q, num_hashes, bands):
+    """Straight-line MinHash band buckets: md5 halves mod 2^31-1 as the
+    base lanes, min_j over distinct grams of (a_j·h1 + b_j·h2 + j) mod
+    2^31-1, bucket = md5 hex of the band's mins joined by '_' (NULL text:
+    md5 of the empty string)."""
+    import hashlib
+
+    from pprl_spark.spark.dedup import minhash_coefficients
+
+    m = 2**31 - 1
+    r = num_hashes // bands
+    if text is None:
+        mins = None
+    else:
+        grams = {text[i:i + q] for i in range(max(len(text) - q + 1, 1))}
+        lanes = []
+        for g in grams:
+            hx = hashlib.md5(g.encode("utf-8")).hexdigest()
+            lanes.append((int(hx[:8], 16) % m, int(hx[8:16], 16) % m))
+        mins = [min((a * h1 + b * h2 + j) % m for h1, h2 in lanes)
+                for j, (a, b) in enumerate(minhash_coefficients(num_hashes))]
+    return [
+        hashlib.md5(
+            ("" if mins is None else
+             "_".join(str(x) for x in mins[band * r:(band + 1) * r])).encode()
+        ).hexdigest()
+        for band in range(bands)
+    ]
 
 
 def test_minhash_udf_signature_bit_identical(spark):
-    """The per-row Arrow signature engine must produce the same band
-    buckets as the explode+agg engine (same md5-derived lane family), so
-    the candidate pair sets are identical — including NULL / empty /
-    shorter-than-q edge rows and cross-corpus mode."""
-    from pprl_spark.spark.dedup import minhash_lsh_pairs
+    """The per-row Arrow signature must produce the straight-line replay's
+    band buckets, so the candidate pair sets equal the replayed bucket
+    collisions — including NULL / empty / shorter-than-q edge rows and
+    cross-corpus mode."""
+    from pprl_spark.spark.dedup import minhash_band_keys, minhash_lsh_pairs
 
     base = "the quick brown fox jumps over the lazy dog again and again "
     rows = [(0, base + "x"), (1, base + "y"),
             (2, "a completely different document about catalyst planning"),
             (3, ""), (4, None), (5, "abc"),
             (6, base + "x")]
+    other_rows = [(100, base + "x"), (101, "nothing alike whatsoever here")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    other = spark.createDataFrame(other_rows, "doc_id long, text string")
     kw = dict(q=5, num_hashes=32, bands=8)
-    pa = {(r["id_a"], r["id_b"]) for r in
-          minhash_lsh_pairs(df, "doc_id", "text", signature_mode="agg", **kw).collect()}
-    pu = {(r["id_a"], r["id_b"]) for r in
-          minhash_lsh_pairs(df, "doc_id", "text", signature_mode="udf", **kw).collect()}
-    assert pa == pu and (0, 6) in pu
-    other = spark.createDataFrame(
-        [(100, base + "x"), (101, "nothing alike whatsoever here")],
-        "doc_id long, text string",
-    )
-    ca = {(r["id_a"], r["id_b"]) for r in
-          minhash_lsh_pairs(df, "doc_id", "text", df_other=other,
-                            signature_mode="agg", **kw).collect()}
-    cu = {(r["id_a"], r["id_b"]) for r in
-          minhash_lsh_pairs(df, "doc_id", "text", df_other=other,
-                            signature_mode="udf", **kw).collect()}
-    assert ca == cu and (0, 100) in cu
-    with pytest.raises(ValueError, match="signature_mode"):
-        minhash_lsh_pairs(df, "doc_id", "text", signature_mode="nope")
+    keys = {r["doc_id"]: list(r["k"]) for r in
+            df.select("doc_id", minhash_band_keys("text", **kw).alias("k"))
+            .collect()}
+    assert keys == {i: _minhash_replay_buckets(t, **kw) for i, t in rows}
+
+    def replay_pairs(left, right, self_mode):
+        lb = {i: _minhash_replay_buckets(t, **kw) for i, t in left}
+        rb = {i: _minhash_replay_buckets(t, **kw) for i, t in right}
+        return {(a, b) for a in lb for b in rb
+                if (a < b or not self_mode)
+                and any(x == y for x, y in zip(lb[a], rb[b]))}
+
+    self_pairs = {(r["id_a"], r["id_b"]) for r in
+                  minhash_lsh_pairs(df, "doc_id", "text", **kw).collect()}
+    assert self_pairs == replay_pairs(rows, rows, True) and (0, 6) in self_pairs
+    cross = {(r["id_a"], r["id_b"]) for r in
+             minhash_lsh_pairs(df, "doc_id", "text", df_other=other,
+                               **kw).collect()}
+    assert cross == replay_pairs(rows, other_rows, False) and (0, 100) in cross
 
 
 # ---------------------------------------------------------------- r6 paths
@@ -2807,10 +2837,14 @@ def test_simhash_chunk_pair_emits_each_pair_once(spark):
     assert len(pairs) == len(set(pairs))
 
 
-def test_match_lsh_jvm_engine_matches_udf_engine(spark):
-    """r6: the default jvm score engine (popcount-word decomposition +
-    prefix-bound early exit) must be row-identical — ids AND similarity
-    doubles — to the r5 Arrow-kernel engine."""
+def test_match_lsh_scores_equal_kernel_similarity(spark):
+    """r6: match_lsh's Catalyst scoring (popcount-word decomposition +
+    prefix-bound early exit) must emit exactly the capped-bucket
+    candidates whose kernel similarity clears the threshold, each with
+    the kernel's similarity double — not an approximation of it."""
+    from collections import defaultdict
+    from itertools import combinations
+
     from pyspark.sql import functions as F
 
     from pprl_spark.config import (
@@ -2820,7 +2854,8 @@ def test_match_lsh_jvm_engine_matches_udf_engine(spark):
         MaskConfig,
         MatchConfig,
     )
-    from pprl_spark.spark.lsh import LSHConfig
+    from pprl_spark.kernels.similarity import pair_similarity
+    from pprl_spark.spark.lsh import LSHConfig, add_band_signatures
     from pprl_spark.spark.mask import mask
     from pprl_spark.spark.match import match_lsh
 
@@ -2838,18 +2873,31 @@ def test_match_lsh_jvm_engine_matches_udf_engine(spark):
     lshcfg = LSHConfig(num_bits=1024, num_bands=64, band_width=16, seed=727,
                        scheme="chunked")
     mcfg = MatchConfig("dice", 0.85)
-    jvm = match_lsh(encoded, None, mcfg, lshcfg, max_bucket_size=400,
-                    score_engine="jvm")
-    udf = match_lsh(encoded, None, mcfg, lshcfg, max_bucket_size=400,
-                    score_engine="udf")
-    a = sorted(map(tuple, jvm.collect()))
-    b = sorted(map(tuple, udf.collect()))
-    assert a == b and len(a) > 0
+    got = sorted(map(tuple, match_lsh(encoded, None, mcfg, lshcfg,
+                                      max_bucket_size=400).collect()))
+    vecs = {r["id"]: bytes(r["bloom"])
+            for r in encoded.select("id", "bloom").collect()}
+    buckets = defaultdict(list)
+    for r in add_band_signatures(encoded, lshcfg).select(
+            "id", "band", "sig").collect():
+        buckets[(r["band"], r["sig"])].append(r["id"])
+    cands = sorted({
+        (a, b)
+        for ids in buckets.values() if len(ids) <= 400
+        for a, b in combinations(sorted(ids), 2)
+    })
+    sims = pair_similarity("dice", [vecs[a] for a, _ in cands],
+                           [vecs[b] for _, b in cands])
+    want = sorted(
+        (a, b, float(s)) for (a, b), s in zip(cands, sims) if s >= 0.85
+    )
+    assert got == want and len(got) > 0
 
 
 def test_match_lsh_jvm_engine_rejects_odd_vector_length(spark):
-    """The jvm engine scores exactly ceil(num_bits/8) bytes; a vector of
-    any other length must fail loudly, not silently truncate."""
+    """match_lsh's Catalyst scoring reads exactly ceil(num_bits/8) bytes;
+    a vector of any other length must fail loudly, not silently truncate,
+    and name the fix."""
     import pytest
     from pyspark.sql import Row
 
@@ -2864,8 +2912,9 @@ def test_match_lsh_jvm_engine_rejects_odd_vector_length(spark):
         df, None, MatchConfig("dice", 0.1),
         LSHConfig(num_bits=16, num_bands=2, band_width=8, scheme="chunked"),
     )
-    with pytest.raises(Exception, match="expects 2-byte vectors"):
+    with pytest.raises(Exception, match="expects 2-byte vectors") as err:
         out.collect()
+    assert "set lsh.num_bits" in str(err.value)
 
 
 def test_banned_member_expr_matches_array_contains(spark):
