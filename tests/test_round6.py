@@ -234,25 +234,16 @@ def test_ngram_char_stats_batch_matches_reference(spark):
 
 def test_ngram_char_stats_udf_matches_batch(spark):
     """Per-row (UDF) path field-identical to the batch aggregate,
-    including unicode-whitespace documents (Java \\s+ convention), NULL /
-    whitespace-only / line-and-paragraph rows, and the optional
-    top-bigram-occurrence and line/paragraph lanes."""
+    including unicode-whitespace documents (Java \\s+ convention), with
+    and without the optional top-bigram-occurrence and line/paragraph
+    lanes."""
+    rows = _GOPHER_TEXTS + [(9, "p\xa0q p\xa0q p\xa0q r s t u v w x y z")]
+    _assert_ngram_udf_matches_batch(spark, rows)
+
+
+def _assert_ngram_udf_matches_batch(spark, rows):
     from pprl_spark.spark.quality import ngram_char_stats, ngram_char_stats_udf
 
-    rows = _GOPHER_TEXTS + [(9, "p\xa0q p\xa0q p\xa0q r s t u v w x y z")] + [
-        (10 + i, t) for i, t in enumerate([
-            "the cat sat on the mat the cat sat on the mat again and again",
-            "one two three four five six seven eight nine ten eleven twelve",
-            "dup dup dup dup dup dup dup dup dup dup dup dup",
-            "",
-            None,
-            "single",
-            "a b",
-            "line one\nline one\nline two\n\npara\n\npara",
-            "  \n \n  ",  # whitespace only
-            "x " * 40,
-        ])
-    ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for kw in (
         {},
@@ -2538,6 +2529,25 @@ def test_stream_job_boilerplate_stage(spark, tmp_path):
 # r5 late: per-row (zero-shuffle) n-gram stats parity with the explode+agg
 # form, including the edge rows the sf corpus never exercises
 # ---------------------------------------------------------------------------
+
+
+def test_ngram_char_stats_col_matches_shuffle_form(spark):
+    """Per-row (zero-shuffle) form against the explode+agg form on the
+    edge rows: empty, NULL, single-word, whitespace-only,
+    line-and-paragraph and single-word-loop documents."""
+    rows = [
+        (0, "the cat sat on the mat the cat sat on the mat again and again"),
+        (1, "one two three four five six seven eight nine ten eleven twelve"),
+        (2, "dup dup dup dup dup dup dup dup dup dup dup dup"),
+        (3, ""),
+        (4, None),
+        (5, "single"),
+        (6, "a b"),
+        (7, "line one\nline one\nline two\n\npara\n\npara"),
+        (8, "  \n \n  "),  # whitespace only
+        (9, "x " * 40),
+    ]
+    _assert_ngram_udf_matches_batch(spark, rows)
 
 
 def test_filter_documents_ngram_rules_regression(spark):
