@@ -3,7 +3,7 @@ match → sketch, checkpointed and resumable.
 
 Launch (cluster):
     spark-submit --py-files pprl_spark.zip jobs/pprl_job.py \
-        --pages /path/or/iceberg.table --workdir /ckpt/run1 [--resume]
+        --pages /path/to/pages.parquet --workdir /ckpt/run1 [--resume]
 
 Launch (sandbox):
     python jobs/pprl_job.py --pages /root/testdata/sf0.001/documents.parquet \

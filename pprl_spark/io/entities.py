@@ -1,4 +1,4 @@
-"""CSV/parquet/Iceberg sources and sinks.
+"""CSV/parquet sources and sinks.
 
 Reference parity (§2.1):
 * entity CSV — header row, one id column, remaining columns are string
@@ -10,9 +10,7 @@ Reference parity (§2.1):
   similarity)`` (cli.py:202-245).
 
 Production source: ``read_pages`` loads the BASELINE ``pages`` table from
-an Iceberg table name when an Iceberg catalog is configured, else a
-parquet path — same DataFrame either way, so every downstream stage is
-storage-agnostic (Catalyst still prunes the unused ``html`` column and
+a parquet path (Catalyst prunes the unused ``html`` column and
 partition-prunes on ``warc_ts``/``lang`` predicates).
 """
 
@@ -106,19 +104,6 @@ def write_match_csv(
 
 
 def read_pages(spark: SparkSession, location: str) -> DataFrame:
-    """Load the pages(url, warc_ts, html, text, lang) table.
-
-    ``location`` is an Iceberg table name (contains no '/') when an
-    Iceberg catalog is on the classpath, else a parquet path.  The sandbox
-    has no Iceberg jars, so the parquet path is the tested branch; the
-    Iceberg branch is the same one-liner with format("iceberg").
-    """
-    if "/" not in location:
-        try:
-            return spark.read.format("iceberg").load(location)
-        except Exception as exc:  # noqa: BLE001 - no iceberg runtime present
-            raise RuntimeError(
-                f"Iceberg table `{location}` requested but no Iceberg runtime "
-                f"is available: {exc}"
-            ) from exc
+    """Load the pages(url, warc_ts, html, text, lang) table from the
+    parquet path ``location``."""
     return spark.read.parquet(location)

@@ -2,12 +2,15 @@
 
 Pattern (SURVEY.md §2.8 / north_rule):
 
-1. **Hash JVM-side.**  Hash-based sketches (HLL/CMS/Bloom) consume 64-bit
-   hashes computed with the built-in ``F.xxhash64`` — whole-stage codegen,
-   no Python string hashing.  Rank sketches (KLL/t-digest) consume the
-   raw numeric column.
-2. **Partition-local partials** via ``mapInPandas``: one sketch per group
-   per partition, updated from Arrow batches.  This is the skew story:
+1. **Project once, hash JVM-side.**  A sketch's ``INPUT`` kind picks its
+   input column from one table (``_INPUTS``): hash-based sketches
+   (HLL/CMS/Bloom) consume 64-bit hashes computed with the built-in
+   ``F.xxhash64`` — whole-stage codegen, no Python string hashing;
+   item-identity sketches consume the string; rank sketches (KLL/t-digest)
+   consume the numeric column.
+2. **Partition-local partials** via one ``mapInPandas`` body
+   (``_partials``): one sketch per group per partition, updated from Arrow
+   batches.  This is the skew story:
    the shuffle that follows carries *one KB-sized state per (partition,
    group)* — a group holding half the table costs the same shuffle bytes
    as a tiny one, so hot keys (``lang='en'`` at 60%) never produce a hot
@@ -25,7 +28,7 @@ from __future__ import annotations
 from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..spark.session import resplit
@@ -41,78 +44,100 @@ __all__ = [
 ]
 
 
-def prepare_input(df: DataFrame, column: str, factory: Callable[[], Sketch]) -> DataFrame:
-    """Project the sketch input column: xxhash64 for hash sketches, double
-    cast for rank sketches.  Nulls are dropped (a null contributes nothing
-    to any of these sketches).
+# INPUT kind → the column a sketch's ``update`` consumes: 64-bit hashes
+# for hash sketches (HLL/CMS/Bloom/theta), the item itself for
+# item-identity sketches (frequent items), the number for rank sketches
+# (KLL/t-digest).
+_INPUTS = {
+    "hash": F.xxhash64,
+    "raw": lambda c: c.cast("string"),
+    "value": lambda c: c.cast("double"),
+}
+
+
+def input_kind(sketch: Sketch) -> str:
+    """``sketch.INPUT`` (``"hash"`` when absent); ValueError if unknown."""
+    kind = getattr(sketch, "INPUT", "hash")
+    if kind not in _INPUTS:
+        raise ValueError(
+            f"{type(sketch).__name__}.INPUT is {kind!r}; expected one of {sorted(_INPUTS)}"
+        )
+    return kind
+
+
+def input_column(kind: str, column: str) -> Column:
+    """``column`` projected for sketches of INPUT ``kind``, as ``__<kind>``."""
+    return _INPUTS[kind](F.col(column)).alias(f"__{kind}")
+
+
+def _project(df: DataFrame, column: str, kinds, group_cols=()) -> DataFrame:
+    """Drop null ``column`` rows (a null contributes nothing to any of
+    these sketches) and select the group columns plus one input column
+    per kind in ``kinds``.
 
     If the input has fewer partitions than the cluster has slots (a small
-    parquet table lands in 1-4 scan splits), the projected 8-byte column
-    is repartitioned up to ``defaultParallelism`` — an 8 B/row shuffle is
-    ~free and unlocks full-width parallel partials.  At production scale
-    the scan has more splits than slots and no shuffle is added.  The
-    repartition happens AFTER the projection so only the hash/double
-    column moves, never the source table."""
-    probe = factory()
-    mode = getattr(probe, "INPUT", "hash")
-    if mode == "hash":
-        out = df.filter(F.col(column).isNotNull()).select(
-            F.xxhash64(F.col(column)).alias("__in")
-        )
-    elif mode == "raw":
-        # item-identity sketches (frequent-items) must see the values
-        out = df.filter(F.col(column).isNotNull()).select(
-            F.col(column).cast("string").alias("__in")
-        )
-    else:
-        out = df.filter(F.col(column).isNotNull()).select(
-            F.col(column).cast("double").alias("__in")
-        )
-    return resplit(out)
+    parquet table lands in 1-4 scan splits), the projection is
+    repartitioned up to ``defaultParallelism`` — a shuffle of a few bytes
+    per row is ~free and unlocks full-width parallel partials.  At
+    production scale the scan has more splits than slots and no shuffle
+    is added.  The repartition happens AFTER the projection so only the
+    narrow columns move, never the source table."""
+    inputs = [input_column(kind, column) for kind in _INPUTS if kind in kinds]
+    return resplit(df.filter(F.col(column).isNotNull()).select(*group_cols, *inputs))
 
 
-def _partials_map(factory: Callable[[], Sketch], group_cols: list[str]):
+def _schema_of(df: DataFrame, cols) -> list[str]:
+    types = dict(df.dtypes)
+    return [f"{name} {types[name]}" for name in cols]
+
+
+def _partials(df: DataFrame, column: str, factories: "dict[str, Callable[[], Sketch]]",
+              group_cols=()) -> DataFrame:
+    """Partition-local partials over the ``_project`` of ``column``: each
+    partition updates one sketch per (group, name) from the same Arrow
+    batches and emits one (group…, __sketch, __state) row per sketch, so
+    the output is O(#partitions × #groups × #sketches) KB-sized rows
+    whatever the data volume."""
+    group_cols = list(group_cols)
+    kinds = {name: input_kind(f()) for name, f in factories.items()}
+    prepared = _project(df, column, kinds.values(), group_cols)
+
     def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sketches: dict[tuple, Sketch] = {}
+        sketches: dict[tuple, dict[str, Sketch]] = {}
         for pdf in batches:
             if pdf.empty:
                 continue
-            if group_cols:
-                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    if not isinstance(key, tuple):
-                        key = (key,)
-                    sk = sketches.get(key)
-                    if sk is None:
-                        sk = sketches[key] = factory()
-                    sk.update(sub["__in"].to_numpy())
-            else:
-                sk = sketches.get(())
-                if sk is None:
-                    sk = sketches[()] = factory()
-                sk.update(pdf["__in"].to_numpy())
+            groups = pdf.groupby(group_cols, dropna=False, sort=False) if group_cols else [((), pdf)]
+            for key, sub in groups:
+                if not isinstance(key, tuple):
+                    key = (key,)
+                if key not in sketches:
+                    sketches[key] = {name: f() for name, f in factories.items()}
+                for name, sk in sketches[key].items():
+                    sk.update(sub[f"__{kinds[name]}"].to_numpy())
         rows = [
-            dict(zip(group_cols, key)) | {"state": sk.serialize()}
-            for key, sk in sketches.items()
+            dict(zip(group_cols, key)) | {"__sketch": name, "__state": sk.serialize()}
+            for key, group in sketches.items()
+            for name, sk in group.items()
         ]
         if rows:
             yield pd.DataFrame(rows)
 
-    return _fn
+    schema = _schema_of(prepared, group_cols) + ["__sketch string", "__state binary"]
+    return prepared.mapInPandas(_fn, schema=", ".join(schema))
+
+
+def prepare_input(df: DataFrame, column: str, factory: Callable[[], Sketch]) -> DataFrame:
+    """The input projection one ``factory()`` sketch consumes: xxhash64
+    for hash sketches, string for item-identity sketches, double for rank
+    sketches; null rows dropped, resplit to full width (``_project``)."""
+    return _project(df, column, {input_kind(factory())})
 
 
 def sketch_column(df: DataFrame, column: str, factory: Callable[[], Sketch]) -> Sketch:
-    """Global (ungrouped) sketch of one column → merged Sketch object.
-
-    The partials (≤ one per input partition, KB each) are merged on the
-    driver — at 1000 executors that is ~1000 small rows, negligible."""
-    prepared = prepare_input(df, column, factory)
-    partial_rows = prepared.mapInPandas(
-        _partials_map(factory, []), schema="state binary"
-    ).collect()
-    result = factory()
-    for row in partial_rows:
-        result.merge(deserialize(bytes(row["state"])))
-    return result
+    """Global (ungrouped) sketch of one column → merged Sketch object
+    (``profile_column`` with one sketch)."""
+    return profile_column(df, column, {"sketch": factory})["sketch"]
 
 
 def sketch_column_with_exact(
@@ -130,14 +155,15 @@ def sketch_column_with_exact(
     the key-partitioning is exactly what ``countDistinct``'s own exchange
     would do — the sketch partials ride along for free.
 
-    Only meaningful for hash-input sketches (HLL/theta); the exact count
-    is the count of distinct *xxhash64 values of the column*, collision-
-    equal to the column's distinct count (p ≈ d²/2⁶⁵)."""
-    prepared = df.filter(F.col(column).isNotNull()).select(
-        F.xxhash64(F.col(column)).alias("__in")
-    )
+    Only meaningful for hash-input sketches (HLL/theta); others raise
+    ValueError.  The exact count is the count of distinct *xxhash64
+    values of the column*, collision-equal to the column's distinct count
+    (p ≈ d²/2⁶⁵)."""
+    if input_kind(factory()) != "hash":
+        raise ValueError("sketch_column_with_exact needs a hash-input sketch (HLL, theta)")
+    prepared = df.filter(F.col(column).isNotNull()).select(input_column("hash", column))
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    prepared = prepared.repartition(parallelism, "__in")
+    prepared = prepared.repartition(parallelism, "__hash")
 
     def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -147,7 +173,7 @@ def sketch_column_with_exact(
         for pdf in batches:
             if pdf.empty:
                 continue
-            vals = pdf["__in"].to_numpy()
+            vals = pdf["__hash"].to_numpy()
             sk.update(vals)
             # per-batch dedup keeps the accumulator at 8 B per distinct key
             uniq.append(np.unique(vals))
@@ -176,30 +202,15 @@ def sketch_grouped(
 
     Phase 1 computes per-partition per-group partials (map-side combine);
     phase 2 shuffles only the states and merges per group."""
-    probe = factory()
-    mode = getattr(probe, "INPUT", "hash")
-    if mode == "hash":
-        in_col = F.xxhash64(F.col(column)).alias("__in")
-    elif mode == "raw":
-        in_col = F.col(column).cast("string").alias("__in")
-    else:
-        in_col = F.col(column).cast("double").alias("__in")
-    prepared = df.filter(F.col(column).isNotNull()).select(*group_cols, in_col)
-    # narrow (group, 8B) rows only — see prepare_input's rationale
-    prepared = resplit(prepared)
-
-    group_schema = ", ".join(
-        f"{name} {dtype}" for name, dtype in prepared.select(*group_cols).dtypes
+    partials = _partials(df, column, {"sketch": factory}, group_cols)
+    out_schema = ", ".join(
+        _schema_of(partials, group_cols) + ["state binary", f"{estimate_name} double"]
     )
-    partial_schema = f"{group_schema}, state binary"
-    partials = prepared.mapInPandas(_partials_map(factory, group_cols), schema=partial_schema)
-
-    out_schema = f"{group_schema}, state binary, {estimate_name} double"
 
     def _merge(key: tuple, pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         merged: Sketch | None = None
         for pdf in pdfs:
-            for state in pdf["state"]:
+            for state in pdf["__state"]:
                 sk = deserialize(bytes(state))
                 merged = sk if merged is None else merged.merge(sk)
         if merged is None:
@@ -228,43 +239,16 @@ def profile_column(
     column") without one pass per sketch.
 
     The projection prepares every input representation any requested
-    sketch needs (xxhash64 for hash sketches, raw string for
-    item-identity sketches, double for rank sketches); each partition
-    updates all sketches from the same Arrow batches and emits one
-    (name, state) row per sketch, so the collect stays
+    sketch needs; each partition updates all sketches from the same Arrow
+    batches and emits one row per sketch, so the collect stays
     O(#partitions × #sketches) KB-sized rows regardless of data volume.
+    The partials (≤ one per input partition and sketch) are merged on the
+    driver — at 1000 executors that is ~1000 small rows per sketch.
     """
-    probes = {name: f() for name, f in factories.items()}
-    modes = {name: getattr(p, "INPUT", "hash") for name, p in probes.items()}
-    cols = []
-    if any(m == "hash" for m in modes.values()):
-        cols.append(F.xxhash64(F.col(column)).alias("__hash"))
-    if any(m == "raw" for m in modes.values()):
-        cols.append(F.col(column).cast("string").alias("__raw"))
-    if any(m == "value" for m in modes.values()):
-        cols.append(F.col(column).cast("double").alias("__value"))
-    prepared = df.filter(F.col(column).isNotNull()).select(*cols)
-    prepared = resplit(prepared)
-    col_for = {"hash": "__hash", "raw": "__raw", "value": "__value"}
-
-    def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sketches = {name: f() for name, f in factories.items()}
-        seen = False
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            seen = True
-            for name, sk in sketches.items():
-                sk.update(pdf[col_for[modes[name]]].to_numpy())
-        if seen:
-            yield pd.DataFrame(
-                [{"name": n, "state": sk.serialize()} for n, sk in sketches.items()]
-            )
-
-    rows = prepared.mapInPandas(_fn, schema="name string, state binary").collect()
+    rows = _partials(df, column, factories).collect()
     out = {name: f() for name, f in factories.items()}
     for row in rows:
-        out[row["name"]].merge(deserialize(bytes(row["state"])))
+        out[row["__sketch"]].merge(deserialize(bytes(row["__state"])))
     return out
 
 
@@ -287,8 +271,8 @@ def frequent_items(
         df, group_cols, column, lambda: FrequentItemsSketch(capacity=capacity)
     )
     out_schema = ", ".join(
-        f"{name} {dtype}" for name, dtype in grouped.select(*group_cols).dtypes
-    ) + ", item string, count_lower long, count_upper long"
+        _schema_of(grouped, group_cols) + ["item string", "count_lower long", "count_upper long"]
+    )
 
     def _explode(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in pdfs:

@@ -11,10 +11,12 @@ watermark for late data — the streaming counterpart of the batch
 
 ``streaming_hll_by_key``: a CUSTOM STATEFUL operator via
 ``applyInPandasWithState`` — a running HyperLogLog per key whose state is
-the serialized sketch.  Because HLL registers are a max-merge, the
-streaming state after any micro-batch split is BIT-IDENTICAL to the batch
-sketch over the same rows (the associativity property the batch layer
-tests across repartitions carries over to time-sliced arrival).
+the serialized sketch.  It hashes values with the batch layer's ``hash``
+input projection, and HLL registers are a max-merge, so the streaming
+state after any micro-batch split is BIT-IDENTICAL to the batch sketch
+over the same rows (the associativity property the batch layer tests
+across repartitions carries over to time-sliced arrival).  Null values are
+the exception: the batch layer drops them, here they hash to the seed.
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..config import MaskConfig
 from ..sketch import HyperLogLog
+from ..sketch.spark_agg import input_column
 from ..spark.mask import mask
 
 __all__ = [
@@ -140,12 +143,21 @@ def streaming_hll_by_key(
     stream.  At cluster scale the state store shards by key hash across
     executors exactly like a shuffle, so skewed key traffic is absorbed
     by the per-key state granularity.
+
+    .. note:: **Checkpoint compatibility.**  Values are hashed as
+       ``xxhash64(value)``, the batch layer's ``hash`` projection; earlier
+       builds hashed ``xxhash64(cast(value as string))``.  The two agree
+       on string columns only, so a checkpoint written by an earlier build
+       over a non-string value column holds registers this build never
+       sets, and its sketches no longer match the batch sketch.  For such
+       streams, restart from a FRESH checkpoint directory (re-reading the
+       source from the desired offset) rather than resuming the old one.
     """
     if not stream_df.isStreaming:
         raise ValueError("streaming_hll_by_key expects a streaming DataFrame")
     hashed = stream_df.select(
         F.col(key_col).cast("string").alias("key"),
-        F.xxhash64(F.col(value_col).cast("string")).alias("__h"),
+        input_column("hash", value_col),
     )
     out_schema = "key string, estimate double, n_rows_seen long, sketch binary"
     state_schema = "sketch binary, n_rows_seen long"
@@ -159,7 +171,7 @@ def streaming_hll_by_key(
         else:
             hll, seen = HyperLogLog(p=p), 0
         for pdf in pdfs:
-            hll.update(pdf["__h"].to_numpy())
+            hll.update(pdf["__hash"].to_numpy())
             seen += len(pdf)
         blob = hll.serialize()
         state.update((blob, seen))

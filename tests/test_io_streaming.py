@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from pprl_spark.config import CLKFilter, HashConfig, HashFunctionConfig, MaskConfig
@@ -79,8 +80,8 @@ def test_read_pages_parquet_and_iceberg_error(spark, tmp_path):
     make_pages(spark, 50).write.mode("overwrite").parquet(str(tmp_path / "pages"))
     df = read_pages(spark, str(tmp_path / "pages"))
     assert df.count() == 50
-    with pytest.raises(RuntimeError, match="no Iceberg runtime"):
-        read_pages(spark, "catalog.db.pages")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_pages(spark, str(tmp_path / "missing"))
 
 
 def test_streaming_mask_matches_batch(spark, tmp_path):

@@ -11,7 +11,7 @@ from pprl_spark.spark.pipeline import Pipeline, Stage
 CALLS: list[str] = []
 
 
-def _mk_stages(n_rows=500, double_cfg=None, chunk_mode="single_pass"):
+def _mk_stages(n_rows=500, double_cfg=None):
     def src(spark, inputs):
         CALLS.append("src")
         return spark.range(n_rows).select(
@@ -29,7 +29,7 @@ def _mk_stages(n_rows=500, double_cfg=None, chunk_mode="single_pass"):
     return [
         Stage("src", src),
         Stage("doubled", doubled, inputs=("src",), config={"mult": double_cfg or 2},
-              split_by="id", num_chunks=4, chunk_mode=chunk_mode),
+              split_by="id", num_chunks=4),
         Stage("agg", agg, inputs=("doubled",)),
     ]
 
@@ -59,12 +59,11 @@ def test_resumed_chunked_stage_schema_equals_fresh_run(spark, tmp_path):
     assert "chunk" not in resumed["doubled"].columns
 
 
-@pytest.mark.parametrize("chunk_mode", ["single_pass", "scan_per_chunk"])
-def test_chunk_level_mid_stage_resume(spark, tmp_path, chunk_mode):
+def test_chunk_level_mid_stage_resume(spark, tmp_path):
     import shutil
 
     CALLS.clear()
-    Pipeline(spark, tmp_path, _mk_stages(chunk_mode=chunk_mode)).run()
+    Pipeline(spark, tmp_path, _mk_stages()).run()
     # simulate a crash mid-way through the chunked stage: lineage.json is
     # written last, so a crash leaves pending.json + some chunks but no
     # lineage; chunks 1 and 3 are lost with the dying executor
@@ -75,7 +74,7 @@ def test_chunk_level_mid_stage_resume(spark, tmp_path, chunk_mode):
     shutil.rmtree(tmp_path / "agg")  # downstream never ran
 
     CALLS.clear()
-    p = Pipeline(spark, tmp_path, _mk_stages(chunk_mode=chunk_mode))
+    p = Pipeline(spark, tmp_path, _mk_stages())
     result = p.run()
     metrics = json.loads((tmp_path / "doubled" / "metrics.json").read_text())
     assert metrics["chunks_skipped"] == 2
@@ -86,32 +85,6 @@ def test_chunk_level_mid_stage_resume(spark, tmp_path, chunk_mode):
     got = {r["k"]: r["sv"] for r in result["agg"].collect()}
     expected = {k: sum(i * 2 for i in range(500) if i % 7 == k) for k in range(7)}
     assert got == expected
-
-
-def test_chunk_modes_produce_identical_checkpoints(spark, tmp_path):
-    """Both chunk modes are pure execution strategies: same chunk layout,
-    same rows, same resume markers — so flipping the mode between runs
-    must not invalidate or recompute anything."""
-    a = Pipeline(spark, tmp_path / "sp", _mk_stages(chunk_mode="single_pass")).run()
-    b = Pipeline(spark, tmp_path / "pc", _mk_stages(chunk_mode="scan_per_chunk")).run()
-    rows_a = sorted((r["id"], r["v"]) for r in a["doubled"].collect())
-    rows_b = sorted((r["id"], r["v"]) for r in b["doubled"].collect())
-    assert rows_a == rows_b
-    for c in range(4):
-        pa = sorted((r["id"], r["v"]) for r in
-                    spark.read.parquet(str(tmp_path / "sp" / "doubled" / "data" / f"chunk={c}")).collect())
-        pb = sorted((r["id"], r["v"]) for r in
-                    spark.read.parquet(str(tmp_path / "pc" / "doubled" / "data" / f"chunk={c}")).collect())
-        assert pa == pb, f"chunk {c} differs between modes"
-    # mode flip on an existing workdir: everything skips
-    CALLS.clear()
-    Pipeline(spark, tmp_path / "sp", _mk_stages(chunk_mode="scan_per_chunk")).run()
-    assert CALLS == []
-
-
-def test_stage_rejects_unknown_chunk_mode():
-    with pytest.raises(ValueError, match="unknown chunk_mode"):
-        Stage("s", lambda spark, inputs: None, chunk_mode="adaptive")
 
 
 def test_config_change_invalidates_stage_and_downstream(spark, tmp_path):

@@ -261,6 +261,54 @@ def test_streaming_hll_state_is_bit_identical_to_batch(spark, tmp_path):
         assert abs(final[key]["estimate"] - exact) <= 3 * hll.relative_error * exact
 
 
+def test_streaming_hll_long_values_match_sketch_grouped(spark, tmp_path):
+    """On a non-string value column the streaming HLL hashes the value
+    itself, as the batch layer does: after ≥2 micro-batches each key's
+    final sketch is byte-equal to sketch_grouped's state for that key
+    (xxhash64(5L) != xxhash64('5'), so hashing the string form breaks
+    this)."""
+    from pprl_spark.sketch import HyperLogLog, sketch_grouped
+    from pprl_spark.streaming import streaming_hll_by_key
+
+    src = tmp_path / "src"
+    rows1 = [(f"k{i % 3}", i) for i in range(60)]
+    rows2 = [(f"k{i % 3}", i) for i in range(30, 90)]
+    for rows in (rows1, rows2):
+        spark.createDataFrame(rows, "key string, val long").coalesce(1) \
+            .write.mode("append").parquet(str(src))
+
+    stream = (
+        spark.readStream.schema("key string, val long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    q = (
+        streaming_hll_by_key(stream, "key", "val", p=8)
+        .writeStream.format("memory")
+        .queryName("hll_long_updates")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    updates = spark.sql("SELECT * FROM hll_long_updates").collect()
+    assert len(updates) >= 4  # ≥2 micro-batches × 3 keys
+    final = {}
+    for r in updates:
+        if r["key"] not in final or r["n_rows_seen"] > final[r["key"]]["n_rows_seen"]:
+            final[r["key"]] = r
+
+    batch = spark.createDataFrame(rows1 + rows2, "key string, val long")
+    grouped = {
+        r["key"]: bytes(r["state"])
+        for r in sketch_grouped(batch, ["key"], "val", lambda: HyperLogLog(p=8)).collect()
+    }
+    assert set(final) == set(grouped) == {"k0", "k1", "k2"}
+    for key, row in final.items():
+        assert row["n_rows_seen"] == 40
+        assert bytes(row["sketch"]) == grouped[key]
+
+
 def test_streaming_hll_rejects_batch_df(spark):
     from pprl_spark.streaming import streaming_hll_by_key
 

@@ -4,6 +4,7 @@ against Spark's own approximate built-ins."""
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -148,16 +149,13 @@ def test_frequent_items_grouped(spark):
 
 
 def test_profile_column_one_scan_matches_per_sketch(spark):
-    import pyspark.sql.functions as SF
+    """Each sketch of a one-scan profile equals the same sketch built in
+    this process from the collected input column (xxhash64 / string /
+    double): byte-equal HLL and CMS states, exact MG counts, and a KLL
+    large enough to hold every value answers every quantile exactly."""
+    from collections import Counter
 
-    from pprl_spark.sketch import (
-        CountMinSketch,
-        FrequentItemsSketch,
-        HyperLogLog,
-        KLLSketch,
-        profile_column,
-        sketch_column,
-    )
+    from pprl_spark.sketch import FrequentItemsSketch, profile_column
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     out = profile_column(
@@ -169,19 +167,66 @@ def test_profile_column_one_scan_matches_per_sketch(spark):
             "mg": lambda: FrequentItemsSketch(capacity=16),
         },
     )
-    # vs separate passes: HLL estimate identical (deterministic merge),
-    # MG exact regime identical, CMS totals identical
-    hll_sep = sketch_column(ev, "event_type", lambda: HyperLogLog(p=12))
-    assert out["hll"].estimate() == hll_sep.estimate()
-    exact = {
-        r["event_type"]: r["n"]
-        for r in ev.groupBy("event_type").agg(SF.count("*").alias("n")).collect()
-    }
+    rows = ev.where(F.col("event_type").isNotNull()).select(
+        F.xxhash64("event_type").alias("h"), "event_type"
+    ).collect()
+    hashes = np.array([r["h"] for r in rows], dtype=np.int64)
+    hll, cms = HyperLogLog(p=12), CountMinSketch(width=2719, depth=5)
+    hll.update(hashes)
+    cms.update(hashes)
+    assert out["hll"].serialize() == hll.serialize()
+    assert out["cms"].serialize() == cms.serialize()
+    exact = Counter(r["event_type"] for r in rows)
+    assert out["mg"].offset == 0  # 5 event types < capacity 16: exact regime
     assert {i: lo for i, lo, _ in out["mg"].estimate()} == exact
-    assert out["cms"].total == sum(exact.values())
-    # rank sketch lane: numeric column through the same helper
-    kl = profile_column(ev, "value", {"kll": lambda: KLLSketch()})["kll"]
-    assert kl.total if hasattr(kl, "total") else True
+
+    # rank sketch lane: the double cast of a numeric column
+    kll = profile_column(ev, "value", {"kll": lambda: KLLSketch(k=4096)})["kll"]
+    values = [r["value"] for r in ev.where(F.col("value").isNotNull()).select("value").collect()]
+    ref = KLLSketch(k=4096)
+    ref.update(np.array(values, dtype=np.float64))
+    assert kll.n == ref.n == len(values)
+    for q in (0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0):
+        assert kll.quantile(q) == ref.quantile(q)
+
+
+def test_grouped_hll_states_match_in_process_sketches(spark):
+    """sketch_grouped's per-group HLL state equals the HLL built in this
+    process from that group's xxhash64 values (a long column: the hash is
+    of the value itself, not of its string form)."""
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    out = sketch_grouped(ev, ["event_type"], "user_id", lambda: HyperLogLog(p=12)).collect()
+    rows = ev.where(F.col("user_id").isNotNull()).select(
+        "event_type", F.xxhash64("user_id").alias("h")
+    ).collect()
+    assert len(out) == len({r["event_type"] for r in rows})
+    for row in out:
+        ref = HyperLogLog(p=12)
+        ref.update(np.array([r["h"] for r in rows if r["event_type"] == row["event_type"]],
+                            dtype=np.int64))
+        assert bytes(row["state"]) == ref.serialize()
+
+
+class _UnknownInputSketch(HyperLogLog):
+    INPUT = "bits"
+
+
+def test_unknown_sketch_input_kind_raises(spark, docs_df):
+    """Every entry point rejects an INPUT kind outside hash/raw/value
+    instead of silently casting the column to double."""
+    from pprl_spark.sketch import spark_agg
+
+    calls = [
+        lambda: spark_agg.sketch_column(docs_df, "url", _UnknownInputSketch),
+        lambda: spark_agg.sketch_column_with_exact(docs_df, "url", _UnknownInputSketch),
+        lambda: spark_agg.prepare_input(docs_df, "url", _UnknownInputSketch),
+        lambda: spark_agg.profile_column(
+            docs_df, "url", {"hll": HyperLogLog, "odd": _UnknownInputSketch}),
+        lambda: spark_agg.sketch_grouped(docs_df, ["lang"], "url", _UnknownInputSketch),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="INPUT is 'bits'"):
+            call()
 
 
 def test_frequent_items_tidy_relation(spark):
