@@ -59,11 +59,25 @@ def test_resumed_chunked_stage_schema_equals_fresh_run(spark, tmp_path):
     assert "chunk" not in resumed["doubled"].columns
 
 
-def test_chunk_level_mid_stage_resume(spark, tmp_path):
+@pytest.mark.parametrize("kept_chunks_layout", ["single_pass", "scan_per_chunk"])
+def test_chunk_level_mid_stage_resume(spark, tmp_path, kept_chunks_layout):
+    """Resume after losing two chunks.  ``single_pass``: the kept chunks are
+    the ones the partitioned write left.  ``scan_per_chunk``: the kept
+    chunks are rewritten one write job per chunk directory, the layout of
+    workdirs made by the former per-chunk writer, which must still resume."""
     import shutil
 
     CALLS.clear()
     Pipeline(spark, tmp_path, _mk_stages()).run()
+    if kept_chunks_layout == "scan_per_chunk":
+        doubled = spark.range(500).select(F.col("id"), (F.col("id") % 7).alias("k"),
+                                          (F.col("id") * 2).alias("v"))
+        chunk_expr = F.pmod(F.xxhash64(F.col("id")), F.lit(4))
+        for chunk in (0, 2):
+            cdir = tmp_path / "doubled" / "data" / f"chunk={chunk}"
+            shutil.rmtree(cdir)
+            doubled.filter(chunk_expr == chunk).write.mode("overwrite").parquet(str(cdir))
+            assert (cdir / "_SUCCESS").exists()
     # simulate a crash mid-way through the chunked stage: lineage.json is
     # written last, so a crash leaves pending.json + some chunks but no
     # lineage; chunks 1 and 3 are lost with the dying executor
