@@ -264,7 +264,10 @@ def corpus_token_stats(spark, sf_dir):
     r6: the avg and entropy lanes share ONE tokenization — the per-doc
     distinct-token arrays are localCheckpoint'd (KB/row) and feed both
     the avg(size) aggregate and the exploded frequency aggregate, where
-    the r3 shape ran the padded tokenizer over the corpus twice."""
+    the r3 shape ran the padded tokenizer over the corpus twice.  AQE
+    runs every exchange below a checkpoint when it is built, eager=False
+    or not: at sf0.1 on local[4] resplit adds a round-robin exchange here,
+    and building this query starts 1 Spark job beyond the parquet read."""
     from pprl_spark.spark.stats import padded_qgram_tokens
 
     docs = resplit(_load(spark, sf_dir, "documents"))
@@ -425,7 +428,11 @@ def fingerprint_jaccard(spark, sf_dir):
     fp = docs.select("doc_id", F.md5(normalized).alias("fingerprint"))
     # materialize the tokenization once: both self-join sides (and their
     # differently-pruned exchanges) would otherwise re-run qgram_tokens
-    # over the whole corpus (same move as tf_idf_terms' tf aggregate)
+    # over the whole corpus (same move as tf_idf_terms' tf aggregate).
+    # eager=False does not defer it: AQE runs every exchange below a
+    # checkpoint when it is built (here resplit's round-robin one), so
+    # building this query starts 1 Spark job beyond the parquet read
+    # (sf0.1, local[4]).
     toks = docs.select(
         "doc_id", qgram_tokens(F.col("text"), 3).alias("toks")
     ).localCheckpoint(eager=False)

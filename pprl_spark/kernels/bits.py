@@ -22,6 +22,7 @@ from __future__ import annotations
 import base64
 import math
 import random
+from functools import lru_cache
 
 import numpy as np
 
@@ -76,44 +77,62 @@ def test_bit(bits: np.ndarray, i: int) -> bool:
     return bool(bits[fold_indices(i, bits.shape[0])])
 
 
-def double_hash_indices(k: int, h1: int, h2: int) -> np.ndarray:
-    """``h1 + i*h2`` for i in 1..k (reference bits.py:67-79)."""
+def _col(h) -> np.ndarray:
+    """Scalar → 0-d, ``(n,)`` → ``(n, 1)``, so ``h`` broadcasts against 1..k."""
+    return np.asarray(h, dtype=np.int64)[..., None]
+
+
+def double_hash_indices(k: int, h1, h2) -> np.ndarray:
+    """``h1 + i*h2`` for i in 1..k (reference bits.py:67-79).
+
+    Like every index function here: scalar hashes give ``(k,)``, ``(n,)``
+    hash arrays give ``(n, k)``."""
     i = np.arange(1, k + 1, dtype=np.int64)
-    return np.int64(h1) + i * np.int64(h2)
+    return _col(h1) + i * _col(h2)
 
 
-def triple_hash_indices(k: int, h1: int, h2: int, h3: int) -> np.ndarray:
+def triple_hash_indices(k: int, h1, h2, h3) -> np.ndarray:
     """``h1 + i*h2 + h3*(i*(i-1))//2`` for i in 1..k (bits.py:82-95).
 
     Note the reference's operator precedence: the floor-division by two
     applies to the *product* ``h3 * (i*(i-1))``.
     """
     i = np.arange(1, k + 1, dtype=np.int64)
-    return np.int64(h1) + i * np.int64(h2) + (np.int64(h3) * (i * (i - 1))) // 2
+    return _col(h1) + i * _col(h2) + (_col(h3) * (i * (i - 1))) // 2
 
 
-def enhanced_double_hash_indices(k: int, h1: int, h2: int) -> np.ndarray:
+def enhanced_double_hash_indices(k: int, h1, h2) -> np.ndarray:
     """``h1 + i*h2 + (i^3 - i)//6`` for i in 1..k (bits.py:98-110)."""
     i = np.arange(1, k + 1, dtype=np.int64)
-    return np.int64(h1) + i * np.int64(h2) + (i**3 - i) // 6
+    return _col(h1) + i * _col(h2) + (i**3 - i) // 6
 
 
-def random_hash_indices(k: int, seed: int, m: int) -> np.ndarray:
-    """k draws from ``random.Random(seed).randrange(m)`` (bits.py:113-124).
-
-    The reference seeds a Mersenne-Twister with ``i0^i1^i2^i3``
-    (routers/mask.py:155-156); stdlib ``random.Random`` is used here for
-    bit-exact replay.
-    """
+@lru_cache(maxsize=1 << 16)
+def _random_draws(seed: int, k: int, m: int) -> np.ndarray:
     rng = random.Random(seed)
     return np.fromiter((rng.randrange(m) for _ in range(k)), dtype=np.int64, count=k)
 
 
-def strategy_indices(strategy: str, k: int, h: tuple[int, int, int, int], m: int) -> np.ndarray:
-    """Compute the k (folded) bit positions for one hashed token.
+def random_hash_indices(k: int, seed, m: int) -> np.ndarray:
+    """k draws from ``random.Random(seed).randrange(m)`` (bits.py:113-124).
 
-    ``h`` is the 4-tuple of signed int32s destructured from the digest.  The
-    argument wiring per strategy follows routers/mask.py:149-156.
+    The reference seeds a Mersenne-Twister with ``i0^i1^i2^i3``
+    (routers/mask.py:155-156); stdlib ``random.Random`` is used here for
+    bit-exact replay.  Each distinct seed is replayed once; its draws are
+    kept in a bounded cache (Zipf-distributed tokens repeat their seeds).
+    """
+    seeds, inverse = np.unique(np.asarray(seed, dtype=np.int64), return_inverse=True)
+    draws = np.array([_random_draws(int(s), k, m) for s in seeds], dtype=np.int64).reshape(-1, k)
+    return draws[inverse.reshape(np.shape(seed))]
+
+
+def strategy_indices(strategy: str, k: int, h: tuple, m: int) -> np.ndarray:
+    """Compute the k (folded) bit positions for one hashed token, or
+    ``(n, k)`` positions for n tokens.
+
+    ``h`` is the 4-tuple of signed int32s destructured from the digest
+    (scalars, or ``(n,)`` arrays).  The argument wiring per strategy
+    follows routers/mask.py:149-156.
     """
     i0, i1, i2, i3 = h
     if strategy == "double_hash":

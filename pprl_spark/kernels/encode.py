@@ -5,15 +5,17 @@ mask.py:124-161 (salting, token naming, strategy dispatch), 203-235 (CLK),
 238-289 (CLKRBF), 292-382 (RBF).  A record's bit vector is the bitwise-OR
 fold of the k hash positions of every distinct q-gram of every configured
 attribute — structurally a grouped aggregation keyed by record id, executed
-here as a vectorized per-batch kernel.
+here as one vectorized kernel per slab of rows, for every filter type, hash
+strategy and hardener chain.
 
-Throughput notes (the 100 TB story): web text is Zipf-distributed, so the
-same (salt+token) strings recur constantly within an Arrow batch.  The
-encoder memoizes token → folded-bit-positions per (token, k); each record
-then reduces to one ``np.concatenate`` + boolean scatter.  The RBF bit
-sampling sequence depends only on the config (seed, attribute sizes), so it
-is replayed once at plan time and applied per record as a vectorized
-gather — no per-record RNG in the hot loop.
+Per slab: tokenize, look up each salted token's digest in a per-worker memo
+(web text is Zipf-distributed, so the same salt+token strings recur
+constantly), compute the k positions of all tokens of an attribute with one
+``bits.strategy_indices`` call, and scatter them into a ``(rows, m)`` bool
+matrix.  RBF fills one such matrix per attribute; its bit sampling sequence
+depends only on the config (seed, attribute sizes), so it is replayed once
+at plan time and applied per slab as a gather — no per-record RNG in the hot
+loop.  The hardener chain then runs once over the slab.
 """
 
 from __future__ import annotations
@@ -25,42 +27,14 @@ import numpy as np
 
 from ..config import MaskConfig
 from . import bits as bitk
-from .hashing import destructure_digest, make_digest_fn
+from .harden import build_hardener_chain
+from .hashing import make_digest_fn
 from .tokenize import tokenize_checked
 
 __all__ = ["BloomEncoder"]
 
-
-class _TokenIndexer:
-    """Memoized (string, k) → folded bit positions for one filter size."""
-
-    def __init__(self, digest_fn, strategy: str, m: int, max_entries: int = 1 << 20):
-        self._digest_fn = digest_fn
-        self._strategy = strategy
-        self._m = m
-        self._cache: dict[tuple[str, int], np.ndarray] = {}
-        self._max_entries = max_entries
-
-    def __call__(self, token: str, k: int) -> np.ndarray:
-        key = (token, k)
-        idx = self._cache.get(key)
-        if idx is None:
-            digest = self._digest_fn(token.encode())
-            idx = bitk.strategy_indices(self._strategy, k, destructure_digest(digest), self._m)
-            if len(self._cache) >= self._max_entries:
-                self._cache.clear()
-            self._cache[key] = idx
-        return idx
-
-
-def _resolve_salt(cfg: MaskConfig, attr_name: str, record: dict) -> str:
-    """Literal or sibling-attribute salt (routers/mask.py:124-136)."""
-    attr_cfg = cfg.attribute_config(attr_name)
-    if attr_cfg is None or attr_cfg.salt is None:
-        return ""
-    if attr_cfg.salt.value is not None:
-        return attr_cfg.salt.value
-    return record[attr_cfg.salt.attribute]
+# rows per encode slab (see BloomEncoder.encode_batch)
+SLAB = 1024
 
 
 class BloomEncoder:
@@ -86,7 +60,6 @@ class BloomEncoder:
         elif ftype == "clkrbf":
             # per-attribute k scaled by weight over the minimum weight
             # (routers/mask.py:247-264), filter sized for 50% fill.
-            weights = {a.attribute_name: a for a in cfg.attributes}
             min_weight = min(a.weight for a in cfg.attributes)
             base_k = cfg.filter.hash_values
             self._k_of = {}
@@ -97,18 +70,13 @@ class BloomEncoder:
                 total_insertions += k_attr * a.average_token_count
             self.m = bitk.optimal_size(0.5, total_insertions)
             self.attribute_names = [a.attribute_name for a in cfg.attributes]
-            del weights
         elif ftype == "rbf":
             self._plan_rbf()
         else:
             raise ValueError(f"unimplemented filter type `{ftype}`")
 
-        from .harden import build_hardener_chain
-
         self._harden = build_hardener_chain(cfg.hardeners)
-        if ftype != "rbf":
-            self._indexer = _TokenIndexer(self._digest_fn, self._strategy, self.m)
-        # digest memo for the vectorized batch path (first 16 bytes only)
+        # token → first 16 digest bytes, per worker (bounded)
         self._digest_memo: dict[str, bytes] = {}
         self._memo_cap = 1 << 20
 
@@ -153,52 +121,9 @@ class BloomEncoder:
             self._rbf_sampling[name] = (probe, parent_pos)
             offset += n_sampled
 
-        self._rbf_indexers = {
-            name: _TokenIndexer(self._digest_fn, self._strategy, self._rbf_attr_size[name])
-            for name in self._rbf_sorted_names
-        }
-
     # ------------------------------------------------------------------
     # encoding
     # ------------------------------------------------------------------
-
-    def _attr_token_indices(
-        self, indexer: _TokenIndexer, entity_id: str, attr_name: str, value: str, salt: str, k: int
-    ) -> list[np.ndarray]:
-        cfg = self.cfg
-        tokens = tokenize_checked(entity_id, attr_name, value, cfg.token_size, cfg.padding)
-        if cfg.prepend_attribute_name:
-            return [indexer(f"{salt}{attr_name}{t}", k) for t in tokens]
-        return [indexer(f"{salt}{t}", k) for t in tokens]
-
-    def encode_record(self, entity_id: str, record: dict) -> np.ndarray:
-        """One record → hardened unpacked bit vector."""
-        cfg = self.cfg
-        if cfg.filter.type == "rbf":
-            parent = bitk.new_bits(self.m)
-            for name in self._rbf_sorted_names:
-                salt = _resolve_salt(cfg, name, record)
-                attr_bits = bitk.new_bits(self._rbf_attr_size[name])
-                for idx in self._attr_token_indices(
-                    self._rbf_indexers[name], entity_id, name, record[name], salt, self._k_of[name]
-                ):
-                    attr_bits[idx] = True
-                probe, parent_pos = self._rbf_sampling[name]
-                parent[parent_pos[attr_bits[probe]]] = True
-            return self._harden(parent)
-
-        vec = bitk.new_bits(self.m)
-        chunks: list[np.ndarray] = []
-        for name in self.attribute_names:
-            salt = _resolve_salt(cfg, name, record)
-            chunks.extend(
-                self._attr_token_indices(
-                    self._indexer, entity_id, name, record[name], salt, self._k_of[name]
-                )
-            )
-        if chunks:
-            vec[np.concatenate(chunks)] = True
-        return self._harden(vec)
 
     def encode_batch(self, ids, columns: dict[str, list]) -> list[bytes]:
         """Encode a columnar batch → packed (MSB-first) byte strings.
@@ -206,119 +131,79 @@ class BloomEncoder:
         ``columns`` maps attribute name → sequence of string values; extra
         keys (e.g. salt-source attributes) are allowed.
 
-        CLK/CLKRBF with an arithmetic hash strategy take the fully
-        vectorized path: digests are memoized per worker (Zipf-distributed
-        web tokens hit constantly; per-record salts miss, and then the
-        digest loop is pure hashlib C calls), and ALL index math + the
-        bit scatter happen as a handful of numpy ops over the batch's
-        entire token stream — no per-token numpy allocation.  RBF and
-        random_hash (per-token seeded RNG) use the per-record path.
+        The batch is cut into slabs of ``SLAB`` rows so the ``(rows, m)``
+        scatter target stays cache-resident: 1024 rows x 1024 bits = 1 MB of
+        bool, measured +50% single-core throughput and 0.82-0.84
+        multi-process scaling efficiency vs a 10k-row slab whose 10 MB
+        scatter thrashes LLC under concurrency.
         """
-        if self.cfg.filter.type == "rbf" or self._strategy == "random_hash":
-            names = list(columns)
-            out: list[bytes] = []
-            for i in range(len(ids)):
-                record = {n: columns[n][i] for n in names}
-                out.append(bitk.pack(self.encode_record(ids[i], record)))
-            return out
-        # slab the batch so the (rows, m) scatter target stays cache-resident:
-        # 1024 rows x 1024 bits = 1 MB of bool — measured +50% single-core
-        # throughput and 0.82-0.84 multi-process scaling efficiency vs the
-        # 10k-row slab whose 10 MB scatter thrashes LLC under concurrency
-        slab = 1024
-        n = len(ids)
-        if n <= slab:
-            return self._encode_batch_vectorized(ids, columns)
-        out = []
-        for s in range(0, n, slab):
-            out.extend(
-                self._encode_batch_vectorized(
-                    ids[s : s + slab],
-                    {k: v[s : s + slab] for k, v in columns.items()},
-                )
-            )
+        out: list[bytes] = []
+        for s in range(0, len(ids), SLAB):
+            slab = self._encode_slab(ids[s : s + SLAB], {k: v[s : s + SLAB] for k, v in columns.items()})
+            out.extend(p.tobytes() for p in np.packbits(slab, axis=1))
         return out
 
+    def _encode_slab(self, ids, columns: dict[str, list]) -> np.ndarray:
+        """One slab → hardened ``(rows, m_out)`` bool matrix."""
+        if self.cfg.filter.type != "rbf":
+            return self._harden(self._scatter(ids, columns, self.attribute_names, self.m))
+        # RBF: each attribute fills its own filter, then the planned probes
+        # copy its sampled bits into the parent.  Only set bits are written
+        # (not a buffered |=), so a parent position that several probes
+        # share keeps every 1 written to it.
+        parent = np.zeros((len(ids), self.m), dtype=bool)
+        for name in self._rbf_sorted_names:
+            attr = self._scatter(ids, columns, [name], self._rbf_attr_size[name])
+            probe, parent_pos = self._rbf_sampling[name]
+            r, c = np.nonzero(attr[:, probe])
+            parent[r, parent_pos[c]] = True
+        return self._harden(parent)
+
+    def _scatter(self, ids, columns: dict[str, list], names: list[str], m: int) -> np.ndarray:
+        """OR the k positions of every token of ``names`` into ``(rows, m)``."""
+        cfg = self.cfg
+        rows = len(ids)
+        bits = np.zeros((rows, m), dtype=bool)
+        for attr in names:
+            values = columns[attr]
+            salts = self._salts_for(attr, columns, rows)
+            prefix = attr if cfg.prepend_attribute_name else ""
+            tokens: list[str] = []
+            counts: list[int] = []
+            for i in range(rows):
+                grams = tokenize_checked(ids[i], attr, values[i], cfg.token_size, cfg.padding)
+                tokens.extend(f"{salts[i]}{prefix}{t}" for t in grams)
+                counts.append(len(grams))
+            h = self._hashes(tokens)
+            idx = bitk.strategy_indices(self._strategy, self._k_of[attr], tuple(h.T), m)
+            bits[np.repeat(np.arange(rows), counts)[:, None], idx] = True
+        return bits
+
+    def _hashes(self, tokens: list[str]) -> np.ndarray:
+        """Tokens → ``(n, 4)`` int64 of the digest's four signed int32s
+        (``destructure_digest``), through the per-worker digest memo:
+        Zipf-distributed tokens hit it constantly; per-record salts miss,
+        and then the loop is pure hashlib C calls."""
+        digest_fn, memo = self._digest_fn, self._digest_memo
+        digest16: list[bytes] = []
+        for t in tokens:
+            d = memo.get(t)
+            if d is None:
+                d = digest_fn(t.encode())[:16]
+                if len(memo) >= self._memo_cap:
+                    memo.clear()
+                memo[t] = d
+            digest16.append(d)
+        return np.frombuffer(b"".join(digest16), dtype="<i4").reshape(-1, 4).astype(np.int64)
+
     def _salts_for(self, attr_name: str, columns: dict[str, list], rows: int) -> list[str]:
+        """Literal or sibling-attribute salt (routers/mask.py:124-136)."""
         attr_cfg = self.cfg.attribute_config(attr_name)
         if attr_cfg is None or attr_cfg.salt is None:
             return [""] * rows
         if attr_cfg.salt.value is not None:
             return [attr_cfg.salt.value] * rows
         return list(columns[attr_cfg.salt.attribute])
-
-    def _encode_batch_vectorized(self, ids, columns: dict[str, list]) -> list[bytes]:
-        cfg = self.cfg
-        rows = len(ids)
-        m = self.m
-
-        flat_tokens: list[str] = []
-        rec_of_token: list[int] = []
-        k_of_token: list[int] = []
-        uniform_k = len({self._k_of[a] for a in self.attribute_names}) == 1
-        for attr in self.attribute_names:
-            k_attr = self._k_of[attr]
-            values = columns[attr]
-            salts = self._salts_for(attr, columns, rows)
-            q, padding, prepend = cfg.token_size, cfg.padding, cfg.prepend_attribute_name
-            for i in range(rows):
-                tokens = tokenize_checked(ids[i], attr, values[i], q, padding)
-                salt = salts[i]
-                if prepend:
-                    flat_tokens.extend(f"{salt}{attr}{t}" for t in tokens)
-                else:
-                    flat_tokens.extend(f"{salt}{t}" for t in tokens)
-                rec_of_token.extend([i] * len(tokens))
-                if not uniform_k:
-                    k_of_token.extend([k_attr] * len(tokens))
-
-        n_tok = len(flat_tokens)
-        bits2d = np.zeros((rows, m), dtype=bool)
-        if n_tok:
-            digest_fn = self._digest_fn
-            memo = self._digest_memo
-            digest16: list[bytes] = []
-            for s in flat_tokens:
-                d = memo.get(s)
-                if d is None:
-                    d = digest_fn(s.encode())[:16]
-                    if len(memo) >= self._memo_cap:
-                        memo.clear()
-                    memo[s] = d
-                digest16.append(d)
-            H = np.frombuffer(b"".join(digest16), dtype="<i4").reshape(n_tok, 4).astype(np.int64)
-            i0, i1, i2, i3 = H[:, 0], H[:, 1], H[:, 2], H[:, 3]
-            rec_arr = np.asarray(rec_of_token, dtype=np.int64)
-            if uniform_k:
-                k_groups = [(self._k_of[self.attribute_names[0]], slice(None))]
-            else:
-                karr = np.asarray(k_of_token, dtype=np.int64)
-                k_groups = [(int(kv), karr == kv) for kv in np.unique(karr)]
-            for k, sel in k_groups:
-                steps = np.arange(1, k + 1, dtype=np.int64)
-                if self._strategy == "double_hash":
-                    idx = (i0[sel] ^ i1[sel])[:, None] + steps[None, :] * (i2[sel] ^ i3[sel])[:, None]
-                elif self._strategy == "triple_hash":
-                    idx = (
-                        i0[sel][:, None]
-                        + steps[None, :] * i1[sel][:, None]
-                        + ((i2[sel] ^ i3[sel])[:, None] * (steps * (steps - 1))[None, :]) // 2
-                    )
-                elif self._strategy == "enhanced_double_hash":
-                    idx = (
-                        (i0[sel] ^ i1[sel])[:, None]
-                        + steps[None, :] * (i2[sel] ^ i3[sel])[:, None]
-                        + ((steps**3 - steps) // 6)[None, :]
-                    )
-                else:  # pragma: no cover - guarded in encode_batch
-                    raise ValueError(f"unimplemented hash strategy `{self._strategy}`")
-                idx = np.where(idx < 0, ~idx, idx) % m
-                recs = np.repeat(rec_arr[sel], k)
-                bits2d[recs, idx.ravel()] = True
-
-        if not cfg.hardeners:
-            return [p.tobytes() for p in np.packbits(bits2d, axis=1)]
-        return [bitk.pack(self._harden(bits2d[r])) for r in range(rows)]
 
     def encode_batch_b64(self, ids, columns: dict[str, list]) -> list[str]:
         import base64

@@ -1,5 +1,8 @@
 """Bit-vector hardeners (unpacked bool-array in, bool-array out).
 
+Every hardener works on the last axis: a 1-D vector, or a ``(rows, m)``
+matrix hardened row by row in one call (the encoder's slab).
+
 Parity: /root/reference/packages/pprl_core/pprl_core/harden.py.  The
 seeded variants replay stdlib ``random.Random`` sequences exactly; where
 the draw sequence depends only on (seed, length) — permute and
@@ -36,7 +39,7 @@ def balance() -> HardenerFn:
     """Append the flipped copy: m → 2m bits, exactly 50% set
     (harden.py:21-35)."""
     def _apply(bits: np.ndarray) -> np.ndarray:
-        return np.concatenate([bits, ~bits])
+        return np.concatenate([bits, ~bits], axis=-1)
 
     return _apply
 
@@ -45,10 +48,10 @@ def xor_fold() -> HardenerFn:
     """Zero-pad to even length, XOR the halves: m → ceil(m/2)
     (harden.py:38-56)."""
     def _apply(bits: np.ndarray) -> np.ndarray:
-        if bits.shape[0] & 1:
-            bits = np.concatenate([bits, np.zeros(1, dtype=bool)])
-        half = bits.shape[0] // 2
-        return bits[:half] ^ bits[half : 2 * half]
+        if bits.shape[-1] & 1:
+            bits = np.concatenate([bits, np.zeros((*bits.shape[:-1], 1), dtype=bool)], axis=-1)
+        half = bits.shape[-1] // 2
+        return bits[..., :half] ^ bits[..., half:]
 
     return _apply
 
@@ -66,7 +69,7 @@ def randomized_response(seed: int, probability: float) -> HardenerFn:
     p_half = probability / 2
 
     def _apply(bits: np.ndarray) -> np.ndarray:
-        d = _rr_draws(seed, bits.shape[0])
+        d = _rr_draws(seed, bits.shape[-1])
         return np.where(d > probability, bits, d < p_half)
 
     return _apply
@@ -88,7 +91,7 @@ def _permutation(seed: int, n: int) -> np.ndarray:
 
 def permute(seed: int) -> HardenerFn:
     def _apply(bits: np.ndarray) -> np.ndarray:
-        return bits[_permutation(seed, bits.shape[0])]
+        return bits[..., _permutation(seed, bits.shape[-1])]
 
     return _apply
 
@@ -97,25 +100,25 @@ def rule_90() -> HardenerFn:
     """out[i] = bits[i-1] XOR bits[i+1], with the last bit as left pad and
     the first bit as right pad (harden.py:111-129)."""
     def _apply(bits: np.ndarray) -> np.ndarray:
-        left = np.concatenate([bits[-1:], bits[:-1]])
-        right = np.concatenate([bits[1:], bits[:1]])
-        return left ^ right
+        return np.roll(bits, 1, axis=-1) ^ np.roll(bits, -1, axis=-1)
 
     return _apply
 
 
 def rehash(window_size: int, window_step: int, k: int) -> HardenerFn:
     """Slide a window; its bits (packed, zero-padded to 4 bytes) seed an RNG
-    that draws k positions to set (harden.py:132-166)."""
+    that draws k positions to set (harden.py:132-166).  Data-dependent, so
+    a matrix is hardened one row at a time."""
     def _apply(bits: np.ndarray) -> np.ndarray:
         out = bits.copy()
-        n = bits.shape[0]
-        for start in range(0, n - window_size + 1, window_step):
-            window = bits[start : start + window_size]
-            seed = struct.unpack_from("<i", np.packbits(window).tobytes() + b"\x00" * 4)[0]
-            rng = random.Random(seed)
-            for _ in range(k):
-                out[rng.randrange(n)] = True
+        n = bits.shape[-1]
+        for row, dst in zip(bits.reshape(-1, n), out.reshape(-1, n)):
+            for start in range(0, n - window_size + 1, window_step):
+                window = row[start : start + window_size]
+                seed = struct.unpack_from("<i", np.packbits(window).tobytes() + b"\x00" * 4)[0]
+                rng = random.Random(seed)
+                for _ in range(k):
+                    dst[rng.randrange(n)] = True
         return out
 
     return _apply

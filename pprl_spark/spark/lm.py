@@ -22,7 +22,7 @@ Spark-first shape — no Python in any hot path:
   are built *inside the token array* with ``transform``/``element_at``
   before the explode, so no window shuffle over the token stream is
   ever needed.  The counts frame is the compacted intermediate (distinct
-  grams, far smaller than the corpus) and is materialized with a lazy
+  grams, far smaller than the corpus) and is materialized with a
   ``localCheckpoint`` — scoring joins it 2·(order−1)+1 times, and
   without the materialization each join branch would re-count the whole
   training corpus (same move as ``textstats.tf_idf_terms``).
@@ -133,8 +133,12 @@ def train_stupid_backoff(
     Returns ``(n: int, gram: string, cnt: long)`` — one hash aggregate
     per order over the same positions frame, unioned — plus a marker row
     ``(0, '', N)`` carrying the total token count.  The result is
-    materialized (lazy ``localCheckpoint``): scoring consumes it once
-    per backoff level and must not re-count the corpus per join.
+    materialized (``localCheckpoint``): scoring consumes it once per
+    backoff level and must not re-count the corpus per join.  Despite
+    ``eager=False`` the per-order aggregates' shuffle map stages run when
+    this is called (AQE runs every exchange below a checkpoint): building
+    ``lm_perplexity`` starts 5 Spark jobs beyond the parquet read (sf0.1,
+    local[4]).
 
     ``hash_grams=True`` is the 100 TB shuffle-width knob: the ``gram``
     column becomes ``gram_hash`` (LONG, see :func:`_gram_key`), every

@@ -209,17 +209,23 @@ def match_lsh(
     # candidate work they seed, so AQE's size-based coalescing would fold
     # this exchange into one partition and serialize the band stage
     n_parts = max(df_domain.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    dom_vec = _prefixed(df_domain, id_col, bloom_col, "domain").repartition(
-        n_parts, "domain_id"
-    )
+    # null-id rows can never pair, so they are dropped before banding:
+    # left in, they would count toward max_bucket_size
+    dom_vec = _prefixed(df_domain, id_col, bloom_col, "domain").filter(
+        F.col("domain_id").isNotNull()
+    ).repartition(n_parts, "domain_id")
     # localCheckpoint the slim (id, vector) projection: the banding
     # branch, the bucket-size aggregate, and the popcount word table all
     # re-read it.  Exchange reuse USED to make that one encode
     # evaluation, but constraint-inferred isnotnull filters below
     # the exchange de-canonicalize the subtrees — r6 plans showed the
     # encode UDF running 3x.  Materializing the KB/row projection once is
-    # robust where ReusedExchange is fragile; non-eager, so it computes
-    # inside the query's own first job.
+    # robust where ReusedExchange is fragile.  eager=False does not defer
+    # it to the first action: under AQE, checkpointing a plan runs every
+    # exchange below it, so the repartition's shuffle (and the encode
+    # feeding it) runs when match_lsh is called — building the
+    # pprl_match_lsh query starts 2 Spark jobs beyond the parquet read
+    # (sf0.1, local[4]).
     dom_vec = dom_vec.localCheckpoint(eager=False)
     dom = add_band_signatures(
         dom_vec.select("domain_id", F.col("__domain_bloom").alias("__b")),
@@ -232,9 +238,11 @@ def match_lsh(
         )
         pair_filter = F.col("domain_id") < F.col("range_id")
     else:
-        rng_vec = _prefixed(df_range, id_col, bloom_col, "range").repartition(
-            n_parts, "range_id"
-        ).localCheckpoint(eager=False)  # same single-encode story as dom_vec
+        rng_vec = _prefixed(df_range, id_col, bloom_col, "range").filter(
+            F.col("range_id").isNotNull()
+        ).repartition(n_parts, "range_id").localCheckpoint(
+            eager=False
+        )  # same single-encode story as dom_vec
         rng_side = add_band_signatures(
             rng_vec.select("range_id", F.col("__range_bloom").alias("__b")),
             lsh,
@@ -317,8 +325,8 @@ def match_lsh(
     # lineage at this KB-scale table so (1) the encode pipeline is
     # guaranteed to evaluate once for the scoring branch and (2) the
     # constraint machinery below the similarity filter sees a leaf.
-    # Non-eager: it materializes inside the query's own first job,
-    # nothing is precomputed across runs.
+    # Its plan reads the dom_vec checkpoint and has no exchange, so
+    # eager=False holds here: it computes in the query's first job.
     dom_words = _word_table(dom_vec, "domain").localCheckpoint(eager=False)
     rng_words = (
         dom_words.select(

@@ -215,13 +215,17 @@ def tf_idf_terms(df: DataFrame, id_col: str = "doc_id",
     itself (df(term) = number of tf rows for that term — far smaller
     than re-scanning the corpus), broadcast back onto the tf rows; N is
     a scalar via a 1-row broadcast cross join.  The tf aggregate is
-    materialized (lazy localCheckpoint): Catalyst prunes the two
+    materialized (localCheckpoint): Catalyst prunes the two
     consumers' columns differently, so their exchange subtrees never
     canonicalize equal and exchange reuse does NOT fire — without the
     materialization each branch would re-tokenize the whole corpus
     (verified in the adaptive final plan).  tf is the compacted
     intermediate (distinct (doc, term) pairs), far smaller than the
     corpus, so this is the standard materialize-the-compaction move.
+    ``eager=False`` does not make it lazy: under AQE, checkpointing runs
+    the aggregate's shuffle map stage when this function is called
+    (building ``tfidf_top_terms`` starts 2 Spark jobs beyond the parquet
+    read, sf0.1 on local[4]); only the final reduce waits for an action.
     """
     words = _word_explode(df, id_col, text_col)
     tf = words.groupBy(id_col, "term").agg(
@@ -271,6 +275,9 @@ def bm25_scores(
     result and ``coalesce(bm25, 0.0)``.
     """
     words = _word_explode(df, id_col, text_col)
+    # as in tf_idf_terms, the aggregate's shuffle runs when this is called:
+    # building bm25_query_scores starts 2 Spark jobs beyond the parquet read
+    # (sf0.1, local[4])
     all_tf = words.groupBy(id_col, "term").agg(
         F.count(F.lit(1)).alias("tf")
     ).localCheckpoint(eager=False)

@@ -17,6 +17,7 @@ import math
 import random
 import struct
 
+import numpy as np
 import pytest
 
 from pprl_spark.config import (
@@ -377,3 +378,53 @@ def test_encoder_deterministic_across_instances():
     attrs = [a.attribute_name for a in WEIGHTED]
     assert (BloomEncoder(cfg, attrs).encode_batch_b64(ids, cols)
             == BloomEncoder(cfg, attrs).encode_batch_b64(ids, cols))
+
+
+@pytest.mark.parametrize("name,cfg", list(cfg_variants()))
+def test_encode_batch_slabs_match_single_record_batches(name, cfg):
+    """2,500 records cross two slab boundaries; every row must equal its own
+    1-record batch, and rows at the boundaries must equal the naive replay."""
+    persons = make_persons(2500)
+    attrs = [a.attribute_name for a in cfg.attributes] if cfg.filter.type != "clk" else ATTRS
+    enc = BloomEncoder(cfg, attrs)
+    ids = [p["id"] for p in persons]
+    columns = {a: [p[a] for p in persons] for a in ATTRS}
+    got = enc.encode_batch(ids, columns)
+    single = [enc.encode_batch([ids[i]], {a: [v[i]] for a, v in columns.items()})[0]
+              for i in range(len(ids))]
+    assert got == single, f"config {name}: slab rows diverge from 1-record batches"
+    for i in (0, 1023, 1024, 2047, 2048, 2499):
+        assert base64.b64encode(got[i]).decode() == naive_encode(cfg, persons[i], attrs), (name, i)
+
+
+def _hardener_cases():
+    yield "balance", (HardenerConfig("balance"),)
+    yield "xor_fold", (HardenerConfig("xor_fold"),)
+    yield "permute", (HardenerConfig("permute", seed=727),)
+    yield "randomized_response", (HardenerConfig("randomized_response", seed=5, probability=0.25),)
+    yield "rule_90", (HardenerConfig("rule_90"),)
+    yield "rehash", (HardenerConfig("rehash", window_size=12, window_step=4, samples=3),)
+    yield "chain", (
+        HardenerConfig("xor_fold"),
+        HardenerConfig("permute", seed=31),
+        HardenerConfig("rehash", window_size=16, window_step=8, samples=2),
+        HardenerConfig("randomized_response", seed=9, probability=0.5),
+        HardenerConfig("rule_90"),
+        HardenerConfig("xor_fold"),
+        HardenerConfig("balance"),
+    )
+
+
+@pytest.mark.parametrize("m", [131, 128])
+@pytest.mark.parametrize("name,hardeners", list(_hardener_cases()))
+def test_hardeners_on_matrix_equal_row_by_row(name, hardeners, m):
+    """The encoder hardens a whole ``(rows, m)`` slab in one call; that must
+    equal hardening each row alone (odd m pads xor_fold per row)."""
+    from pprl_spark.kernels.harden import build_hardener_chain
+
+    chain = build_hardener_chain(hardeners)
+    matrix = np.random.default_rng(m).random((9, m)) < 0.4
+    before = matrix.copy()
+    rows = np.stack([chain(row) for row in matrix])
+    assert np.array_equal(chain(matrix), rows), name
+    assert np.array_equal(matrix, before), "input mutated"

@@ -190,6 +190,29 @@ def test_match_lsh_similarities_match_crosswise_values(spark):
         assert r["similarity"] == pytest.approx(cross[(r["domain_id"], r["range_id"])])
 
 
+def test_match_lsh_null_ids_do_not_count_toward_bucket_cap(spark):
+    """Null-id rows never pair, so they must not fill a bucket: ids a, b, c
+    plus two null-id rows share every band, and a cap of 4 still keeps the
+    bucket of the three real ids."""
+    vec = bytearray(bitk.pack(np.random.default_rng(3).random(256) < 0.4))
+    df = spark.createDataFrame(
+        [("a", vec), ("b", vec), ("c", vec), (None, vec), (None, vec)],
+        "id string, bloom binary",
+    )
+    cfg = MatchConfig("dice", 0.9)
+    lsh = LSHConfig(num_bits=256, num_bands=8, band_width=8, seed=5)
+    self_pairs = {
+        (r["domain_id"], r["range_id"])
+        for r in match_lsh(df, None, cfg, lsh, max_bucket_size=4).collect()
+    }
+    assert self_pairs == {("a", "b"), ("a", "c"), ("b", "c")}
+    cross_pairs = {
+        (r["domain_id"], r["range_id"])
+        for r in match_lsh(df, df, cfg, lsh, max_bucket_size=4).collect()
+    }
+    assert cross_pairs == {(d, r) for d in "abc" for r in "abc"}
+
+
 def test_top_k_per_record(spark):
     df = _near_dup_df(spark, n=20)
     cfg = MatchConfig("dice", 0.0)
