@@ -16,7 +16,13 @@ import numpy as np
 
 from .bits import popcount_bytes
 
-__all__ = ["MEASURES", "pair_similarity", "stack_packed", "similarity_matrix"]
+__all__ = [
+    "MEASURES",
+    "pair_similarity",
+    "similarity_from_counts",
+    "stack_packed",
+    "similarity_matrix",
+]
 
 
 def stack_packed(values) -> np.ndarray:
@@ -32,7 +38,7 @@ def _counts(a: np.ndarray, b: np.ndarray):
     n1 = popcount_bytes(a)
     n2 = popcount_bytes(b)
     n12 = popcount_bytes(a & b)
-    return n1.astype(np.float64), n2.astype(np.float64), n12.astype(np.float64)
+    return n1, n2, n12
 
 
 # Degenerate pairs (both vectors all-zero, reachable e.g. after a
@@ -49,19 +55,31 @@ def _guarded_div(num: np.ndarray, den: np.ndarray) -> np.ndarray:
     return out
 
 
+def similarity_from_counts(measure: str, n1, n2, n12) -> np.ndarray:
+    """Similarity from popcounts: ``n1``/``n2`` of each vector and ``n12``
+    of their AND.  The one copy of the measure formulas — the pairwise
+    kernels and the LSH matcher's bucket scorer both call it, so their
+    doubles are identical."""
+    n1, n2, n12 = (np.asarray(x, dtype=np.float64) for x in (n1, n2, n12))
+    if measure == "dice":
+        return _guarded_div(2.0 * n12, n1 + n2)
+    if measure == "cosine":
+        return _guarded_div(n12, np.sqrt(n1 * n2))
+    if measure == "jaccard":
+        return _guarded_div(n12, n1 + n2 - n12)
+    raise ValueError(f"unimplemented similarity measure `{measure}`")
+
+
 def _dice(a, b):
-    n1, n2, n12 = _counts(a, b)
-    return _guarded_div(2.0 * n12, n1 + n2)
+    return similarity_from_counts("dice", *_counts(a, b))
 
 
 def _cosine(a, b):
-    n1, n2, n12 = _counts(a, b)
-    return _guarded_div(n12, np.sqrt(n1 * n2))
+    return similarity_from_counts("cosine", *_counts(a, b))
 
 
 def _jaccard(a, b):
-    n1, n2, n12 = _counts(a, b)
-    return _guarded_div(n12, n1 + n2 - n12)
+    return similarity_from_counts("jaccard", *_counts(a, b))
 
 
 MEASURES = {"dice": _dice, "cosine": _cosine, "jaccard": _jaccard}

@@ -233,9 +233,11 @@ def minhash_lsh_pairs(
         # the id-keyed exchange materializes the key array, so the
         # posexplode reads an attribute, and lets the self-join's two
         # sides reuse ONE signature computation (ReusedExchange)
+        # null ids never pair; left in, they would also count toward
+        # max_bucket_size
         keys = frame.select(
             F.col(id_col).alias("__id"), keys_col.alias("__keys")
-        ).repartition(n_parts, "__id")
+        ).filter(F.col("__id").isNotNull()).repartition(n_parts, "__id")
         return _cap_buckets(
             keys.select("__id", F.posexplode("__keys").alias("band", "bucket"))
         )

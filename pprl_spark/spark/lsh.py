@@ -6,8 +6,9 @@ pages.  The scale path (BASELINE.json north_star) blocks candidates with
 Hamming LSH: ``b`` bands of ``r`` bit positions each; two vectors collide
 in a band iff they agree on all r positions; collision probability of a
 pair at Hamming similarity ``s`` is ``1-(1-s^r)^b``.  Banding turns
-matching into an equi-join on ``(band, signature)`` — a shuffle hash join
-Catalyst/AQE can plan, salt, and skew-split.
+matching into bucketing by ``(band, signature)``: the rows of one bucket
+are the candidates of each other (spark/match.py scores them bucket by
+bucket).
 
 Two position schemes:
 
@@ -70,6 +71,12 @@ class LSHConfig:
                 "chunked scheme requires num_bands * band_width <= num_bits"
             )
 
+    @property
+    def jvm_bands(self) -> bool:
+        """Signatures are Catalyst expressions (chunked, byte-aligned
+        bands); otherwise :func:`add_band_signatures` runs an Arrow UDF."""
+        return self.scheme == "chunked" and self.band_width % 8 == 0
+
 
 def band_positions(cfg: LSHConfig) -> np.ndarray:
     """(num_bands, band_width) bit positions, deterministic from the config."""
@@ -104,9 +111,12 @@ def band_signatures_udf(cfg: LSHConfig):
     weights = band_weights(cfg)
     n_bytes = (cfg.num_bits + 7) // 8
 
+    zero = bytes(n_bytes)  # stand-in for a null vector, whose bands are dropped
+
     @F.pandas_udf(ArrayType(LongType()))
     def _bands(blooms: pd.Series) -> pd.Series:
-        raw = np.frombuffer(b"".join(blooms), dtype=np.uint8).reshape(len(blooms), n_bytes)
+        packed = b"".join(zero if b is None else b for b in blooms)
+        raw = np.frombuffer(packed, dtype=np.uint8).reshape(len(blooms), n_bytes)
         bits = np.unpackbits(raw, axis=1, count=cfg.num_bits)
         # (N, num_bands, band_width) → (N, num_bands) int64 signatures
         sampled = bits[:, positions]
@@ -139,13 +149,15 @@ def add_band_signatures(
 ) -> DataFrame:
     """Explode each record into ``num_bands`` (band, signature) rows.
 
-    Output carries all input columns; the (band, sig) pair is the equi-join
-    key for candidate generation.  Chunked byte-aligned configs take the
-    JVM expression path; everything else the Arrow-UDF gather path (both
-    produce identical signatures for the same config).
+    Output carries all input columns; the (band, sig) pair is the bucket
+    key for candidate generation.  A row with a null vector gets no band
+    rows.  Chunked byte-aligned configs take the JVM expression path;
+    everything else the Arrow-UDF gather path (both produce identical
+    signatures for the same config).
     """
-    if cfg.scheme == "chunked" and cfg.band_width % 8 == 0:
+    if cfg.jvm_bands:
         sigs = _chunked_jvm_signatures(cfg, bloom_col)
     else:
         sigs = band_signatures_udf(cfg)(F.col(bloom_col))
+    sigs = F.when(F.col(bloom_col).isNotNull(), sigs)
     return df.select("*", F.posexplode(sigs).alias(band_col, sig_col))

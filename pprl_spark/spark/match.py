@@ -6,26 +6,35 @@ Three matchers, mirroring the reference's `/match` methods
 * ``match_pairwise`` — positional/keyed equi-join (reference ``pairwise``).
 * ``match_crosswise`` — full cross join + threshold (reference
   ``crosswise``); the correctness oracle for small inputs.
-* ``match_lsh`` — Hamming-LSH banded candidate join + similarity +
-  threshold; the 100 TB path.  Candidate generation is an equi-join on
-  ``(band, sig)``; AQE skew-join handles hot buckets, and an optional
-  ``max_bucket_size`` drops degenerate buckets (classic LSH practice —
-  documented recall trade-off, disabled by default).
+* ``match_lsh`` — Hamming-LSH blocking + similarity + threshold; the
+  100 TB path.  Banded rows are bucketed by ``(band, sig)`` with one hash
+  exchange, and one sorted ``mapInArrow`` pass scores each bucket's pairs;
+  an optional ``max_bucket_size`` drops degenerate buckets (classic LSH
+  practice — documented recall trade-off, disabled by default).
 
 ``match_pairwise``/``match_crosswise`` score with a vectorized Arrow UDF
 over packed bytes (popcount LUT), so per-pair work is a few numpy ops, not
-per-row Python; ``match_lsh`` scores in Catalyst (see its docstring).
+per-row Python.  ``match_lsh`` scores inside its bucket walk, so candidate
+pairs never become rows; only pairs above the threshold leave it.  All
+three compute the score with the same kernel formulas
+(``kernels.similarity``), double for double.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..config import MatchConfig
-from ..kernels.similarity import pair_similarity
+from ..kernels.bits import popcount_bytes
+from ..kernels.similarity import pair_similarity, similarity_from_counts
 from .lsh import LSHConfig, add_band_signatures
 
 __all__ = [
@@ -61,34 +70,6 @@ def _score_and_filter(pairs: DataFrame, cfg: MatchConfig) -> DataFrame:
         .filter(F.col("similarity") >= cfg.threshold)
         .select("domain_id", "range_id", "similarity")
     )
-
-
-def _word_cols(bloom: F.Column, n_bytes: int) -> list:
-    """Packed vector → 4-byte big-endian words as longs (JVM popcount
-    feed).  4-byte slices keep ``conv(hex(...), 16, 10)`` under 2^32, so
-    the long cast can never wrap."""
-    return [
-        F.conv(F.hex(F.substring(bloom, i + 1, min(4, n_bytes - i))), 16, 10).cast(
-            "long"
-        )
-        for i in range(0, n_bytes, 4)
-    ]
-
-
-def _similarity_expr(measure: str, pc_a, pc_b, n12) -> F.Column:
-    """Pure-JVM similarity over precomputed popcounts — double-for-double
-    identical to kernels.similarity (same IEEE ops on exact integer
-    inputs, same all-zero-pair → 0.0 guard)."""
-    n1, n2, n12 = (c.cast("double") for c in (pc_a, pc_b, n12))
-    if measure == "dice":
-        num, den = F.lit(2.0) * n12, n1 + n2
-    elif measure == "cosine":
-        num, den = n12, F.sqrt(n1 * n2)
-    elif measure == "jaccard":
-        num, den = n12, n1 + n2 - n12
-    else:
-        raise ValueError(f"unimplemented similarity measure `{measure}`")
-    return F.when(den == 0.0, F.lit(0.0)).otherwise(num / den)
 
 
 def _with_position(df: DataFrame, pos_col: str) -> DataFrame:
@@ -170,6 +151,112 @@ def match_crosswise(
     return _score_and_filter(pairs, cfg)
 
 
+# pairs scored per numpy block: bounds the (pairs × vector) gathers of an
+# uncapped hot bucket, whose s² pairs would otherwise be built at once
+_PAIR_BLOCK = 1 << 16
+
+
+def _pair_blocks(first: np.ndarray, cnt: np.ndarray):
+    """Row pairs ``(i, j)`` with ``j`` in ``[first[i], first[i] + cnt[i])``,
+    in blocks of about ``_PAIR_BLOCK`` pairs (one row's pairs stay in one
+    block)."""
+    rows = np.flatnonzero(cnt)
+    done = np.cumsum(cnt[rows])
+    lo = 0
+    while lo < rows.size:
+        upto = done[lo] - cnt[rows[lo]] + _PAIR_BLOCK
+        hi = max(int(np.searchsorted(done, upto, "right")), lo + 1)
+        r, c = rows[lo:hi], cnt[rows[lo:hi]]
+        ii = np.repeat(r, c)
+        yield ii, np.repeat(first[r] - (np.cumsum(c) - c), c) + np.arange(ii.size)
+        lo = hi
+
+
+def _bucket_scorer(measure: str, threshold: float, cap: int | None,
+                   n_bytes: int, cross: bool):
+    """``mapInArrow`` body over banded rows sorted by (band, sig, side).
+
+    Each (band, sig) run is one bucket: a run over the per-side ``cap`` is
+    dropped, the pairs of the rest (self mode: every row with the rows
+    after it; cross mode: domain × range) are scored with a byte-wise AND
+    and the LUT popcount, and only pairs at or above ``threshold`` are
+    emitted.  The run still open at the end of an Arrow batch is held
+    (one slice per batch, joined once when it closes) — or, once it is
+    over the cap, no longer buffered."""
+
+    def score(batch: pa.RecordBatch, starts: np.ndarray, end: int):
+        """Emit the matches of the complete runs in ``batch[:end]``."""
+        if end == 0:
+            return
+        side = batch.column("__side").to_numpy()[:end]
+        sizes = np.diff(np.append(starts, end))
+        run = np.repeat(np.arange(starts.size), sizes)
+        n_dom = np.add.reduceat((side == 0).astype(np.int64), starts)
+        n_rng = sizes - n_dom  # 0 in self mode
+        ok = np.ones(starts.size, dtype=bool) if cap is None else (n_dom <= cap) & (n_rng <= cap)
+        if cross:  # each domain row pairs with its run's range rows
+            first = (starts + n_dom)[run]
+            cnt = np.where(side == 0, n_rng[run], 0)
+        else:  # each row pairs with the rows after it in its run
+            first = np.arange(1, end + 1)
+            cnt = (starts + sizes)[run] - first
+        cnt = np.where(ok[run], cnt, 0)
+        fixed = batch.column("__v").cast(pa.binary(n_bytes))
+        vec = np.frombuffer(
+            fixed.buffers()[1], np.uint8, count=len(fixed) * n_bytes, offset=fixed.offset * n_bytes
+        ).reshape(-1, n_bytes)
+        ones = popcount_bytes(vec)
+        ids = batch.column("domain_id"), batch.column("range_id" if cross else "domain_id")
+        for ii, jj in _pair_blocks(first, cnt):
+            n12 = popcount_bytes(vec[ii] & vec[jj])
+            sim = similarity_from_counts(measure, ones[ii], ones[jj], n12)
+            hit = sim >= threshold
+            a, b, sim = ids[0].take(ii[hit]), ids[1].take(jj[hit]), pa.array(sim[hit])
+            if not cross:  # each unordered pair of distinct ids once, lower id first
+                lt, distinct = pc.less(a, b), pc.not_equal(a, b)
+                a, b = pc.if_else(lt, a, b), pc.if_else(lt, b, a)
+                a, b, sim = a.filter(distinct), b.filter(distinct), sim.filter(distinct)
+            if len(sim):
+                yield pa.RecordBatch.from_arrays(
+                    [a, b, sim], names=["domain_id", "range_id", "similarity"]
+                )
+
+    def score_held(held: list):
+        """Emit the matches of the closed open run held in ``held``."""
+        if held:
+            run = pa.Table.from_batches(held).combine_chunks().to_batches()[0]
+            yield from score(run, np.zeros(1, dtype=np.int64), run.num_rows)
+
+    def over(n_side: np.ndarray) -> bool:
+        return cap is not None and n_side.max() > cap
+
+    def walk(batches):
+        key, held, n_side = None, [], np.zeros(2, dtype=np.int64)  # the open run
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            band, sig = batch.column("band").to_numpy(), batch.column("sig").to_numpy()
+            side = batch.column("__side").to_numpy()
+            new = np.ones(batch.num_rows, dtype=bool)
+            new[1:] = (band[1:] != band[:-1]) | (sig[1:] != sig[:-1])
+            new[0] = (band[0], sig[0]) != key
+            starts = np.flatnonzero(new)
+            cont = int(starts[0]) if starts.size else batch.num_rows  # rows of the open run
+            if cont:
+                n_side += np.bincount(side[:cont], minlength=2)
+                held = [] if over(n_side) else [*held, batch.slice(0, cont)]
+            if starts.size == 0:
+                continue
+            yield from score_held(held)
+            last = int(starts[-1])
+            yield from score(batch.slice(cont), starts[:-1] - cont, last - cont)
+            key, n_side = (band[last], sig[last]), np.bincount(side[last:], minlength=2)
+            held = [] if over(n_side) else [batch.slice(last)]
+        yield from score_held(held)
+
+    return walk
+
+
 def match_lsh(
     df_domain: DataFrame,
     df_range: DataFrame | None,
@@ -180,201 +267,79 @@ def match_lsh(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH-blocked match.  ``df_range=None`` → self-dedup mode (emit each
-    unordered pair once, ``domain_id < range_id``).
+    unordered pair of distinct ids once, ``domain_id < range_id``).
 
-    Plan shape: band-explode (narrow) → equi-join on (band, sig) over SLIM
-    (id, band, sig) rows → join per-id popcount words back → similarity +
-    threshold → pair dedup on the surviving matches.  Candidates usually
-    outnumber the corpus by orders of magnitude, so the candidate shuffles
-    carry 16-byte id pairs, not 2×m-bit vectors.
+    Plan shape: drop null-id / null-vector rows → tag each side and union
+    them → band-explode to (band, sig) rows that carry their id and packed
+    vector → ONE ``hashpartitioning(band, sig)`` exchange → sort within
+    partitions by (band, sig, side) → one ``mapInArrow`` that walks the
+    sorted runs (:func:`_bucket_scorer`) → pair dedup across bands.  When
+    the band signatures come from the Arrow UDF (``not lsh.jvm_bands``),
+    an id exchange precedes the banding.
 
-    Similarity is evaluated in pure Catalyst: each vector is decomposed
-    ONCE per id into 4-byte words + a popcount, candidates attach the
-    words by id, and the per-pair score is Σ bit_count(wa & wb) folded
-    into the measure formula (double-identical to the kernel, see
-    :func:`_similarity_expr`).  Shipping both packed vectors of every
-    candidate through an Arrow UDF instead costs ~2×128 B × candidate
-    count across the Python boundary (23 GB at sf1.0, r6 measured), and
-    scoring in the join stage lets the pair dedup run on the thresholded
-    matches rather than on every candidate.  Vectors must be exactly
+    Every banded row crosses the Arrow boundary once; candidate pairs are
+    never rows.  Each bucket's pairs are scored in numpy inside the walk
+    (popcounts via the LUT, :func:`similarity_from_counts`, so every score
+    is the kernel's double) and only the pairs that clear the threshold
+    leave the Python worker, so the dedup aggregate sees matches, not
+    candidates.  ``max_bucket_size`` drops a bucket when either side holds
+    more rows than the cap (classic LSH hot-key guard, a documented recall
+    trade-off, off by default); a hot bucket under no cap is scored in
+    blocks but stays in one task.  Vectors must be exactly
     ceil(lsh.num_bits/8) bytes (runtime-checked, loud error).
     """
-    # The id-keyed repartition is load-bearing twice over: (1) it puts a
-    # stage boundary between the caller's encode UDF and the band UDF —
-    # two Arrow UDFs chained in ONE stage run two Python workers per core
-    # and oversubscribe the box (measured 6x slowdown at local[32]); (2)
-    # the Exchange output is reused (ReusedExchange) by both the banding
-    # branch and the final vector join, so the encode UDF runs once.
-    # explicit partition count: encoded vectors are tiny relative to the
-    # candidate work they seed, so AQE's size-based coalescing would fold
-    # this exchange into one partition and serialize the band stage
-    n_parts = max(df_domain.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    # null-id rows can never pair, so they are dropped before banding:
-    # left in, they would count toward max_bucket_size
-    dom_vec = _prefixed(df_domain, id_col, bloom_col, "domain").filter(
-        F.col("domain_id").isNotNull()
-    ).repartition(n_parts, "domain_id")
-    # localCheckpoint the slim (id, vector) projection: the banding
-    # branch, the bucket-size aggregate, and the popcount word table all
-    # re-read it.  Exchange reuse USED to make that one encode
-    # evaluation, but constraint-inferred isnotnull filters below
-    # the exchange de-canonicalize the subtrees — r6 plans showed the
-    # encode UDF running 3x.  Materializing the KB/row projection once is
-    # robust where ReusedExchange is fragile.  eager=False does not defer
-    # it to the first action: under AQE, checkpointing a plan runs every
-    # exchange below it, so the repartition's shuffle (and the encode
-    # feeding it) runs when match_lsh is called — building the
-    # pprl_match_lsh query starts 2 Spark jobs beyond the parquet read
-    # (sf0.1, local[4]).
-    dom_vec = dom_vec.localCheckpoint(eager=False)
-    dom = add_band_signatures(
-        dom_vec.select("domain_id", F.col("__domain_bloom").alias("__b")),
-        lsh,
-        "__b",
-    ).select("domain_id", "band", "sig")
-    if df_range is None:
-        rng_side = dom.select(
-            F.col("domain_id").alias("range_id"), "band", "sig"
-        )
-        pair_filter = F.col("domain_id") < F.col("range_id")
-    else:
-        rng_vec = _prefixed(df_range, id_col, bloom_col, "range").filter(
-            F.col("range_id").isNotNull()
-        ).repartition(n_parts, "range_id").localCheckpoint(
-            eager=False
-        )  # same single-encode story as dom_vec
-        rng_side = add_band_signatures(
-            rng_vec.select("range_id", F.col("__range_bloom").alias("__b")),
-            lsh,
-            "__b",
-        ).select("range_id", "band", "sig")
-        pair_filter = F.lit(True)
-
-    if max_bucket_size is not None:
-        # groupBy-count + inner join on the surviving (band, sig) keys —
-        # a hash aggregate with map-side combine.  The former window
-        # count (count().over(partitionBy(band, sig))) forced an
-        # Exchange+Sort over ALL banded rows (VERDICT r2 #1); this shape
-        # (same as minhash's cap, dedup.py) sorts nothing.  Each side is
-        # capped by its own per-side bucket size, as before; in self-dedup
-        # mode one aggregate serves both sides.
-        def _ok_keys(side):
-            return (
-                side.groupBy("band", "sig")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") <= max_bucket_size)
-                .drop("__n")
-            )
-
-        ok_dom = _ok_keys(dom)
-        ok_rng = ok_dom if df_range is None else _ok_keys(rng_side)
-        dom = dom.join(ok_dom, on=["band", "sig"], how="inner")
-        rng_side = rng_side.join(ok_rng, on=["band", "sig"], how="inner")
-
-    cand = dom.join(rng_side, on=["band", "sig"], how="inner").filter(pair_filter)
-
-    # JVM scoring: decompose each id's vector once into a words array +
-    # popcount (a 3-col, popcount-only projection of the corpus —
-    # broadcast to the candidate join), score every candidate emission
-    # in-stage, and dedup only the matches above threshold.  Candidate
-    # multiplicity is bounded by num_bands (and in practice near 1 for
-    # non-identical pairs), so scoring before dedup trades a tiny amount
-    # of repeated arithmetic for not shuffling the full candidate set.
-    # The words ride in ONE array<long> column per side, not ~30 flat
-    # columns: a flat-column variant sent the optimizer's constraint
-    # propagation (getAllValidConstraints alias substitution over the
-    # join equivalences) into a minutes-long planning stall (r6 thread
-    # dump); with 2 attributes per side planning is instant.
     n_bytes = (lsh.num_bits + 7) // 8
+    sides = [df_domain] if df_range is None else [df_domain, df_range]
+    id_types = [df.select(id_col).schema[0].dataType for df in sides]
+    names = ["domain_id", "range_id"][: len(sides)]
 
-    def _word_table(vec_side: DataFrame, side: str) -> DataFrame:
-        bloom = F.col(f"__{side}_bloom")
-        checked = F.when(
-            F.length(bloom) != n_bytes,
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"match_lsh expects {n_bytes}-byte vectors "
-                        "(= ceil(lsh.num_bits/8)); got "
-                    ),
-                    F.length(bloom).cast("string"),
-                    F.lit(
-                        " bytes — set lsh.num_bits to the vector's bit length"
-                    ),
-                )
-            ),
-        ).otherwise(bloom)
-        all_words = _word_cols(checked, n_bytes)
-        half = (len(all_words) + 1) // 2
-        # two half-vector word arrays per side: the scoring filter tests
-        # a prefix-only upper bound first (see below), so the suffix HOF
-        # only runs for rows that might clear the threshold
-        wa, wb = F.array(*all_words[:half]), F.array(*all_words[half:])
-        popcount = lambda arr: F.aggregate(  # noqa: E731
-            arr, F.lit(0).cast("long"), lambda acc, w: acc + F.bit_count(w)
-        )
-        return vec_side.select(
-            f"{side}_id",
-            (popcount(wa) + popcount(wb)).alias(f"__{side}_pc"),
-            popcount(wb).alias(f"__{side}_pcb"),
-            wa.alias(f"__{side}_wa"),
-            wb.alias(f"__{side}_wb"),
+    # null-id rows never pair; null vectors get no band rows.  A filter
+    # on the vector itself would be pushed below the caller's exchange as
+    # a second evaluation of its encode UDF.
+    def tagged(k: int, df: DataFrame) -> DataFrame:
+        ids = [F.col(id_col) if j == k else F.lit(None).cast(t) for j, t in enumerate(id_types)]
+        return df.filter(F.col(id_col).isNotNull()).select(
+            *[c.alias(n) for c, n in zip(ids, names)],
+            F.lit(k).cast("tinyint").alias("__side"),
+            F.col(bloom_col).alias("__v"),
         )
 
-    # localCheckpoint is load-bearing, not a cache: it truncates the
-    # lineage at this KB-scale table so (1) the encode pipeline is
-    # guaranteed to evaluate once for the scoring branch and (2) the
-    # constraint machinery below the similarity filter sees a leaf.
-    # Its plan reads the dom_vec checkpoint and has no exchange, so
-    # eager=False holds here: it computes in the query's first job.
-    dom_words = _word_table(dom_vec, "domain").localCheckpoint(eager=False)
-    rng_words = (
-        dom_words.select(
-            F.col("domain_id").alias("range_id"),
-            F.col("__domain_pc").alias("__range_pc"),
-            F.col("__domain_pcb").alias("__range_pcb"),
-            F.col("__domain_wa").alias("__range_wa"),
-            F.col("__domain_wb").alias("__range_wb"),
-        )
-        if df_range is None
-        else _word_table(rng_vec, "range")
-    )
-
-    # zip_with + aggregate over ARRAY attributes.  Two rejected
-    # alternatives, both re-measured at sf1.0 (r6): ~30 flat word columns
-    # hang the optimizer (constraint propagation is exponential in
-    # equivalence-linked attributes), and a flat sum of 2×32 element_at
-    # calls ran ~7x SLOWER end to end (170 s vs 23 s) than this HOF form.
-    def _inter(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseAND(y))),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    n12a = _inter("__domain_wa", "__range_wa")
-    n12 = n12a + _inter("__domain_wb", "__range_wb")
-    # prefix early-exit: n12 <= n12a + min(suffix popcounts), and every
-    # measure is monotone in n12, so a pair whose UPPER-BOUND similarity
-    # misses the threshold is rejected after evaluating only the prefix
-    # HOF — at the flagship's operating point that is ~all background
-    # candidates (bound ~0.73 vs threshold 0.85), roughly halving the
-    # per-candidate scoring work.  The bound filter sits LEFT of the
-    # exact filter so codegen short-circuits the suffix evaluation.
-    n12_upper = n12a + F.least(F.col("__domain_pcb"), F.col("__range_pcb"))
-    sim_upper = _similarity_expr(
-        cfg.measure, F.col("__domain_pc"), F.col("__range_pc"), n12_upper
-    )
-    sim = _similarity_expr(
-        cfg.measure, F.col("__domain_pc"), F.col("__range_pc"), n12
-    )
+    rows = reduce(DataFrame.union, [tagged(k, df) for k, df in enumerate(sides)])
+    if not lsh.jvm_bands:
+        # the band step is an Arrow UDF: an id exchange keeps it out of the
+        # stage of the caller's encode UDF (two Arrow UDFs chained in one
+        # stage run two Python workers per core; measured 6x slower at
+        # local[32]).  Explicit count: AQE would fold these small rows
+        # into one partition and serialize the band UDF.
+        n_parts = max(2 * df_domain.sparkSession.sparkContext.defaultParallelism, 8)
+        rows = rows.repartition(n_parts, *names)
+    v = F.col("__v")
+    checked = F.when(
+        F.length(v) != n_bytes,
+        F.raise_error(
+            F.concat(
+                F.lit(f"match_lsh expects {n_bytes}-byte vectors (= ceil(lsh.num_bits/8)); got "),
+                F.length(v).cast("string"),
+                F.lit(" bytes — set lsh.num_bits to the vector's bit length"),
+            )
+        ),
+    ).otherwise(v)
+    banded = add_band_signatures(rows.withColumn("__v", checked), lsh, "__v")
+    schema = StructType([
+        StructField("domain_id", id_types[0]),
+        StructField("range_id", id_types[-1]),
+        StructField("similarity", DoubleType()),
+    ])
+    scorer = _bucket_scorer(cfg.measure, cfg.threshold, max_bucket_size, n_bytes,
+                            df_range is not None)
+    # no explicit count: the exchange takes spark.sql.shuffle.partitions
+    # and AQE coalesces them by size, so the walk's task count follows the
+    # banded input (about defaultParallelism tasks on small inputs, where
+    # each Python task's fixed start-up cost dominates)
     return (
-        cand.join(F.broadcast(dom_words), "domain_id")
-        .join(F.broadcast(rng_words), "range_id")
-        .filter(sim_upper >= cfg.threshold)
-        .withColumn("similarity", sim)
-        .filter(F.col("similarity") >= cfg.threshold)
-        .select("domain_id", "range_id", "similarity")
+        banded.repartition("band", "sig")
+        .sortWithinPartitions("band", "sig", "__side")
+        .mapInArrow(scorer, schema)
         .dropDuplicates(["domain_id", "range_id"])
     )
 

@@ -60,6 +60,26 @@ def test_minhash_lsh_finds_near_duplicates(spark, pages):
     assert found / len(dup_urls) >= 0.9, f"minhash recall {found}/{len(dup_urls)}"
 
 
+@pytest.mark.parametrize("cap", [None, 4])
+def test_minhash_lsh_pairs_drop_null_ids(spark, cap):
+    """Null ids never pair and never fill a bucket: ids a, b, c plus two
+    null-id rows of identical text, in self and cross mode."""
+    text = "the quick brown fox jumps over the lazy dog"
+    df = spark.createDataFrame(
+        [("a", text), ("b", text), ("c", text), (None, text), (None, text)],
+        "id string, text string",
+    )
+    other = spark.createDataFrame([("x", text), (None, text)], "id string, text string")
+    kw = dict(q=5, num_hashes=32, bands=8, max_bucket_size=cap)
+    self_pairs = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(df, "id", "text", **kw).collect()}
+    assert self_pairs == {("a", "b"), ("a", "c"), ("b", "c")}
+    cross = {
+        (r.id_a, r.id_b)
+        for r in minhash_lsh_pairs(df, "id", "text", df_other=other, **kw).collect()
+    }
+    assert cross == {("a", "x"), ("b", "x"), ("c", "x")}
+
+
 def test_ngram_jaccard_exact_value(spark):
     df = spark.createDataFrame([("abcde", "abcdx")], ["a", "b"])
     got = df.select(

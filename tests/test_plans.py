@@ -75,8 +75,10 @@ def test_text_quality_is_narrow_and_jvm_side(spark):
 
 def test_match_lsh_join_is_partial_aggregated_equi_join(spark):
     plan = _executed_plan(E._flagship_matches(spark, SF))
-    # candidate generation must be a hash equi-join on (band, sig) …
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
+    # candidate generation is ONE hash exchange on (band, sig) feeding the
+    # bucket walk — no join, and never a nested-loop or cartesian product …
+    assert plan.count("Exchange hashpartitioning(band#") == 1
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     # … and the pair dedup an aggregate, not a global sort
     assert "HashAggregate" in plan
 

@@ -2848,8 +2848,7 @@ def test_simhash_chunk_pair_emits_each_pair_once(spark):
 
 
 def test_match_lsh_scores_equal_kernel_similarity(spark):
-    """r6: match_lsh's Catalyst scoring (popcount-word decomposition +
-    prefix-bound early exit) must emit exactly the capped-bucket
+    """match_lsh's bucket scorer must emit exactly the capped-bucket
     candidates whose kernel similarity clears the threshold, each with
     the kernel's similarity double — not an approximation of it."""
     from collections import defaultdict
@@ -2905,9 +2904,9 @@ def test_match_lsh_scores_equal_kernel_similarity(spark):
 
 
 def test_match_lsh_jvm_engine_rejects_odd_vector_length(spark):
-    """match_lsh's Catalyst scoring reads exactly ceil(num_bits/8) bytes;
-    a vector of any other length must fail loudly, not silently truncate,
-    and name the fix."""
+    """match_lsh's bucket scorer reads exactly ceil(num_bits/8) bytes per
+    vector; a vector of any other length must fail loudly, not silently
+    truncate, and name the fix."""
     import pytest
     from pyspark.sql import Row
 

@@ -213,6 +213,158 @@ def test_match_lsh_null_ids_do_not_count_toward_bucket_cap(spark):
     assert cross_pairs == {(d, r) for d in "abc" for r in "abc"}
 
 
+def _lsh_replay(dom, rng, lsh, measure, threshold, cap):
+    """Straight-line LSH match: numpy band signatures, buckets as dicts,
+    per-side cap, self mode ``a < b`` / cross mode dom × rng, every
+    candidate scored with ``pair_similarity``."""
+    from collections import defaultdict
+
+    from pprl_spark.kernels.similarity import pair_similarity, stack_packed
+    from pprl_spark.spark.lsh import band_positions, band_weights
+
+    def buckets(rows):
+        bits = np.unpackbits(stack_packed([v for _, v in rows]), axis=1, count=lsh.num_bits)
+        sigs = bits[:, band_positions(lsh)].astype(np.int64) @ band_weights(lsh)
+        out = defaultdict(list)
+        for (i, _), row in zip(rows, sigs):
+            for b, sig in enumerate(row):
+                out[(b, sig)].append(i)
+        return out
+
+    def ok(ids):
+        return cap is None or len(ids) <= cap
+
+    bd = buckets(dom)
+    if rng is None:
+        cands = {
+            (min(a, b), max(a, b))
+            for ids in bd.values() if ok(ids)
+            for a in ids for b in ids if a != b
+        }
+        rng = dom
+    else:
+        br = buckets(rng)
+        cands = {
+            (a, b)
+            for key, ids in bd.items() if ok(ids) and ok(br.get(key, []))
+            for a in ids for b in br.get(key, [])
+        }
+    cands = sorted(cands)
+    vd, vr = dict(dom), dict(rng)
+    sims = pair_similarity(measure, [vd[a] for a, _ in cands], [vr[b] for _, b in cands])
+    return sorted((a, b, float(s)) for (a, b), s in zip(cands, sims) if s >= threshold)
+
+
+def _grouped_vectors(rng, groups, n_bytes):
+    """Domain and range rows ``(id, vector)``: group ``g`` = ``(n_dom,
+    n_rng)`` rows whose vectors share their first half of bytes (so they
+    share those bands), the rest random."""
+    dom, other = [], []
+    for g, sizes in enumerate(groups):
+        head = rng.integers(0, 256, n_bytes // 2, dtype=np.uint8)
+        for side, rows, n in zip("dr", (dom, other), sizes):
+            for k in range(n):
+                tail = rng.integers(0, 256, n_bytes - head.size, dtype=np.uint8)
+                rows.append((f"{side}{g:02d}_{k}", np.concatenate([head, tail]).tobytes()))
+    return dom, other
+
+
+def test_match_lsh_bucket_walk_edges_equal_replay(spark):
+    """The bucket walk against a straight-line replay, with 5-row Arrow
+    batches so buckets straddle batch boundaries: cross-mode buckets
+    whose per-side size is exactly the cap (kept) and cap + 1 (dropped),
+    and self-mode repeated identical vectors and runs longer than a
+    batch."""
+    cap, n_bytes = 3, 8
+    lsh = LSHConfig(num_bits=8 * n_bytes, num_bands=n_bytes, band_width=8, scheme="chunked")
+    rng = np.random.default_rng(64)
+    at_cap, over_dom, over_rng, single = (cap, cap), (cap + 1, 1), (1, cap + 1), (1, 1)
+    dom, rng_rows = _grouped_vectors(
+        rng, [at_cap] * 3 + [over_dom, over_rng] + [single] * 6, n_bytes
+    )
+    # a self-mode run of 3·cap rows is over the cap before it ends, so
+    # the walk has to skip its rest in the next batch
+    selfs, _ = _grouped_vectors(
+        rng, [(cap, 0), (cap + 1, 0), (2, 0), (3 * cap, 0)] + [(1, 0)] * 8, n_bytes
+    )
+    twin = rng.integers(0, 256, n_bytes, dtype=np.uint8).tobytes()
+    selfs += [(f"t{k}", twin) for k in range(cap)]  # identical: every band shared
+    schema = "id string, bloom binary"
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        cross = match_lsh(
+            spark.createDataFrame(dom, schema), spark.createDataFrame(rng_rows, schema),
+            MatchConfig("dice", 0.5), lsh, max_bucket_size=cap,
+        ).collect()
+        self_ = match_lsh(
+            spark.createDataFrame(selfs, schema), None,
+            MatchConfig("cosine", 0.5), lsh, max_bucket_size=cap,
+        ).collect()
+    finally:
+        spark.conf.set(key, old)
+    want_cross = _lsh_replay(dom, rng_rows, lsh, "dice", 0.5, cap)
+    want_self = _lsh_replay(selfs, None, lsh, "cosine", 0.5, cap)
+    assert sorted(map(tuple, cross)) == want_cross
+    assert sorted(map(tuple, self_)) == want_self
+    # the fixture reaches both cap edges: the at-cap groups and the twins
+    # match, and the cap drops pairs of every group over it
+    assert {(a[:3], b[:3]) for a, b, _ in want_cross} >= {("d00", "r00"), ("d01", "r01")}
+    assert {("t0", "t1"), ("t0", "t2"), ("t1", "t2")} <= {p[:2] for p in want_self}
+    for got, rows, other, measure in ((want_cross, dom, rng_rows, "dice"),
+                                      (want_self, selfs, None, "cosine")):
+        uncapped = _lsh_replay(rows, other, lsh, measure, 0.5, None)
+        assert {a[:3] for a, _, _ in set(uncapped) - set(got)} >= (
+            {"d03", "d04"} if other else {"d01", "d03"}
+        )
+
+
+@pytest.mark.parametrize("cap", [None, 4])
+def test_bucket_walk_pair_blocks_equal_replay(monkeypatch, cap):
+    """The walk in-process, with 3-pair scoring blocks and 4-row batches
+    of banded rows, so hot buckets span several blocks and batches; each
+    mode's deduplicated matches equal the straight-line replay."""
+    import pyarrow as pa
+
+    from pprl_spark.spark import match as M
+    from pprl_spark.spark.lsh import band_positions, band_weights
+
+    monkeypatch.setattr(M, "_PAIR_BLOCK", 3)
+    n_bytes = 8
+    lsh = LSHConfig(num_bits=8 * n_bytes, num_bands=n_bytes, band_width=8, scheme="chunked")
+    dom, other = _grouped_vectors(
+        np.random.default_rng(7), [(6, 5), (4, 4), (2, 7), (1, 1), (5, 0)], n_bytes
+    )
+
+    def banded(sides):
+        rows = []
+        for k, side in enumerate(sides):
+            bits = np.unpackbits(
+                np.frombuffer(b"".join(v for _, v in side), np.uint8).reshape(-1, n_bytes), axis=1
+            )
+            sigs = bits[:, band_positions(lsh)].astype(np.int64) @ band_weights(lsh)
+            for (i, v), row in zip(side, sigs):
+                ids = [i if j == k else None for j in range(len(sides))]
+                rows += [(b, int(sig), k, v, *ids) for b, sig in enumerate(row)]
+        rows.sort(key=lambda r: r[:3])
+        names = ["band", "sig", "__side", "__v", "domain_id", "range_id"][: 4 + len(sides)]
+        cols = list(zip(*rows))
+        types = [pa.int32(), pa.int64(), pa.int8(), pa.binary(), *[pa.string()] * len(sides)]
+        table = pa.table([pa.array(c, t) for c, t in zip(cols, types)], names=names)
+        return table.to_batches(max_chunksize=4)
+
+    for sides, measure in (([dom, other], "dice"), ([dom], "jaccard")):
+        walk = M._bucket_scorer(measure, 0.4, cap, n_bytes, len(sides) == 2)
+        got = {}
+        for out in walk(banded(sides)):
+            for a, b, sim in zip(*(c.to_pylist() for c in out.columns)):
+                got[(a, b)] = sim
+        want = _lsh_replay(dom, other if len(sides) == 2 else None, lsh, measure, 0.4, cap)
+        assert sorted((a, b, s) for (a, b), s in got.items()) == want
+        assert len(want) > 3
+
+
 def test_top_k_per_record(spark):
     df = _near_dup_df(spark, n=20)
     cfg = MatchConfig("dice", 0.0)
