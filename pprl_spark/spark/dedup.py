@@ -5,7 +5,8 @@ Five families:
 * **exact** — hash-groupBy on the content (one shuffle, map-side combine).
 * **MinHash + LSH** — per document, one Arrow-vectorized pass turns the
   distinct q-gram shingles into md5-derived band buckets; the banded
-  (id, band, bucket) rows then self-equi-join on (band, bucket).
+  (id, band, bucket) rows are bucketed by one (band, bucket) exchange and
+  paired in one sorted Arrow walk (the ``match_lsh`` core, spark/lsh.py).
 * **n-gram Jaccard** — exact verify step for candidate pairs (JVM set ops
   ``array_intersect`` / ``array_union``).
 * **SimHash** — 64-bit majority-vote fingerprint over the md5 bits of the
@@ -16,17 +17,19 @@ Five families:
 
 All shuffles key on content-derived hashes → uniformly distributed by
 construction; duplicate-cluster skew (one document repeated 10^6×) is the
-residual hazard, handled by AQE skew-join plus the ``max_bucket_size``
-escape hatch on the join stage.  MinHash and SimHash bits are md5-derived,
-so both operators stay DuckDB-oracle-expressible.
+residual hazard, handled by AQE skew-join plus MinHash's per-side
+``max_bucket_size`` cap inside its bucket walk.  MinHash and SimHash bits
+are md5-derived, so both operators stay DuckDB-oracle-expressible.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .lsh import tag_sides, walk_buckets
 from .session import resplit
 
 __all__ = [
@@ -212,60 +215,35 @@ def minhash_lsh_pairs(
     re-pairing the corpus with itself): ``id_a`` comes from ``df``,
     ``id_b`` from ``df_other`` (same ``id_col``/``text_col`` names), both
     sides banded with the SAME hash family so buckets are comparable, and
-    the ``id_a < id_b`` self-pair filter is skipped.  At 100 TB the batch
+    the ``id_a < id_b`` self-pair order is skipped.  At 100 TB the batch
     side is typically orders of magnitude smaller than the corpus: its
-    banded rows are slim (id, band, bucket) triples, and the equi-join
-    shuffles only ids — the corpus text never moves.
+    banded rows are slim (id, band, bucket) triples, and the bucket
+    exchange shuffles only those — the corpus text never moves.
 
     Plan shape: one Arrow-vectorized UDF (:func:`minhash_band_keys`)
     computes each row's ``bands`` bucket keys (no gram rows, no per-gram
-    shuffle) → id-keyed exchange → posexplode to (id, band, bucket) →
-    optional bucket-size cap → the (band, bucket) self-join → pair dedup.
+    shuffle) → posexplode to (id, band, bucket) → tag and union the sides
+    → :func:`~.lsh.walk_buckets` (the ``match_lsh`` core: one (band,
+    bucket) exchange and one sorted ``mapInArrow`` walk that emits each
+    bucket's pairs; ``max_bucket_size`` drops a bucket over it on either
+    side) → pair dedup.
     """
     keys_col = minhash_band_keys(text_col, q, num_hashes, bands)
     n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    # small-scan guard: the md5-per-gram UDF would otherwise run
+    # serialized on a small parquet table's 1-4 splits (measured
+    # 12.6 s → ~1 s at sf0.1/local[32])
+    sides = [resplit(s, n_parts) for s in ([df] if df_other is None else [df, df_other])]
+    names = ["id_a", "id_b"][: len(sides)]
+    banded = tag_sides(sides, id_col, names, F.posexplode(keys_col).alias("band", "bucket"))
 
-    def _banded(frame: DataFrame) -> DataFrame:
-        # small-scan guard: the md5-per-gram UDF would otherwise run
-        # serialized on a small parquet table's 1-4 splits (measured
-        # 12.6 s → ~1 s at sf0.1/local[32])
-        frame = resplit(frame, n_parts)
-        # the id-keyed exchange materializes the key array, so the
-        # posexplode reads an attribute, and lets the self-join's two
-        # sides reuse ONE signature computation (ReusedExchange)
-        # null ids never pair; left in, they would also count toward
-        # max_bucket_size
-        keys = frame.select(
-            F.col(id_col).alias("__id"), keys_col.alias("__keys")
-        ).filter(F.col("__id").isNotNull()).repartition(n_parts, "__id")
-        return _cap_buckets(
-            keys.select("__id", F.posexplode("__keys").alias("band", "bucket"))
-        )
+    def emit(batch, blocks):
+        a, b = batch.column(names[0]), batch.column(names[-1])
+        for ii, jj in blocks:
+            if ii.size:
+                yield pa.RecordBatch.from_arrays([a.take(ii), b.take(jj)], names=["id_a", "id_b"])
 
-    def _cap_buckets(banded: DataFrame) -> DataFrame:
-        if max_bucket_size is not None:
-            sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__n"))
-            banded = banded.join(
-                sizes.filter(F.col("__n") <= max_bucket_size).drop("__n"),
-                on=["band", "bucket"],
-                how="inner",
-            )
-        return banded
-
-    banded = _banded(df)
-    left = banded.withColumnRenamed("__id", "id_a")
-    if df_other is None:
-        right = banded.withColumnRenamed("__id", "id_b")
-        pair_filter = F.col("id_a") < F.col("id_b")
-    else:
-        right = _banded(df_other).withColumnRenamed("__id", "id_b")
-        pair_filter = F.lit(True)
-    return (
-        left.join(right, on=["band", "bucket"], how="inner")
-        .filter(pair_filter)
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return walk_buckets(banded, "bucket", names, max_bucket_size, emit, ["id_a", "id_b"])
 
 
 # ---------------------------------------------------------------- jaccard

@@ -115,8 +115,13 @@ def connected_components(
     e = e.localCheckpoint(eager=True) if not checkpoint else e.checkpoint(eager=True)
     sig = None
     for _ in range(max_iterations):
-        e = _small_star(_large_star(e))
+        prev, e = e, _small_star(_large_star(e))
         e = e.localCheckpoint(eager=True) if not checkpoint else e.checkpoint(eager=True)
+        if not checkpoint:
+            # this round's edges are materialized, so free the ones they
+            # replace; DataFrame.unpersist() would leave a local
+            # checkpoint's blocks cached, one set per round
+            prev._jdf.queryExecution().analyzed().rdd().unpersist(False)
         new_sig = _signature(e)
         if new_sig == sig:
             break

@@ -7,8 +7,9 @@ Hamming LSH: ``b`` bands of ``r`` bit positions each; two vectors collide
 in a band iff they agree on all r positions; collision probability of a
 pair at Hamming similarity ``s`` is ``1-(1-s^r)^b``.  Banding turns
 matching into bucketing by ``(band, signature)``: the rows of one bucket
-are the candidates of each other (spark/match.py scores them bucket by
-bucket).
+are the candidates of each other.  :func:`walk_buckets` pairs them in
+one sorted ``mapInArrow`` walk and hands the pairs to its caller
+(spark/match.py scores them; spark/dedup.py MinHash emits them).
 
 Two position schemes:
 
@@ -31,12 +32,15 @@ produce identical blocks.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 __all__ = [
     "LSHConfig",
@@ -44,6 +48,9 @@ __all__ = [
     "band_weights",
     "band_signatures_udf",
     "add_band_signatures",
+    "tag_sides",
+    "bucket_walk",
+    "walk_buckets",
 ]
 
 
@@ -161,3 +168,132 @@ def add_band_signatures(
         sigs = band_signatures_udf(cfg)(F.col(bloom_col))
     sigs = F.when(F.col(bloom_col).isNotNull(), sigs)
     return df.select("*", F.posexplode(sigs).alias(band_col, sig_col))
+
+
+def tag_sides(sides: list, id_col: str, ids: list, *cols) -> DataFrame:
+    """Bucket-walk input: the union of ``sides``' rows with a non-null
+    ``id_col`` (null ids never pair), side ``k``'s carrying its id in
+    column ``ids[k]`` (NULL in the other's), ``__side`` = ``k`` and ``cols``."""
+    types = [df.select(id_col).schema[0].dataType for df in sides]
+
+    def tagged(k: int, df: DataFrame) -> DataFrame:
+        own = [F.col(id_col) if j == k else F.lit(None).cast(t) for j, t in enumerate(types)]
+        return df.filter(F.col(id_col).isNotNull()).select(
+            *[c.alias(n) for c, n in zip(own, ids)], F.lit(k).cast("tinyint").alias("__side"), *cols
+        )
+
+    return reduce(DataFrame.union, [tagged(k, df) for k, df in enumerate(sides)])
+
+
+# pairs per block handed to a walk's caller: bounds the (pairs × row)
+# gathers of an uncapped hot bucket, whose s² pairs would otherwise be
+# built at once
+_PAIR_BLOCK = 1 << 16
+
+
+def _pair_blocks(first: np.ndarray, cnt: np.ndarray, rank: np.ndarray | None):
+    """Row pairs ``(i, j)`` with ``j`` in ``[first[i], first[i] + cnt[i])``,
+    in blocks of about ``_PAIR_BLOCK`` pairs (one row's pairs stay in one
+    block).  Given the rows' id ``rank``, each pair puts the lower id
+    first and pairs of equal ids are dropped."""
+    rows = np.flatnonzero(cnt)
+    done = np.cumsum(cnt[rows])
+    lo = 0
+    while lo < rows.size:
+        upto = done[lo] - cnt[rows[lo]] + _PAIR_BLOCK
+        hi = max(int(np.searchsorted(done, upto, "right")), lo + 1)
+        r, c = rows[lo:hi], cnt[rows[lo:hi]]
+        ii = np.repeat(r, c)
+        jj = np.repeat(first[r] - (np.cumsum(c) - c), c) + np.arange(ii.size)
+        if rank is not None:
+            lt, distinct = rank[ii] < rank[jj], rank[ii] != rank[jj]
+            ii, jj = np.where(lt, ii, jj)[distinct], np.where(lt, jj, ii)[distinct]
+        yield ii, jj
+        lo = hi
+
+
+def bucket_walk(key: str, ids: list, cap: int | None, emit):
+    """``mapInArrow`` body over :func:`tag_sides` rows sorted by (band,
+    ``key``, __side); ``key`` may be an int64 signature or a string bucket.
+
+    Each (band, ``key``) run is one bucket; a run with more than ``cap``
+    rows on either side is dropped.  The pairs of the rest go to
+    ``emit(batch, blocks)``, whose batches the walk yields, as row-index
+    blocks ``(ii, jj)`` into ``batch``: with one id column in ``ids``
+    (self mode) each row with the rows after it, lower id in ``ii``, equal
+    ids dropped; with two (cross mode) side-0 × side-1 rows.  The run open
+    at the end of an Arrow batch is held (one slice per batch, joined once
+    when it closes) — or, once it is over the cap, no longer buffered."""
+    limit = np.inf if cap is None else cap
+
+    def runs(batch: pa.RecordBatch, starts: np.ndarray, end: int):
+        """``emit``'s batches for the complete runs in ``batch[:end]``."""
+        if end == 0:
+            return
+        side = batch.column("__side").to_numpy()[:end]
+        sizes = np.diff(np.append(starts, end))
+        run = np.repeat(np.arange(starts.size), sizes)
+        n_dom = np.add.reduceat((side == 0).astype(np.int64), starts)
+        n_rng = sizes - n_dom  # 0 in self mode
+        ok = (n_dom <= limit) & (n_rng <= limit)
+        if len(ids) == 2:  # each domain row pairs with its run's range rows
+            first, rank = (starts + n_dom)[run], None
+            cnt = np.where(side == 0, n_rng[run], 0)
+        else:  # each row pairs with the rows after it in its run
+            first = np.arange(1, end + 1)
+            cnt = (starts + sizes)[run] - first
+            rank = pc.rank(batch.column(ids[0]), tiebreaker="dense").to_numpy()
+        yield from emit(batch, _pair_blocks(first, np.where(ok[run], cnt, 0), rank))
+
+    def held_run(held: list):
+        """``emit``'s batches for the closed open run held in ``held``."""
+        if held:
+            run = pa.Table.from_batches(held).combine_chunks().to_batches()[0]
+            yield from runs(run, np.zeros(1, dtype=np.int64), run.num_rows)
+
+    def walk(batches):
+        last_key, held, n_side = None, [], np.zeros(2, dtype=np.int64)  # the open run
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            band = batch.column("band").to_numpy()
+            sig = batch.column(key).to_numpy(zero_copy_only=False)
+            side = batch.column("__side").to_numpy()
+            new = np.ones(batch.num_rows, dtype=bool)
+            new[1:] = (band[1:] != band[:-1]) | (sig[1:] != sig[:-1])
+            new[0] = (band[0], sig[0]) != last_key
+            starts = np.flatnonzero(new)
+            cont = int(starts[0]) if starts.size else batch.num_rows  # rows of the open run
+            if cont:
+                n_side += np.bincount(side[:cont], minlength=2)
+                held = [] if n_side.max() > limit else [*held, batch.slice(0, cont)]
+            if starts.size == 0:
+                continue
+            yield from held_run(held)
+            last = int(starts[-1])
+            yield from runs(batch.slice(cont), starts[:-1] - cont, last - cont)
+            last_key, n_side = (band[last], sig[last]), np.bincount(side[last:], minlength=2)
+            held = [] if n_side.max() > limit else [batch.slice(last)]
+        yield from held_run(held)
+
+    return walk
+
+
+def walk_buckets(banded: DataFrame, key: str, ids: list, cap: int | None, emit,
+                 pair: list, *extra: StructField) -> DataFrame:
+    """Bucket ``banded`` (:func:`tag_sides` rows with ``band`` and ``key``)
+    with ONE (band, ``key``) exchange, sort each partition by (band,
+    ``key``, __side) and run :func:`bucket_walk` in one ``mapInArrow``;
+    output: the id pair named ``pair`` plus ``extra``, once per pair."""
+    types = [banded.schema[ids[0]].dataType, banded.schema[ids[-1]].dataType]
+    schema = StructType([StructField(n, t) for n, t in zip(pair, types)] + list(extra))
+    # no explicit count: AQE coalesces the shuffle partitions by size, so
+    # the walk's task count follows the banded input (about
+    # defaultParallelism tasks on small inputs, where each Python task's
+    # fixed start-up cost dominates)
+    return (
+        banded.repartition("band", key)
+        .sortWithinPartitions("band", key, "__side")
+        .mapInArrow(bucket_walk(key, ids, cap, emit), schema)
+        .dropDuplicates(pair)
+    )

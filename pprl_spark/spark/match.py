@@ -22,20 +22,17 @@ three compute the score with the same kernel formulas
 
 from __future__ import annotations
 
-from functools import reduce
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField
 
 from ..config import MatchConfig
 from ..kernels.bits import popcount_bytes
 from ..kernels.similarity import pair_similarity, similarity_from_counts
-from .lsh import LSHConfig, add_band_signatures
+from .lsh import LSHConfig, add_band_signatures, tag_sides, walk_buckets
 
 __all__ = [
     "similarity_udf",
@@ -151,110 +148,28 @@ def match_crosswise(
     return _score_and_filter(pairs, cfg)
 
 
-# pairs scored per numpy block: bounds the (pairs × vector) gathers of an
-# uncapped hot bucket, whose s² pairs would otherwise be built at once
-_PAIR_BLOCK = 1 << 16
+def _block_scorer(measure: str, threshold: float, n_bytes: int, ids: list):
+    """:func:`~.lsh.bucket_walk` ``emit`` step: score each pair block with
+    a byte-wise AND and the LUT popcount (:func:`similarity_from_counts`)
+    and emit the pairs at or above ``threshold``."""
 
-
-def _pair_blocks(first: np.ndarray, cnt: np.ndarray):
-    """Row pairs ``(i, j)`` with ``j`` in ``[first[i], first[i] + cnt[i])``,
-    in blocks of about ``_PAIR_BLOCK`` pairs (one row's pairs stay in one
-    block)."""
-    rows = np.flatnonzero(cnt)
-    done = np.cumsum(cnt[rows])
-    lo = 0
-    while lo < rows.size:
-        upto = done[lo] - cnt[rows[lo]] + _PAIR_BLOCK
-        hi = max(int(np.searchsorted(done, upto, "right")), lo + 1)
-        r, c = rows[lo:hi], cnt[rows[lo:hi]]
-        ii = np.repeat(r, c)
-        yield ii, np.repeat(first[r] - (np.cumsum(c) - c), c) + np.arange(ii.size)
-        lo = hi
-
-
-def _bucket_scorer(measure: str, threshold: float, cap: int | None,
-                   n_bytes: int, cross: bool):
-    """``mapInArrow`` body over banded rows sorted by (band, sig, side).
-
-    Each (band, sig) run is one bucket: a run over the per-side ``cap`` is
-    dropped, the pairs of the rest (self mode: every row with the rows
-    after it; cross mode: domain × range) are scored with a byte-wise AND
-    and the LUT popcount, and only pairs at or above ``threshold`` are
-    emitted.  The run still open at the end of an Arrow batch is held
-    (one slice per batch, joined once when it closes) — or, once it is
-    over the cap, no longer buffered."""
-
-    def score(batch: pa.RecordBatch, starts: np.ndarray, end: int):
-        """Emit the matches of the complete runs in ``batch[:end]``."""
-        if end == 0:
-            return
-        side = batch.column("__side").to_numpy()[:end]
-        sizes = np.diff(np.append(starts, end))
-        run = np.repeat(np.arange(starts.size), sizes)
-        n_dom = np.add.reduceat((side == 0).astype(np.int64), starts)
-        n_rng = sizes - n_dom  # 0 in self mode
-        ok = np.ones(starts.size, dtype=bool) if cap is None else (n_dom <= cap) & (n_rng <= cap)
-        if cross:  # each domain row pairs with its run's range rows
-            first = (starts + n_dom)[run]
-            cnt = np.where(side == 0, n_rng[run], 0)
-        else:  # each row pairs with the rows after it in its run
-            first = np.arange(1, end + 1)
-            cnt = (starts + sizes)[run] - first
-        cnt = np.where(ok[run], cnt, 0)
+    def score(batch: pa.RecordBatch, blocks):
         fixed = batch.column("__v").cast(pa.binary(n_bytes))
-        vec = np.frombuffer(
-            fixed.buffers()[1], np.uint8, count=len(fixed) * n_bytes, offset=fixed.offset * n_bytes
-        ).reshape(-1, n_bytes)
+        vec = np.frombuffer(fixed.buffers()[1], np.uint8, len(fixed) * n_bytes, fixed.offset * n_bytes)
+        vec = vec.reshape(-1, n_bytes)
         ones = popcount_bytes(vec)
-        ids = batch.column("domain_id"), batch.column("range_id" if cross else "domain_id")
-        for ii, jj in _pair_blocks(first, cnt):
+        a, b = batch.column(ids[0]), batch.column(ids[-1])
+        for ii, jj in blocks:
             n12 = popcount_bytes(vec[ii] & vec[jj])
             sim = similarity_from_counts(measure, ones[ii], ones[jj], n12)
             hit = sim >= threshold
-            a, b, sim = ids[0].take(ii[hit]), ids[1].take(jj[hit]), pa.array(sim[hit])
-            if not cross:  # each unordered pair of distinct ids once, lower id first
-                lt, distinct = pc.less(a, b), pc.not_equal(a, b)
-                a, b = pc.if_else(lt, a, b), pc.if_else(lt, b, a)
-                a, b, sim = a.filter(distinct), b.filter(distinct), sim.filter(distinct)
-            if len(sim):
+            if hit.any():
                 yield pa.RecordBatch.from_arrays(
-                    [a, b, sim], names=["domain_id", "range_id", "similarity"]
+                    [a.take(ii[hit]), b.take(jj[hit]), pa.array(sim[hit])],
+                    names=["domain_id", "range_id", "similarity"],
                 )
 
-    def score_held(held: list):
-        """Emit the matches of the closed open run held in ``held``."""
-        if held:
-            run = pa.Table.from_batches(held).combine_chunks().to_batches()[0]
-            yield from score(run, np.zeros(1, dtype=np.int64), run.num_rows)
-
-    def over(n_side: np.ndarray) -> bool:
-        return cap is not None and n_side.max() > cap
-
-    def walk(batches):
-        key, held, n_side = None, [], np.zeros(2, dtype=np.int64)  # the open run
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            band, sig = batch.column("band").to_numpy(), batch.column("sig").to_numpy()
-            side = batch.column("__side").to_numpy()
-            new = np.ones(batch.num_rows, dtype=bool)
-            new[1:] = (band[1:] != band[:-1]) | (sig[1:] != sig[:-1])
-            new[0] = (band[0], sig[0]) != key
-            starts = np.flatnonzero(new)
-            cont = int(starts[0]) if starts.size else batch.num_rows  # rows of the open run
-            if cont:
-                n_side += np.bincount(side[:cont], minlength=2)
-                held = [] if over(n_side) else [*held, batch.slice(0, cont)]
-            if starts.size == 0:
-                continue
-            yield from score_held(held)
-            last = int(starts[-1])
-            yield from score(batch.slice(cont), starts[:-1] - cont, last - cont)
-            key, n_side = (band[last], sig[last]), np.bincount(side[last:], minlength=2)
-            held = [] if over(n_side) else [batch.slice(last)]
-        yield from score_held(held)
-
-    return walk
+    return score
 
 
 def match_lsh(
@@ -269,42 +184,30 @@ def match_lsh(
     """LSH-blocked match.  ``df_range=None`` → self-dedup mode (emit each
     unordered pair of distinct ids once, ``domain_id < range_id``).
 
-    Plan shape: drop null-id / null-vector rows → tag each side and union
-    them → band-explode to (band, sig) rows that carry their id and packed
-    vector → ONE ``hashpartitioning(band, sig)`` exchange → sort within
-    partitions by (band, sig, side) → one ``mapInArrow`` that walks the
-    sorted runs (:func:`_bucket_scorer`) → pair dedup across bands.  When
-    the band signatures come from the Arrow UDF (``not lsh.jvm_bands``),
-    an id exchange precedes the banding.
+    Plan shape: drop null-id rows, tag and union the sides → band-explode
+    to (band, sig) rows carrying id and packed vector (a null vector gets
+    none) → :func:`~.lsh.walk_buckets`: ONE ``(band, sig)`` exchange, a
+    sort within partitions and one ``mapInArrow`` walk whose pair blocks
+    :func:`_block_scorer` scores → pair dedup across bands.  When the band
+    signatures come from the Arrow UDF (``not lsh.jvm_bands``), an id
+    exchange precedes the banding.
 
     Every banded row crosses the Arrow boundary once; candidate pairs are
-    never rows.  Each bucket's pairs are scored in numpy inside the walk
-    (popcounts via the LUT, :func:`similarity_from_counts`, so every score
-    is the kernel's double) and only the pairs that clear the threshold
-    leave the Python worker, so the dedup aggregate sees matches, not
-    candidates.  ``max_bucket_size`` drops a bucket when either side holds
-    more rows than the cap (classic LSH hot-key guard, a documented recall
-    trade-off, off by default); a hot bucket under no cap is scored in
-    blocks but stays in one task.  Vectors must be exactly
-    ceil(lsh.num_bits/8) bytes (runtime-checked, loud error).
+    never rows, and only the pairs that clear the threshold leave the
+    Python worker (each score is the kernel's double).  ``max_bucket_size``
+    drops a bucket when either side holds more rows than the cap (classic
+    LSH hot-key guard, a documented recall trade-off, off by default); a
+    hot bucket under no cap is scored in blocks but stays in one task.
+    Vectors must be exactly ceil(lsh.num_bits/8) bytes (runtime-checked,
+    loud error).
     """
     n_bytes = (lsh.num_bits + 7) // 8
     sides = [df_domain] if df_range is None else [df_domain, df_range]
-    id_types = [df.select(id_col).schema[0].dataType for df in sides]
     names = ["domain_id", "range_id"][: len(sides)]
-
-    # null-id rows never pair; null vectors get no band rows.  A filter
-    # on the vector itself would be pushed below the caller's exchange as
-    # a second evaluation of its encode UDF.
-    def tagged(k: int, df: DataFrame) -> DataFrame:
-        ids = [F.col(id_col) if j == k else F.lit(None).cast(t) for j, t in enumerate(id_types)]
-        return df.filter(F.col(id_col).isNotNull()).select(
-            *[c.alias(n) for c, n in zip(ids, names)],
-            F.lit(k).cast("tinyint").alias("__side"),
-            F.col(bloom_col).alias("__v"),
-        )
-
-    rows = reduce(DataFrame.union, [tagged(k, df) for k, df in enumerate(sides)])
+    # null vectors get no band rows.  A filter on the vector itself would
+    # be pushed below the caller's exchange as a second evaluation of its
+    # encode UDF.
+    rows = tag_sides(sides, id_col, names, F.col(bloom_col).alias("__v"))
     if not lsh.jvm_bands:
         # the band step is an Arrow UDF: an id exchange keeps it out of the
         # stage of the caller's encode UDF (two Arrow UDFs chained in one
@@ -325,23 +228,9 @@ def match_lsh(
         ),
     ).otherwise(v)
     banded = add_band_signatures(rows.withColumn("__v", checked), lsh, "__v")
-    schema = StructType([
-        StructField("domain_id", id_types[0]),
-        StructField("range_id", id_types[-1]),
-        StructField("similarity", DoubleType()),
-    ])
-    scorer = _bucket_scorer(cfg.measure, cfg.threshold, max_bucket_size, n_bytes,
-                            df_range is not None)
-    # no explicit count: the exchange takes spark.sql.shuffle.partitions
-    # and AQE coalesces them by size, so the walk's task count follows the
-    # banded input (about defaultParallelism tasks on small inputs, where
-    # each Python task's fixed start-up cost dominates)
-    return (
-        banded.repartition("band", "sig")
-        .sortWithinPartitions("band", "sig", "__side")
-        .mapInArrow(scorer, schema)
-        .dropDuplicates(["domain_id", "range_id"])
-    )
+    scorer = _block_scorer(cfg.measure, cfg.threshold, n_bytes, names)
+    return walk_buckets(banded, "sig", names, max_bucket_size, scorer,
+                        ["domain_id", "range_id"], StructField("similarity", DoubleType()))
 
 
 def match_files(

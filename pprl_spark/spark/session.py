@@ -1,6 +1,7 @@
 """SparkSession builder tuned for the PPRL + sketch workload.
 
-The defaults assume the sandbox shape (single JVM, ``local[N]``) but every
+The defaults assume the sandbox shape (single JVM, ``local[N]`` over the
+CPUs the process may use, a heap sized to the host's memory) but every
 knob is the one you would set on a real 1000-executor cluster: AQE for
 runtime re-planning and skew-join splitting, Arrow for the vectorized UDF
 boundary, and a shuffle-partition count sized to the parallelism.
@@ -15,14 +16,29 @@ from pyspark.sql import DataFrame, SparkSession
 __all__ = ["get_spark", "resplit"]
 
 
+def _default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    return len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count()
+
+
+def _default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else the smaller of 24g and half the
+    physical memory (the Python workers and the OS need the rest)."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    physical_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(24 << 10, physical_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "pprl-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{_default_cpus()}]"
     if shuffle_partitions is None:
         # local[N] → N; local[*] / cluster → a sane multiple of parallelism
         try:
@@ -30,11 +46,10 @@ def get_spark(
         except (IndexError, ValueError):
             shuffle_partitions = 200
 
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

@@ -143,9 +143,9 @@ def _final_plan_after_collect(df) -> str:
 
 
 def test_minhash_signature_single_shuffle(spark):
-    """The signature UDF evaluates once per corpus side: the self-join's
-    two sides share one signature exchange, and no copy of the UDF is
-    pushed onto the raw scan below the parallelism-restoring exchange."""
+    """The signature UDF evaluates once per corpus side: the bucket walk
+    reads each side's banded rows once, and no copy of the UDF is pushed
+    onto the raw scan below the parallelism-restoring exchange."""
     from pyspark.sql import functions as F
 
     from pprl_spark.spark.dedup import minhash_lsh_pairs

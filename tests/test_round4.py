@@ -864,6 +864,23 @@ def test_connected_components_path_graph_converges_logarithmically(spark):
     assert all(r["component"] == 0 for r in got)
 
 
+def test_connected_components_frees_replaced_checkpoints(spark):
+    """Each round's local checkpoint is freed once the next one is
+    materialized: a call leaves at most the returned frame's checkpoint
+    cached, not one per round."""
+    from pprl_spark.spark.graph import connected_components
+
+    n = 64
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
+    got = connected_components(edges)
+    assert cached().size() - before <= 1
+    rows = got.collect()
+    assert len(rows) == n and all(r["component"] == 0 for r in rows)
+    assert cached().size() - before <= 1
+
+
 # ------------------------------------------------- deterministic sampling
 
 def test_hash_sample_partition_invariant(spark):

@@ -2811,6 +2811,87 @@ def test_minhash_udf_signature_bit_identical(spark):
     assert cross == replay_pairs(rows, other_rows, False) and (0, 100) in cross
 
 
+def test_minhash_lsh_pairs_walk_edges_equal_replay(spark):
+    """The bucket walk on md5-hex string buckets, with 5-row Arrow batches
+    so runs straddle batch boundaries: duplicate-text groups whose
+    per-side size is exactly ``max_bucket_size`` (kept) and one more
+    (dropped), a group longer than a batch, and one-character variants
+    that share only some bands — self and cross mode, capped and not,
+    against the straight-line bucket replay."""
+    import itertools
+    import random
+    from collections import defaultdict
+
+    from pprl_spark.spark.dedup import minhash_lsh_pairs
+
+    cap, kw = 3, dict(q=3, num_hashes=16, bands=8)
+    rnd, ids = random.Random(5), itertools.count()
+
+    def doc():
+        return " ".join("".join(rnd.choice("abcdefgh") for _ in range(4)) for _ in range(6))
+
+    def group(text, n):
+        return [(next(ids), text) for _ in range(n)]
+
+    # self: ids 0-2 and 3-5 at the cap, 6-9 over it, 10-16 longer than a batch
+    selfs = [r for n in (cap, cap, cap + 1, 2 * cap + 1) for r in group(doc(), n)]
+    left, right = [], []
+    for n_l, n_r in [(cap, cap), (cap, cap), (cap + 1, 1), (1, cap + 1), (2, 2), (1, 1)]:
+        text = doc()
+        left += group(text, n_l) + group(doc(), 1)
+        right += group(text, n_r)
+    for _ in range(3):  # one-word variants share only some bands
+        text = doc()
+        selfs += group(text, 1) + group(text[:-4] + "zzzz", 1) + group(doc(), 1)
+        left += group(text, 1)
+        right += group(text[:-4] + "zzzz", 1)
+
+    def buckets(side):
+        out = defaultdict(list)
+        for i, t in side:
+            for band, b in enumerate(_minhash_replay_buckets(t, **kw)):
+                out[(band, b)].append(i)
+        return out
+
+    def replay(side, other, limit):
+        def ok(ids):
+            return limit is None or len(ids) <= limit
+
+        bl = buckets(side)
+        if other is None:
+            return {(min(a, b), max(a, b)) for ids in bl.values() if ok(ids)
+                    for a in ids for b in ids if a != b}
+        br = buckets(other)
+        return {(a, b) for key, ids in bl.items() if ok(ids) and ok(br.get(key, []))
+                for a in ids for b in br.get(key, [])}
+
+    schema = "doc_id long, text string"
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        got = {}
+        for limit in (None, cap):
+            for mode, side, other in (("self", selfs, None), ("cross", left, right)):
+                pairs = minhash_lsh_pairs(
+                    spark.createDataFrame(side, schema), "doc_id", "text",
+                    max_bucket_size=limit, **kw,
+                    df_other=None if other is None else spark.createDataFrame(other, schema),
+                )
+                got[mode, limit] = {tuple(r) for r in pairs.collect()}
+    finally:
+        spark.conf.set(key, old)
+    for limit in (None, cap):
+        assert got["self", limit] == replay(selfs, None, limit)
+        assert got["cross", limit] == replay(left, right, limit)
+    # the fixture reaches both cap edges: at-cap groups pair, over-cap
+    # groups (and the group longer than a batch) only pair uncapped
+    assert {(0, 1), (0, 2), (1, 2), (3, 5)} <= got["self", cap]
+    assert {(6, 9), (10, 16)} <= got["self", None] - got["self", cap]
+    assert len(got["cross", cap]) >= 2 * cap * cap
+    assert len(got["cross", None] - got["cross", cap]) >= 2 * (cap + 1)
+
+
 # ---------------------------------------------------------------- r6 paths
 
 

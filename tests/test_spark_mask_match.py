@@ -327,10 +327,11 @@ def test_bucket_walk_pair_blocks_equal_replay(monkeypatch, cap):
     mode's deduplicated matches equal the straight-line replay."""
     import pyarrow as pa
 
+    from pprl_spark.spark import lsh as L
     from pprl_spark.spark import match as M
     from pprl_spark.spark.lsh import band_positions, band_weights
 
-    monkeypatch.setattr(M, "_PAIR_BLOCK", 3)
+    monkeypatch.setattr(L, "_PAIR_BLOCK", 3)
     n_bytes = 8
     lsh = LSHConfig(num_bits=8 * n_bytes, num_bands=n_bytes, band_width=8, scheme="chunked")
     dom, other = _grouped_vectors(
@@ -355,7 +356,8 @@ def test_bucket_walk_pair_blocks_equal_replay(monkeypatch, cap):
         return table.to_batches(max_chunksize=4)
 
     for sides, measure in (([dom, other], "dice"), ([dom], "jaccard")):
-        walk = M._bucket_scorer(measure, 0.4, cap, n_bytes, len(sides) == 2)
+        ids = ["domain_id", "range_id"][: len(sides)]
+        walk = L.bucket_walk("sig", ids, cap, M._block_scorer(measure, 0.4, n_bytes, ids))
         got = {}
         for out in walk(banded(sides)):
             for a, b, sim in zip(*(c.to_pylist() for c in out.columns)):
