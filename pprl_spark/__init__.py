@@ -9,3 +9,7 @@ text-analysis operators, and a checkpointed, resumable staged pipeline.
 """
 
 __version__ = "0.1.0"
+
+from . import _zipcache
+
+_zipcache.install()

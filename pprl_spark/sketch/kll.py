@@ -26,7 +26,7 @@ __all__ = ["KLLSketch"]
 
 @register_sketch(4)
 class KLLSketch:
-    INPUT = "value"  # update() consumes pre-hashed uint64 vs raw float64
+    INPUT = "value"  # update() consumes raw float64 values
 
     def __init__(self, k: int = 200, seed: int = 727):
         if k < 8:

@@ -5,9 +5,19 @@ scale function k(q) = (δ/2π)·asin(2q−1), so centroids near q∈{0,1} stay
 tiny while the middle coarsens.  Gate (BASELINE.md): |rank error| ≤ 0.01
 at the median, tighter at the tails, for δ = 100.
 
-Merge concatenates centroid lists and re-compresses — associative and
-commutative up to interpolation error; estimates are the merge-invariance
-contract.
+Compress sorts the centroids plus the buffered values once and computes
+``kc = k(cumsum(weights) / total)`` in one vector pass.  Walking left to
+right, element i joins the open centroid iff ``kc[i] − k_left ≤ 1``,
+where ``k_left`` is ``kc`` just before the centroid's first element (k(0)
+for the first centroid); each boundary is found by ``np.searchsorted`` on
+``kc``, so the Python loop runs once per output centroid (≤ ~δ), not once
+per value, and means and weights come from ``np.add.reduceat``.  Cost:
+one O(n log n) sort plus O(n) vector work per compress.  Weights are sums
+of 1.0, so the cumulative weights — and the centroid weights — are exact.
+
+Merge concatenates centroid lists, sorts them and re-compresses —
+associative and commutative up to interpolation error; estimates are the
+merge-invariance contract.
 """
 
 from __future__ import annotations
@@ -24,7 +34,7 @@ __all__ = ["TDigest"]
 
 @register_sketch(5)
 class TDigest:
-    INPUT = "value"  # update() consumes pre-hashed uint64 vs raw float64
+    INPUT = "value"  # update() consumes raw float64 values
 
     _BUFFER_FACTOR = 5
 
@@ -34,7 +44,8 @@ class TDigest:
         self.compression = float(compression)
         self.means = np.empty(0, dtype=np.float64)
         self.weights = np.empty(0, dtype=np.float64)
-        self._buf: list[float] = []
+        self._buf: list[np.ndarray] = []  # pending float64 values, weight 1 each
+        self._buffered = 0
         self.n = 0.0
 
     # ---- scale function k1 and its inverse ----
@@ -47,53 +58,64 @@ class TDigest:
         vals = vals[~np.isnan(vals)]
         if vals.size == 0:
             return
-        self._buf.extend(vals.tolist())
+        self._buf.append(vals)
+        self._buffered += vals.size
         self.n += float(vals.size)
-        if len(self._buf) >= self._BUFFER_FACTOR * self.compression:
+        if self._buffered >= self._BUFFER_FACTOR * self.compression:
             self._compress()
 
     def _compress(self) -> None:
-        if not self._buf and self.means.size <= self.compression:
+        if not self._buffered and self.means.size <= self.compression:
             return
-        means = np.concatenate([self.means, np.asarray(self._buf, dtype=np.float64)])
-        weights = np.concatenate(
-            [self.weights, np.ones(len(self._buf), dtype=np.float64)]
-        )
-        self._buf = []
+        means = np.concatenate([self.means, *self._buf])
+        weights = np.concatenate([self.weights, np.ones(self._buffered)])
+        self._buf, self._buffered = [], 0
         if means.size == 0:
             return
         order = np.argsort(means, kind="stable")
         means, weights = means[order], weights[order]
-        total = weights.sum()
+        cum = np.cumsum(weights)
+        kc = self._k(cum / cum[-1])
 
-        out_means: list[float] = []
-        out_weights: list[float] = []
-        cur_mean, cur_weight = means[0], weights[0]
-        w_before = 0.0  # weight fully to the left of the current centroid
-        for i in range(1, means.size):
-            q_left = w_before / total
-            q_right = (w_before + cur_weight + weights[i]) / total
-            if self._k(np.array([q_right]))[0] - self._k(np.array([q_left]))[0] <= 1.0:
-                new_w = cur_weight + weights[i]
-                cur_mean += (means[i] - cur_mean) * weights[i] / new_w
-                cur_weight = new_w
-            else:
-                out_means.append(cur_mean)
-                out_weights.append(cur_weight)
-                w_before += cur_weight
-                cur_mean, cur_weight = means[i], weights[i]
-        out_means.append(cur_mean)
-        out_weights.append(cur_weight)
-        self.means = np.asarray(out_means)
-        self.weights = np.asarray(out_weights)
+        n = means.size
+        starts = [0]
+        k_left = self._k(np.zeros(1))[0]
+        while starts[-1] + 1 < n:
+            lo = starts[-1] + 1
+            # first index past the open centroid, under the rule
+            # "i joins iff kc[i] - k_left <= 1"; searchsorted compares
+            # kc[i] <= k_left + 1, which can round the other way by one
+            end = max(lo, int(np.searchsorted(kc, k_left + 1.0, side="right")))
+            while end < n and kc[end] - k_left <= 1.0:
+                end += 1
+            while end > lo and kc[end - 1] - k_left > 1.0:
+                end -= 1
+            if end == n:
+                break
+            starts.append(end)
+            k_left = kc[end - 1]
+
+        idx = np.asarray(starts)
+        self.weights = np.add.reduceat(weights, idx)
+        # clipped to its members' range, so a run of equal values keeps
+        # its value exactly and ties still sort as ties on the next compress
+        self.means = np.clip(
+            np.add.reduceat(means * weights, idx) / self.weights,
+            means[idx],
+            means[np.append(idx[1:], n) - 1],
+        )
 
     def merge(self, other: "TDigest") -> "TDigest":
         if other.compression != self.compression:
             raise ValueError("cannot merge t-digests with different compression")
         other._compress()
         self._compress()
-        self.means = np.concatenate([self.means, other.means])
-        self.weights = np.concatenate([self.weights, other.weights])
+        means = np.concatenate([self.means, other.means])
+        weights = np.concatenate([self.weights, other.weights])
+        # sorted here, not only in _compress: that returns early when the
+        # merged list already fits in the compression budget
+        order = np.argsort(means, kind="stable")
+        self.means, self.weights = means[order], weights[order]
         self.n += other.n
         self._compress()
         return self

@@ -249,3 +249,19 @@ def test_frequent_items_tidy_relation(spark):
     top = frequent_items(ev, ["event_type"], "user_id", capacity=2048, top_k=3)
     counts = top.groupBy("event_type").count().collect()
     assert all(r["count"] == 3 for r in counts)
+
+
+def test_grouped_tdigest_small_groups_merge_sorted(spark):
+    """Groups small enough that their merged partials fit the compression
+    budget: each group's merged t-digest keeps its centroids sorted, so
+    its extremes and median are the group's own."""
+    rows = [(g, float(v)) for g in range(5) for v in range(g * 100, g * 100 + 40)]
+    df = spark.createDataFrame(rows, "g int, v double").repartition(4)
+    out = sketch_grouped(df, ["g"], "v", lambda: TDigest(compression=100)).collect()
+    assert len(out) == 5
+    for row in out:
+        sk = deserialize(bytes(row["state"]))
+        lo = row["g"] * 100
+        assert np.all(np.diff(sk.means) >= 0)
+        assert sk.quantile(0.0) == lo and sk.quantile(1.0) == lo + 39
+        assert abs(row["estimate"] - (lo + 19.5)) <= 1.0

@@ -294,6 +294,168 @@ class TestTDigest:
         assert sk.quantile(1.0) == 999.0
 
 
+def _k1(compression):
+    return lambda q: (compression / (2 * math.pi)) * np.arcsin(2 * np.clip(q, 0, 1) - 1)
+
+
+def _replay_compress(means, weights, k):
+    """TDigest._compress as it was before it was vectorized: a scalar walk
+    with one evaluation of the scale function ``k`` per side for every
+    element."""
+    order = np.argsort(means, kind="stable")
+    means, weights = means[order], weights[order]
+    total = weights.sum()
+    out_means, out_weights = [], []
+    cur_mean, cur_weight = means[0], weights[0]
+    w_before = 0.0
+    for i in range(1, means.size):
+        q_left = w_before / total
+        q_right = (w_before + cur_weight + weights[i]) / total
+        if k(np.array([q_right]))[0] - k(np.array([q_left]))[0] <= 1.0:
+            new_w = cur_weight + weights[i]
+            cur_mean += (means[i] - cur_mean) * weights[i] / new_w
+            cur_weight = new_w
+        else:
+            out_means.append(cur_mean)
+            out_weights.append(cur_weight)
+            w_before += cur_weight
+            cur_mean, cur_weight = means[i], weights[i]
+    out_means.append(cur_mean)
+    out_weights.append(cur_weight)
+    return np.asarray(out_means), np.asarray(out_weights)
+
+
+class _ReplayTDigest:
+    """TDigest's buffering and merge around ``_replay_compress``."""
+
+    def __init__(self, compression):
+        self.compression = compression
+        self.means = np.empty(0)
+        self.weights = np.empty(0)
+        self.buf = []
+
+    def update(self, values):
+        self.buf.extend(np.asarray(values, dtype=np.float64).tolist())
+        if len(self.buf) >= TDigest._BUFFER_FACTOR * self.compression:
+            self.compress()
+
+    def compress(self):
+        if not self.buf and self.means.size <= self.compression:
+            return
+        means = np.concatenate([self.means, np.asarray(self.buf, dtype=np.float64)])
+        weights = np.concatenate([self.weights, np.ones(len(self.buf))])
+        self.buf = []
+        if means.size:
+            self.means, self.weights = _replay_compress(means, weights, _k1(self.compression))
+
+    def merge(self, other):
+        other.compress()
+        self.compress()
+        means = np.concatenate([self.means, other.means])
+        order = np.argsort(means, kind="stable")
+        self.means = means[order]
+        self.weights = np.concatenate([self.weights, other.weights])[order]
+        self.compress()
+
+
+def _feed(sketch, data, batch):
+    for lo in range(0, data.size, batch):
+        sketch.update(data[lo:lo + batch])
+    return sketch
+
+
+_REPLAY_CASES = {
+    "lognormal-80k-10k-batches": (100, lambda rng: rng.lognormal(size=80_000), 10_000),
+    "rounded-normal-ties": (100, lambda rng: np.round(rng.normal(size=30_000), 1), 3_000),
+    "all-equal": (100, lambda rng: np.full(5_000, 0.1), 1_000),
+    "one-value": (100, lambda rng: np.array([3.5]), 1),
+    "two-values": (100, lambda rng: np.array([2.0, -1.0]), 2),
+    "three-values": (100, lambda rng: np.array([2.0, -1.0, 2.0]), 1),
+    "compression-20": (20, lambda rng: rng.lognormal(size=20_000), 1_500),
+    "compression-100": (100, lambda rng: rng.random(20_000), 1_500),
+    "compression-500": (500, lambda rng: rng.standard_cauchy(20_000), 4_000),
+}
+
+
+@pytest.mark.parametrize("case", list(_REPLAY_CASES))
+def test_tdigest_compress_equals_scalar_replay(case):
+    compression, draw, batch = _REPLAY_CASES[case]
+    data = draw(np.random.default_rng(11))
+    sk = _feed(TDigest(compression), data, batch)
+    ref = _feed(_ReplayTDigest(compression), data, batch)
+    sk._compress()
+    ref.compress()
+    assert sk.n == data.size
+    assert np.array_equal(sk.weights, ref.weights)
+    np.testing.assert_allclose(sk.means, ref.means, rtol=1e-12, atol=0)
+
+
+def test_tdigest_merge_of_partials_equals_scalar_replay():
+    """7 partials of different sizes merged one by one: non-unit weights
+    on both sides of every compress after the first."""
+    rng = np.random.default_rng(12)
+    parts = [rng.lognormal(size=n) for n in (40, 900, 5_000, 12_000, 3, 7_000, 250)]
+    sk, ref = TDigest(100), _ReplayTDigest(100)
+    for part in parts:
+        sk.merge(_feed(TDigest(100), part, 2_000))
+        ref.merge(_feed(_ReplayTDigest(100), part, 2_000))
+        assert np.array_equal(sk.weights, ref.weights)
+        np.testing.assert_allclose(sk.means, ref.means, rtol=1e-12, atol=0)
+    assert (sk.weights > 1).any()
+    assert sk.n == sum(p.size for p in parts)
+
+
+def test_tdigest_compress_boundary_rule_where_rounding_disagrees():
+    """Centroid boundaries follow the rule ``kc[i] - k_left <= 1`` even
+    where ``kc[i] <= k_left + 1`` (what searchsorted compares) rounds the
+    other way: once with a value the rule admits, once with one it
+    rejects."""
+    c_a, x_a = -0.7082320584105446, 0.29176794158945546
+    c_b = 1 + 3 * 2.0 ** -52
+    x_b = c_b + 1.0
+    assert x_a - c_a <= 1.0 and not x_a <= c_a + 1.0
+    assert not x_b - c_b <= 1.0 and x_b <= c_b + 1.0
+    # k(0), then kc of the 9 sorted unit-weight values; k_left is c_a for
+    # the centroid opening at value 2 and c_b for the one opening at 6
+    table = np.array([c_a - 0.9, c_a - 0.5, c_a, c_a + 0.5, x_a, 0.5, c_b, 1.5, x_b, 2.5])
+
+    class TableScale(TDigest):
+        def _k(self, q):
+            return table[np.rint(np.asarray(q) * (table.size - 1)).astype(int)]
+
+    sk = TableScale(100)
+    sk.update(np.arange(9, dtype=float))
+    sk._compress()
+    ref_means, ref_weights = _replay_compress(np.arange(9.0), np.ones(9), sk._k)
+    assert sk.weights.tolist() == ref_weights.tolist() == [2, 2, 2, 1, 2]
+    np.testing.assert_allclose(sk.means, ref_means, rtol=1e-12, atol=0)
+
+
+def test_tdigest_constant_values_keep_their_value():
+    """A centroid mean stays inside its members' range, so a run of equal
+    values keeps its value exactly (0.1 summed three times and divided by
+    3 does not)."""
+    for v in (0.1, 3.3, 1e-7):
+        sk = TDigest()
+        sk.update(np.full(5_000, v))
+        assert sk.quantile(0.0) == sk.quantile(0.5) == sk.quantile(1.0) == v
+        assert set(sk.means.tolist()) == {v}
+
+
+def test_tdigest_merge_within_budget_keeps_centroids_sorted():
+    """Two digests whose centroids together fit the compression budget:
+    the merged list must still be sorted (it was a bare concatenation)."""
+    a, b = TDigest(), TDigest()
+    a.update(np.arange(100, 140, dtype=float))
+    b.update(np.arange(0, 40, dtype=float))
+    a.merge(b)
+    assert np.all(np.diff(a.means) >= 0)
+    assert a.quantile(0.0) == 0.0
+    assert a.quantile(1.0) == 139.0
+    assert abs(a.quantile(0.25) - 20.0) <= 1.0
+    assert abs(a.quantile(0.75) - 119.0) <= 1.0
+
+
 def test_deserialize_rejects_garbage():
     with pytest.raises(ValueError, match="not a pprl_spark sketch state"):
         deserialize(b"garbage-bytes")
