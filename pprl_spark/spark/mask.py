@@ -46,6 +46,14 @@ def mask(
     CLK/CLKRBF/RBF encode + hardener chain; output bytes equal
     ``bitarray.tobytes()`` of the reference vector, so ``base64(bloom)``
     equals the reference's wire value.
+
+    Workers: the encode is one Arrow-UDF node, so one Python worker per
+    task.  A ``df`` whose attributes come from another Python UDF in the
+    same stage (e.g. ``mask(transform(df), ...)``) runs two workers per
+    task; a ``get_spark`` session frees the extra ones when the stage
+    ends (``spark.python.factory.idleWorkerMaxPoolSize`` = task slots).
+    A Pipeline stage boundary between transform and mask avoids the
+    second worker altogether, as ``jobs/pprl_job.py`` does.
     """
     cols = _needed_columns(cfg, attributes)
     # encoder is constructed per executor (lazily inside the UDF) from the

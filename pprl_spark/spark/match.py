@@ -13,11 +13,11 @@ Three matchers, mirroring the reference's `/match` methods
   practice — documented recall trade-off, disabled by default).
 
 ``match_pairwise``/``match_crosswise`` score with a vectorized Arrow UDF
-over packed bytes (popcount LUT), so per-pair work is a few numpy ops, not
-per-row Python.  ``match_lsh`` scores inside its bucket walk, so candidate
-pairs never become rows; only pairs above the threshold leave it.  All
-three compute the score with the same kernel formulas
-(``kernels.similarity``), double for double.
+over packed bytes (popcount LUT), evaluated once per pair, so per-pair
+work is a few numpy ops, not per-row Python.  ``match_lsh`` scores inside
+its bucket walk, so candidate pairs never become rows; only pairs above
+the threshold leave it.  All three compute the score with the same
+kernel formulas (``kernels.similarity``), double for double.
 """
 
 from __future__ import annotations
@@ -61,7 +61,14 @@ def _prefixed(df: DataFrame, id_col: str, bloom_col: str, side: str) -> DataFram
 
 
 def _score_and_filter(pairs: DataFrame, cfg: MatchConfig) -> DataFrame:
-    sim = similarity_udf(cfg.measure)
+    # plan constraint, not semantics (same move as dedup's _keys_udf): the
+    # score is a pure function of the two vectors, but a deterministic UDF
+    # lets the optimizer push the threshold filter below the projection,
+    # which evaluates the UDF twice per pair — two ArrowEvalPython nodes in
+    # one stage and so two Python workers per task.  The price: a caller's
+    # filter on the output (e.g. domain_id < range_id) stays above the
+    # scoring; a filter on an input frame still reaches its scan.
+    sim = similarity_udf(cfg.measure).asNondeterministic()
     return (
         pairs.withColumn("similarity", sim(F.col("__domain_bloom"), F.col("__range_bloom")))
         .filter(F.col("similarity") >= cfg.threshold)

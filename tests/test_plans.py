@@ -161,3 +161,80 @@ def test_minhash_signature_single_shuffle(spark):
         minhash_lsh_pairs(docs, "doc_id", "text", df_other=other, **kw)
     )
     assert cross_plan.count("ArrowEvalPython [_keys_udf(") == 2, cross_plan
+
+
+def _vector_frames(spark, tmp_path, n: int = 24):
+    """Two seeded 128-bit vector tables, written to parquet so that a
+    filter on an input frame has a scan to reach."""
+    import numpy as np
+
+    from pprl_spark.kernels import bits as bitk
+
+    frames = []
+    for side, seed in (("domain", 3), ("range", 4)):
+        rng = np.random.default_rng(seed)
+        rows = [(i, bytes(bitk.pack(rng.random(128) < 0.35))) for i in range(n)]
+        path = str(tmp_path / side)
+        spark.createDataFrame(rows, "id long, bloom binary").write.parquet(path)
+        frames.append(spark.read.parquet(path))
+    return tuple(frames)
+
+
+@pytest.mark.parametrize(
+    "name, kwargs",
+    [
+        ("match_crosswise", {}),
+        ("match_crosswise", {"broadcast_range": True}),
+        ("match_pairwise", {"align": "key"}),
+        ("match_pairwise", {"align": "position"}),
+    ],
+    ids=["crosswise", "crosswise-broadcast", "pairwise-key", "pairwise-position"],
+)
+def test_similarity_matchers_score_each_pair_once(spark, tmp_path, name, kwargs):
+    """The threshold filter must not be pushed below the scoring
+    projection as a second copy of the similarity UDF: one
+    ``ArrowEvalPython`` per plan, so the scoring stage runs one Python
+    worker per task."""
+    from pprl_spark.config import MatchConfig
+    from pprl_spark.spark import match
+
+    dom, rng = _vector_frames(spark, tmp_path)
+    plan = _executed_plan(getattr(match, name)(dom, rng, MatchConfig("dice", 0.3), **kwargs))
+    assert plan.count("ArrowEvalPython [_sim(") == 1, plan
+
+
+def test_similarity_matchers_equal_kernel_and_keep_input_pushdown(spark, tmp_path):
+    """Scored once, the rows and similarities are still the kernel's
+    (``pair_similarity``) for every pair at or above the threshold, and a
+    filter on an input frame still reaches that input's scan."""
+    from pyspark.sql import functions as F
+
+    from pprl_spark.config import MatchConfig
+    from pprl_spark.kernels.similarity import pair_similarity
+    from pprl_spark.spark.match import match_crosswise, match_pairwise
+
+    cfg = MatchConfig("dice", 0.3)
+    dom, rng = _vector_frames(spark, tmp_path)
+    d_rows = {r["id"]: r["bloom"] for r in dom.collect()}
+    r_rows = {r["id"]: r["bloom"] for r in rng.collect()}
+
+    def expected(pairs):
+        pairs = list(pairs)
+        sims = pair_similarity("dice", [d_rows[a] for a, _ in pairs], [r_rows[b] for _, b in pairs])
+        return {p: s for p, s in zip(pairs, sims.tolist()) if s >= cfg.threshold}
+
+    def got(df):
+        return {(r["domain_id"], r["range_id"]): r["similarity"] for r in df.collect()}
+
+    picked = dom.filter(F.col("id") < 10)
+    cross = match_crosswise(picked, rng, cfg)
+    assert "PushedFilters: [IsNotNull(id), LessThan(id,10)]" in _executed_plan(cross)
+    want = expected((a, b) for a in d_rows if a < 10 for b in r_rows)
+    assert 0 < len(want) < 10 * len(r_rows)
+    assert got(cross) == want
+
+    diagonal = expected((i, i) for i in d_rows)
+    assert diagonal
+    assert got(match_pairwise(dom, rng, cfg)) == diagonal
+    # position alignment zips the two inputs in their scan order
+    assert got(match_pairwise(dom, rng, cfg, align="position")) == expected(zip(d_rows, r_rows))
