@@ -1479,7 +1479,10 @@ def pprl_match_crosswise_sample(spark, sf_dir):
         padding="_",
         prepend_attribute_name=False,
     )
-    enc = mask(docs, cfg, ["text"])
+    # explicit-N exchange: without it the encode and the similarity UDF
+    # share the domain side's stage, two Python workers per task (AQE
+    # would coalesce a no-N repartition of 200 rows back to one partition)
+    enc = mask(docs, cfg, ["text"]).repartition(spark.sparkContext.defaultParallelism, "id")
     out = match_crosswise(enc, enc, MatchConfig("jaccard", 0.55), broadcast_range=True)
     return out.filter(F.col("domain_id") < F.col("range_id")).select(
         "domain_id", "range_id", F.round(F.col("similarity"), 6).alias("similarity")

@@ -91,9 +91,27 @@ def get_spark(
         # freed workers): peak_rss_mb median 3,709 → 3,192 MB, Python
         # workers ~1,107 → ~594 MB, 10 → 6 processes, cpu_s flat.
         builder = builder.config("spark.python.factory.idleWorkerMaxPoolSize", str(slots))
+    # Spark keeps one Python worker pool per (exec, module, env vars).  The
+    # SQL runners (Arrow UDFs, mapInPandas, applyInPandas) add
+    # SPARK_SIMPLIFIED_TRACEBACK=1 while its conf is on (the default);
+    # PythonRDD functions (createDataFrame of a local list, rdd.map) get
+    # only SparkContext.environment, where executorEnv lands, so the first
+    # RDD job forked a second daemon with its own worker per slot.  Giving
+    # them the same env keeps one pool.  The conf's effective value (from
+    # extra_conf, spark-defaults.conf or spark-submit --conf) is known only
+    # once the context is up, so a session that turns it off drops the
+    # variable again; flipping it later (spark.conf.set) splits the pools.
+    # perfbench `profile` on 4 vCPUs (its check table is a createDataFrame),
+    # 10 alternating pairs: peak_rss_mb median 3,415 → 3,121 MB, Python
+    # workers ~870 → ~575 MB, 11 → 6 processes, cpu_s flat.
+    builder = builder.config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    simplified = spark.conf.get("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "true")
+    if simplified.strip().lower() != "true":
+        spark.sparkContext.environment.pop("SPARK_SIMPLIFIED_TRACEBACK", None)
+    return spark
 
 
 def resplit(df: DataFrame, floor: int | None = None) -> DataFrame:

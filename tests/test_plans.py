@@ -142,6 +142,39 @@ def _final_plan_after_collect(df) -> str:
     return qe.executedPlan().toString().split("== Initial Plan ==")[0]
 
 
+def _python_udfs_per_stage(df) -> list:
+    """``ArrowEvalPython`` nodes in each stage of the adaptive plan's final
+    form, after running the query: an exchange starts a new stage, and a
+    reused one runs no stage of its own.  Each node in a stage is one
+    more live Python worker per task."""
+    qe = df._jdf.queryExecution()
+    df.collect()
+    counts = [0]
+
+    def walk(node, stage):
+        name = node.getClass().getSimpleName()
+        if name.endswith("QueryStageExec"):
+            node, name = node.plan(), node.plan().getClass().getSimpleName()
+        if name in ("ShuffleExchangeExec", "BroadcastExchangeExec"):
+            counts.append(0)
+            stage = len(counts) - 1
+        counts[stage] += name == "ArrowEvalPythonExec"
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), stage)
+
+    walk(qe.executedPlan().executedPlan(), 0)
+    return counts
+
+
+def test_crosswise_sample_runs_one_python_udf_per_stage(spark):
+    """``pprl_match_crosswise_sample``'s explicit-N exchange keeps the
+    encode and the similarity UDF in separate stages, and both sides of
+    the cross join read the one encoded exchange."""
+    counts = _python_udfs_per_stage(E.pprl_match_crosswise_sample(spark, SF))
+    assert max(counts) == 1 and sum(counts) == 2, counts
+
+
 def test_minhash_signature_single_shuffle(spark):
     """The signature UDF evaluates once per corpus side: the bucket walk
     reads each side's banded rows once, and no copy of the UDF is pushed

@@ -52,6 +52,30 @@ def test_match_pairwise_positional_reproduces_reference_zip(spark):
         assert got[k] == pytest.approx(expected[k])
 
 
+def test_match_pairwise_positional_survives_a_coalesced_shuffle(spark):
+    """Each side is numbered from one fixed set of partitions, even when
+    the input ends in a shuffle that AQE coalesces by bytes.  A position
+    index whose partition sizes come from a separate count query would
+    see that query prune the wide column below the shuffle and coalesce
+    it into fewer partitions than the rows it numbers."""
+    from pyspark.sql import functions as F
+
+    # 128 KiB of sha2 output per row: shuffle sizes count compressed bytes
+    wide = F.expr(
+        "unhex(concat_ws('', transform(sequence(1, 4096), i -> sha2(concat(id, ':', i), 256))))"
+    )
+    df = (
+        spark.range(0, 64, 1, 4)
+        .select(F.col("id").cast("string").alias("id"), wide.alias("bloom"))
+        .repartition("id")
+        .sortWithinPartitions("id")
+    )
+    assert df.select("id").rdd.getNumPartitions() < df.rdd.getNumPartitions()
+    got = match_pairwise(df, df, MatchConfig("dice", 0.0), align="position")
+    pairs = sorted((r["domain_id"], r["range_id"]) for r in got.collect())
+    assert pairs == sorted((str(i), str(i)) for i in range(64))
+
+
 def test_match_pairwise_positional_always_checks_lengths(spark):
     dom = spark.createDataFrame(
         [("a", bytearray(_vectors(1)[0]))], "id string, bloom binary"

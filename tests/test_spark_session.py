@@ -7,6 +7,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 from pprl_spark.spark import session as S
 from pprl_spark.spark.session import resplit
 
@@ -69,8 +71,48 @@ def test_task_slots_parse_every_master_form(monkeypatch):
     assert S._task_slots("local[*]") == 32
 
 
-_WORKER_FOOTPRINT = """
-import json, os, threading, time
+_PROC_WALK = """
+import os
+
+
+def my_daemons():
+    # each pyspark.daemon under this process's own JVM, with the workers
+    # it forked (other sessions on the host have daemons of their own)
+    cmdline, parent, children = {}, {}, {}
+    for entry in os.listdir("/proc"):
+        if entry.isdigit():
+            try:
+                cmdline[entry] = open(f"/proc/{entry}/cmdline", "rb").read()
+                parent[entry] = open(f"/proc/{entry}/stat").read().rsplit(")", 1)[1].split()[1]
+            except OSError:
+                continue
+            children.setdefault(parent[entry], []).append(entry)
+    mine, frontier = set(), [str(os.getpid())]
+    while frontier:
+        frontier = [kid for pid in frontier for kid in children.get(pid, [])]
+        mine.update(frontier)
+    # a forked worker keeps its daemon's command line
+    forks = {pid for pid in mine if b"pyspark.daemon" in cmdline.get(pid, b"")}
+    return {pid: [kid for kid in children.get(pid, []) if kid in forks]
+            for pid in forks if parent[pid] not in forks}
+"""
+
+def _run_session_script(script: str, *args: str) -> dict:
+    """Run ``script`` in its own Python process, so that its session's
+    worker pool is its own, and parse its last stdout line as JSON."""
+    root = str(Path(__file__).resolve().parents[1])
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    out = subprocess.run(
+        [sys.executable, "-c", script, *args], env=env, cwd=root,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+_WORKER_FOOTPRINT = _PROC_WALK + """
+import json, threading, time
 from pyspark.sql import functions as F
 from pprl_spark.config import (AttributeTransformerConfig, CLKFilter, HashConfig,
                                HashFunctionConfig, MaskConfig, TransformConfig, TransformerSpec)
@@ -80,23 +122,7 @@ from pprl_spark.spark.transform import transform
 
 
 def daemon_children():
-    # workers forked by a pyspark.daemon under this process's own JVM
-    # (other sessions on the host have daemons of their own)
-    cmdline, children = {}, {}
-    for entry in os.listdir("/proc"):
-        if entry.isdigit():
-            try:
-                cmdline[entry] = open(f"/proc/{entry}/cmdline", "rb").read()
-                parent = open(f"/proc/{entry}/stat").read().rsplit(")", 1)[1].split()[1]
-            except OSError:
-                continue
-            children.setdefault(parent, []).append(entry)
-    mine, frontier = set(), [str(os.getpid())]
-    while frontier:
-        frontier = [kid for pid in frontier for kid in children.get(pid, [])]
-        mine.update(frontier)
-    daemons = {pid for pid in mine if b"pyspark.daemon" in cmdline.get(pid, b"")}
-    return sum(kid in daemons for pid in daemons for kid in children.get(pid, []))
+    return sum(len(kids) for kids in my_daemons().values())
 
 
 spark = get_spark(master="local[2]", extra_conf={"spark.ui.showConsoleProgress": "false"})
@@ -138,16 +164,80 @@ def test_get_spark_frees_extra_python_workers_after_a_two_udf_stage():
     Python workers, per task; once it ends, a ``get_spark`` session keeps
     at most one idle worker per task slot.  Runs in its own process so
     the shared test session keeps its pool."""
-    root = str(Path(__file__).resolve().parents[1])
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
-    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
-    out = subprocess.run(
-        [sys.executable, "-c", _WORKER_FOOTPRINT], env=env, cwd=root,
-        capture_output=True, text=True, timeout=600,
-    )
-    assert out.returncode == 0, out.stderr[-4000:]
-    got = json.loads(out.stdout.strip().splitlines()[-1])
+    got = _run_session_script(_WORKER_FOOTPRINT)
     assert got["udf_nodes"] == 2 and got["exchanges"] == 0, got
     assert got["peak"] > 2, got  # the stage did need a second worker per task
     assert got["idle"] <= 2, got
     assert got["cap"] == "2" and got["shuffle_partitions"] == "8", got
+
+
+_ONE_POOL = _PROC_WALK + """
+import json, sys
+from pyspark.sql.functions import pandas_udf
+from pprl_spark.spark.session import get_spark
+
+if sys.argv[2]:
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"--conf {sys.argv[2]} pyspark-shell"
+spark = get_spark(master="local[2]", extra_conf={"spark.ui.showConsoleProgress": "false",
+                                                 **json.loads(sys.argv[1])})
+
+
+@pandas_udf("long")
+def plus_one(s):
+    return s + 1
+
+
+@pandas_udf("long")
+def boom_sql(s):
+    raise ValueError("boom-sql")
+
+
+def boom_rdd(x):
+    raise ValueError("boom-rdd")
+
+
+def message(job):
+    try:
+        job()
+    except Exception as e:  # the driver sees the worker's error text
+        return str(e)
+    return ""
+
+
+udf_sum = sum(r[0] for r in spark.range(0, 100, 1, 2).select(plus_one("id")).collect())
+listed = spark.createDataFrame([(1,), (2,)], "x long").collect()
+rdd_sum = spark.sparkContext.parallelize(range(100), 2).map(lambda x: 2 * x).sum()
+rdd_error = message(lambda: spark.sparkContext.parallelize([1], 1).map(boom_rdd).collect())
+sql_error = message(lambda: spark.range(0, 1, 1, 1).select(boom_sql("id")).collect())
+print(json.dumps({
+    "daemons": len(my_daemons()), "udf_sum": udf_sum, "listed": len(listed), "rdd_sum": rdd_sum,
+    "rdd_error": "boom-rdd" in rdd_error, "sql_error": "boom-sql" in sql_error,
+    "env": spark.sparkContext.environment.get("SPARK_SIMPLIFIED_TRACEBACK"),
+}))
+spark.stop()
+"""
+
+
+_SIMPLIFIED = "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled"
+
+
+@pytest.mark.parametrize(
+    "extra_conf, submit_conf, simplified",
+    [
+        ({}, "", "1"),
+        ({_SIMPLIFIED: "false"}, "", None),
+        ({}, _SIMPLIFIED + "=false", None),
+    ],
+    ids=["simplified_traceback", "full_traceback", "full_traceback_from_submit_conf"],
+)
+def test_get_spark_runs_every_python_function_in_one_worker_pool(extra_conf, submit_conf, simplified):
+    """A ``pandas_udf``, a ``createDataFrame`` of a local list and an
+    ``rdd.map`` share one ``pyspark.daemon``: PythonRDD functions get the
+    worker env the SQL runners use, whichever traceback mode the caller
+    picks, in ``extra_conf`` or in spark-submit's ``--conf``.  Errors
+    raised in either kind of worker keep their message."""
+    got = _run_session_script(_ONE_POOL, json.dumps(extra_conf), submit_conf)
+    assert got["udf_sum"] == 5050 and got["listed"] == 2 and got["rdd_sum"] == 9900, got
+    assert got["rdd_error"] and got["sql_error"], got
+    assert got["daemons"] == 1, got
+    assert got["env"] == simplified, got
