@@ -831,7 +831,7 @@ def simhash_dup_pairs(spark, sf_dir):
     docs = resplit(_load(spark, sf_dir, "documents"))
     # 8 chunks of 8 bits: pigeonhole guarantees recall for hamming <= 7,
     # so the <= 6 threshold is exact (ADVICE r1); pushing it into
-    # simhash_pairs applies it before the pair dedup
+    # simhash_pairs switches it to chunk-pair keys
     return simhash_pairs(docs, "doc_id", "text", q=3, chunks=8, max_hamming=6)
 
 

@@ -11,31 +11,36 @@ Five families:
   ``array_intersect`` / ``array_union``).
 * **SimHash** — 64-bit majority-vote fingerprint over the md5 bits of the
   distinct q-grams, one Arrow-vectorized pass per document, banded into
-  8×8-bit chunks for Hamming-≤-k candidate joins.
+  8×8-bit chunk keys (or chunk-pair keys) and paired in the same bucket
+  walk, which keeps each pair once, at its first agreeing key.
 * **embedding cosine** — near-duplicate pairs over an embedding column via
   random-hyperplane LSH buckets + exact cosine verify (see also ann.py).
 
 All shuffles key on content-derived hashes → uniformly distributed by
 construction; duplicate-cluster skew (one document repeated 10^6×) is the
-residual hazard, handled by AQE skew-join plus MinHash's per-side
-``max_bucket_size`` cap inside its bucket walk.  MinHash and SimHash bits
+residual hazard.  The bucket walk cannot split a hot bucket: MinHash's
+per-side ``max_bucket_size`` cap is its only guard, and SimHash has none
+(a hot chunk key's pairs grow with the square of its size in one task;
+AQE skew-join still covers the embedding join).  MinHash and SimHash bits
 are md5-derived, so both operators stay DuckDB-oracle-expressible.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField
 
+from ..kernels.bits import popcount_bytes
 from .lsh import tag_sides, walk_buckets
 from .session import resplit
 
 __all__ = [
     "qgram_raw_windows",
     "qgram_tokens",
-    "word_tokens",
     "exact_dedup",
     "minhash_band_keys",
     "minhash_lsh_pairs",
@@ -68,11 +73,6 @@ def qgram_tokens(col: Column | str, q: int = 5) -> Column:
     (The PPRL-parity padded tokenizer lives in kernels.tokenize; this one
     is the unpadded shingle used by dedup, matching common practice.)"""
     return F.array_distinct(qgram_raw_windows(col, q))
-
-
-def word_tokens(col: Column | str) -> Column:
-    col = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(col, r"\s+"), lambda w: w != "")
 
 
 # ---------------------------------------------------------------- exact
@@ -243,7 +243,8 @@ def minhash_lsh_pairs(
             if ii.size:
                 yield pa.RecordBatch.from_arrays([a.take(ii), b.take(jj)], names=["id_a", "id_b"])
 
-    return walk_buckets(banded, "bucket", names, max_bucket_size, emit, ["id_a", "id_b"])
+    pair = ["id_a", "id_b"]
+    return walk_buckets(banded, "bucket", names, max_bucket_size, emit, pair).dropDuplicates(pair)
 
 
 # ---------------------------------------------------------------- jaccard
@@ -303,7 +304,8 @@ def simhash_fingerprints_udf(
 
     Output: ``(__id, hi, lo, keys array<long>)`` — hi/lo are the two
     32-bit halves (Hamming distance = bit_count(hi⊕hi')+bit_count(lo⊕lo'))
-    and ``keys`` the ``chunks`` equal-width band keys for candidate joins.
+    and ``keys`` the ``chunks`` equal-width chunk keys, MSB-first, that
+    :func:`simhash_pairs` buckets on.
     """
     if 64 % chunks:
         raise ValueError("chunks must divide 64")
@@ -367,136 +369,91 @@ def simhash_pairs(
     chunks: int = 8,
     max_hamming: int | None = None,
 ) -> DataFrame:
-    """Candidate pairs whose SimHash agrees on ≥1 of ``chunks`` equal-width
-    chunks (pigeonhole: Hamming distance < chunks ⇒ some chunk equal —
-    with the default 8 chunks, recall is guaranteed up to Hamming 7;
-    downstream filters at ≤6 are therefore exact, ADVICE r1).
+    """Pairs ``(id_a, id_b, hamming)``, ``id_a < id_b``, whose SimHash
+    agrees on ≥1 of ``chunks`` equal-width chunks (pigeonhole: Hamming
+    distance < chunks ⇒ some chunk equal — with the default 8 chunks,
+    recall is guaranteed up to Hamming 7; downstream filters at ≤6 are
+    therefore exact, ADVICE r1).  ``max_hamming`` keeps only the pairs
+    within it.
 
-    Pass ``max_hamming`` to push the Hamming threshold BELOW the pair
-    dedup: narrow 8-bit chunk keys collide heavily on correlated corpora
-    (one hot bucket can seed millions of candidates), and xor+bit_count on
-    the raw join output is far cheaper than deduplicating it — the
-    dedup then only sees surviving near-duplicates.
+    Each record's ``(id, fingerprint)`` row goes into the bucket walk
+    (:func:`~.lsh.walk_buckets`) once per chunk key, bucketed by (chunk,
+    key).  When ``max_hamming <= chunks - 2`` the blocking tightens to
+    CHUNK PAIRS: ≤ ``max_hamming`` bit errors corrupt ≤ ``chunks - 2``
+    chunks, so every qualifying pair agrees on ≥ 2 chunks and shares one
+    of the C(chunks, 2) keys ``keys[i]·2^w + keys[j]`` (i < j).  Doubling
+    the key width cuts background collisions quadratically (8-bit keys →
+    16-bit: ~137× fewer random collisions; r6 measured 39M → ~1M
+    candidates at sf1.0).
 
-    When ``max_hamming <= chunks - 2`` the blocking tightens to CHUNK
-    PAIRS (r6): ≤ ``max_hamming`` bit errors corrupt ≤ ``chunks - 2``
-    chunks, so every qualifying pair agrees on ≥ 2 chunks and must share
-    one of the C(chunks, 2) ordered chunk-pair keys.  Doubling the key
-    width cuts background collisions quadratically (8-bit keys → 16-bit:
-    ~137× fewer random collisions, r6 measured 39M → ~1M joined rows at
-    sf1.0), and each surviving pair is emitted exactly once — at its
-    FIRST agreeing chunk pair, decided by a 2^chunks lookup table over
-    the xor's chunk-equality mask — so the trailing ``dropDuplicates``
-    shuffle disappears entirely.
+    A pair shares a bucket for every key it agrees on, but its rows carry
+    both whole fingerprints, so the walk sees the pair's full chunk
+    equality and keeps the pair only in the bucket of its FIRST agreeing
+    key (chunk, or chunk pair in (i, j) order).  Each pair leaves exactly
+    once, with no dedup shuffle; the popcount and the ``max_hamming``
+    filter run only on those survivors.  A hot key stays one bucket in
+    one task: there is no bucket-size cap here.
     """
-    # id-keyed exchange → both sides of the self-join reuse ONE
-    # fingerprint computation (ReusedExchange) instead of recomputing the
-    # md5 UDF per side
-    n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    fp = simhash_fingerprints_udf(df, id_col, text_col, q=q, chunks=chunks).repartition(
-        n_parts, "__id"
-    )
     width = 64 // chunks
-    hamming = F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b"))) + F.bit_count(
-        F.col("lo_a").bitwiseXOR(F.col("lo_b"))
-    )
-    use_pair_blocking = (
+    fp = simhash_fingerprints_udf(df, id_col, text_col, q=q, chunks=chunks)
+    pair_blocking = (
         max_hamming is not None
         and max_hamming <= chunks - 2
-        and chunks <= 12  # 2^chunks first-pair lookup stays tiny
-        and width <= 31  # combined 2w-bit key fits a positive long
-        and 32 % width == 0  # each chunk lives wholly in hi or lo
+        and chunks <= 12  # C(chunks, 2) banded rows per record stay few
+        and width <= 31  # keys[i]·2^w + keys[j] fits a positive long
     )
-    if use_pair_blocking:
-        return _simhash_pairs_2chunk(fp, chunks, width, max_hamming, hamming)
-    banded = fp.select("__id", "hi", "lo", F.posexplode("keys").alias("chunk", "key"))
-    left = banded.select(
-        F.col("__id").alias("id_a"), F.col("hi").alias("hi_a"), F.col("lo").alias("lo_a"),
-        "chunk", "key",
+    if pair_blocking:
+        keys = F.array(*[  # chunk pairs in (i, j) order
+            F.element_at("keys", int(i) + 1) * (1 << width) + F.element_at("keys", int(j) + 1)
+            for i, j in zip(*np.triu_indices(chunks, 1))
+        ])
+    else:
+        keys = F.col("keys")
+    banded = tag_sides(
+        [fp], "__id", ["id_a"],
+        F.shiftleft("hi", 32).bitwiseOR(F.col("lo")).alias("fp"),
+        F.posexplode(keys).alias("band", "key"),
     )
-    right = banded.select(
-        F.col("__id").alias("id_b"), F.col("hi").alias("hi_b"), F.col("lo").alias("lo_b"),
-        "chunk", "key",
-    )
-    pairs = (
-        left.join(right, on=["chunk", "key"], how="inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", hamming)
-    )
-    if max_hamming is not None:
-        pairs = pairs.filter(F.col("hamming") <= max_hamming)
-    return pairs.select("id_a", "id_b", "hamming").dropDuplicates(["id_a", "id_b"])
+    emit = _first_key_emitter(chunks, width, pair_blocking, max_hamming)
+    return walk_buckets(banded, "key", ["id_a"], None, emit, ["id_a", "id_b"],
+                        StructField("hamming", IntegerType()))
 
 
-def _simhash_pairs_2chunk(
-    fp: DataFrame, chunks: int, width: int, max_hamming: int, hamming: Column
-) -> DataFrame:
-    """Chunk-PAIR blocked simhash join (see :func:`simhash_pairs`): emit
-    each qualifying pair exactly once, at its first agreeing chunk pair.
+def _first_key_emitter(chunks: int, width: int, pair_blocking: bool, max_hamming: int | None):
+    """:func:`~.lsh.bucket_walk` ``emit`` step of :func:`simhash_pairs`:
+    per pair block, the xor of the two 64-bit fingerprints gives the
+    (pairs × chunks) chunk-equality matrix; its first true chunk (and, for
+    chunk pairs, its second) names the pair's first agreeing key, and the
+    pair survives only in that key's bucket.  Survivors get their Hamming
+    distance (LUT popcount) and the ``max_hamming`` filter."""
+    shifts = (64 - width * np.arange(1, chunks + 1)).astype(np.uint64)  # chunk c, MSB-first
+    low = np.uint64((1 << width) - 1)
+    band_of = np.full((chunks, chunks), -1, dtype=np.int64)
+    band_of[np.triu_indices(chunks, 1)] = np.arange(chunks * (chunks - 1) // 2)
 
-    ``fp`` carries (__id, hi, lo, keys[chunks]); every qualifying pair
-    (hamming ≤ max_hamming ≤ chunks-2) agrees on ≥ 2 chunks, so blocking
-    on combined keys ``keys[i]·2^w + keys[j]`` over all i<j is exact.
-    Uniqueness needs no shuffle: a joined row knows both fingerprints, so
-    the full chunk-equality mask of the pair is a few xor/shift ops, and
-    a precomputed 2^chunks table maps that mask to the index of its first
-    agreeing (i, j) — the row survives iff it IS that chunk pair."""
-    pair_list = [(i, j) for i in range(chunks) for j in range(chunks) if i < j]
-    combined = [
-        F.element_at("keys", i + 1) * F.lit(1 << width).cast("long")
-        + F.element_at("keys", j + 1)
-        for i, j in pair_list
-    ]
-    banded = fp.select(
-        "__id", "hi", "lo", F.posexplode(F.array(*combined)).alias("cp", "key")
-    )
-    left = banded.select(
-        F.col("__id").alias("id_a"), F.col("hi").alias("hi_a"),
-        F.col("lo").alias("lo_a"), "cp", "key",
-    )
-    right = banded.select(
-        F.col("__id").alias("id_b"), F.col("hi").alias("hi_b"),
-        F.col("lo").alias("lo_b"), "cp", "key",
-    )
+    def emit(batch: pa.RecordBatch, blocks):
+        ids = batch.column("id_a")
+        fps = batch.column("fp").to_numpy().view(np.uint64)
+        band = batch.column("band").to_numpy()
+        for ii, jj in blocks:
+            x = fps[ii] ^ fps[jj]
+            eq = (x[:, None] >> shifts & low) == 0
+            first = eq.argmax(axis=1)
+            if pair_blocking:
+                eq[np.arange(first.size), first] = False
+                first = band_of[first, eq.argmax(axis=1)]
+            keep = np.flatnonzero(first == band[ii])
+            hamming = popcount_bytes(x[keep].view(np.uint8).reshape(-1, 8))
+            if max_hamming is not None:
+                near = hamming <= max_hamming
+                keep, hamming = keep[near], hamming[near]
+            if keep.size:
+                yield pa.RecordBatch.from_arrays(
+                    [ids.take(ii[keep]), ids.take(jj[keep]), pa.array(hamming.astype(np.int32))],
+                    names=["id_a", "id_b", "hamming"],
+                )
 
-    def _chunk_eq(c):
-        # chunk c spans bits [c·w, (c+1)·w) MSB-first over hi||lo; 32 % w
-        # == 0 (gated by the caller) keeps it inside one 32-bit half
-        src = (
-            F.col("hi_a").bitwiseXOR(F.col("hi_b"))
-            if c * width < 32
-            else F.col("lo_a").bitwiseXOR(F.col("lo_b"))
-        )
-        off = c * width if c * width < 32 else c * width - 32
-        shift = 32 - off - width
-        return (
-            F.shiftright(src, shift).bitwiseAND(F.lit((1 << width) - 1)) == 0
-        ).cast("int")
-
-    # eq-mask → index (1-based for element_at) of the first agreeing
-    # chunk pair in pair_list order; masks with < 2 bits set are
-    # unreachable on joined rows (both their chunks agreed)
-    first_pair = [0] * (1 << chunks)
-    for m in range(1 << chunks):
-        eqs = [c for c in range(chunks) if m >> c & 1]
-        if len(eqs) >= 2:
-            first_pair[m] = pair_list.index((eqs[0], eqs[1])) + 1
-    mask = None
-    for c in range(chunks):
-        term = _chunk_eq(c) * F.lit(1 << c)
-        mask = term if mask is None else mask + term
-    canonical_cp = F.element_at(
-        F.lit(first_pair), mask + 1
-    )
-    return (
-        left.join(right, on=["cp", "key"], how="inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", hamming)
-        .filter(
-            (F.col("hamming") <= max_hamming) & (F.col("cp") == canonical_cp - 1)
-        )
-        .select("id_a", "id_b", "hamming")
-    )
+    return emit
 
 
 # ---------------------------------------------------------------- embeddings

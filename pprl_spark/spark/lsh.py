@@ -9,7 +9,8 @@ pair at Hamming similarity ``s`` is ``1-(1-s^r)^b``.  Banding turns
 matching into bucketing by ``(band, signature)``: the rows of one bucket
 are the candidates of each other.  :func:`walk_buckets` pairs them in
 one sorted ``mapInArrow`` walk and hands the pairs to its caller
-(spark/match.py scores them; spark/dedup.py MinHash emits them).
+(spark/match.py scores them; spark/dedup.py's MinHash emits them and its
+SimHash keeps each pair at its first agreeing chunk key).
 
 Two position schemes:
 
@@ -284,7 +285,8 @@ def walk_buckets(banded: DataFrame, key: str, ids: list, cap: int | None, emit,
     """Bucket ``banded`` (:func:`tag_sides` rows with ``band`` and ``key``)
     with ONE (band, ``key``) exchange, sort each partition by (band,
     ``key``, __side) and run :func:`bucket_walk` in one ``mapInArrow``;
-    output: the id pair named ``pair`` plus ``extra``, once per pair."""
+    output: the id pair named ``pair`` plus ``extra``, once per bucket
+    that emits it (a caller whose pairs share several buckets dedups)."""
     types = [banded.schema[ids[0]].dataType, banded.schema[ids[-1]].dataType]
     schema = StructType([StructField(n, t) for n, t in zip(pair, types)] + list(extra))
     # no explicit count: AQE coalesces the shuffle partitions by size, so
@@ -295,5 +297,4 @@ def walk_buckets(banded: DataFrame, key: str, ids: list, cap: int | None, emit,
         banded.repartition("band", key)
         .sortWithinPartitions("band", key, "__side")
         .mapInArrow(bucket_walk(key, ids, cap, emit), schema)
-        .dropDuplicates(pair)
     )

@@ -236,8 +236,9 @@ def match_lsh(
     ).otherwise(v)
     banded = add_band_signatures(rows.withColumn("__v", checked), lsh, "__v")
     scorer = _block_scorer(cfg.measure, cfg.threshold, n_bytes, names)
-    return walk_buckets(banded, "sig", names, max_bucket_size, scorer,
-                        ["domain_id", "range_id"], StructField("similarity", DoubleType()))
+    pair = ["domain_id", "range_id"]
+    return walk_buckets(banded, "sig", names, max_bucket_size, scorer, pair,
+                        StructField("similarity", DoubleType())).dropDuplicates(pair)
 
 
 def match_files(

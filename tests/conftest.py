@@ -34,17 +34,13 @@ def bits_factory(rng):
 
 
 def _build_spark():
-    from pyspark.sql import SparkSession
+    from pprl_spark.spark.session import get_spark
 
-    return (
-        SparkSession.builder.master("local[4]")
-        .appName("pprl-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+    # the session the library ships: one Python worker pool, at most one
+    # idle worker per task slot, the UI off
+    return get_spark(
+        "pprl-spark-tests", "local[4]", shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "4g"},
     )
 
 

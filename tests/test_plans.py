@@ -110,19 +110,18 @@ def test_embedding_dup_pairs_is_jvm_side(spark):
 
 
 def test_simhash_default_engine_is_one_arrow_pass(spark):
-    # r5: the default fingerprint engine is ONE vectorized Arrow UDF per
-    # row (never row-at-a-time BatchEvalPython), and the only exchanges
-    # are the small-scan guard + the id-keyed self-join repartition —
-    # no gram-level vote shuffle remains
-    plan = _executed_plan(E.simhash_dup_pairs(spark, SF))
-    assert "BatchEvalPython" not in plan
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("ArrowEvalPython") >= 1
-    # no (id, gram) or vote exchange: every Exchange is round-robin
-    # (guard) or id-hash (self-join barrier)
-    for ln in final.split("\n"):
-        if "Exchange hashpartitioning" in ln:
-            assert "__id" in ln, ln
+    """The fingerprint UDF runs once, as one vectorized Arrow pass (never
+    row-at-a-time BatchEvalPython), and the pairs come from one bucket
+    walk: besides the small-scan guard, the only exchange is the walk's
+    (band, key) one.  No id-keyed self-join barrier, no join, no pair
+    dedup aggregate, no gram-level vote shuffle."""
+    final = _final_plan_after_collect(E.simhash_dup_pairs(spark, SF))
+    assert "BatchEvalPython" not in final
+    assert final.count("ArrowEvalPython") == 1, final
+    assert final.count("Exchange hashpartitioning(") == 1, final
+    assert final.count("Exchange hashpartitioning(band") == 1, final
+    assert "hashpartitioning(__id" not in final
+    assert "Join" not in final and "HashAggregate" not in final, final
 
 
 def test_flagship_banding_is_jvm_side(spark):

@@ -2711,14 +2711,21 @@ def test_bind_once_equivalence_against_unbound_forms(spark):
             )
 
 
-def test_simhash_udf_fingerprints_bit_identical(spark):
+@pytest.mark.parametrize("max_hamming", [None, 6, 3])
+def test_simhash_udf_fingerprints_bit_identical(spark, max_hamming):
     """The per-row Arrow fingerprints must equal the straight-line md5
     majority-vote replay bit-for-bit (hi, lo, every chunk key), including
     the NULL / empty / shorter-than-q / CJK / duplicate edge rows, and
-    simhash_pairs must return exactly the replayed pairs within the
-    Hamming bound."""
+    simhash_pairs must return exactly the replayed pairs, each once: the
+    pairs sharing ≥1 chunk, within ``max_hamming`` when given (chunk-pair
+    blocking for 6 and 3).  A planted hot bucket of 400 identical texts
+    (79,800 pairs, more than one pair block of the walk) must give each
+    of its pairs once, with Hamming 0."""
+    from itertools import combinations
+
     from test_round2 import _simhash_replay_ints
 
+    from pprl_spark.spark import lsh
     from pprl_spark.spark.dedup import simhash_fingerprints_udf, simhash_pairs
 
     rows = [(0, "the cat sat on the mat and then sat some more right here"),
@@ -2727,21 +2734,27 @@ def test_simhash_udf_fingerprints_bit_identical(spark):
             (3, ""), (4, None), (5, "ab"), (6, "abc"),
             (7, "日本語テキストの処理とハッシュ"),
             (8, "the cat sat on the mat and then sat some more right here")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    hot = [(100 + k, "one hot bucket: the same boilerplate footer again") for k in range(400)]
+    df = spark.createDataFrame(rows + hot, "doc_id long, text string")
     got = {r["__id"]: (r["hi"], r["lo"], list(r["keys"])) for r in
            simhash_fingerprints_udf(df, "doc_id", "text", q=3).collect()}
-    want = {i: _simhash_replay_ints(t) for i, t in rows}
+    want = {i: _simhash_replay_ints(t) for i, t in rows + hot}
     assert got == want
 
     def hamming(a, b):
         return bin(want[a][0] ^ want[b][0]).count("1") + bin(
             want[a][1] ^ want[b][1]).count("1")
 
-    expect = {(a, b, hamming(a, b)) for a in want for b in want
-              if a < b and hamming(a, b) <= 6}
-    pairs = {tuple(r) for r in
-             simhash_pairs(df, "doc_id", "text", q=3, max_hamming=6).collect()}
-    assert pairs == expect and (0, 8, 0) in pairs
+    expect = {(a, b, hamming(a, b)) for a, b in combinations(sorted(want), 2)
+              if any(x == y for x, y in zip(want[a][2], want[b][2]))
+              and (max_hamming is None or hamming(a, b) <= max_hamming)}
+    out = [tuple(r) for r in
+           simhash_pairs(df, "doc_id", "text", q=3, max_hamming=max_hamming).collect()]
+    assert len(out) == len(set(out)) and set(out) == expect
+    assert (0, 8, 0) in expect
+    hot_pairs = [p for p in out if p[0] >= 100]
+    assert len(hot_pairs) == 400 * 399 // 2 > lsh._PAIR_BLOCK
+    assert {p[2] for p in hot_pairs} == {0}
 
 
 def _minhash_replay_buckets(text, q, num_hashes, bands):
@@ -2896,19 +2909,19 @@ def test_minhash_lsh_pairs_walk_edges_equal_replay(spark):
 
 
 def test_simhash_chunk_pair_blocking_matches_single_chunk(spark):
-    """r6: with max_hamming <= chunks-2 simhash_pairs switches to the
-    chunk-PAIR blocked join with first-agreeing-pair emission (no
-    dropDuplicates).  Pigeonhole makes it exact for the threshold, so the
-    output must equal the single-chunk path filtered to the same
-    threshold — pair set AND hamming values."""
+    """With max_hamming <= chunks-2 simhash_pairs buckets on chunk-PAIR
+    keys and emits each pair at its first agreeing chunk pair.
+    Pigeonhole makes it exact for the threshold, so the output must equal
+    the single-chunk blocking filtered to the same threshold — pair set
+    AND hamming values."""
     from pyspark.sql import functions as F
 
     from pprl_spark.spark.dedup import simhash_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     fast = simhash_pairs(docs, "doc_id", "text", q=3, chunks=8, max_hamming=6)
-    # max_hamming=None keeps the legacy ≥1-chunk blocking; filtering its
-    # output at ≤6 afterwards is the reference answer
+    # max_hamming=None keeps the ≥1-chunk blocking; filtering its output
+    # at ≤6 afterwards is the reference answer
     legacy = simhash_pairs(docs, "doc_id", "text", q=3, chunks=8).filter(
         F.col("hamming") <= 6
     )
@@ -2918,8 +2931,8 @@ def test_simhash_chunk_pair_blocking_matches_single_chunk(spark):
 
 
 def test_simhash_chunk_pair_emits_each_pair_once(spark):
-    """The first-agreeing-chunk-pair rule replaces the dedup shuffle, so
-    the raw output must already be duplicate-free."""
+    """The first-agreeing-chunk-pair rule stands in for a dedup shuffle,
+    so the raw output must already be duplicate-free."""
     from pprl_spark.spark.dedup import simhash_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")

@@ -1,6 +1,7 @@
 """The session builder's defaults and the small-scan resplit guard shared
 by every map-heavy operator."""
 
+import inspect
 import json
 import os
 import subprocess
@@ -71,10 +72,6 @@ def test_task_slots_parse_every_master_form(monkeypatch):
     assert S._task_slots("local[*]") == 32
 
 
-_PROC_WALK = """
-import os
-
-
 def my_daemons():
     # each pyspark.daemon under this process's own JVM, with the workers
     # it forked (other sessions on the host have daemons of their own)
@@ -95,7 +92,11 @@ def my_daemons():
     forks = {pid for pid in mine if b"pyspark.daemon" in cmdline.get(pid, b"")}
     return {pid: [kid for kid in children.get(pid, []) if kid in forks]
             for pid in forks if parent[pid] not in forks}
-"""
+
+
+# the walk, for the scripts that run a session in a process of their own
+_PROC_WALK = "import os\n\n\n" + inspect.getsource(my_daemons)
+
 
 def _run_session_script(script: str, *args: str) -> dict:
     """Run ``script`` in its own Python process, so that its session's
@@ -241,3 +242,19 @@ def test_get_spark_runs_every_python_function_in_one_worker_pool(extra_conf, sub
     assert got["rdd_error"] and got["sql_error"], got
     assert got["daemons"] == 1, got
     assert got["env"] == simplified, got
+
+
+def test_shared_test_session_runs_one_worker_pool(spark):
+    """The suite's own session comes from ``get_spark``: after an Arrow UDF
+    and a PythonRDD job its Python functions still share one
+    ``pyspark.daemon``."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def plus_one(s):
+        return s + 1
+
+    assert sum(r[0] for r in spark.range(0, 100, 1, 2).select(plus_one("id")).collect()) == 5050
+    assert spark.createDataFrame([(1,), (2,)], "x long").count() == 2
+    assert spark.sparkContext.parallelize(range(100), 2).map(lambda x: 2 * x).sum() == 9900
+    assert len(my_daemons()) == 1, my_daemons()
