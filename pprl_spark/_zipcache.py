@@ -13,10 +13,11 @@ code that reads ``zipimport._zip_directory_cache`` directly (``pkgutil``'s
 module listing of a zip entry) finds no entry between an invalidation and
 the next lookup through an importer.
 
-It is installed only inside a Spark Python worker (Spark sets
-``PYTHON_WORKER_FACTORY_SECRET`` there, not on the driver).  Any worker
-that unpickles one of this package's UDFs imports ``pprl_spark`` and so
-installs it for the tasks that follow.
+It is installed only inside a Spark Python worker (``in_spark_worker``).
+Any worker that unpickles one of this package's UDFs imports
+``pprl_spark`` and so installs it for the tasks that follow.
+``in_spark_worker`` also gates the rest of the package's worker-only
+set-up, in ``pprl_spark/__init__.py``, which holds on every CPython.
 """
 
 from __future__ import annotations
@@ -43,10 +44,23 @@ def _invalidate_caches(self) -> None:
     zipimport._zip_directory_cache.pop(self.archive, None)
 
 
+def in_spark_worker() -> bool:
+    """True in a Spark Python worker, False on the driver.  Spark hands a
+    worker ``PYTHON_WORKER_FACTORY_SECRET`` when it connects over TCP, and
+    ``PYTHON_UNIX_DOMAIN_ENABLED`` (without the secret; Spark 4.1 writes
+    ``True``, read case-blind as ``pyspark.daemon`` does) when
+    ``spark.python.unix.domain.socket.enabled`` is set; the driver gets
+    neither."""
+    return (
+        "PYTHON_WORKER_FACTORY_SECRET" in os.environ
+        or os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "false").lower() == "true"
+    )
+
+
 def install() -> bool:
     """Patch ``zipimport.zipimporter`` in a Spark worker on CPython < 3.13;
     True if the patch is (now) in place.  Idempotent."""
-    if sys.version_info >= (3, 13) or "PYTHON_WORKER_FACTORY_SECRET" not in os.environ:
+    if sys.version_info >= (3, 13) or not in_spark_worker():
         return False
     cls = zipimport.zipimporter
     if cls.invalidate_caches is not _invalidate_caches:

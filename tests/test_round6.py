@@ -965,11 +965,7 @@ def test_audio_metadata_parsers_flac_mp3_ogg():
     """FLAC STREAMINFO, MPEG Layer III frame-walk (MPEG1 + MPEG2, VBR
     padding alternation), and Ogg Vorbis/Opus id-header + last-granule
     parsing — all pure stdlib, fixture round-trips."""
-    from pprl_spark.fixtures import (
-        make_flac_bytes,
-        make_mp3_bytes,
-        make_ogg_bytes,
-    )
+    from media_containers import make_flac_bytes, make_mp3_bytes, make_ogg_bytes
     from pprl_spark.spark.multimodal import (
         parse_flac_header,
         parse_mp3_header,
@@ -1020,7 +1016,7 @@ def test_mp3_real_file_exact_frame_walk():
 
 
 def test_video_container_parsers_mkv_webm_avi():
-    from pprl_spark.fixtures import make_avi_bytes, make_mkv_bytes
+    from media_containers import make_avi_bytes, make_mkv_bytes
     from pprl_spark.spark.multimodal import parse_avi_header, parse_mkv_header
 
     m = parse_mkv_header(make_mkv_bytes(640, 360, 12345.0))
@@ -1039,15 +1035,15 @@ def test_video_container_parsers_mkv_webm_avi():
 def test_decode_audio_video_features_mixed_formats(spark):
     """The Spark surfaces dispatch every supported container in one
     batch and produce exact integer durations."""
-    from pprl_spark.fixtures import (
+    from media_containers import (
         make_avi_bytes,
         make_flac_bytes,
         make_mkv_bytes,
         make_mp3_bytes,
-        make_mp4_bytes,
         make_ogg_bytes,
-        make_wav_bytes,
     )
+
+    from pprl_spark.fixtures import make_mp4_bytes, make_wav_bytes
     from pprl_spark.spark.multimodal import (
         decode_audio_features,
         decode_video_features,

@@ -1,5 +1,5 @@
-"""The session builder's defaults and the small-scan resplit guard shared
-by every map-heavy operator."""
+"""The session builder's defaults, the small-scan resplit guard shared
+by every map-heavy operator, and the package's worker-only set-up."""
 
 import inspect
 import json
@@ -258,3 +258,85 @@ def test_shared_test_session_runs_one_worker_pool(spark):
     assert spark.createDataFrame([(1,), (2,)], "x long").count() == 2
     assert spark.sparkContext.parallelize(range(100), 2).map(lambda x: 2 * x).sum() == 9900
     assert len(my_daemons()) == 1, my_daemons()
+
+
+@pytest.mark.parametrize("env, worker", [
+    ({"PYTHON_WORKER_FACTORY_SECRET": "s3cret"}, True),
+    # Spark 4.1 writes the flag as "True"; pyspark.daemon compares it lowercased
+    ({"PYTHON_UNIX_DOMAIN_ENABLED": "True", "PYTHON_WORKER_FACTORY_SOCK_DIR": "/tmp"}, True),
+    ({}, False),
+], ids=["tcp_worker", "unix_socket_worker", "driver"])
+def test_in_spark_worker_reads_both_worker_env_shapes(monkeypatch, env, worker):
+    """A worker reached over TCP gets the factory secret; one reached over
+    a Unix domain socket (``spark.python.unix.domain.socket.enabled``) gets
+    ``PYTHON_UNIX_DOMAIN_ENABLED`` instead; the driver gets neither."""
+    from pprl_spark import _zipcache
+
+    for name in ("PYTHON_WORKER_FACTORY_SECRET", "PYTHON_UNIX_DOMAIN_ENABLED",
+                 "PYTHON_WORKER_FACTORY_SOCK_DIR"):
+        monkeypatch.delenv(name, raising=False)
+    for name, value in env.items():
+        monkeypatch.setenv(name, value)
+    assert _zipcache.in_spark_worker() is worker
+
+
+def test_library_workers_freeze_their_import_heap(spark):
+    """A worker that has run one of the library's Arrow operators has
+    imported ``pprl_spark`` and frozen its import-time heap, so the
+    ``gc.collect()`` pyspark.daemon runs after each task walks only the
+    objects made since (the unfrozen worker tracks ~74k)."""
+    from pprl_spark.sketch import HyperLogLog
+    from pprl_spark.sketch.spark_agg import sketch_column
+
+    df = spark.range(0, 4000, 1, 4).selectExpr("cast(id % 500 as string) as s")
+    assert 400 < sketch_column(df, "s", lambda: HyperLogLog(p=12)).estimate() < 600
+
+    def probe(batches):
+        import gc
+        import os
+        import sys
+        import time
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        start = time.process_time()
+        gc.collect()
+        collect_s = time.process_time() - start
+        yield pd.DataFrame({
+            "pid": [os.getpid()], "library": ["pprl_spark" in sys.modules],
+            "frozen": [gc.get_freeze_count()], "live": [len(gc.get_objects())],
+            "collect_s": [collect_s],
+        })
+
+    rows = spark.range(0, 4, 1, 4).mapInPandas(
+        probe, "pid long, library boolean, frozen long, live long, collect_s double"
+    ).collect()
+    assert any(r.library for r in rows), rows
+    for r in rows:
+        if r.library:
+            assert r.frozen >= 50_000 and r.live < 10_000, rows
+        else:  # a worker that never loaded the library keeps the stock gc
+            assert r.frozen == 0, rows
+
+
+def test_driver_import_freezes_nothing():
+    """On the driver the package neither freezes the heap nor loads
+    pandas or pyarrow at ``import pprl_spark``."""
+    import gc
+
+    import pprl_spark.sketch.spark_agg  # noqa: F401
+    import pprl_spark.spark.match  # noqa: F401
+
+    assert gc.get_freeze_count() == 0
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHON_WORKER_FACTORY_SECRET", "PYTHON_UNIX_DOMAIN_ENABLED")}
+    out = subprocess.run(
+        [sys.executable, "-c", "import gc, sys, pprl_spark; print(gc.get_freeze_count(), "
+         "sorted({'pandas', 'pyarrow'} & set(sys.modules)))"],
+        env=env, cwd=str(Path(__file__).resolve().parents[1]),
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["0", "[]"], out.stdout

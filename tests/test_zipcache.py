@@ -99,6 +99,7 @@ def test_zip_backport_is_idempotent(backport):
 
 def test_zip_backport_is_a_no_op_on_the_driver(monkeypatch):
     monkeypatch.delenv("PYTHON_WORKER_FACTORY_SECRET", raising=False)
+    monkeypatch.delenv("PYTHON_UNIX_DOMAIN_ENABLED", raising=False)
     before = dict(vars(zipimport.zipimporter))
     assert not _zipcache.install()
     assert dict(vars(zipimport.zipimporter)) == before
