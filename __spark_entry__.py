@@ -401,6 +401,7 @@ def fingerprint_jaccard(spark, sf_dir):
     every doc (banned) — `clean_fp`/`n_lines_removed` check counting,
     thresholding, and byte-exact text reassembly."""
     from pprl_spark.spark.dedup import ngram_jaccard, qgram_tokens
+    from pprl_spark.spark.textstats import words
     from pprl_spark.spark.webtext import remove_boilerplate_lines
 
     # resplit: the 3-gram tokenize + line explode otherwise serialize
@@ -422,9 +423,7 @@ def fingerprint_jaccard(spark, sf_dir):
         F.md5(F.col("text")).alias("clean_fp"),
         F.col("n_lines_removed").cast("long").alias("n_lines_removed"),
     )
-    normalized = F.concat_ws(
-        " ", F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
-    )
+    normalized = F.concat_ws(" ", words("text"))
     fp = docs.select("doc_id", F.md5(normalized).alias("fingerprint"))
     # materialize the tokenization once: both self-join sides (and their
     # differently-pruned exchanges) would otherwise re-run qgram_tokens
@@ -972,10 +971,11 @@ def langid_documents(spark, sf_dir):
 def quality_filter(spark, sf_dir):
     """Config-driven quality-filter pipeline (spark/quality.py, new r4):
     token-count band + heuristic quality + language allowlist + Gopher-
-    style repetition signals (duplicate-word fraction as a pure Catalyst
-    expression; top-bigram fraction via a linear explode + hash
-    aggregate) → keep / first-failing-reason per document.  Thresholds
-    tuned so the sf corpus exercises 'ok' and several reject classes."""
+    style repetition signals (duplicate word/line/paragraph fractions as
+    Catalyst expressions; top-bigram, n-gram and line/paragraph
+    character-mass fractions from one per-row Arrow UDF pass) → keep /
+    first-failing-reason per document, map-only.  Thresholds tuned so the
+    sf corpus exercises 'ok' and several reject classes."""
     from pprl_spark.spark.quality import FilterRules, filter_documents
 
     docs = _load(spark, sf_dir, "documents").select("doc_id", "text")

@@ -14,7 +14,9 @@ Stage graph (each a parquet checkpoint with lineage + metrics):
 
     stats      documents → full quality-filter decision (token band,
                heuristic quality, Gopher repetition signals, language —
-               spark/quality.filter_documents); only kept docs enter dedup
+               spark/quality.filter_documents, one map-only per-row pass:
+               Catalyst signals + one Arrow UDF, no shuffle or join);
+               only kept docs enter dedup
     pairs      MinHash-LSH candidates → exact-Jaccard-verified near-dup
                edges (slim (id_a, id_b, jaccard) rows)
     components large-star/small-star connected components over the edges

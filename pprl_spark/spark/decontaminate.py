@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import bind_once
+from .textstats import _JAVA_WS, bind_once, words
 
 __all__ = [
     "word_ngram_hashes",
@@ -46,7 +46,6 @@ def word_ngram_hashes(col: Column | str, n: int = 13) -> Column:
     """array<long>: xxhash64 of each word ``n``-gram (space-joined,
     lowercased) — [] for documents with fewer than ``n`` words."""
     col = F.col(col) if isinstance(col, str) else col
-    words = F.filter(F.split(F.lower(col), r"\s+"), lambda w: w != "")
 
     def _windows(w: Column) -> Column:
         # w binds the split array ONCE per row (textstats.bind_once);
@@ -61,7 +60,7 @@ def word_ngram_hashes(col: Column | str, n: int = 13) -> Column:
             ),
         ).otherwise(F.array().cast("array<long>"))
 
-    return bind_once(words, _windows)
+    return bind_once(words(F.lower(col)), _windows)
 
 
 def contamination_report(
@@ -131,7 +130,6 @@ def word_ngrams(col: Column | str, n: int = 13) -> Column:
     never shuffle); this form exists for consumers that need the gram
     VALUES, like the streaming broadcast set."""
     col = F.col(col) if isinstance(col, str) else col
-    words = F.filter(F.split(F.lower(col), r"\s+"), lambda w: w != "")
 
     def _windows(w: Column) -> Column:
         k = F.size(w)
@@ -143,7 +141,7 @@ def word_ngrams(col: Column | str, n: int = 13) -> Column:
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    return bind_once(words, _windows)
+    return bind_once(words(F.lower(col)), _windows)
 
 
 def eval_gram_set(eval_df: DataFrame, text_col: str = "text", n: int = 13):
@@ -193,20 +191,16 @@ def streaming_contamination_hits(
 
     @F.pandas_udf("long")
     def _hits(texts: pd.Series) -> pd.Series:
-        import re
-
         s = bc.value
-        # Java regex \s is ASCII-only; python str.split() would split on
-        # unicode whitespace and flip decisions vs batch (ADVICE r4)
-        java_ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
         def one(t) -> int:
-            words = [w for w in java_ws.split((t or "").lower()) if w]
-            if len(words) < n:
+            # the batch path's words(lower(text)) split, in Python
+            ws = [w for w in _JAVA_WS.split((t or "").lower()) if w]
+            if len(ws) < n:
                 return 0
             seen = set()
-            for i in range(len(words) - n + 1):
-                g = " ".join(words[i : i + n])
+            for i in range(len(ws) - n + 1):
+                g = " ".join(ws[i : i + n])
                 if g in s:
                     seen.add(g)
             return len(seen)

@@ -51,6 +51,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .session import resplit
+from .textstats import words
 
 __all__ = [
     "train_stupid_backoff",
@@ -81,7 +82,7 @@ def _token_positions(
     # small-scan guard: the explode + gram aggs otherwise run on the
     # parquet scan's 1-4 splits
     df = resplit(df)
-    ws = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+    ws = words(text_col)
     base = df.select(F.col(id_col), ws.alias("__ws")).filter(
         F.size("__ws") >= 1
     )

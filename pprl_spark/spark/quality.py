@@ -9,12 +9,17 @@ ingestion and dedup.
 
 Scale notes:
 
-* Every signal — including the full n-gram family — is a per-document
-  computation, so with n-gram rules the filter plan is MAP-ONLY: one
-  projection, zero shuffles, no joins (r5).  The n-gram statistics are
-  one C-speed ``Counter`` pass per document in an Arrow-vectorized UDF
-  (``ngram_char_stats_udf``); the explode → (id, gram) hash aggregate
+* Every signal is a per-document computation, so for every rule set the
+  filter plan is MAP-ONLY: one projection, zero shuffles, no joins.  The
+  scalar signals are one Catalyst struct (one words/lines/paragraphs
+  split per row); the repetition signals — top-bigram fraction, the
+  n-gram family, line/paragraph character mass — are one C-speed
+  ``Counter`` pass per document in one Arrow-vectorized UDF
+  (``ngram_char_stats_udf``).  The explode → (id, gram) hash aggregate
   form (``ngram_char_stats``) is its reference.
+* Batch (:func:`filter_documents`) and streaming
+  (:func:`streaming_quality_filter`) share that one signal builder, so
+  their outputs are row-identical on every column.
 * The filter itself is a pure projection over those signals — predicate
   pushdown applies to any upstream scan, and ``keep`` can drive
   partition-pruning writes (``partitionBy("keep")``).
@@ -29,48 +34,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .session import resplit
-from .textstats import (
-    bind_once,
-    lang_id_col,
-    quality_score,
-    whitespace_token_count,
-)
+from .textstats import _JAVA_WS, bind_once, lang_id_col, quality_score, words
 
 __all__ = [
     "FilterRules",
     "dup_word_fraction",
     "dup_line_fraction",
     "dup_paragraph_fraction",
-    "line_dup_stats",
-    "line_dup_stats_udf",
-    "top_bigram_fraction",
-    "top_bigram_fraction_udf",
     "ngram_char_stats",
     "ngram_char_stats_udf",
-    "repetition_stats",
     "filter_documents",
     "streaming_quality_filter",
 ]
-
-
-def _words(col: Column) -> Column:
-    return F.filter(F.split(col, r"\s+"), lambda w: w != "")
-
-
-_bind = bind_once  # shared helper, see textstats.bind_once
-
-
-def _dup_unit_fraction(units: Column) -> Column:
-    """1 − distinct/total over an array of units, 0.0 when empty; the
-    array subtree is evaluated once (see :func:`_bind`)."""
-    return _bind(
-        units,
-        lambda u: F.when(F.size(u) <= 0, F.lit(0.0)).otherwise(
-            (F.lit(1.0) - F.size(F.array_distinct(u)) / F.size(u)).cast(
-                "double"
-            )
-        ),
-    )
 
 
 def _lines(col: Column) -> Column:
@@ -82,7 +57,8 @@ def _paras(col: Column) -> Column:
 
 
 def _dup_frac_of(u: Column) -> Column:
-    """dup fraction over an ALREADY-BOUND unit array (lambda variable)."""
+    """1 − distinct/total over an ALREADY-BOUND unit array (lambda
+    variable, see :func:`~.textstats.bind_once`), 0.0 when empty."""
     return F.when(F.size(u) <= 0, F.lit(0.0)).otherwise(
         (F.lit(1.0) - F.size(F.array_distinct(u)) / F.size(u)).cast("double")
     )
@@ -93,9 +69,9 @@ def _scalar_signals(col: Column, with_para: bool) -> Column:
     n_tokens, quality, dup_word_fraction, dup_line_fraction and
     (``with_para``) dup_paragraph_fraction.  The words/lines/paras split
     arrays are each computed exactly once per row and shared across the
-    signals via a bound lambda variable (see :func:`_bind`); field values
+    signals via a bound lambda variable (see ``bind_once``); field values
     are bit-identical to the standalone signal functions."""
-    members = [_words(col).alias("w"), _lines(col).alias("l")]
+    members = [words(col).alias("w"), _lines(col).alias("l")]
     if with_para:
         members.append(_paras(col).alias("p"))
 
@@ -111,187 +87,26 @@ def _scalar_signals(col: Column, with_para: bool) -> Column:
             fields.append(_dup_frac_of(s["p"]).alias("dup_paragraph_fraction"))
         return F.struct(*fields)
 
-    return _bind(F.struct(*members), _mk)
+    return bind_once(F.struct(*members), _mk)
 
 
 def dup_word_fraction(col: Column | str) -> Column:
     """1 − distinct/total over whitespace words (0.0 for empty text) —
     high values mean the document repeats its own vocabulary."""
-    col = F.col(col) if isinstance(col, str) else col
-    return _dup_unit_fraction(_words(col))
+    return bind_once(words(col), _dup_frac_of)
 
 
 def dup_line_fraction(col: Column | str) -> Column:
     """1 − distinct/total over newline-split lines (0.0 when ≤1 line)."""
     col = F.col(col) if isinstance(col, str) else col
-    return _dup_unit_fraction(_lines(col))
+    return bind_once(_lines(col), _dup_frac_of)
 
 
 def dup_paragraph_fraction(col: Column | str) -> Column:
     """1 − distinct/total over blank-line-separated paragraphs (Gopher
     'duplicate paragraph fraction'; 0.0 when ≤1 paragraph)."""
     col = F.col(col) if isinstance(col, str) else col
-    return _dup_unit_fraction(_paras(col))
-
-
-def line_dup_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Gopher's character-mass repetition signals for lines and
-    paragraphs, ONE explode pass for both unit kinds:
-
-    * ``dup_line_char_frac`` — characters inside lines occurring ≥ 2
-      times, over ``len(text)``.
-    * ``dup_para_char_frac`` — same over blank-line-separated paragraphs.
-
-    Unlike n-grams, lines/paragraphs are DISJOINT substrings, so
-    occurrence mass equals Gopher's char-position marking exactly (up to
-    the separator characters in the denominator).  Plan: explode
-    (id, kind, unit) → (id, kind, unit) hash aggregate with map-side
-    combine → per-id conditional sums → slim join back to (id,
-    len(text)).  Dense output: one row per input id, 0.0 when absent."""
-    df = resplit(df)
-    col = F.col(text_col)
-    lines = F.filter(F.split(col, r"\n"), lambda s: F.trim(s) != "")
-    paras = F.filter(F.split(col, r"\n{2,}"), lambda s: F.trim(s) != "")
-
-    def _lane(kind: str, arr: Column) -> Column:
-        return F.transform(
-            arr,
-            lambda x: F.struct(F.lit(kind).alias("k"), x.alias("u")),
-        )
-
-    exploded = df.select(
-        F.col(id_col),
-        F.explode(F.flatten(F.array(_lane("l", lines), _lane("p", paras)))).alias(
-            "ku"
-        ),
-    ).select(id_col, F.col("ku.k").alias("__k"), F.col("ku.u").alias("__u"))
-    per_unit = (
-        exploded.groupBy(id_col, "__k", "__u")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .withColumn("__len", F.length("__u"))
-    )
-    cl = F.col("__c") * F.col("__len")
-    per_doc = per_unit.groupBy(id_col).agg(
-        F.sum(
-            F.when((F.col("__k") == "l") & (F.col("__c") >= 2), cl).otherwise(0)
-        ).alias("__lnum"),
-        F.sum(
-            F.when((F.col("__k") == "p") & (F.col("__c") >= 2), cl).otherwise(0)
-        ).alias("__pnum"),
-    )
-    base = df.select(F.col(id_col), F.length(col).alias("__tlen"))
-    joined = base.join(per_doc, id_col, "left")
-
-    def _frac(num: Column) -> Column:
-        return (
-            F.when(num.isNull() | (F.col("__tlen") <= 0), F.lit(0.0))
-            .otherwise((num / F.col("__tlen")).cast("double"))
-        )
-
-    return joined.select(
-        F.col(id_col),
-        _frac(F.col("__lnum")).alias("dup_line_char_frac"),
-        _frac(F.col("__pnum")).alias("dup_para_char_frac"),
-    )
-
-
-def line_dup_stats_udf(col: Column | str) -> Column:
-    """Per-row STRUCT form of :func:`line_dup_stats` for streaming plans
-    (stateless projection).  Splitting conventions mirror the Catalyst
-    path: Java-regex ``\\n`` / ``\\n{2,}`` splits, units blank after
-    space-trim dropped."""
-    col = F.col(col) if isinstance(col, str) else col
-
-    @F.pandas_udf(
-        "struct<dup_line_char_frac: double, dup_para_char_frac: double>"
-    )
-    def _sig(texts: pd.Series) -> pd.DataFrame:
-        import re
-        from collections import Counter
-
-        para_re = re.compile(r"\n{2,}")
-        rows = []
-        for t in texts:
-            t = t or ""
-            tlen = len(t)
-            out = {}
-            for key, units in (
-                ("dup_line_char_frac", t.split("\n")),
-                ("dup_para_char_frac", para_re.split(t)),
-            ):
-                kept = [u for u in units if u.strip(" ")]
-                counts = Counter(kept)
-                num = sum(c * len(u) for u, c in counts.items() if c >= 2)
-                out[key] = num / tlen if tlen > 0 else 0.0
-            rows.append(out)
-        return pd.DataFrame(rows)
-
-    return _sig(col)
-
-
-def _top_bigram_per_doc(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Sparse (id, top_bigram_fraction) — only documents with ≥1 bigram
-    appear; callers left-join and coalesce to 0.0.  Linear explode + hash
-    aggregate, never a per-document quadratic scan."""
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    n = F.size(words)
-    # guard: Spark's sequence(1, 0) DESCENDS ([1, 0]) and element_at(_, 0)
-    # throws under ANSI — docs with < 2 words must short-circuit to []
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(words, i), F.element_at(words, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    exploded = df.select(F.col(id_col), F.explode(bigrams).alias("__bg"))
-    per_bigram = exploded.groupBy(id_col, "__bg").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    return per_bigram.groupBy(id_col).agg(
-        (F.max("__n") / F.sum("__n")).cast("double").alias("top_bigram_fraction")
-    )
-
-
-def top_bigram_fraction(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, top_bigram_fraction) for EVERY input id: the most frequent
-    word-bigram's share of all bigrams, 0.0 for documents with fewer than
-    two words."""
-    per_doc = _top_bigram_per_doc(df, id_col, text_col)
-    ids = df.select(id_col).distinct()
-    return ids.join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("top_bigram_fraction", F.lit(0.0)).alias("top_bigram_fraction"),
-    )
-
-
-def repetition_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Attach the three Gopher-style repetition signals.  The bigram
-    aggregate joins back LEFT against the full rows directly (sparse side
-    broadcastable), so the corpus is scanned twice total — once for the
-    narrow signals, once for the bigram explode — with no third
-    ids-distinct pass."""
-    narrow = df.withColumns(
-        {
-            "dup_word_fraction": dup_word_fraction(F.col(text_col)),
-            "dup_line_fraction": dup_line_fraction(F.col(text_col)),
-        }
-    )
-    tops = _top_bigram_per_doc(df, id_col, text_col)
-    return narrow.join(tops, id_col, "left").withColumn(
-        "top_bigram_fraction",
-        F.coalesce("top_bigram_fraction", F.lit(0.0)),
-    )
+    return bind_once(_paras(col), _dup_frac_of)
 
 
 # (count, gram-char-length) packed into one BIGINT so "modal n-gram,
@@ -308,7 +123,6 @@ def ngram_char_stats(
     text_col: str = "text",
     top_ns: tuple = (2, 3, 4),
     dup_ns: tuple = (5, 6, 7, 8, 9, 10),
-    with_top_bigram_occurrence: bool = False,
     with_line_paragraph: bool = False,
 ) -> DataFrame:
     """The full Gopher repetition-signal family (Rae et al. 2021 §A1.1)
@@ -325,44 +139,41 @@ def ngram_char_stats(
       SQL-expressible nor shuffle-friendly.  This occurrence-mass form
       over-counts overlaps in numerator and denominator alike, is
       monotone in the same repetition behavior, and stays in [0, 1].)
+    * ``top_bigram_fraction``: the modal word bigram's count over all
+      bigrams (0.0 below two words) — the bigram lane is always on.
+    * ``with_line_paragraph=True``: ``dup_line_char_frac`` /
+      ``dup_para_char_frac`` — characters inside newline-split lines /
+      blank-line-separated paragraphs (units blank after space-trim
+      dropped) occurring ≥ 2 times, over ``len(text)``.  Lines and
+      paragraphs are DISJOINT substrings, so occurrence mass equals
+      Gopher's char-position marking exactly.  They ride the SAME
+      explode as reserved lanes n=0 (line) / n=1 (paragraph) — grams
+      start at n=2, so the lanes cannot collide.
 
     Plan: words → one explode of all (n, gram) windows → two-level hash
     aggregate — (id, n, gram) counts with map-side combine, then per-id
-    conditional aggregates — → broadcast-friendly slim join back to
-    (id, len(text)).  Same shuffle shape as the tf pass the pipeline
-    already runs; gram keys are content-uniform so no skew handling is
-    needed.  Returns one row per input id (missing n-grams → 0.0).
-
-    ``with_top_bigram_occurrence=True`` additionally emits the legacy
-    ``top_bigram_fraction`` (modal bigram count / total bigrams) from the
-    SAME pass, so :func:`filter_documents` needs no separate bigram
-    explode when the family is enabled.  ``with_line_paragraph=True``
-    rides the line/paragraph units of :func:`line_dup_stats` through the
-    SAME explode as reserved lanes n=0 (line) / n=1 (paragraph) — grams
-    start at n=2, so the lanes cannot collide — emitting
-    ``dup_line_char_frac`` / ``dup_para_char_frac`` without a second
-    corpus scan.
+    conditional aggregates — → slim join back to (id, len(text)).
+    Returns one row per input id (missing n-grams → 0.0).
 
     :func:`filter_documents` computes the same fields per row with
-    :func:`ngram_char_stats_udf`; this aggregate form is its reference."""
-    all_ns = sorted({int(n) for n in (*top_ns, *dup_ns)})
-    if with_top_bigram_occurrence and 2 not in all_ns:
-        all_ns = sorted([2, *all_ns])
-    if not all_ns or min(all_ns) < 2:
+    :func:`ngram_char_stats_udf`; this aggregate form is its reference,
+    and the DuckDB ``quality_filter`` oracle mirrors it in SQL."""
+    if min((*top_ns, *dup_ns), default=2) < 2:
         raise ValueError("n-gram sizes must be >= 2")
+    all_ns = sorted({2, *(int(n) for n in (*top_ns, *dup_ns))})
     # small-scan guard: the explode otherwise runs on the parquet scan's
     # 1-4 splits
     df = resplit(df)
     col = F.col(text_col)
-    members = [_words(col).alias("w")]
+    members = [words(col).alias("w")]
     if with_line_paragraph:
         members.extend([_lines(col).alias("l"), _paras(col).alias("p")])
 
     def _all_lanes(s: Column) -> Column:
-        # s binds the split arrays ONCE per row (see _bind) — without the
-        # binding, the `words` subtree inside each window lambda below is
-        # a free subtree that interpreted higher-order eval re-splits the
-        # text for at EVERY window of every lane: O(lanes·words²) char
+        # s binds the split arrays ONCE per row (see bind_once) — without
+        # the binding, the `words` subtree inside each window lambda below
+        # is a free subtree that interpreted higher-order eval re-splits
+        # the text for at EVERY window of every lane: O(lanes·words²) char
         # work per document (r5, measured as 27 split( nodes in the plan)
         w = s["w"]
         nw = F.size(w)
@@ -382,163 +193,116 @@ def ngram_char_stats(
                 nw >= n, F.transform(F.sequence(F.lit(1), nw - n + 1), _window)
             ).otherwise(F.array().cast("array<struct<n:int,g:string>>"))
 
+        def _units(lane: int, units: Column) -> Column:
+            return F.transform(
+                units, lambda x: F.struct(F.lit(lane).alias("n"), x.alias("g"))
+            )
+
         lanes = [_grams(n) for n in all_ns]
         if with_line_paragraph:
-            lanes.append(
-                F.transform(
-                    s["l"], lambda x: F.struct(F.lit(0).alias("n"), x.alias("g"))
-                )
-            )
-            lanes.append(
-                F.transform(
-                    s["p"], lambda x: F.struct(F.lit(1).alias("n"), x.alias("g"))
-                )
-            )
+            lanes += [_units(0, s["l"]), _units(1, s["p"])]
         return F.flatten(F.array(*lanes))
 
     exploded = df.select(
         F.col(id_col),
-        F.explode(_bind(F.struct(*members), _all_lanes)).alias("ng"),
+        F.explode(bind_once(F.struct(*members), _all_lanes)).alias("ng"),
     ).select(id_col, F.col("ng.n").alias("__n"), F.col("ng.g").alias("__g"))
     per_gram = (
         exploded.groupBy(id_col, "__n", "__g")
         .agg(F.count(F.lit(1)).alias("__c"))
         .withColumn("__len", F.least(F.length("__g"), F.lit(_PACK - 1)))
     )
-    aggs = []
-    for n in top_ns:
-        aggs.append(
-            F.max(
-                F.when(F.col("__n") == n, F.col("__c") * _PACK + F.col("__len"))
-            ).alias(f"__top{n}")
-        )
+    lane_n, c = F.col("__n"), F.col("__c")
+    cl = c * F.col("__len")
+
+    def _dup_mass(lane: int) -> Column:
+        return F.sum(F.when((lane_n == lane) & (c >= 2), cl).otherwise(F.lit(0)))
+
+    aggs = [
+        F.max(F.when(lane_n == n, c * _PACK + F.col("__len"))).alias(f"__top{n}")
+        for n in top_ns
+    ]
     for n in dup_ns:
-        cl = F.col("__c") * F.col("__len")
+        aggs.append(_dup_mass(n).alias(f"__num{n}"))
         aggs.append(
-            F.sum(
-                F.when((F.col("__n") == n) & (F.col("__c") >= 2), cl).otherwise(
-                    F.lit(0)
-                )
-            ).alias(f"__num{n}")
+            F.sum(F.when(lane_n == n, cl).otherwise(F.lit(0))).alias(f"__den{n}")
         )
-        aggs.append(
-            F.sum(F.when(F.col("__n") == n, cl).otherwise(F.lit(0))).alias(
-                f"__den{n}"
-            )
-        )
-    if with_top_bigram_occurrence:
-        is2 = F.col("__n") == 2
-        aggs.append(F.max(F.when(is2, F.col("__c"))).alias("__bg_max"))
-        aggs.append(
-            F.sum(F.when(is2, F.col("__c")).otherwise(F.lit(0))).alias("__bg_tot")
-        )
+    aggs.append(F.max(F.when(lane_n == 2, c)).alias("__bg_max"))
+    aggs.append(F.sum(F.when(lane_n == 2, c).otherwise(F.lit(0))).alias("__bg_tot"))
     if with_line_paragraph:
-        cl = F.col("__c") * F.col("__len")
-        for lane, name in ((0, "__lnum"), (1, "__pnum")):
-            aggs.append(
-                F.sum(
-                    F.when(
-                        (F.col("__n") == lane) & (F.col("__c") >= 2), cl
-                    ).otherwise(F.lit(0))
-                ).alias(name)
-            )
+        aggs.append(_dup_mass(0).alias("__lnum"))
+        aggs.append(_dup_mass(1).alias("__pnum"))
     per_doc = per_gram.groupBy(id_col).agg(*aggs)
-    base = df.select(F.col(id_col), F.length(F.col(text_col)).alias("__tlen"))
-    joined = base.join(per_doc, id_col, "left")
+    base = df.select(F.col(id_col), F.length(col).alias("__tlen"))
+    tlen = F.col("__tlen")
+
+    def _ratio(num: Column, den: Column) -> Column:
+        return (
+            F.when(num.isNull() | den.isNull() | (den <= 0), F.lit(0.0))
+            .otherwise((num / den).cast("double"))
+        )
+
     out_cols = [F.col(id_col)]
     for n in top_ns:
         packed = F.col(f"__top{n}")
-        out_cols.append(
-            F.when(
-                packed.isNull() | (F.col("__tlen") <= 0), F.lit(0.0)
-            )
-            .otherwise(
-                (
-                    F.shiftright(packed, 30) * (packed % _PACK) / F.col("__tlen")
-                ).cast("double")
-            )
-            .alias(f"top_{n}gram_char_frac")
-        )
+        mass = F.shiftright(packed, 30) * (packed % _PACK)
+        out_cols.append(_ratio(mass, tlen).alias(f"top_{n}gram_char_frac"))
     for n in dup_ns:
-        num, den = F.col(f"__num{n}"), F.col(f"__den{n}")
         out_cols.append(
-            F.when(den.isNull() | (den <= 0), F.lit(0.0))
-            .otherwise((num / den).cast("double"))
+            _ratio(F.col(f"__num{n}"), F.col(f"__den{n}"))
             .alias(f"dup_{n}gram_char_frac")
         )
-    if with_top_bigram_occurrence:
-        out_cols.append(
-            F.when(
-                F.col("__bg_max").isNull() | (F.col("__bg_tot") <= 0), F.lit(0.0)
-            )
-            .otherwise((F.col("__bg_max") / F.col("__bg_tot")).cast("double"))
-            .alias("top_bigram_fraction")
-        )
+    out_cols.append(
+        _ratio(F.col("__bg_max"), F.col("__bg_tot")).alias("top_bigram_fraction")
+    )
     if with_line_paragraph:
-        for name, alias in (
-            ("__lnum", "dup_line_char_frac"),
-            ("__pnum", "dup_para_char_frac"),
-        ):
-            num = F.col(name)
-            out_cols.append(
-                F.when(num.isNull() | (F.col("__tlen") <= 0), F.lit(0.0))
-                .otherwise((num / F.col("__tlen")).cast("double"))
-                .alias(alias)
-            )
-    return joined.select(*out_cols)
+        out_cols.append(_ratio(F.col("__lnum"), tlen).alias("dup_line_char_frac"))
+        out_cols.append(_ratio(F.col("__pnum"), tlen).alias("dup_para_char_frac"))
+    return base.join(per_doc, id_col, "left").select(*out_cols)
 
 
 def ngram_char_stats_udf(
     col: Column | str,
     top_ns: tuple = (2, 3, 4),
     dup_ns: tuple = (5, 6, 7, 8, 9, 10),
-    with_top_bigram_occurrence: bool = False,
     with_line_paragraph: bool = False,
 ) -> Column:
-    """Per-row STRUCT of the same Gopher n-gram signals as
-    :func:`ngram_char_stats`, as one Arrow-vectorized scalar UDF — the
-    stateless-projection form for streaming plans (the batch aggregate
-    shape would be a stream-stream self-join) and the batch form
-    :func:`filter_documents` runs (r5 measured ~2× a pure-Catalyst
+    """Per-row STRUCT of the same fields as :func:`ngram_char_stats`, in
+    the same order, as one Arrow-vectorized scalar UDF — the one
+    repetition-signal pass of :func:`filter_documents` and
+    :func:`streaming_quality_filter`: map-only, and a stateless
+    projection a stream can run (the aggregate shape would be a
+    stream-stream self-join).  r5 measured it at ~2× a pure-Catalyst
     per-row form: the per-gram work is a C-speed ``Counter`` pass instead
-    of interpreted higher-order expressions).  Tokenizes
-    with the Java ``\\s+`` (ASCII) convention so decisions are
-    row-identical to batch; the packed (count, len) tie-break is
-    reproduced exactly.  ``with_top_bigram_occurrence`` adds the legacy
-    ``top_bigram_fraction`` (modal bigram count / total bigrams);
-    ``with_line_paragraph`` adds ``dup_line_char_frac`` /
-    ``dup_para_char_frac`` (line/paragraph conventions of
-    :func:`line_dup_stats`)."""
+    of interpreted higher-order expressions.  Tokenizes with the Java
+    ``\\s+`` (ASCII) convention of :func:`~.textstats.words`, so values
+    are identical to the Catalyst signals; the packed (count, len)
+    tie-break is reproduced exactly."""
     col = F.col(col) if isinstance(col, str) else col
-    fields = [f"top_{n}gram_char_frac double" for n in top_ns] + [
-        f"dup_{n}gram_char_frac double" for n in dup_ns
-    ]
-    if with_top_bigram_occurrence:
-        fields.append("top_bigram_fraction double")
+    field_names = (
+        [f"top_{n}gram_char_frac" for n in top_ns]
+        + [f"dup_{n}gram_char_frac" for n in dup_ns]
+        + ["top_bigram_fraction"]
+    )
     if with_line_paragraph:
-        fields.append("dup_line_char_frac double")
-        fields.append("dup_para_char_frac double")
-    schema = "struct<" + ", ".join(f.replace(" ", ": ", 1) for f in fields) + ">"
-    field_names = [f.split(" ")[0] for f in fields]
+        field_names += ["dup_line_char_frac", "dup_para_char_frac"]
+    schema = "struct<" + ", ".join(f"{f}: double" for f in field_names) + ">"
 
     @F.pandas_udf(schema)
     def _sig(texts: pd.Series) -> pd.DataFrame:
         import re
         from collections import Counter
 
-        java_ws = re.compile(r"[ \t\n\x0b\f\r]+")
         para_re = re.compile(r"\n{2,}")
         rows = []
         for t in texts:
             t = t or ""
-            ws = [w for w in java_ws.split(t) if w]
+            ws = [w for w in _JAVA_WS.split(t) if w]
             row = {}
-            wants_bg = with_top_bigram_occurrence
-            for n in sorted({*top_ns, *dup_ns, *( [2] if wants_bg else [] )}):
-                grams = [
+            for n in sorted({2, *top_ns, *dup_ns}):
+                counts = Counter(
                     " ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)
-                ]
-                counts = Counter(grams)
+                )
                 if n in top_ns:
                     key = f"top_{n}gram_char_frac"
                     if not counts or not t:
@@ -550,31 +314,26 @@ def ngram_char_stats_udf(
                         )
                         row[key] = (best >> 30) * (best % _PACK) / len(t)
                 if n in dup_ns:
-                    key = f"dup_{n}gram_char_frac"
                     den = sum(c * len(g) for g, c in counts.items())
-                    num = sum(
-                        c * len(g) for g, c in counts.items() if c >= 2
-                    )
-                    row[key] = num / den if den > 0 else 0.0
-                if wants_bg and n == 2:
+                    num = sum(c * len(g) for g, c in counts.items() if c >= 2)
+                    row[f"dup_{n}gram_char_frac"] = num / den if den > 0 else 0.0
+                if n == 2:
                     tot = sum(counts.values())
                     row["top_bigram_fraction"] = (
                         max(counts.values()) / tot if tot > 0 else 0.0
                     )
             if with_line_paragraph:
-                tlen = len(t)
                 for key, units in (
                     ("dup_line_char_frac", t.split("\n")),
                     ("dup_para_char_frac", para_re.split(t)),
                 ):
-                    kept = [u for u in units if u.strip(" ")]
-                    cnt = Counter(kept)
+                    cnt = Counter(u for u in units if u.strip(" "))
                     num = sum(
                         c * min(len(u), _PACK - 1)
                         for u, c in cnt.items()
                         if c >= 2
                     )
-                    row[key] = num / tlen if tlen > 0 else 0.0
+                    row[key] = num / len(t) if t else 0.0
             rows.append(row)
         # explicit column order: dict insertion order interleaves
         # top_bigram_fraction after top_2, but the struct schema declares
@@ -603,72 +362,62 @@ class FilterRules:
     max_dup_line_char_fraction: float = 1.0
     max_dup_paragraph_char_fraction: float = 1.0
     # full Gopher n-gram family (Rae et al. 2021 §A1.1), opt-in:
-    # ((n, threshold), ...) pairs.  Empty = the n-gram pass is skipped
-    # entirely (no extra corpus scan).  Gopher's published thresholds:
+    # ((n, threshold), ...) pairs.  Empty = the per-row UDF counts
+    # bigrams only.  Gopher's published thresholds:
     # top: (2, .20) (3, .18) (4, .16); dup: (5, .15) (6, .14) (7, .13)
     # (8, .12) (9, .11) (10, .10).
     max_top_ngram_fraction: tuple = ()
     max_dup_ngram_fraction: tuple = ()
 
 
+def _signals(df: DataFrame, rules: FilterRules, text_col: str) -> DataFrame:
+    """``df`` plus every signal column ``rules`` reads — ONE per-row
+    projection, so the plan is map-only for every rule set and runs as is
+    on a stream:
+
+    * the scalar signals (n_tokens, quality, dup word/line/paragraph
+      fractions) as ONE struct evaluated once per row (one
+      words/lines/paras split each — see :func:`_scalar_signals`); the
+      struct column is non-cheap, so CollapseProject keeps it
+      materialized below the per-field extraction projection;
+    * ``lang_pred`` (Catalyst, :func:`~.textstats.lang_id_col`);
+    * ONE :func:`ngram_char_stats_udf` column: ``top_bigram_fraction``
+      always, the n-gram fractions of the n-gram rules, and the
+      line/paragraph character-mass fractions only when one of their
+      rules is on."""
+    text = F.col(text_col)
+    ng = ngram_char_stats_udf(
+        text,
+        top_ns=tuple(n for n, _ in rules.max_top_ngram_fraction),
+        dup_ns=tuple(n for n, _ in rules.max_dup_ngram_fraction),
+        with_line_paragraph=(
+            rules.max_dup_line_char_fraction < 1.0
+            or rules.max_dup_paragraph_char_fraction < 1.0
+        ),
+    )
+    with_para = rules.max_dup_paragraph_fraction < 1.0
+    return df.withColumns(
+        {"__sc": _scalar_signals(text, with_para), "__ng": ng}
+    ).select(
+        *[F.col(c) for c in df.columns],
+        "__sc.*",
+        lang_id_col(text).alias("lang_pred"),
+        "__ng.*",
+    )
+
+
 def filter_documents(
     df: DataFrame,
     rules: FilterRules = FilterRules(),
-    id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """Quality-filter decision per document: signals + ``keep`` boolean +
     ``reject_reason`` ('ok' when kept — NULL-free by design so the frame
     survives engine-comparison hashing)."""
-    # small-scan guard: the scalar-signal projection (split-heavy,
-    # interpreted higher-order exprs) is expensive map-side work and
+    # small-scan guard: the signal projection (split-heavy interpreted
+    # higher-order exprs + the Python UDF) is expensive map-side work and
     # otherwise runs serialized on the parquet scan's 1-4 splits
-    df = resplit(df)
-    with_para = rules.max_dup_paragraph_fraction < 1.0
-    # every scalar signal rides ONE struct evaluated once per row (one
-    # words/lines/paras split each — see _scalar_signals); the struct
-    # column is non-cheap so CollapseProject keeps it materialized below
-    # the per-field extraction projection
-    sig_names = ["n_tokens", "quality", "dup_word_fraction", "dup_line_fraction"]
-    if with_para:
-        sig_names.append("dup_paragraph_fraction")
-    narrow = df.withColumn(
-        "__sc", _scalar_signals(F.col(text_col), with_para)
-    ).select(
-        *[F.col(c) for c in df.columns],
-        *[F.col("__sc")[n].alias(n) for n in sig_names],
-        lang_id_col(F.col(text_col)).alias("lang_pred"),
-    )
-    needs_units = (
-        rules.max_dup_line_char_fraction < 1.0
-        or rules.max_dup_paragraph_char_fraction < 1.0
-    )
-    if rules.max_top_ngram_fraction or rules.max_dup_ngram_fraction:
-        ng_kw = dict(
-            top_ns=tuple(n for n, _ in rules.max_top_ngram_fraction),
-            dup_ns=tuple(n for n, _ in rules.max_dup_ngram_fraction),
-            with_top_bigram_occurrence=True,
-            with_line_paragraph=needs_units,
-        )
-        # map-only: one Arrow-vectorized pass (zero shuffle, no join —
-        # the filter stage is one projection end-to-end)
-        sig = narrow.withColumn(
-            "__ng", ngram_char_stats_udf(F.col(text_col), **ng_kw)
-        )
-        ng_fields = sig.schema["__ng"].dataType.fieldNames()
-        sig = sig.select(
-            *[F.col(c) for c in narrow.columns],
-            *[F.col("__ng")[f].alias(f) for f in ng_fields],
-        )
-    else:
-        tops = _top_bigram_per_doc(df, id_col, text_col)
-        sig = narrow.join(tops, id_col, "left").withColumn(
-            "top_bigram_fraction",
-            F.coalesce("top_bigram_fraction", F.lit(0.0)),
-        )
-        if needs_units:
-            sig = sig.join(line_dup_stats(df, id_col, text_col), id_col, "left")
-    return _decide(sig, rules)
+    return _decide(_signals(resplit(df), rules, text_col), rules)
 
 
 def _reason_column(rules: FilterRules) -> Column:
@@ -727,37 +476,6 @@ def _decide(sig: DataFrame, rules: FilterRules) -> DataFrame:
     )
 
 
-def top_bigram_fraction_udf(col: Column | str) -> Column:
-    """Per-row top-bigram fraction as an Arrow-vectorized scalar UDF —
-    the STATELESS-PROJECTION form of :func:`top_bigram_fraction` for
-    streaming plans, where the batch explode + re-join shape would be a
-    stream-stream self-join.  Linear per document (collections.Counter),
-    identical values to the batch aggregate."""
-    col = F.col(col) if isinstance(col, str) else col
-
-    @F.pandas_udf("double")
-    def _tbf(texts: pd.Series) -> pd.Series:
-        import re
-        from collections import Counter
-
-        # Java regex \s is ASCII-only ([ \t\n\x0b\f\r]); python's
-        # str.split() splits on Unicode whitespace (\xa0,  , ...)
-        # which would flip keep/reject decisions vs the batch Catalyst
-        # path near the threshold (ADVICE r4).  Mirror Java exactly.
-        java_ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        out = []
-        for t in texts:
-            words = [w for w in java_ws.split(t or "") if w]
-            if len(words) < 2:
-                out.append(0.0)
-                continue
-            counts = Counter(zip(words, words[1:]))
-            out.append(max(counts.values()) / (len(words) - 1))
-        return pd.Series(out, dtype="float64")
-
-    return _tbf(col)
-
-
 def streaming_quality_filter(
     stream_df: DataFrame,
     rules: FilterRules = FilterRules(),
@@ -766,50 +484,10 @@ def streaming_quality_filter(
     """Quality filter over a STREAMING DataFrame — the ingest-time stage
     of a continuously-crawled corpus pipeline (filter → dedup → encode).
 
-    Every signal here is a stateless projection, so the plan composes
-    with watermarks/sinks unchanged and needs no state store: the
-    Catalyst expressions are shared with batch; ``top_bigram_fraction``
-    switches to its vectorized-UDF form (the batch aggregate shape would
-    be a stream-stream self-join).  Decisions are row-identical to
-    :func:`filter_documents` on the same rows."""
+    Every signal is a stateless projection (the same builder as
+    :func:`filter_documents`), so the plan composes with watermarks and
+    sinks unchanged and needs no state store; the output is row-identical
+    to :func:`filter_documents` on the same rows, every column included."""
     if not stream_df.isStreaming:
         raise ValueError("streaming_quality_filter expects a streaming DataFrame")
-    stream_cols = {
-        "dup_word_fraction": dup_word_fraction(F.col(text_col)),
-        "dup_line_fraction": dup_line_fraction(F.col(text_col)),
-        "top_bigram_fraction": top_bigram_fraction_udf(F.col(text_col)),
-        "n_tokens": whitespace_token_count(F.col(text_col)),
-        "quality": quality_score(F.col(text_col)),
-        "lang_pred": lang_id_col(F.col(text_col)),
-    }
-    if rules.max_dup_paragraph_fraction < 1.0:
-        stream_cols["dup_paragraph_fraction"] = dup_paragraph_fraction(
-            F.col(text_col)
-        )
-    sig = stream_df.withColumns(stream_cols)
-    if (
-        rules.max_dup_line_char_fraction < 1.0
-        or rules.max_dup_paragraph_char_fraction < 1.0
-    ):
-        sig = (
-            sig.withColumn("__ld", line_dup_stats_udf(F.col(text_col)))
-            .withColumn("dup_line_char_frac", F.col("__ld.dup_line_char_frac"))
-            .withColumn("dup_para_char_frac", F.col("__ld.dup_para_char_frac"))
-            .drop("__ld")
-        )
-    if rules.max_top_ngram_fraction or rules.max_dup_ngram_fraction:
-        top_ns = tuple(n for n, _ in rules.max_top_ngram_fraction)
-        dup_ns = tuple(n for n, _ in rules.max_dup_ngram_fraction)
-        sig = sig.withColumn(
-            "__ng", ngram_char_stats_udf(F.col(text_col), top_ns, dup_ns)
-        )
-        for n in top_ns:
-            sig = sig.withColumn(
-                f"top_{n}gram_char_frac", F.col(f"__ng.top_{n}gram_char_frac")
-            )
-        for n in dup_ns:
-            sig = sig.withColumn(
-                f"dup_{n}gram_char_frac", F.col(f"__ng.dup_{n}gram_char_frac")
-            )
-        sig = sig.drop("__ng")
-    return _decide(sig, rules)
+    return _decide(_signals(stream_df, rules, text_col), rules)

@@ -8,12 +8,15 @@ any of these paths.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .session import resplit
 
 __all__ = [
+    "words",
     "whitespace_token_count",
     "bpe_ish_token_count",
     "punct_ratio",
@@ -63,9 +66,23 @@ def bind_once(expr: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
+def words(col: Column | str) -> Column:
+    """array<string>: the whitespace words of ``col`` — Java-regex
+    ``\\s+`` split (ASCII whitespace only), empty strings dropped.  Every
+    word-level signal tokenizes through this one expression (callers that
+    case-fold pass ``F.lower(col)``); Python UDFs that must agree with it
+    split with :data:`_JAVA_WS`."""
+    return F.filter(F.split(_as_col(col), r"\s+"), lambda w: w != "")
+
+
+# ``words`` in Python: Java regex \s is ASCII-only ([ \t\n\x0b\f\r]),
+# while str.split() also splits on Unicode whitespace (\xa0, \u2003, ...)
+# and would flip UDF decisions against the Catalyst signals
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
 def whitespace_token_count(col: Column | str) -> Column:
-    col = _as_col(col)
-    return F.size(F.filter(F.split(col, r"\s+"), lambda w: w != "")).cast("long")
+    return F.size(words(col)).cast("long")
 
 
 def bpe_ish_token_count(col: Column | str) -> Column:
@@ -83,10 +100,9 @@ def punct_ratio(col: Column | str) -> Column:
 
 def stopword_ratio(col: Column | str) -> Column:
     """Fraction of whitespace tokens that are (any-language) stopwords."""
-    words = F.filter(F.split(F.lower(_as_col(col)), r"\s+"), lambda w: w != "")
     sw = F.array(*[F.lit(w) for w in ALL_STOPWORDS])
     return bind_once(
-        words,
+        words(F.lower(_as_col(col))),
         lambda ws: (
             F.size(F.filter(ws, lambda w: F.array_contains(sw, w)))
             / F.greatest(F.size(ws), F.lit(1))
@@ -125,7 +141,7 @@ def quality_score(
 
 def content_fingerprint(col: Column | str) -> Column:
     """64-bit whole-document fingerprint of whitespace-normalized text."""
-    normalized = F.concat_ws(" ", F.filter(F.split(_as_col(col), r"\s+"), lambda w: w != ""))
+    normalized = F.concat_ws(" ", words(col))
     return F.xxhash64(normalized)
 
 
@@ -133,7 +149,6 @@ def rolling_fingerprints(col: Column | str, window: int = 4) -> Column:
     """array<long> Rabin–Karp-style rolling fingerprints over word
     ``window``-grams (shingle fingerprints for containment detection) —
     pure Catalyst: slide over the word array and hash each window."""
-    words = F.filter(F.split(_as_col(col), r"\s+"), lambda w: w != "")
 
     def _windows(ws: Column) -> Column:
         # ws binds the split array once per row (see bind_once) — as a
@@ -145,7 +160,7 @@ def rolling_fingerprints(col: Column | str, window: int = 4) -> Column:
             starts, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(ws, i, window)))
         )
 
-    return bind_once(words, _windows)
+    return bind_once(words(col), _windows)
 
 
 def lang_id_col(col: Column | str) -> Column:
@@ -171,7 +186,6 @@ def lang_id_col(col: Column | str) -> Column:
         *[F.array(*[F.lit(s) for s in _STOPWORDS[lang]]) for lang in langs]
     )
     lang_lits = F.array(*[F.lit(lang) for lang in langs])
-    words = F.filter(F.split(F.lower(col), r"\s+"), lambda w: w != "")
     zeros = F.array_repeat(F.lit(0).cast("long"), n)
 
     def _step(acc: Column, w: Column) -> Column:
@@ -187,7 +201,7 @@ def lang_id_col(col: Column | str) -> Column:
             F.element_at(lang_lits, F.array_position(acc, best).cast("int"))
         )
 
-    picked = F.aggregate(words, zeros, _step, _finish)
+    picked = F.aggregate(words(F.lower(col)), zeros, _step, _finish)
     return F.when(col.isNull() | (col == ""), F.lit("und")).otherwise(picked)
 
 
@@ -199,9 +213,7 @@ def _word_explode(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     df = resplit(df)
     return df.select(
         F.col(id_col),
-        F.explode(
-            F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-        ).alias("term"),
+        F.explode(words(text_col)).alias("term"),
     )
 
 
@@ -227,8 +239,8 @@ def tf_idf_terms(df: DataFrame, id_col: str = "doc_id",
     (building ``tfidf_top_terms`` starts 2 Spark jobs beyond the parquet
     read, sf0.1 on local[4]); only the final reduce waits for an action.
     """
-    words = _word_explode(df, id_col, text_col)
-    tf = words.groupBy(id_col, "term").agg(
+    terms = _word_explode(df, id_col, text_col)
+    tf = terms.groupBy(id_col, "term").agg(
         F.count(F.lit(1)).alias("tf")
     ).localCheckpoint(eager=False)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -274,11 +286,11 @@ def bm25_scores(
     corpus size); to densify, left-join the corpus ids against this
     result and ``coalesce(bm25, 0.0)``.
     """
-    words = _word_explode(df, id_col, text_col)
+    terms = _word_explode(df, id_col, text_col)
     # as in tf_idf_terms, the aggregate's shuffle runs when this is called:
     # building bm25_query_scores starts 2 Spark jobs beyond the parquet read
     # (sf0.1, local[4])
-    all_tf = words.groupBy(id_col, "term").agg(
+    all_tf = terms.groupBy(id_col, "term").agg(
         F.count(F.lit(1)).alias("tf")
     ).localCheckpoint(eager=False)
     doclen = all_tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))

@@ -124,6 +124,34 @@ def test_simhash_default_engine_is_one_arrow_pass(spark):
     assert "Join" not in final and "HashAggregate" not in final, final
 
 
+@pytest.mark.parametrize(
+    "rules_kw",
+    [
+        {},
+        dict(max_dup_line_char_fraction=0.20,
+             max_dup_paragraph_char_fraction=0.20),
+        dict(max_top_ngram_fraction=((2, 0.20), (3, 0.18), (4, 0.16)),
+             max_dup_ngram_fraction=((5, 0.15), (6, 0.14), (7, 0.13),
+                                     (8, 0.12), (9, 0.11), (10, 0.10)),
+             max_dup_line_fraction=0.30, max_dup_paragraph_fraction=0.30,
+             max_dup_line_char_fraction=0.20,
+             max_dup_paragraph_char_fraction=0.20),
+    ],
+    ids=["default", "units", "gopher"],
+)
+def test_filter_documents_is_map_only(spark, rules_kw):
+    """Every quality-filter signal is per-row: for every rule set the plan
+    is one projection over ONE Arrow UDF — no join back onto the corpus
+    and no aggregate (the small-scan resplit is the only exchange)."""
+    from pprl_spark.spark.quality import FilterRules, filter_documents
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _executed_plan(filter_documents(docs, FilterRules(**rules_kw)))
+    assert "Join" not in plan and "Aggregate" not in plan, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("Exchange") <= 1, plan
+
+
 def test_flagship_banding_is_jvm_side(spark):
     # chunked LSH banding is conv(hex(substring)) — the only Python UDFs
     # in the flagship plan are the encode and similarity kernels; no

@@ -547,7 +547,15 @@ def test_image_pixel_features_three_formats(spark):
 # ---------------------------------------------------------------------------
 
 def test_repetition_signals(spark):
-    from pprl_spark.spark.quality import repetition_stats
+    """The three default Gopher repetition signals: the Catalyst word/line
+    fractions and the per-row UDF's top-bigram fraction, which must equal
+    the explode + aggregate reference."""
+    from pprl_spark.spark.quality import (
+        dup_line_fraction,
+        dup_word_fraction,
+        ngram_char_stats,
+        ngram_char_stats_udf,
+    )
 
     df = spark.createDataFrame(
         [
@@ -560,7 +568,16 @@ def test_repetition_signals(spark):
         ],
         "doc_id long, text string",
     )
-    rows = {r["doc_id"]: r for r in repetition_stats(df).collect()}
+    rows = {r["doc_id"]: r for r in df.select(
+        "doc_id",
+        dup_word_fraction("text").alias("dup_word_fraction"),
+        dup_line_fraction("text").alias("dup_line_fraction"),
+        ngram_char_stats_udf("text", (), ())["top_bigram_fraction"]
+        .alias("top_bigram_fraction"),
+    ).collect()}
+    reference = {r["doc_id"]: r["top_bigram_fraction"]
+                 for r in ngram_char_stats(df, top_ns=(), dup_ns=()).collect()}
+    assert {i: r["top_bigram_fraction"] for i, r in rows.items()} == reference
     assert rows[1]["dup_word_fraction"] == 0.0
     assert rows[2]["dup_word_fraction"] == 0.75
     assert rows[4]["dup_word_fraction"] == 0.0
@@ -691,18 +708,39 @@ def test_real_decode_embedding_for_decodable_rasters(spark):
     assert out[3]["embedding"] is None  # BMP: header-only, honest gap
 
 
-def test_streaming_quality_filter_matches_batch(spark, tmp_path):
-    """streaming_quality_filter decisions are row-identical to the batch
-    filter_documents on the same rows (the UDF top-bigram path must agree
-    with the batch aggregate path)."""
+_STREAM_BASE_RULES = dict(
+    min_tokens=3, max_tokens=8, min_quality=0.0,
+    allowed_langs=("en", "de"),
+    max_dup_word_fraction=0.4, max_top_bigram_fraction=0.6,
+)
+
+
+@pytest.mark.parametrize(
+    "shape",
+    [
+        # the bigram lane only (dedup_job and CLI ``quality`` rules)
+        {},
+        # + the line/paragraph character-mass lanes
+        dict(max_dup_line_char_fraction=0.20,
+             max_dup_paragraph_char_fraction=0.20),
+        # the full Gopher table
+        dict(max_top_ngram_fraction=((2, 0.20), (3, 0.18), (4, 0.16)),
+             max_dup_ngram_fraction=((5, 0.15), (6, 0.14), (7, 0.13),
+                                     (8, 0.12), (9, 0.11), (10, 0.10)),
+             max_dup_line_fraction=0.30, max_dup_paragraph_fraction=0.30,
+             max_dup_line_char_fraction=0.20,
+             max_dup_paragraph_char_fraction=0.20),
+    ],
+    ids=["default", "units", "gopher"],
+)
+def test_streaming_quality_filter_matches_batch(spark, tmp_path, shape):
+    """streaming_quality_filter output is row-identical to the batch
+    filter_documents on the same rows — every column, not only the
+    decision — for each shape of rule set."""
     from pprl_spark.spark.quality import (FilterRules, filter_documents,
                                           streaming_quality_filter)
 
-    rules = FilterRules(
-        min_tokens=3, max_tokens=8, min_quality=0.0,
-        allowed_langs=("en", "de"),
-        max_dup_word_fraction=0.4, max_top_bigram_fraction=0.6,
-    )
+    rules = FilterRules(**_STREAM_BASE_RULES, **shape)
     rows = [
         (1, "the of and to in"),
         (2, "aa bb"),
@@ -710,13 +748,12 @@ def test_streaming_quality_filter_matches_batch(spark, tmp_path):
         (4, "the the the the of"),
         (5, "the of the of the of"),
         (6, "el la los de que y en"),
+        (7, "the cat\nthe cat\nand it"),
+        (8, "der hund ist\n\nder hund ist\n\nund das"),
     ]
     batch = spark.createDataFrame(rows, "doc_id long, text string")
-    expect = {
-        r["doc_id"]: (r["keep"], r["reject_reason"],
-                      round(r["top_bigram_fraction"], 12))
-        for r in filter_documents(batch, rules).collect()
-    }
+    expect = filter_documents(batch, rules)
+    want = {r["doc_id"]: r.asDict() for r in expect.collect()}
 
     src = tmp_path / "src"
     batch.coalesce(1).write.parquet(str(src))
@@ -727,13 +764,14 @@ def test_streaming_quality_filter_matches_batch(spark, tmp_path):
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination(180)
-    got = {
-        r["doc_id"]: (r["keep"], r["reject_reason"],
-                      round(r["top_bigram_fraction"], 12))
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == expect
-    assert {v[1] for v in got.values()} >= {"ok", "too_short", "too_long"}
+    got_df = spark.read.parquet(out_dir)
+    assert got_df.columns == expect.columns
+    got = {r["doc_id"]: r.asDict() for r in got_df.collect()}
+    assert got == want
+    reasons = {r["reject_reason"] for r in got.values()}
+    assert reasons >= {"too_short", "too_long", "lang"}
+    # the multi-line rows reach a line rule exactly when one is on
+    assert bool(reasons & {"repetition_lines", "repetition_line_chars"}) == bool(shape)
 
 
 def test_streaming_quality_filter_rejects_batch_frame(spark):

@@ -100,11 +100,9 @@ def test_gif_image_pixel_features_on_real_gif(spark):
 def test_streaming_bigram_udf_matches_batch_on_unicode_whitespace(spark):
     """ADVICE r4: the UDF used python str.split() (Unicode whitespace)
     while the batch path splits on Java \\s+ (ASCII-only).  Text joined
-    by \\xa0 / \\u2003 must produce identical fractions on both paths."""
-    from pprl_spark.spark.quality import (
-        top_bigram_fraction,
-        top_bigram_fraction_udf,
-    )
+    by \\xa0 / \\u2003 must produce identical top-bigram fractions from
+    the per-row UDF and the explode + aggregate reference."""
+    from pprl_spark.spark.quality import ngram_char_stats, ngram_char_stats_udf
 
     rows = [
         (1, "x\xa0x x\xa0x x\xa0x y"),          # nbsp-joined tokens
@@ -116,12 +114,13 @@ def test_streaming_bigram_udf_matches_batch_on_unicode_whitespace(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     batch = {
         r["doc_id"]: r["top_bigram_fraction"]
-        for r in top_bigram_fraction(df).collect()
+        for r in ngram_char_stats(df, top_ns=(), dup_ns=()).collect()
     }
     via_udf = {
         r["doc_id"]: r["f"]
         for r in df.select(
-            "doc_id", top_bigram_fraction_udf("text").alias("f")
+            "doc_id",
+            ngram_char_stats_udf("text", (), ())["top_bigram_fraction"].alias("f"),
         ).collect()
     }
     assert via_udf == pytest.approx(batch)
@@ -234,9 +233,9 @@ def test_ngram_char_stats_batch_matches_reference(spark):
 
 def test_ngram_char_stats_udf_matches_batch(spark):
     """Per-row (UDF) path field-identical to the batch aggregate,
-    including unicode-whitespace documents (Java \\s+ convention), with
-    and without the optional top-bigram-occurrence and line/paragraph
-    lanes."""
+    including unicode-whitespace documents (Java \\s+ convention): the
+    default n-gram family, the bigram lane alone, and the full family
+    with the line/paragraph lanes."""
     rows = _GOPHER_TEXTS + [(9, "p\xa0q p\xa0q p\xa0q r s t u v w x y z")]
     _assert_ngram_udf_matches_batch(spark, rows)
 
@@ -247,8 +246,9 @@ def _assert_ngram_udf_matches_batch(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for kw in (
         {},
+        dict(top_ns=(), dup_ns=()),
         dict(top_ns=(2, 3, 4), dup_ns=(5, 6, 7, 8, 9, 10),
-             with_top_bigram_occurrence=True, with_line_paragraph=True),
+             with_line_paragraph=True),
     ):
         batch = {r["doc_id"]: r.asDict() for r in
                  ngram_char_stats(df, "doc_id", "text", **kw).collect()}
@@ -485,26 +485,26 @@ def test_stream_job_decontamination_stage(spark, tmp_path):
 
 
 def test_fused_bigram_occurrence_matches_standalone(spark):
-    """filter_documents with n-gram rules derives top_bigram_fraction
-    from the shared explode pass — values must equal the standalone
-    aggregate exactly."""
+    """filter_documents derives top_bigram_fraction from the same per-row
+    pass as the n-gram signals — with and without n-gram rules, values
+    must equal the explode + aggregate reference exactly."""
     from pprl_spark.spark.quality import (
         FilterRules,
         filter_documents,
-        top_bigram_fraction,
+        ngram_char_stats,
     )
 
     df = spark.createDataFrame(_GOPHER_TEXTS, "doc_id long, text string")
-    rules = FilterRules(max_top_ngram_fraction=((3, 0.9),))
-    got = {
-        r["doc_id"]: r["top_bigram_fraction"]
-        for r in filter_documents(df, rules).collect()
-    }
     expect = {
         r["doc_id"]: r["top_bigram_fraction"]
-        for r in top_bigram_fraction(df).collect()
+        for r in ngram_char_stats(df, top_ns=(), dup_ns=()).collect()
     }
-    assert got == pytest.approx(expect)
+    for rules in (FilterRules(max_top_ngram_fraction=((3, 0.9),)), FilterRules()):
+        got = {
+            r["doc_id"]: r["top_bigram_fraction"]
+            for r in filter_documents(df, rules).collect()
+        }
+        assert got == expect, rules
 
 
 # ---------------------------------------------------------------------------
@@ -542,11 +542,22 @@ def _py_line_stats(t):
     return out
 
 
-def test_line_dup_stats_matches_reference(spark):
-    from pprl_spark.spark.quality import line_dup_stats
+def _line_stats(df):
+    from pprl_spark.spark.quality import ngram_char_stats
 
+    return {
+        r["doc_id"]: r.asDict()
+        for r in ngram_char_stats(
+            df, top_ns=(), dup_ns=(), with_line_paragraph=True
+        ).collect()
+    }
+
+
+def test_line_dup_stats_matches_reference(spark):
+    """The line/paragraph lanes of the aggregate reference against the
+    plain-Python reference."""
     df = spark.createDataFrame(_LINE_TEXTS, "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict() for r in line_dup_stats(df).collect()}
+    got = _line_stats(df)
     for doc_id, t in _LINE_TEXTS:
         expect = _py_line_stats(t)
         for k, v in expect.items():
@@ -557,14 +568,18 @@ def test_line_dup_stats_matches_reference(spark):
 
 
 def test_line_dup_stats_udf_matches_batch(spark):
-    from pprl_spark.spark.quality import line_dup_stats, line_dup_stats_udf
+    """The per-row UDF's line/paragraph lanes equal the aggregate
+    reference exactly."""
+    from pprl_spark.spark.quality import ngram_char_stats_udf
 
     df = spark.createDataFrame(_LINE_TEXTS, "doc_id long, text string")
-    batch = {r["doc_id"]: r.asDict() for r in line_dup_stats(df).collect()}
-    for r in df.select("doc_id", line_dup_stats_udf("text").alias("s")).collect():
+    batch = _line_stats(df)
+    udf = ngram_char_stats_udf("text", (), (), with_line_paragraph=True)
+    for r in df.select("doc_id", udf.alias("s")).collect():
         got = r["s"].asDict()
+        assert set(got) == set(batch[r["doc_id"]]) - {"doc_id"}
         for k, v in got.items():
-            assert v == pytest.approx(batch[r["doc_id"]][k]), (r["doc_id"], k)
+            assert v == batch[r["doc_id"]][k], (r["doc_id"], k)
 
 
 def test_filter_documents_line_para_rules(spark):
@@ -638,20 +653,20 @@ def test_streaming_quality_filter_line_para_parity(spark, tmp_path):
 
 
 def test_fused_line_lanes_match_standalone(spark):
-    """ngram_char_stats(with_line_paragraph=True) line/para fractions
-    must equal the standalone line_dup_stats pass exactly."""
-    from pprl_spark.spark.quality import line_dup_stats, ngram_char_stats
+    """ngram_char_stats(with_line_paragraph=True) rides the line/paragraph
+    lanes through the n-gram explode: next to the full n-gram family they
+    must equal the plain-Python line reference, and the n-gram fields
+    must not move when the lanes are added."""
+    from pprl_spark.spark.quality import ngram_char_stats
 
     df = spark.createDataFrame(_LINE_TEXTS, "doc_id long, text string")
-    fused = {
-        r["doc_id"]: (r["dup_line_char_frac"], r["dup_para_char_frac"])
-        for r in ngram_char_stats(df, with_line_paragraph=True).collect()
-    }
-    alone = {
-        r["doc_id"]: (r["dup_line_char_frac"], r["dup_para_char_frac"])
-        for r in line_dup_stats(df).collect()
-    }
-    assert fused == pytest.approx(alone)
+    fused = {r["doc_id"]: r.asDict()
+             for r in ngram_char_stats(df, with_line_paragraph=True).collect()}
+    plain = {r["doc_id"]: r.asDict() for r in ngram_char_stats(df).collect()}
+    for doc_id, t in _LINE_TEXTS:
+        for k, v in _py_line_stats(t).items():
+            assert fused[doc_id][k] == pytest.approx(v), (doc_id, k)
+        assert {k: fused[doc_id][k] for k in plain[doc_id]} == plain[doc_id]
 
 
 # ---------------------------------------------------------------------------
