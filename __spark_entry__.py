@@ -427,7 +427,7 @@ def fingerprint_jaccard(spark, sf_dir):
     fp = docs.select("doc_id", F.md5(normalized).alias("fingerprint"))
     # materialize the tokenization once: both self-join sides (and their
     # differently-pruned exchanges) would otherwise re-run qgram_tokens
-    # over the whole corpus (same move as tf_idf_terms' tf aggregate).
+    # over the whole corpus (same move as bm25_scores' tf aggregate).
     # eager=False does not defer it: AQE runs every exchange below a
     # checkpoint when it is built (here resplit's round-robin one), so
     # building this query starts 1 Spark job beyond the parquet read

@@ -13,9 +13,10 @@ code that reads ``zipimport._zip_directory_cache`` directly (``pkgutil``'s
 module listing of a zip entry) finds no entry between an invalidation and
 the next lookup through an importer.
 
-It is installed only inside a Spark Python worker (``in_spark_worker``).
-Any worker that unpickles one of this package's UDFs imports
-``pprl_spark`` and so installs it for the tasks that follow.
+It is installed only inside a Spark Python worker (``in_spark_worker``):
+by the daemon of a local ``get_spark`` session (``pprl_spark._daemon``),
+before it forks any worker, and otherwise by any worker that unpickles
+one of this package's UDFs, for the tasks that follow.
 ``in_spark_worker`` also gates the rest of the package's worker-only
 set-up, in ``pprl_spark/__init__.py``, which holds on every CPython.
 """

@@ -10,7 +10,7 @@ empty-token guard use :func:`tokenize_checked`
 
 from __future__ import annotations
 
-__all__ = ["tokenize", "tokenize_list", "tokenize_checked"]
+__all__ = ["tokenize", "tokenize_checked"]
 
 
 def tokenize(value: str, q: int = 2, padding: str = "_") -> set[str]:
@@ -18,17 +18,6 @@ def tokenize(value: str, q: int = 2, padding: str = "_") -> set[str]:
     pad = padding * (q - 1)
     padded = f"{pad}{value}{pad}"
     return {padded[i : i + q] for i in range(len(padded) - q + 1)}
-
-
-def tokenize_list(value: str, q: int = 2, padding: str = "_") -> list[str]:
-    """Distinct q-grams in first-occurrence order (useful for Spark arrays
-    where deterministic ordering keeps plans reproducible)."""
-    pad = padding * (q - 1)
-    padded = f"{pad}{value}{pad}"
-    seen: dict[str, None] = {}
-    for i in range(len(padded) - q + 1):
-        seen.setdefault(padded[i : i + q], None)
-    return list(seen)
 
 
 def tokenize_checked(entity_id: str, attr_name: str, value: str, q: int, padding: str) -> set[str]:

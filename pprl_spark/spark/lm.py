@@ -25,7 +25,7 @@ Spark-first shape — no Python in any hot path:
   grams, far smaller than the corpus) and is materialized with a
   ``localCheckpoint`` — scoring joins it 2·(order−1)+1 times, and
   without the materialization each join branch would re-count the whole
-  training corpus (same move as ``textstats.tf_idf_terms``).
+  training corpus (same move as ``textstats.bm25_scores``).
 * **Scoring** explodes the eval corpus once and left-joins the counts
   frame per backoff level on the gram string.  Bigram+ levels are
   shuffle joins on uniformly-hashed gram keys (AQE's skew split covers

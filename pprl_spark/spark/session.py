@@ -51,36 +51,31 @@ def _default_driver_memory() -> str:
     return f"{min(24 << 10, physical_mb // 2)}m"
 
 
-def get_spark(
-    app_name: str = "pprl-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict | None = None,
-) -> SparkSession:
-    master = master or f"local[{_default_cpus()}]"
+def _conf(app_name: str, master: str, shuffle_partitions: int | None,
+          extra_conf: dict | None) -> dict:
+    """The conf ``get_spark`` starts its session with; ``extra_conf`` wins."""
     slots = _task_slots(master)
     if shuffle_partitions is None:
         # local → max(slots, 8); cluster → Spark's 200, AQE coalesces it
         shuffle_partitions = max(slots, 8) if slots else 200
-
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.driver.memory", _default_driver_memory())
-        .config("spark.driver.maxResultSize", "4g")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    conf = {
+        "spark.app.name": app_name,
+        "spark.master": master,
+        "spark.driver.memory": _default_driver_memory(),
+        "spark.driver.maxResultSize": "4g",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         # wide projections/aggregates must stay inside whole-stage
         # codegen; the default 100-field cap silently drops them to the
         # interpreted path (~6x slower measured at sf0.1)
-        .config("spark.sql.codegen.maxFields", "256")
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.ui.enabled", "false")
-    )
+        "spark.sql.codegen.maxFields": "256",
+        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+        "spark.ui.enabled": "false",
+    }
     if slots:
         # Keep at most one idle Python worker per task slot.  A stage with
         # two Arrow-UDF nodes per task (mask(transform(df)) in one stage)
@@ -90,7 +85,19 @@ def get_spark(
         # similarity UDF evaluated once (else its check stage re-forks the
         # freed workers): peak_rss_mb median 3,709 → 3,192 MB, Python
         # workers ~1,107 → ~594 MB, 10 → 6 processes, cpu_s flat.
-        builder = builder.config("spark.python.factory.idleWorkerMaxPoolSize", str(slots))
+        conf["spark.python.factory.idleWorkerMaxPoolSize"] = str(slots)
+        # Fork every worker from a daemon that has already run the
+        # package's worker set-up (pprl_spark/_daemon.py), so a worker
+        # starts with numpy, pandas, pyarrow and pprl_spark loaded and
+        # frozen instead of importing them (~0.5 CPU-s per worker).  Only
+        # local masters: a cluster executor may get the package only
+        # through --py-files, which a daemon cannot see when it starts.
+        # Arrow's bundled jemalloc starts a background purge thread at
+        # pyarrow import; a forked child runs without it anyway (jemalloc
+        # turns background threads off in the child), so the daemon
+        # starts none and forks with its main thread only.
+        conf["spark.python.daemon.module"] = "pprl_spark._daemon"
+        conf["spark.executorEnv.JE_ARROW_MALLOC_CONF"] = "background_thread:false"
     # Spark keeps one Python worker pool per (exec, module, env vars).  The
     # SQL runners (Arrow UDFs, mapInPandas, applyInPandas) add
     # SPARK_SIMPLIFIED_TRACEBACK=1 while its conf is on (the default);
@@ -104,13 +111,39 @@ def get_spark(
     # perfbench `profile` on 4 vCPUs (its check table is a createDataFrame),
     # 10 alternating pairs: peak_rss_mb median 3,415 → 3,121 MB, Python
     # workers ~870 → ~575 MB, 11 → 6 processes, cpu_s flat.
-    builder = builder.config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
-    for key, value in (extra_conf or {}).items():
+    conf["spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK"] = "1"
+    conf.update(extra_conf or {})
+    return conf
+
+
+def _package_root() -> str:
+    """The directory or zip this package was imported from."""
+    return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def get_spark(
+    app_name: str = "pprl-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict | None = None,
+) -> SparkSession:
+    master = master or f"local[{_default_cpus()}]"
+    builder = SparkSession.builder
+    for key, value in _conf(app_name, master, shuffle_partitions, extra_conf).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
+    env = spark.sparkContext.environment
+    if _task_slots(master):
+        # The daemon and the workers import the package the driver did,
+        # wherever the driver runs from: Spark puts executorEnv's
+        # PYTHONPATH (caller entries kept, from any conf source) on theirs.
+        root = _package_root()
+        paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+        if root not in paths:
+            env["PYTHONPATH"] = os.pathsep.join([root, *paths])
     simplified = spark.conf.get("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "true")
     if simplified.strip().lower() != "true":
-        spark.sparkContext.environment.pop("SPARK_SIMPLIFIED_TRACEBACK", None)
+        env.pop("SPARK_SIMPLIFIED_TRACEBACK", None)
     return spark
 
 

@@ -36,8 +36,8 @@ def padded_qgram_tokens(col, q: int = 2, padding: str = "_"):
     """Distinct padded q-grams as a pure Catalyst expression — the
     reference tokenizer's set semantics (common.py:9-28: pad ``(q-1)``
     copies of ``padding`` on both sides, slide a window of ``q``, dedup)
-    with no Python worker.  ``array_distinct`` keeps first-occurrence
-    order, matching kernels.tokenize_list.  Bit-exact parity for the
+    with no Python worker.  ``array_distinct`` keeps the q-grams in
+    first-occurrence order.  Bit-exact parity for the
     *encode* path stays with kernels.tokenize (asserted by unit tests);
     this expression feeds the order-insensitive statistics aggregates."""
     col = F.col(col) if isinstance(col, str) else col

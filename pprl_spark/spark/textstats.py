@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .session import resplit
@@ -225,28 +225,15 @@ def tf_idf_terms(df: DataFrame, id_col: str = "doc_id",
     Plan shape: ONE explode pass → (id, term) groupBy with map-side
     combine for tf; document frequency derives from the tf aggregate
     itself (df(term) = number of tf rows for that term — far smaller
-    than re-scanning the corpus), broadcast back onto the tf rows; N is
-    a scalar via a 1-row broadcast cross join.  The tf aggregate is
-    materialized (localCheckpoint): Catalyst prunes the two
-    consumers' columns differently, so their exchange subtrees never
-    canonicalize equal and exchange reuse does NOT fire — without the
-    materialization each branch would re-tokenize the whole corpus
-    (verified in the adaptive final plan).  tf is the compacted
-    intermediate (distinct (doc, term) pairs), far smaller than the
-    corpus, so this is the standard materialize-the-compaction move.
-    ``eager=False`` does not make it lazy: under AQE, checkpointing runs
-    the aggregate's shuffle map stage when this function is called
-    (building ``tfidf_top_terms`` starts 2 Spark jobs beyond the parquet
-    read, sf0.1 on local[4]); only the final reduce waits for an action.
+    than re-scanning the corpus) as ``count(*)`` over a ``term`` window
+    on the tf rows, so the corpus is tokenized once and no second branch
+    reads the aggregate; N is a scalar via a 1-row broadcast cross join.
     """
     terms = _word_explode(df, id_col, text_col)
-    tf = terms.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     n_docs = df.select(F.count(F.lit(1)).alias("n_docs"))
     return (
-        tf.join(F.broadcast(dfreq), "term")
+        tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
         .crossJoin(F.broadcast(n_docs))
         .select(
             id_col,
@@ -275,9 +262,10 @@ def bm25_scores(
     with idf(t) = ln(1 + (N-df+0.5)/(df+0.5)).  The query term list is a
     broadcast literal; the corpus is tokenized ONCE — document length,
     per-term tf, and document frequency all derive from the same
-    materialized (id, term, tf) aggregate (see tf_idf_terms for why the
-    materialization is load-bearing: per-branch column pruning defeats
-    exchange reuse).
+    materialized (id, term, tf) aggregate.  The materialization is
+    load-bearing: Catalyst prunes the consumers' columns differently, so
+    their exchange subtrees never canonicalize equal, exchange reuse does
+    not fire, and each branch would re-tokenize the whole corpus.
 
     Output contains ONE ROW PER DOCUMENT THAT MATCHES ≥1 QUERY TERM —
     documents containing none of the terms (or with empty text) produce
@@ -287,9 +275,10 @@ def bm25_scores(
     result and ``coalesce(bm25, 0.0)``.
     """
     terms = _word_explode(df, id_col, text_col)
-    # as in tf_idf_terms, the aggregate's shuffle runs when this is called:
-    # building bm25_query_scores starts 2 Spark jobs beyond the parquet read
-    # (sf0.1, local[4])
+    # eager=False does not make the checkpoint lazy: under AQE the
+    # aggregate's shuffle runs when this is called (building
+    # bm25_query_scores starts 2 Spark jobs beyond the parquet read, sf0.1,
+    # local[4]); only the final reduce waits for an action
     all_tf = terms.groupBy(id_col, "term").agg(
         F.count(F.lit(1)).alias("tf")
     ).localCheckpoint(eager=False)

@@ -298,3 +298,15 @@ def test_similarity_matchers_equal_kernel_and_keep_input_pushdown(spark, tmp_pat
     assert got(match_pairwise(dom, rng, cfg)) == diagonal
     # position alignment zips the two inputs in their scan order
     assert got(match_pairwise(dom, rng, cfg, align="position")) == expected(zip(d_rows, r_rows))
+
+
+def test_tfidf_counts_document_frequency_over_a_window(spark):
+    """``tf_idf_terms`` takes each term's document frequency as a
+    ``count(*)`` over a ``term`` window on the tf aggregate: no df
+    aggregate is broadcast back onto the tf rows (the one broadcast is
+    the 1-row document count), and the corpus is exploded once."""
+    plan = _final_plan_after_collect(E.tfidf_top_terms(spark, SF))
+    assert "Window [count(1) windowspecdefinition(term" in plan, plan
+    assert plan.count("BroadcastExchange") == 1 and "BroadcastHashJoin" not in plan, plan
+    assert "functions=[count(1)], output=[n_docs" in plan, plan
+    assert plan.count("Generate explode") == 1, plan

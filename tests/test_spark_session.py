@@ -73,8 +73,9 @@ def test_task_slots_parse_every_master_form(monkeypatch):
 
 
 def my_daemons():
-    # each pyspark.daemon under this process's own JVM, with the workers
-    # it forked (other sessions on the host have daemons of their own)
+    # each Python worker daemon (pyspark.daemon, or pprl_spark._daemon in a
+    # local get_spark session) under this process's own JVM, with the
+    # workers it forked (other sessions on the host have daemons of their own)
     cmdline, parent, children = {}, {}, {}
     for entry in os.listdir("/proc"):
         if entry.isdigit():
@@ -88,8 +89,10 @@ def my_daemons():
     while frontier:
         frontier = [kid for pid in frontier for kid in children.get(pid, [])]
         mine.update(frontier)
-    # a forked worker keeps its daemon's command line
-    forks = {pid for pid in mine if b"pyspark.daemon" in cmdline.get(pid, b"")}
+    # a forked worker keeps its daemon's command line, `python -m <daemon>
+    # <worker>` (the JVM's own command line may name the daemon in a --conf)
+    daemons = ([b"-m", b"pyspark.daemon"], [b"-m", b"pprl_spark._daemon"])
+    forks = {pid for pid in mine if cmdline.get(pid, b"").split(b"\0")[1:3] in daemons}
     return {pid: [kid for kid in children.get(pid, []) if kid in forks]
             for pid in forks if parent[pid] not in forks}
 
@@ -98,14 +101,22 @@ def my_daemons():
 _PROC_WALK = "import os\n\n\n" + inspect.getsource(my_daemons)
 
 
-def _run_session_script(script: str, *args: str) -> dict:
+_ROOT = str(Path(__file__).resolve().parents[1])
+
+
+def _run_session_script(script: str, *args: str, cwd: str = _ROOT) -> dict:
     """Run ``script`` in its own Python process, so that its session's
-    worker pool is its own, and parse its last stdout line as JSON."""
-    root = str(Path(__file__).resolve().parents[1])
+    worker pool is its own, and parse its last stdout line as JSON.  Run
+    from the checkout, the checkout goes on ``PYTHONPATH``; run from
+    anywhere else, ``PYTHONPATH`` is unset and the script must put the
+    checkout on ``sys.path`` itself."""
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
-    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    if cwd == _ROOT:
+        env["PYTHONPATH"] = os.pathsep.join(p for p in (_ROOT, env.get("PYTHONPATH")) if p)
+    else:
+        env.pop("PYTHONPATH", None)
     out = subprocess.run(
-        [sys.executable, "-c", script, *args], env=env, cwd=root,
+        [sys.executable, "-c", script, *args], env=env, cwd=cwd,
         capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-4000:]
@@ -170,6 +181,98 @@ def test_get_spark_frees_extra_python_workers_after_a_two_udf_stage():
     assert got["peak"] > 2, got  # the stage did need a second worker per task
     assert got["idle"] <= 2, got
     assert got["cap"] == "2" and got["shuffle_partitions"] == "8", got
+
+
+def test_get_spark_sets_the_preloaded_daemon_for_local_masters_only():
+    """A local master forks its Python workers from ``pprl_spark._daemon``;
+    a cluster master keeps ``pyspark.daemon``, because its executors may
+    get the package only through ``--py-files``, which a daemon cannot see
+    when it starts.  The caller's ``extra_conf`` still wins."""
+    for local in ("local", "local[2]", "local[*]", "local[4,2]"):
+        conf = S._conf("t", local, None, None)
+        assert conf["spark.python.daemon.module"] == "pprl_spark._daemon", local
+        assert conf["spark.executorEnv.JE_ARROW_MALLOC_CONF"] == "background_thread:false", local
+    for cluster in ("spark://head:7077", "yarn", "k8s://https://api:6443", "local-cluster[2,1,1024]"):
+        conf = S._conf("t", cluster, None, None)
+        assert "spark.python.daemon.module" not in conf, cluster
+        assert "spark.executorEnv.JE_ARROW_MALLOC_CONF" not in conf, cluster
+    stock = {"spark.python.daemon.module": "pyspark.daemon"}
+    assert S._conf("t", "local[2]", None, stock)["spark.python.daemon.module"] == "pyspark.daemon"
+
+
+_PRELOADED_DAEMON = _PROC_WALK + """
+import gc, json, sys
+from pprl_spark.spark.session import get_spark
+
+spark = get_spark(master="local[2]", extra_conf={"spark.ui.showConsoleProgress": "false"})
+
+
+def probe(batches):
+    # imports nothing itself: what the worker has loaded, it had at its fork
+    for batch in batches:
+        pass
+    yield batch.__class__.from_pydict({
+        "pid": [os.getpid()],
+        "modules": [sorted(m for m in ("pandas", "pyarrow", "pprl_spark") if m in sys.modules)],
+        "frozen": [gc.get_freeze_count()],
+    })
+
+
+# the session's first Python job: each task runs in a freshly forked worker
+rows = spark.range(0, 2, 1, 2).mapInArrow(probe, "pid long, modules array<string>, frozen long").collect()
+daemons = my_daemons()
+threads = {pid: int(open(f"/proc/{pid}/status").read().split("Threads:")[1].split()[0]) for pid in daemons}
+print(json.dumps({
+    "daemons": {pid: open(f"/proc/{pid}/cmdline", "rb").read().decode().split("\\0") for pid in daemons},
+    "threads": threads, "workers": [r.asDict() for r in rows],
+}))
+spark.stop()
+"""
+
+
+def test_local_workers_fork_from_a_daemon_that_preloaded_the_package():
+    """The one daemon of a local ``get_spark`` session runs
+    ``pprl_spark._daemon`` with a single thread (no other thread's lock
+    can be held across a fork), and the first task of each worker finds
+    pandas, pyarrow and the package already loaded and the heap frozen."""
+    got = _run_session_script(_PRELOADED_DAEMON)
+    assert len(got["daemons"]) == 1, got
+    (cmdline,) = got["daemons"].values()
+    assert cmdline[1:3] == ["-m", "pprl_spark._daemon"], got
+    assert list(got["threads"].values()) == [1], got
+    assert len(got["workers"]) == 2, got
+    for worker in got["workers"]:
+        assert worker["modules"] == ["pandas", "pprl_spark", "pyarrow"], got
+        assert worker["frozen"] >= 50_000, got
+
+
+_FROM_OUTSIDE = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+from pprl_spark.config import CLKFilter, HashConfig, HashFunctionConfig, MaskConfig
+from pprl_spark.spark.mask import mask
+from pprl_spark.spark.session import get_spark
+
+spark = get_spark(master="local[2]", extra_conf={"spark.ui.showConsoleProgress": "false"})
+mcfg = MaskConfig(filter=CLKFilter(1024, 5), hash=HashConfig(HashFunctionConfig(("sha256",)), "double_hash"),
+                  token_size=2, padding="_")
+records = spark.range(0, 100, 1, 2).select(
+    F.col("id").cast("string").alias("id"),
+    F.concat(F.lit("Name "), F.col("id").cast("string")).alias("name"))
+row = mask(records, mcfg, ["name"]).agg(F.count("bloom").alias("n"), F.count("*").alias("rows")).first()
+print(json.dumps(row.asDict()))
+spark.stop()
+"""
+
+
+def test_get_spark_workers_import_the_package_from_any_working_directory(tmp_path):
+    """A script run from outside the checkout, with no ``PYTHONPATH``,
+    that puts the checkout on ``sys.path`` itself can run a library UDF
+    through ``get_spark``: the daemon and its workers get the package's
+    directory on their ``PYTHONPATH``."""
+    got = _run_session_script(_FROM_OUTSIDE, _ROOT, cwd=str(tmp_path))
+    assert got == {"n": 100, "rows": 100}, got
 
 
 _ONE_POOL = _PROC_WALK + """
@@ -281,10 +384,11 @@ def test_in_spark_worker_reads_both_worker_env_shapes(monkeypatch, env, worker):
 
 
 def test_library_workers_freeze_their_import_heap(spark):
-    """A worker that has run one of the library's Arrow operators has
-    imported ``pprl_spark`` and frozen its import-time heap, so the
-    ``gc.collect()`` pyspark.daemon runs after each task walks only the
-    objects made since (the unfrozen worker tracks ~74k)."""
+    """Every worker of a ``get_spark`` session, whether it has run one of
+    the library's Arrow operators or not, has ``pprl_spark`` loaded and
+    its import-time heap frozen, so the ``gc.collect()`` pyspark.daemon
+    runs after each task walks only the objects made since (the unfrozen
+    worker tracks ~74k)."""
     from pprl_spark.sketch import HyperLogLog
     from pprl_spark.sketch.spark_agg import sketch_column
 
@@ -313,12 +417,8 @@ def test_library_workers_freeze_their_import_heap(spark):
     rows = spark.range(0, 4, 1, 4).mapInPandas(
         probe, "pid long, library boolean, frozen long, live long, collect_s double"
     ).collect()
-    assert any(r.library for r in rows), rows
     for r in rows:
-        if r.library:
-            assert r.frozen >= 50_000 and r.live < 10_000, rows
-        else:  # a worker that never loaded the library keeps the stock gc
-            assert r.frozen == 0, rows
+        assert r.library and r.frozen >= 50_000 and r.live < 10_000, rows
 
 
 def test_driver_import_freezes_nothing():
@@ -335,7 +435,7 @@ def test_driver_import_freezes_nothing():
     out = subprocess.run(
         [sys.executable, "-c", "import gc, sys, pprl_spark; print(gc.get_freeze_count(), "
          "sorted({'pandas', 'pyarrow'} & set(sys.modules)))"],
-        env=env, cwd=str(Path(__file__).resolve().parents[1]),
+        env=env, cwd=_ROOT,
         capture_output=True, text=True, timeout=120,
     )
     assert out.returncode == 0, out.stderr[-2000:]
