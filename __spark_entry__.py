@@ -459,8 +459,8 @@ def lm_perplexity(spark, sf_dir):
     doc_ids, perplexity-scoring the odd doc_ids (the held-out split
     exercises every backoff path: seen trigrams, bigram/unigram backoff,
     and the unseen-word count-1 floor).  Pure Catalyst: explode + hash-agg
-    training counts (materialized once), per-level gram joins with the
-    unigram level broadcast, backoff cascade as one CASE expression."""
+    training counts (materialized once), per-level gram joins (AQE picks
+    each join strategy), backoff cascade as one CASE expression."""
     from pprl_spark.spark.lm import score_documents, train_stupid_backoff
 
     docs = _load(spark, sf_dir, "documents")

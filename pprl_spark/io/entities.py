@@ -23,6 +23,7 @@ __all__ = [
     "read_entity_csv",
     "read_bit_vector_csv",
     "write_bit_vector_csv",
+    "wire_base64",
     "write_match_csv",
     "read_pages",
 ]
@@ -83,11 +84,16 @@ def read_bit_vector_csv(
 def write_bit_vector_csv(df: DataFrame, path: str, bloom_col: str = "bloom") -> None:
     """(id, bloom BINARY) → CSV (id, value=base64), reference mask-sink
     shape (cli.py:60-93)."""
-    # translate strips Spark base64's MIME \r\n line wraps — the reference
-    # wire value (bits.py:148-158) is unchunked base64
-    df.select(
-        "id", F.translate(F.base64(F.col(bloom_col)), "\r\n", "").alias("value")
-    ).write.mode("overwrite").csv(path, header=True)
+    df.select("id", wire_base64(bloom_col).alias("value")).write.mode(
+        "overwrite"
+    ).csv(path, header=True)
+
+
+def wire_base64(col: str) -> F.Column:
+    """Packed vector → the reference's wire value (bits.py:148-158),
+    which is unchunked base64.  Spark's ``base64`` emits MIME line wraps
+    (``\\r\\n`` every 76 chars) on long inputs; ``translate`` strips them."""
+    return F.translate(F.base64(F.col(col)), "\r\n", "")
 
 
 def write_match_csv(

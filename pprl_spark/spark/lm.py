@@ -28,10 +28,9 @@ Spark-first shape — no Python in any hot path:
   training corpus (same move as ``textstats.bm25_scores``).
 * **Scoring** explodes the eval corpus once and left-joins the counts
   frame per backoff level on the gram string.  Bigram+ levels are
-  shuffle joins on uniformly-hashed gram keys (AQE's skew split covers
-  Zipf-hot bigrams); the unigram level is Zipf-extreme ("the" at every
-  other position), so it is **broadcast** by default — vocabulary is
-  tiny relative to the corpus.  The backoff cascade itself is a single
+  joins with no strategy hint: AQE picks broadcast or shuffle from each
+  level's runtime size, and its skew split covers Zipf-hot keys ("the"
+  at every other position).  The backoff cascade itself is a single
   Catalyst CASE expression; the per-document reduce is a hash agg.
 
 At 10^12 pages the counts frame for order 3 is itself web-scale;
@@ -186,7 +185,6 @@ def stupid_backoff_scores(
     text_col: str = "text",
     order: int = 3,
     alpha: float = 0.4,
-    broadcast_unigrams: bool = True,
 ) -> DataFrame:
     """Per-document Stupid Backoff log-score and perplexity.
 
@@ -197,10 +195,10 @@ def stupid_backoff_scores(
     first token is scored by the raw unigram model, no alpha penalty).
 
     ``counts`` must come from :func:`train_stupid_backoff` with the same
-    ``order`` (higher-order counts present are ignored).  Unigram-level
-    joins (current + previous word) are broadcast when
-    ``broadcast_unigrams`` — the Zipf-hot keys of the stream — while
-    bigram+ levels stay shuffle joins under AQE skew handling.
+    ``order`` (higher-order counts present are ignored).  No level join
+    carries a strategy hint: AQE broadcasts a level that is small at run
+    time and splits skewed shuffle partitions otherwise.  Only
+    the one-row total is broadcast.
     """
     if order < 2:
         raise ValueError(f"order must be >= 2 (got {order})")
@@ -210,10 +208,9 @@ def stupid_backoff_scores(
     w = [F.col(f"w{k}") for k in range(order)]
 
     def _level(n: int) -> DataFrame:
-        lvl = counts.filter(F.col("n") == n).select(
+        return counts.filter(F.col("n") == n).select(
             F.col(gcol).alias(f"__g{n}"), F.col("cnt").alias(f"__c{n}")
         )
-        return F.broadcast(lvl) if n == 1 and broadcast_unigrams else lvl
 
     uni = _level(1)
     scored = pos.join(
@@ -223,8 +220,6 @@ def stupid_backoff_scores(
     ctx1 = counts.filter(F.col("n") == 1).select(
         F.col(gcol).alias("__gp"), F.col("cnt").alias("__ctx2")
     )
-    if broadcast_unigrams:
-        ctx1 = F.broadcast(ctx1)
     scored = scored.join(
         ctx1, _gram_key(1, w[1], hashed) == F.col("__gp"), "left"
     ).drop("__gp")
@@ -286,14 +281,11 @@ def score_documents(
     text_col: str = "text",
     order: int = 3,
     alpha: float = 0.4,
-    broadcast_unigrams: bool = True,
 ) -> DataFrame:
     """All input rows scored — token-less documents re-attached with
     sentinels (``n_tokens=0, avg_logprob=0.0, perplexity=-1.0``) so the
     result is NULL-free and row-complete."""
-    scores = stupid_backoff_scores(
-        df, counts, id_col, text_col, order, alpha, broadcast_unigrams
-    )
+    scores = stupid_backoff_scores(df, counts, id_col, text_col, order, alpha)
     return df.select(id_col).join(scores, id_col, "left").select(
         id_col,
         F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),

@@ -47,6 +47,7 @@ __all__ = [
     "LSHConfig",
     "band_positions",
     "band_weights",
+    "band_signer",
     "band_signatures_udf",
     "add_band_signatures",
     "tag_sides",
@@ -108,28 +109,38 @@ def band_weights(cfg: LSHConfig) -> np.ndarray:
     return np.int64(1) << j
 
 
-def band_signatures_udf(cfg: LSHConfig):
-    """pandas UDF: packed bloom bytes → array<long> of band signatures.
+def band_signer(cfg: LSHConfig):
+    """numpy fold behind every band-signature UDF: a sequence of packed
+    vectors → (N, num_bands) int64 signatures.
 
-    Vectorized across the Arrow batch: unpack all vectors into an
+    Vectorized across the batch: unpack all vectors into an
     (N, num_bits) bit matrix once, gather the band positions, and fold
     each band's r bits into an int64 with a power-of-two dot product.
+    A None vector is signed as all-zero (callers drop its bands).
     """
     positions = band_positions(cfg)
     weights = band_weights(cfg)
     n_bytes = (cfg.num_bits + 7) // 8
+    zero = bytes(n_bytes)
 
-    zero = bytes(n_bytes)  # stand-in for a null vector, whose bands are dropped
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _bands(blooms: pd.Series) -> pd.Series:
+    def sign(blooms) -> np.ndarray:
         packed = b"".join(zero if b is None else b for b in blooms)
         raw = np.frombuffer(packed, dtype=np.uint8).reshape(len(blooms), n_bytes)
         bits = np.unpackbits(raw, axis=1, count=cfg.num_bits)
         # (N, num_bands, band_width) → (N, num_bands) int64 signatures
-        sampled = bits[:, positions]
-        sigs = sampled.astype(np.int64) @ weights
-        return pd.Series(list(sigs))
+        return bits[:, positions].astype(np.int64) @ weights
+
+    return sign
+
+
+def band_signatures_udf(cfg: LSHConfig):
+    """pandas UDF: packed bloom bytes → array<long> of band signatures
+    (:func:`band_signer`)."""
+    sign = band_signer(cfg)
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def _bands(blooms: pd.Series) -> pd.Series:
+        return pd.Series(list(sign(blooms)))
 
     return _bands
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
 from ..config import MaskConfig
+from ..io.entities import wire_base64
 from ..kernels.encode import BloomEncoder
 
 __all__ = ["mask", "mask_b64"]
@@ -90,16 +91,12 @@ def mask_with_bands(
     signatures at encode time also matches the store-once LSH design:
     signatures persist next to the vector in the encode checkpoint).
     """
-    import numpy as np
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    from .lsh import band_positions, band_weights
+    from .lsh import band_signer
 
     cols = _needed_columns(cfg, attributes)
-    positions = band_positions(lsh_cfg)
-    weights = band_weights(lsh_cfg)
-    num_bits = lsh_cfg.num_bits
-    n_bytes = (num_bits + 7) // 8
+    sign = band_signer(lsh_cfg)
     encoder_holder: list[BloomEncoder] = []
 
     out_type = StructType(
@@ -116,14 +113,7 @@ def mask_with_bands(
         encoder = encoder_holder[0]
         columns = {name: series.tolist() for name, series in zip(cols, attr_series)}
         blooms = encoder.encode_batch(ids.tolist(), columns)
-        if blooms:
-            raw = np.frombuffer(b"".join(blooms), dtype=np.uint8).reshape(len(blooms), n_bytes)
-            bits = np.unpackbits(raw, axis=1, count=num_bits)
-            sigs = bits[:, positions].astype(np.int64) @ weights
-            bands = list(sigs)
-        else:
-            bands = []
-        return pd.DataFrame({"bloom": blooms, "bands": bands})
+        return pd.DataFrame({"bloom": blooms, "bands": list(sign(blooms))})
 
     packed = df.select(
         F.col(id_col),
@@ -144,9 +134,4 @@ def mask_b64(
     """Like :func:`mask` but with the reference's base64 wire encoding —
     the CSV mask sink shape (cli.py:60-93: columns ``id, value``)."""
     masked = mask(df, cfg, attributes, id_col=id_col, output_col="__bloom__")
-    # Spark's base64 emits MIME line wraps (\r\n every 76 chars) on long
-    # inputs; the reference wire format (bits.py:148-158) is unchunked.
-    return masked.select(
-        F.col(id_col),
-        F.translate(F.base64(F.col("__bloom__")), "\r\n", "").alias(output_col),
-    )
+    return masked.select(F.col(id_col), wire_base64("__bloom__").alias(output_col))

@@ -94,23 +94,18 @@ def stratified_sample(
     k: int,
     salt: str = "",
     rank_col: str = "sample_rank",
-    _margin: float | None = None,
 ) -> DataFrame:
     """Exactly ``min(k, |group|)`` rows per group, chosen and ORDERED by
     the content-keyed md5 lane — the balanced-per-stratum sample (k docs
     per language/domain) that survives recompute, repartition, and
     retries.  Appends ``rank_col`` (1..k within the group, lane order).
 
-    Semantics: rank rows within each group by ``(lane(key), key)`` and
-    keep rank <= k.  The IMPLEMENTATION avoids sorting whole groups at
-    scale: group sizes are a hash aggregate (broadcast back), a map-side
-    lane threshold with a +4σ+16 margin pre-filters each group to ~k
-    candidates, and only the candidates are window-sorted.  Groups where
-    the binomial tail bites anyway (survivors < min(k, n)) fall back to
-    a full window — detected with a lazy aggregate, so the common case
-    stays one scan + one k-sized sort per group, and the result is
-    EXACT either way (the fallback is a correctness net, not an
-    approximation).  NULL group or key rows are dropped (consistent
+    One window: rank rows within each group by ``(lane(key), key)`` and
+    keep rank <= k.  For k up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default)
+    Spark's ``InferWindowGroupLimit`` puts a partial per-group top-k
+    below the exchange, so at most k rows per group and map task are
+    shuffled.  NULL group or key rows are dropped (consistent
     with ``hash_sample``'s NULL policy).
     """
     if k <= 0:
@@ -119,52 +114,14 @@ def stratified_sample(
     keyc = F.col(key) if isinstance(key, str) else key
     from pyspark.sql import Window
 
-    buckets = _MOD
-    lane = hash_bucket(keyc, buckets, salt)
-    base = (
-        df.where(group_col.isNotNull() & keyc.isNotNull())
-        .withColumn("__lane", lane)
-        .withColumn("__grp", group_col)
-    )
-    sizes = base.groupBy("__grp").agg(F.count(F.lit(1)).alias("__n"))
-    # _margin override exists to force the shortfall fallback in tests
-    margin = _margin if _margin is not None else k + 4 * (k ** 0.5) + 16
-    sized = base.join(F.broadcast(sizes), "__grp")
-    thresh = F.least(
-        F.lit(buckets),
-        F.ceil(F.lit(float(buckets)) * F.lit(margin) / F.col("__n")).cast("long"),
-    )
-    cand = sized.where(F.col("__lane") < thresh)
-
     win = Window.partitionBy("__grp").orderBy("__lane", keyc.cast("string"))
-    ranked = cand.withColumn(rank_col, F.row_number().over(win))
-
-    # correctness net: a group is short iff its candidate pool is
-    # smaller than min(k, n) — rerank those groups over ALL their rows.
-    # Anchor on `sizes` (LEFT join), not on the candidate aggregate: a
-    # group whose pre-filter kept ZERO rows has no candidate-count row
-    # at all and must still be detected.
-    short = (
-        sizes.join(
-            cand.groupBy("__grp").agg(F.count(F.lit(1)).alias("__c")),
-            "__grp",
-            "left",
-        )
-        .where(
-            F.coalesce(F.col("__c"), F.lit(0))
-            < F.least(F.lit(k), F.col("__n"))
-        )
-        .select("__grp")
-    )
-    ok = ranked.join(F.broadcast(short), "__grp", "left_anti")
-    redo = (
-        sized.join(F.broadcast(short), "__grp")
-        .withColumn(rank_col, F.row_number().over(win))
-    )
     return (
-        ok.unionByName(redo)
+        df.where(group_col.isNotNull() & keyc.isNotNull())
+        .withColumn("__lane", hash_bucket(keyc, _MOD, salt))
+        .withColumn("__grp", group_col)
+        .withColumn(rank_col, F.row_number().over(win))
         .where(F.col(rank_col) <= k)
-        .drop("__lane", "__grp", "__n")
+        .drop("__lane", "__grp")
     )
 
 

@@ -32,57 +32,23 @@ __all__ = [
 ]
 
 
-def padded_qgram_tokens(col, q: int = 2, padding: str = "_"):
-    """Distinct padded q-grams as a pure Catalyst expression — the
-    reference tokenizer's set semantics (common.py:9-28: pad ``(q-1)``
-    copies of ``padding`` on both sides, slide a window of ``q``, dedup)
-    with no Python worker.  ``array_distinct`` keeps the q-grams in
-    first-occurrence order.  Bit-exact parity for the
-    *encode* path stays with kernels.tokenize (asserted by unit tests);
-    this expression feeds the order-insensitive statistics aggregates."""
+def qgram_windows(col, q: int = 2, padding: str = "_"):
+    """ALL padded q-gram windows (duplicates kept) — the explode feed for
+    consumers that count every occurrence.  :func:`padded_qgram_tokens`
+    is the per-row distinct set of the same windows."""
     col = F.col(col) if isinstance(col, str) else col
     pad = F.lit(padding * (q - 1))
     padded = F.concat(pad, col, pad)
-    # NULL input short-circuits to NULL (not the empty array): aggregates
-    # like avg(size(tokens)) must EXCLUDE null rows, matching the former
-    # UDF tokenizer's semantics — an empty array would count them as 0
-    # tokens and shift estimated weights on nullable columns (ADVICE r2).
+    # NULL input short-circuits to NULL (not the empty array): explode
+    # drops it, and aggregates like avg(size(tokens)) must EXCLUDE null
+    # rows, matching the former UDF tokenizer's semantics — an empty
+    # array would count them as 0 tokens and shift estimated weights on
+    # nullable columns (ADVICE r2).
     # The inner when() guards sequence()'s descending-range behavior when
     # the padded value is shorter than q (possible with empty padding):
     # the reference tokenizer returns the empty set there.  ``padded`` is
     # bound once per row (textstats.bind_once): as a free subtree the
     # concat would re-run at EVERY window — O(len²) per value.
-    return F.when(
-        col.isNull(), F.lit(None).cast("array<string>")
-    ).otherwise(
-        bind_once(
-            padded,
-            lambda p: F.when(
-                F.length(p) >= q,
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.length(p) - (q - 1)),
-                        lambda i: F.substring(p, i, q),
-                    )
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        )
-    )
-
-
-def qgram_windows(col, q: int = 2, padding: str = "_"):
-    """ALL padded q-gram windows (duplicates kept) — the explode feed for
-    consumers that count every occurrence.  Consumers that need set
-    semantics may explode ``array_distinct`` of it (or
-    :func:`padded_qgram_tokens`, as :func:`token_frequencies` does): on
-    Spark 4.1.2 Generate evaluates its child once per INPUT row, so the
-    per-row dedup is linear (r5 re-measured; the older per-OUTPUT-row
-    re-evaluation that made it quadratic no longer reproduces)."""
-    col = F.col(col) if isinstance(col, str) else col
-    pad = F.lit(padding * (q - 1))
-    padded = F.concat(pad, col, pad)
-    # NULL input → NULL (explode drops it), mirroring padded_qgram_tokens;
-    # padded bound once (see padded_qgram_tokens)
     return F.when(
         col.isNull(), F.lit(None).cast("array<string>")
     ).otherwise(
@@ -97,6 +63,18 @@ def qgram_windows(col, q: int = 2, padding: str = "_"):
             ).otherwise(F.array().cast("array<string>")),
         )
     )
+
+
+def padded_qgram_tokens(col, q: int = 2, padding: str = "_"):
+    """Distinct padded q-grams as a pure Catalyst expression — the
+    reference tokenizer's set semantics (common.py:9-28: pad ``(q-1)``
+    copies of ``padding`` on both sides, slide a window of ``q``, dedup)
+    with no Python worker.  ``array_distinct`` keeps the q-grams in
+    first-occurrence order; NULL input gives NULL.  Bit-exact parity for
+    the *encode* path stays with kernels.tokenize (asserted by unit
+    tests); this expression feeds the order-insensitive statistics
+    aggregates."""
+    return F.array_distinct(qgram_windows(col, q, padding))
 
 
 def with_tokens(df: DataFrame, column: str, q: int = 2, padding: str = "_",

@@ -286,7 +286,8 @@ def boilerplate_line_stats(
     first (so ``count(*)`` == document count, no ``countDistinct``
     shuffle), hashed map-side, and only slim ``(domain, hash)`` rows
     reach the exchange — line text never shuffles.  The per-domain
-    document totals are a second tiny aggregate broadcast back.
+    document totals are a second aggregate joined back; AQE picks the
+    join strategy from their runtime size.
     """
     dom = (
         F.coalesce(F.col(domain_col), F.lit("")) if domain_col else F.lit("")
@@ -305,7 +306,7 @@ def boilerplate_line_stats(
         .groupBy("domain")
         .agg(F.count(F.lit(1)).alias("__total"))
     )
-    return freq.join(F.broadcast(totals), "domain").select(
+    return freq.join(totals, "domain").select(
         "domain",
         "line_hash",
         "n_docs",

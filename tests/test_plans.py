@@ -3,6 +3,8 @@ engine viable at 100 TB — predicate pushdown to the scan, column pruning,
 broadcast joins for dims, shuffle-free narrow stages, and whole-stage
 codegen around the UDF boundaries."""
 
+import contextlib
+
 import pytest
 
 import __spark_entry__ as E
@@ -310,3 +312,57 @@ def test_tfidf_counts_document_frequency_over_a_window(spark):
     assert plan.count("BroadcastExchange") == 1 and "BroadcastHashJoin" not in plan, plan
     assert "functions=[count(1)], output=[n_docs" in plan, plan
     assert plan.count("Generate explode") == 1, plan
+
+
+@contextlib.contextmanager
+def _no_auto_broadcast(spark):
+    """AQE may not turn a join into a broadcast by size: any
+    ``BroadcastExchange`` left in the plan comes from an explicit hint."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_stratified_sample_is_one_window_with_a_partial_group_limit(spark):
+    """``stratified_sample`` is one ``row_number`` window: no join, no
+    broadcast, and Spark's partial per-group top-k runs below the
+    exchange, so each map task ships at most k rows per group."""
+    from pyspark.sql import functions as F
+
+    from pprl_spark.spark.sampling import stratified_sample
+
+    df = spark.range(0, 2000, 1, 4).select(
+        (F.col("id") % 37).cast("string").alias("grp"), F.col("id").alias("doc_id")
+    )
+    with _no_auto_broadcast(spark):
+        plan = _final_plan_after_collect(stratified_sample(df, "grp", "doc_id", k=10))
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+    below = plan.split("Exchange hashpartitioning(__grp", 1)[1]
+    assert "WindowGroupLimit" in below and "row_number(), 10, Partial" in below, plan
+
+
+def test_lm_scoring_broadcasts_only_the_total(spark):
+    """``score_documents`` hints no broadcast of a gram level: the one
+    ``BroadcastExchange`` is the one-row total-token count."""
+    from pprl_spark.spark.lm import score_documents, train_stupid_backoff
+
+    docs = E._load(spark, SF, "documents")
+    with _no_auto_broadcast(spark):
+        counts = train_stupid_backoff(docs.where("doc_id % 2 = 0"))
+        scored = score_documents(docs.where("doc_id % 2 = 1"), counts)
+        plan = _final_plan_after_collect(scored)
+    assert plan.count("BroadcastExchange") == 1, plan
+
+
+def test_boilerplate_line_stats_hints_no_broadcast(spark):
+    """The per-domain document totals join back without a hint."""
+    from pprl_spark.spark.webtext import boilerplate_line_stats
+
+    docs = E._load(spark, SF, "documents")
+    with _no_auto_broadcast(spark):
+        plan = _final_plan_after_collect(boilerplate_line_stats(docs, domain_col="source"))
+    assert "BroadcastExchange" not in plan, plan

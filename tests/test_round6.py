@@ -1717,15 +1717,17 @@ def test_stratified_sample_exact_and_deterministic(spark):
 
 
 def test_stratified_sample_shortfall_fallback(spark):
-    """With a sabotaged margin the candidate pre-filter undersamples;
-    the fallback window must still return the EXACT top-k."""
+    """Each map partition keeps only a partial per-group top-k before the
+    exchange (Spark's WindowGroupLimit); with every group spread over
+    many partitions, no partition alone holds a group's top-k, and the
+    merged window must still return the EXACT top-k."""
     from pprl_spark.spark.sampling import stratified_sample
 
     rows = [(f"g{i % 2}", i) for i in range(100)]
     df = spark.createDataFrame(rows, "grp string, doc_id long")
     exp = _naive_stratified(rows, k=10)
     got = {}
-    res = stratified_sample(df, "grp", "doc_id", k=10, _margin=0.01)
+    res = stratified_sample(df.repartition(9), "grp", "doc_id", k=10)
     for r in res.collect():
         got.setdefault(r["grp"], {})[r["doc_id"]] = r["sample_rank"]
     assert got == exp
