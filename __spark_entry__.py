@@ -222,13 +222,6 @@ def distinct_users_exact(spark, sf_dir):
     return ev.agg(F.countDistinct("user_id").alias("distinct_users"))
 
 
-def _doc_tokens(spark, sf_dir):
-    from pprl_spark.spark.stats import with_tokens
-
-    return with_tokens(resplit(_load(spark, sf_dir, "documents")),
-                       "text", q=2, padding="_")
-
-
 def token_frequencies(spark, sf_dir):
     from pprl_spark.spark.stats import token_frequencies as tf
 
@@ -236,57 +229,27 @@ def token_frequencies(spark, sf_dir):
     return tf(docs.select("text"), "text", q=2, padding="_")
 
 
-def avg_token_count(spark, sf_dir):
-    return _doc_tokens(spark, sf_dir).agg(
-        F.round(F.avg(F.size("tokens")), 6).alias("avg_tokens")
-    )
-
-
-def ngram_entropy(spark, sf_dir):
-    # H = log2(N) − (Σ f·log2 f)/N — one aggregation, same formula as the
-    # oracle so the float path matches to well past 6 dp
-    freq = token_frequencies(spark, sf_dir)
-    return freq.agg(
-        F.sum("freq").alias("__n"),
-        F.sum(F.col("freq") * F.log2("freq")).alias("__flogf"),
-    ).select(
-        F.round(F.log2(F.col("__n")) - F.col("__flogf") / F.col("__n"), 6).alias("entropy")
-    )
-
-
 def corpus_token_stats(spark, sf_dir):
     """Corpus-level token statistics in ONE driver row: mean per-doc
     distinct-token count (reference stats.py avg-token semantics) and
     the q-gram Shannon entropy (weight-estimation input) — merged from
-    the r3 ``avg_token_count``/``ngram_entropy`` single-row queries to
-    free a registry slot inside the driver's 50-query window.
+    the r3 avg-token-count and n-gram-entropy single-row queries to free
+    a registry slot inside the driver's 50-query window.
 
-    r6: the avg and entropy lanes share ONE tokenization — the per-doc
-    distinct-token arrays are localCheckpoint'd (KB/row) and feed both
-    the avg(size) aggregate and the exploded frequency aggregate, where
-    the r3 shape ran the padded tokenizer over the corpus twice.  AQE
-    runs every exchange below a checkpoint when it is built, eager=False
-    or not: at sf0.1 on local[4] resplit adds a round-robin exchange here,
-    and building this query starts 1 Spark job beyond the parquet read."""
-    from pprl_spark.spark.stats import padded_qgram_tokens
-
-    docs = resplit(_load(spark, sf_dir, "documents"))
-    toks = docs.select(
-        padded_qgram_tokens(F.col("text"), 2, "_").alias("tokens")
-    ).localCheckpoint(eager=False)
-    avg = toks.agg(F.round(F.avg(F.size("tokens")), 6).alias("avg_tokens"))
-    freq = (
-        toks.select(F.explode("tokens").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    ent = freq.agg(
+    The corpus is tokenized once, into the frequency aggregate: a
+    document's padded q-grams are distinct, so Σ freq = Σ size(tokens),
+    and the mean is Σ freq over the non-NULL texts (a NULL text has NULL
+    tokens, which the mean skips).  H = log2(N) − (Σ f·log2 f)/N is one
+    aggregation, the oracle's formula, so the float path matches to well
+    past 6 dp."""
+    n_docs = _load(spark, sf_dir, "documents").agg(F.count("text").alias("__docs"))
+    return token_frequencies(spark, sf_dir).agg(
         F.sum("freq").alias("__n"),
         F.sum(F.col("freq") * F.log2("freq")).alias("__flogf"),
-    ).select(
-        F.round(F.log2(F.col("__n")) - F.col("__flogf") / F.col("__n"), 6).alias("entropy")
+    ).crossJoin(n_docs).select(
+        F.round(F.col("__n") / F.col("__docs"), 6).alias("avg_tokens"),
+        F.round(F.log2(F.col("__n")) - F.col("__flogf") / F.col("__n"), 6).alias("entropy"),
     )
-    return avg.crossJoin(ent)
 
 
 def contamination_report_query(spark, sf_dir):
@@ -334,7 +297,7 @@ def text_quality(spark, sf_dir):
     over a deterministically PII-augmented text (the raw corpus carries
     no emails/IPs, so the augmentation is what makes the redaction check
     non-trivial — each row plants one email, one IPv4, one phone)."""
-    from pprl_spark.spark.pii import pii_count_cols, redact_pii_col
+    from pprl_spark.spark.pii import pii_redaction
     from pprl_spark.spark.textstats import (
         bpe_ish_token_count,
         punct_ratio,
@@ -355,10 +318,8 @@ def text_quality(spark, sf_dir):
         F.lit(".7 or call 555-123-"),
         F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
     )
-    counts = pii_count_cols(aug)
-    n_pii = None
-    for c in counts.values():
-        n_pii = c if n_pii is None else (n_pii + c)
+    redacted, counts = pii_redaction(aug)
+    n_pii = sum(counts.values(), F.lit(0))
     # layered projection so the split/regexp subtrees evaluate ONCE:
     # quality_score reuses the token count and punct ratio computed for
     # their own output columns (CollapseProject keeps the layers apart —
@@ -369,7 +330,7 @@ def text_quality(spark, sf_dir):
         whitespace_token_count(F.col("text")).alias("n_tokens_ws"),
         punct_ratio(F.col("text")).alias("__punct"),
         n_pii.cast("long").alias("n_pii"),
-        F.md5(redact_pii_col(aug)).alias("redacted_fp"),
+        F.md5(redacted).alias("redacted_fp"),
     )
     return staged.select(
         "doc_id",
@@ -425,13 +386,12 @@ def fingerprint_jaccard(spark, sf_dir):
     )
     normalized = F.concat_ws(" ", words("text"))
     fp = docs.select("doc_id", F.md5(normalized).alias("fingerprint"))
-    # materialize the tokenization once: both self-join sides (and their
-    # differently-pruned exchanges) would otherwise re-run qgram_tokens
-    # over the whole corpus (same move as bm25_scores' tf aggregate).
+    # materialize the tokenization once for both self-join sides.
     # eager=False does not defer it: AQE runs every exchange below a
     # checkpoint when it is built (here resplit's round-robin one), so
-    # building this query starts 1 Spark job beyond the parquet read
-    # (sf0.1, local[4]).
+    # building this query starts 1 Spark job beyond the parquet read.
+    # Kept: it measured faster than a repartition("doc_id") whose reused
+    # exchange tokenizes once (the checkpoint A/B in CHANGES.md).
     toks = docs.select(
         "doc_id", qgram_tokens(F.col("text"), 3).alias("toks")
     ).localCheckpoint(eager=False)
@@ -827,7 +787,7 @@ def dedup_components(spark, sf_dir):
 def simhash_dup_pairs(spark, sf_dir):
     from pprl_spark.spark.dedup import simhash_pairs
 
-    docs = resplit(_load(spark, sf_dir, "documents"))
+    docs = _load(spark, sf_dir, "documents")  # the fingerprint UDF resplits it
     # 8 chunks of 8 bits: pigeonhole guarantees recall for hamming <= 7,
     # so the <= 6 threshold is exact (ADVICE r1); pushing it into
     # simhash_pairs switches it to chunk-pair keys
@@ -1496,8 +1456,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # quantile_sketches = kll + tdigest, transform_attributes =
     # date_time + number + mapping, pprl_mask_hardened = 3 hardener
     # chains (all 6 hardeners), pprl_mask_weighted = rbf + clkrbf,
-    # ann_topk = lsh + ivf, corpus_token_stats = avg_token_count +
-    # ngram_entropy.  The freed slots carry the r4 quality_filter and
+    # ann_topk = lsh + ivf, corpus_token_stats = avg token count +
+    # n-gram entropy.  The freed slots carry the r4 quality_filter and
     # contamination_report rows.  The multimodal block also moved ahead
     # of the heavy dedup/match queries in case the r3 cut was a time
     # budget rather than a row cap.

@@ -23,9 +23,8 @@ Spark-first shape — no Python in any hot path:
   before the explode, so no window shuffle over the token stream is
   ever needed.  The counts frame is the compacted intermediate (distinct
   grams, far smaller than the corpus) and is materialized with a
-  ``localCheckpoint`` — scoring joins it 2·(order−1)+1 times, and
-  without the materialization each join branch would re-count the whole
-  training corpus (same move as ``textstats.bm25_scores``).
+  ``localCheckpoint`` — scoring joins it 2·(order−1)+1 times (see
+  :func:`train_stupid_backoff` for why it stays).
 * **Scoring** explodes the eval corpus once and left-joins the counts
   frame per backoff level on the gram string.  Bigram+ levels are
   joins with no strategy hint: AQE picks broadcast or shuffle from each
@@ -50,7 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .session import resplit
-from .textstats import words
+from .textstats import _JAVA_WS, words
 
 __all__ = [
     "train_stupid_backoff",
@@ -134,11 +133,12 @@ def train_stupid_backoff(
     per order over the same positions frame, unioned — plus a marker row
     ``(0, '', N)`` carrying the total token count.  The result is
     materialized (``localCheckpoint``): scoring consumes it once per
-    backoff level and must not re-count the corpus per join.  Despite
-    ``eager=False`` the per-order aggregates' shuffle map stages run when
-    this is called (AQE runs every exchange below a checkpoint): building
-    ``lm_perplexity`` starts 5 Spark jobs beyond the parquet read (sf0.1,
-    local[4]).
+    backoff level.  Despite ``eager=False`` the per-order aggregates'
+    shuffle map stages run when this is called (AQE runs every exchange
+    below a checkpoint): building ``lm_perplexity`` starts 5 Spark jobs
+    beyond the parquet read.  Kept: the checkpoint-free plan, whose
+    reused exchanges share the aggregates, measured no faster (the
+    checkpoint A/B in CHANGES.md).
 
     ``hash_grams=True`` is the 100 TB shuffle-width knob: the ``gram``
     column becomes ``gram_hash`` (LONG, see :func:`_gram_key`), every
@@ -329,11 +329,11 @@ def score_text_local(
     ``(n_tokens, avg_logprob, perplexity)``, the same cascade as the
     distributed path (token loop accumulates in position order, matching
     the per-doc partial aggregate, so batch and streaming scores agree
-    to float rounding).  Token-less text returns the batch sentinels
-    ``(0, 0.0, -1.0)``."""
+    to float rounding; words split on ASCII whitespace, as ``words``).
+    Token-less text returns the batch sentinels ``(0, 0.0, -1.0)``."""
     import math
 
-    ws = [w for w in text.split() if w != ""] if text else []
+    ws = [w for w in _JAVA_WS.split(text) if w] if text else []
     if not ws:
         return 0, 0.0, -1.0
     n_total = float(counts["N"])

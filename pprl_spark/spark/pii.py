@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["PII_PATTERNS", "redact_pii_col", "pii_count_cols", "redact_pii"]
+__all__ = ["PII_PATTERNS", "pii_redaction", "redact_pii"]
 
 #: kind → RE2-compatible pattern, in application order (emails first:
 #: their local parts can contain digit runs the later patterns would
@@ -56,30 +56,22 @@ def _kinds(kinds: "list[str] | None") -> list[str]:
     return [k for k in PII_PATTERNS if k in kinds]
 
 
-def redact_pii_col(
+def pii_redaction(
     col: Column | str, kinds: "list[str] | None" = None, fmt: str = "<{kind}>"
-) -> Column:
-    """Text with every PII match replaced by ``fmt`` (default
-    ``<email>`` / ``<ipv4>`` / ``<ssn>`` / ``<phone>``), applied in
-    ``PII_PATTERNS`` order."""
+) -> "tuple[Column, dict[str, Column]]":
+    """``(redacted, counts)``: the text with every PII match replaced by
+    ``fmt`` (default ``<email>`` / ``<ipv4>`` / ``<ssn>`` / ``<phone>``),
+    applied in ``PII_PATTERNS`` order, and kind → match count under the
+    sequential semantics documented in the module docstring (each count
+    is taken after the earlier kinds were redacted, so the counts sum to
+    the replacement-token total)."""
     cur = F.col(col) if isinstance(col, str) else col
-    for kind in _kinds(kinds):
-        cur = F.regexp_replace(cur, PII_PATTERNS[kind], fmt.format(kind=kind))
-    return cur
-
-
-def pii_count_cols(
-    col: Column | str, kinds: "list[str] | None" = None, fmt: str = "<{kind}>"
-) -> "dict[str, Column]":
-    """kind → match count, under the sequential semantics documented in
-    the module docstring (counts sum to the replacement-token total)."""
-    cur = F.col(col) if isinstance(col, str) else col
-    out: dict[str, Column] = {}
+    counts: dict[str, Column] = {}
     for kind in _kinds(kinds):
         pat = PII_PATTERNS[kind]
-        out[kind] = F.size(F.regexp_extract_all(cur, F.lit(pat), F.lit(0)))
+        counts[kind] = F.size(F.regexp_extract_all(cur, F.lit(pat), F.lit(0)))
         cur = F.regexp_replace(cur, pat, fmt.format(kind=kind))
-    return out
+    return cur, counts
 
 
 def redact_pii(
@@ -94,9 +86,7 @@ def redact_pii(
     ``text_col``) plus, when ``with_counts``, one ``pii_<kind>`` int
     column per kind.  One map-only projection — composes with
     filter/dedup stages without adding a job boundary."""
-    out_col = out_col or text_col
-    res = df
+    redacted, counts = pii_redaction(text_col, kinds, fmt)
     if with_counts:
-        for kind, c in pii_count_cols(F.col(text_col), kinds, fmt).items():
-            res = res.withColumn(f"pii_{kind}", c)
-    return res.withColumn(out_col, redact_pii_col(F.col(text_col), kinds, fmt))
+        df = df.withColumns({f"pii_{kind}": c for kind, c in counts.items()})
+    return df.withColumn(out_col or text_col, redacted)

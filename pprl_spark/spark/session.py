@@ -10,6 +10,7 @@ boundary, and a shuffle-partition count sized to the parallelism.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -147,13 +148,27 @@ def get_spark(
     return spark
 
 
+# an exchange node in a physical plan's tree string ("Exchange
+# hashpartitioning(...)", "BroadcastExchange HashedRelationBroadcastMode(...)");
+# node names start their line, expressions follow them
+_EXCHANGE = re.compile(r"^[ :+|-]*(?:Broadcast)?Exchange\b", re.M)
+
+
 def resplit(df: DataFrame, floor: int | None = None) -> DataFrame:
     """Round-robin ``df`` up to ``floor`` partitions (default
     ``defaultParallelism``) ONLY when it has fewer: a small parquet table
     lands in 1-4 scan splits, which would serialize the expensive map-side
     work that follows (explode, md5, Arrow UDFs) on a few cores.  At
     production split counts this is a no-op; an unconditional repartition
-    would add a full-corpus shuffle and coalesce DOWN."""
+    would add a full-corpus shuffle and coalesce DOWN.
+
+    A plan with an exchange is returned unchanged, unprobed: under AQE,
+    ``df.rdd`` over an exchange runs the stages below it when the query
+    is built.  A shuffled plan's partition count is its shuffle's; a
+    broadcast join keeps its stream side's, so resplit that side before
+    the join.  Probing an exchange-free plan starts no job."""
+    if _EXCHANGE.search(df._jdf.queryExecution().executedPlan().toString()):
+        return df
     if floor is None:
         floor = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < floor:

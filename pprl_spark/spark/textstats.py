@@ -205,18 +205,6 @@ def lang_id_col(col: Column | str) -> Column:
     return F.when(col.isNull() | (col == ""), F.lit("und")).otherwise(picked)
 
 
-def _word_explode(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, term) rows — whitespace words, empties dropped, duplicates
-    kept (term frequency is the point)."""
-    # small-scan guard: the explode + downstream tf aggregation
-    # otherwise run on the scan's 1-4 splits
-    df = resplit(df)
-    return df.select(
-        F.col(id_col),
-        F.explode(words(text_col)).alias("term"),
-    )
-
-
 def tf_idf_terms(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
     """Per-(doc, term) TF-IDF: tf = raw in-document count,
@@ -229,7 +217,9 @@ def tf_idf_terms(df: DataFrame, id_col: str = "doc_id",
     on the tf rows, so the corpus is tokenized once and no second branch
     reads the aggregate; N is a scalar via a 1-row broadcast cross join.
     """
-    terms = _word_explode(df, id_col, text_col)
+    # small-scan guard: the explode + tf aggregation otherwise run on the
+    # scan's 1-4 splits
+    terms = resplit(df).select(F.col(id_col), F.explode(words(text_col)).alias("term"))
     tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     n_docs = df.select(F.count(F.lit(1)).alias("n_docs"))
     return (
@@ -259,13 +249,13 @@ def bm25_scores(
     """Okapi BM25 of a fixed query, scored over matching documents.
 
     score(d) = Σ_t idf(t) · tf(t,d)·(k1+1) / (tf(t,d) + k1·(1-b+b·|d|/avgdl))
-    with idf(t) = ln(1 + (N-df+0.5)/(df+0.5)).  The query term list is a
-    broadcast literal; the corpus is tokenized ONCE — document length,
-    per-term tf, and document frequency all derive from the same
-    materialized (id, term, tf) aggregate.  The materialization is
-    load-bearing: Catalyst prunes the consumers' columns differently, so
-    their exchange subtrees never canonicalize equal, exchange reuse does
-    not fire, and each branch would re-tokenize the whole corpus.
+    with idf(t) = ln(1 + (N-df+0.5)/(df+0.5)).  One per-document
+    projection, no explode: the row's words ``ws``, ``dl = size(ws)`` and,
+    per distinct query term, ``tf = dl - size(array_remove(ws, t))``
+    (codegen builtins, no per-term lambda).
+    Rows that share an id pool their counts in a per-id sum.  N and avgdl
+    (over documents with ≥1 word) and each term's df come from one
+    one-row aggregate of those per-id counts, broadcast onto them.
 
     Output contains ONE ROW PER DOCUMENT THAT MATCHES ≥1 QUERY TERM —
     documents containing none of the terms (or with empty text) produce
@@ -274,34 +264,36 @@ def bm25_scores(
     corpus size); to densify, left-join the corpus ids against this
     result and ``coalesce(bm25, 0.0)``.
     """
-    terms = _word_explode(df, id_col, text_col)
-    # eager=False does not make the checkpoint lazy: under AQE the
-    # aggregate's shuffle runs when this is called (building
-    # bm25_query_scores starts 2 Spark jobs beyond the parquet read, sf0.1,
-    # local[4]); only the final reduce waits for an action
-    all_tf = terms.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
-    doclen = all_tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-    stats = doclen.agg(
-        F.avg("dl").alias("avgdl"), F.count(F.lit(1)).alias("n_docs")
-    )
-    tf = all_tf.where(F.col("term").isin(query_terms))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        1
-        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    denom = F.col("tf") + k1 * (
-        1 - b + b * F.col("dl") / F.col("avgdl")
-    )
-    term_score = idf * F.col("tf") * (k1 + 1) / denom
-    return (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(doclen, id_col)
-        .crossJoin(F.broadcast(stats))
+    terms = list(dict.fromkeys(query_terms))
+    tfs = [f"__tf{i}" for i in range(len(terms))]
+    ws = resplit(df).select(id_col, words(text_col).alias("__ws"))
+    dl = F.array_size("__ws")
+    per_doc = (
+        ws.select(
+            id_col,
+            dl.alias("__dl"),
+            *[(dl - F.array_size(F.array_remove("__ws", t))).alias(c) for t, c in zip(terms, tfs)],
+        )
         .groupBy(id_col)
-        .agg(F.sum(term_score).alias("bm25"))
+        .agg(*[F.sum(c).alias(c) for c in ["__dl", *tfs]])
+        .where(F.col("__dl") > 0)
+    )
+    stats = per_doc.agg(
+        F.avg("__dl").alias("__avgdl"),
+        F.count(F.lit(1)).alias("__n"),
+        *[F.count_if(F.col(c) > 0).alias(f"__df{c}") for c in tfs],
+    )
+    score, matched = F.lit(0.0), F.lit(False)
+    for c in tfs:
+        tf, dfreq = F.col(c), F.col(f"__df{c}")
+        idf = F.log(1 + (F.col("__n") - dfreq + 0.5) / (dfreq + 0.5))
+        denom = tf + k1 * (1 - b + b * F.col("__dl") / F.col("__avgdl"))
+        score = score + F.when(tf > 0, idf * tf * (k1 + 1) / denom).otherwise(0.0)
+        matched = matched | (tf > 0)
+    return (
+        per_doc.crossJoin(F.broadcast(stats))
+        .where(matched)
+        .select(id_col, score.alias("bm25"))
     )
 
 

@@ -79,3 +79,48 @@ def test_queries_runnable_at_sf0001(spark):
         df = fn(spark, SF1)
         assert df.columns, f"{name} returned no columns"
         df.limit(5).collect()
+
+
+# queries whose build starts Spark jobs beyond the parquet schema reads,
+# and why; every other query must start none
+BUILD_JOBS_ALLOWED = {
+    "hll_distinct_users": "sketch states are merged on the driver",
+    "theta_user_overlap": "sketch states are merged on the driver",
+    "cms_event_type_counts": "sketch states are merged on the driver",
+    "quantile_sketches": "sketch states are merged on the driver",
+    "bloom_customer_membership": "sketch states are merged on the driver",
+    "ann_topk": "the IVF build checks for empty centroids",
+    "documents_split": "chunk offsets are a driver-side prefix sum",
+    "dedup_components": "connected components runs its rounds eagerly",
+    "lm_perplexity": "the counts checkpoint measured faster than reused exchanges",
+    "fingerprint_jaccard": "the token checkpoint measured faster than a keyed repartition",
+}
+
+
+def test_building_a_query_starts_only_parquet_schema_reads(spark):
+    """Building each query's DataFrame, with no action on it, starts no
+    Spark job other than a parquet schema read, except for the listed
+    queries, which each still need one."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        for name, fn in E.queries().items():
+            sc.setJobGroup(f"build:{name}", name)
+            fn(spark, SF1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    started = {}
+    for name in E.queries():
+        stages = [
+            tracker.getStageInfo(s).name
+            for j in tracker.getJobIdsForGroup(f"build:{name}")
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        other = [s for s in stages if not s.startswith("parquet at ")]
+        if other:
+            started[name] = other
+    assert set(started) == set(BUILD_JOBS_ALLOWED), {
+        q: started.get(q) for q in set(started) ^ set(BUILD_JOBS_ALLOWED)
+    }

@@ -366,3 +366,22 @@ def test_boilerplate_line_stats_hints_no_broadcast(spark):
     with _no_auto_broadcast(spark):
         plan = _final_plan_after_collect(boilerplate_line_stats(docs, domain_col="source"))
     assert "BroadcastExchange" not in plan, plan
+
+
+def test_bm25_scores_is_one_projection_and_a_one_row_broadcast(spark):
+    """``bm25_scores`` counts words and query terms in one per-document
+    projection: no explode, no checkpointed frame, and its one join is
+    the broadcast of the one-row corpus statistics."""
+    plan = _final_plan_after_collect(E.bm25_query_scores(spark, SF))
+    assert "Generate" not in plan and "Scan ExistingRDD" not in plan, plan
+    joins = [line for line in plan.splitlines() if "Join" in line]
+    assert len(joins) == 1 and "BroadcastNestedLoopJoin BuildRight, Cross" in joins[0], plan
+    assert plan.count("BroadcastExchange") == 1, plan
+
+
+def test_corpus_token_stats_tokenizes_once(spark):
+    """Both statistics come from one explode of the padded q-grams, in
+    the query's own plan rather than a checkpointed frame."""
+    plan = _final_plan_after_collect(E.corpus_token_stats(spark, SF))
+    assert plan.count("Generate ") == 1 and "Scan ExistingRDD" not in plan, plan
+    assert plan.count("array_distinct(") == 1, plan

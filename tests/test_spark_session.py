@@ -30,6 +30,27 @@ def test_resplit_repartitions_only_scans_below_the_floor(spark):
     assert resplit(wider, floor) is wider
 
 
+def test_resplit_returns_a_plan_with_an_exchange_unprobed(spark):
+    """A shuffled or broadcast-joined frame is returned as it is, and
+    resplit starts no job on it: ``df.rdd`` over an exchange would run
+    the stages below it."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    scan = spark.read.parquet(f"{SF}/documents.parquet")
+    shuffled = scan.groupBy((F.col("doc_id") % 3).alias("k")).count()
+    joined = scan.join(F.broadcast(scan.select("doc_id", F.col("text").alias("t"))), "doc_id")
+    sc.setJobGroup("resplit:exchanges", "resplit over exchanges")
+    try:
+        assert resplit(shuffled, 64) is shuffled
+        assert resplit(joined, 64) is joined
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("resplit:exchanges")) == []
+
+
 def test_get_spark_defaults_fit_the_host(monkeypatch):
     """Without overrides, ``local[N]`` takes the CPUs the process may run
     on and the driver heap the smaller of 24g and half the physical

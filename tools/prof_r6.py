@@ -167,7 +167,7 @@ if "textq" in SECTIONS:
     t("textq: bpe tokens", docs.select("doc_id", bpe_ish_token_count(F.col("text")).alias("a")))
     t("textq: punct ratio", docs.select("doc_id", punct_ratio(F.col("text")).alias("a")))
     t("textq: quality score", docs.select("doc_id", quality_score(F.col("text")).alias("a")))
-    from pprl_spark.spark.pii import pii_count_cols, redact_pii_col
+    from pprl_spark.spark.pii import pii_redaction
 
     aug = F.concat(
         F.col("text"),
@@ -177,11 +177,9 @@ if "textq" in SECTIONS:
         F.lit(".7 or call 555-123-"),
         F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
     )
-    counts = pii_count_cols(aug)
-    n_pii = None
-    for c in counts.values():
-        n_pii = c if n_pii is None else (n_pii + c)
+    redacted, counts = pii_redaction(aug)
+    n_pii = sum(counts.values(), F.lit(0))
     t("textq: pii counts", docs.select("doc_id", n_pii.alias("a")))
-    t("textq: redact+md5", docs.select("doc_id", F.md5(redact_pii_col(aug)).alias("a")))
+    t("textq: redact+md5", docs.select("doc_id", F.md5(redacted).alias("a")))
 
 spark.stop()
