@@ -52,6 +52,10 @@ def _default_driver_memory() -> str:
     return f"{min(24 << 10, physical_mb // 2)}m"
 
 
+# a JVM option that selects (or deselects) a garbage collector
+_GC_FLAG = re.compile(r"-XX:[+-]Use\w+GC\b")
+
+
 def _conf(app_name: str, master: str, shuffle_partitions: int | None,
           extra_conf: dict | None) -> dict:
     """The conf ``get_spark`` starts its session with; ``extra_conf`` wins."""
@@ -99,6 +103,18 @@ def _conf(app_name: str, master: str, shuffle_partitions: int | None,
         # starts none and forks with its main thread only.
         conf["spark.python.daemon.module"] = "pprl_spark._daemon"
         conf["spark.executorEnv.JE_ARROW_MALLOC_CONF"] = "background_thread:false"
+        # The one local JVM is driver and executor of a batch engine with
+        # no pause-time target, so it runs the throughput collector: G1's
+        # remembered sets and region bookkeeping are the largest non-heap
+        # item we can drop (native-memory tracking, 2g heap: 125 → 93 MB
+        # committed under GC).  perfbench `profile` on 4 vCPUs, 10
+        # alternating pairs: peak_rss_mb median 3,043 → 2,960 MB, all of it
+        # the JVM's, cpu_s flat or lower.  A JVM given two collectors
+        # refuses to start, so a caller whose extraJavaOptions pick one gets
+        # only theirs (a caller's defaultJavaOptions replace ours like any
+        # extra_conf key).
+        if not _GC_FLAG.search((extra_conf or {}).get("spark.driver.extraJavaOptions", "")):
+            conf["spark.driver.defaultJavaOptions"] = "-XX:+UseParallelGC"
     # Spark keeps one Python worker pool per (exec, module, env vars).  The
     # SQL runners (Arrow UDFs, mapInPandas, applyInPandas) add
     # SPARK_SIMPLIFIED_TRACEBACK=1 while its conf is on (the default);
@@ -128,6 +144,18 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """A session with the package's defaults (see ``_conf``); ``master``
+    defaults to ``local[<CPUs>]``, and every ``extra_conf`` key wins.
+
+    A local master's JVM runs the parallel (throughput) collector,
+    ``-XX:+UseParallelGC`` in ``spark.driver.defaultJavaOptions``.  To
+    run another, name it in ``extra_conf``'s
+    ``spark.driver.extraJavaOptions`` (e.g. ``-XX:+UseG1GC``) or replace
+    ``spark.driver.defaultJavaOptions`` there.  A collector set anywhere
+    else (``spark-defaults.conf``, spark-submit's ``--driver-java-options``
+    or ``SPARK_SUBMIT_OPTS``) must come through ``extra_conf`` instead: a
+    JVM given two collectors does not start, and ours replaces
+    ``spark-defaults.conf``'s ``spark.driver.defaultJavaOptions``."""
     master = master or f"local[{_default_cpus()}]"
     builder = SparkSession.builder
     for key, value in _conf(app_name, master, shuffle_partitions, extra_conf).items():

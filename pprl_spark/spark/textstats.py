@@ -71,8 +71,10 @@ def words(col: Column | str) -> Column:
     ``\\s+`` split (ASCII whitespace only), empty strings dropped.  Every
     word-level signal tokenizes through this one expression (callers that
     case-fold pass ``F.lower(col)``); Python UDFs that must agree with it
-    split with :data:`_JAVA_WS`."""
-    return F.filter(F.split(_as_col(col), r"\s+"), lambda w: w != "")
+    split with :data:`_JAVA_WS`.  ``array_remove`` rather than a
+    ``filter`` lambda: a higher-order function keeps its projection out
+    of whole-stage codegen."""
+    return F.array_remove(F.split(_as_col(col), r"\s+"), "")
 
 
 # ``words`` in Python: Java regex \s is ASCII-only ([ \t\n\x0b\f\r]),

@@ -36,6 +36,23 @@ def _random_splits(arr, n_splits, seed):
     return np.array_split(arr[perm], n_splits)
 
 
+def _rank_error(sorted_data, est, q):
+    """Distance of ``q`` from the true rank of ``est``; on ties that rank is
+    the interval [searchsorted left, searchsorted right] / n."""
+    n = len(sorted_data)
+    lo = np.searchsorted(sorted_data, est, side="left") / n
+    hi = np.searchsorted(sorted_data, est, side="right") / n
+    return max(lo - q, q - hi, 0.0)
+
+
+def _tree_merge(parts):
+    """Merge ``parts`` pairwise, level by level, as a reduce tree does."""
+    while len(parts) > 1:
+        paired = [a.merge(b) for a, b in zip(parts[::2], parts[1::2])]
+        parts = paired + parts[len(paired) * 2:]
+    return parts[0]
+
+
 # ---------------------------------------------------------------- HLL
 
 class TestHLL:
@@ -223,6 +240,40 @@ class TestKLL:
                 true_rank = np.searchsorted(sorted_data, est) / n
                 assert abs(true_rank - q) <= 4 * merged.epsilon
 
+    @staticmethod
+    def _partials(chunks, seed):
+        parts = []
+        for i, chunk in enumerate(chunks):
+            part = KLLSketch(k=200, seed=seed * 1000 + i)
+            part.update(chunk)
+            parts.append(part)
+        return parts
+
+    def test_merge_of_contiguous_sorted_ranges_within_bound(self):
+        """64 partials, each over one contiguous range of the sorted values
+        (tied integers), merged in ascending and in descending order."""
+        n = 40_000
+        sorted_data = np.sort(np.random.default_rng(11).integers(0, 2_000, n).astype(float))
+        for order in (1, -1):
+            merged = KLLSketch(k=200, seed=11)
+            for part in self._partials(np.array_split(sorted_data, 64)[::order], seed=order + 2):
+                merged.merge(part)
+            assert merged.n == n
+            for q in (0.01, 0.1, 0.5, 0.9, 0.99):
+                assert _rank_error(sorted_data, merged.quantile(q), q) <= 4 * merged.epsilon, (order, q)
+
+    def test_pairwise_tree_merge_within_bound(self):
+        """64 partials merged pairwise, level by level: over random splits
+        and over contiguous sorted ranges of the same (tied) values."""
+        n = 40_000
+        data = np.random.default_rng(12).exponential(size=n).round(2)
+        sorted_data = np.sort(data)
+        for chunks in (_random_splits(data, 64, seed=12), np.array_split(sorted_data, 64)):
+            merged = _tree_merge(self._partials(chunks, seed=12))
+            assert merged.n == n
+            for q in (0.01, 0.1, 0.5, 0.9, 0.99):
+                assert _rank_error(sorted_data, merged.quantile(q), q) <= 4 * merged.epsilon, q
+
     def test_rank_query(self):
         data = np.arange(10_000, dtype=float)
         sk = KLLSketch(k=256)
@@ -272,6 +323,42 @@ class TestTDigest:
                 est = merged.quantile(q)
                 true_rank = np.searchsorted(sorted_data, est) / n
                 assert abs(true_rank - q) <= tol
+
+    _TOLERANCE = ((0.5, 0.02), (0.05, 0.01), (0.95, 0.01), (0.01, 0.005), (0.99, 0.005))
+
+    @staticmethod
+    def _partials(chunks):
+        parts = []
+        for chunk in chunks:
+            part = TDigest(compression=100)
+            part.update(chunk)
+            parts.append(part)
+        return parts
+
+    def test_merge_of_contiguous_sorted_ranges_within_bound(self):
+        """64 partials, each over one contiguous range of the sorted values
+        (tied integers), merged in ascending and in descending order."""
+        n = 30_000
+        sorted_data = np.sort(np.random.default_rng(13).integers(0, 2_000, n).astype(float))
+        for order in (1, -1):
+            merged = TDigest(compression=100)
+            for part in self._partials(np.array_split(sorted_data, 64)[::order]):
+                merged.merge(part)
+            assert merged.n == n
+            for q, tol in self._TOLERANCE:
+                assert _rank_error(sorted_data, merged.quantile(q), q) <= tol, (order, q)
+
+    def test_pairwise_tree_merge_within_bound(self):
+        """64 partials merged pairwise, level by level: over random splits
+        and over contiguous sorted ranges of the same (tied) values."""
+        n = 30_000
+        data = np.random.default_rng(14).normal(size=n).round(2)
+        sorted_data = np.sort(data)
+        for chunks in (_random_splits(data, 64, seed=14), np.array_split(sorted_data, 64)):
+            merged = _tree_merge(self._partials(chunks))
+            assert merged.n == n
+            for q, tol in self._TOLERANCE:
+                assert _rank_error(sorted_data, merged.quantile(q), q) <= tol, q
 
     def test_compression_bounds_centroids(self):
         sk = TDigest(compression=100)

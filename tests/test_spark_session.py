@@ -208,17 +208,69 @@ def test_get_spark_sets_the_preloaded_daemon_for_local_masters_only():
     """A local master forks its Python workers from ``pprl_spark._daemon``;
     a cluster master keeps ``pyspark.daemon``, because its executors may
     get the package only through ``--py-files``, which a daemon cannot see
-    when it starts.  The caller's ``extra_conf`` still wins."""
+    when it starts.  A local master's JVM also runs the parallel
+    collector.  The caller's ``extra_conf`` still wins."""
     for local in ("local", "local[2]", "local[*]", "local[4,2]"):
         conf = S._conf("t", local, None, None)
         assert conf["spark.python.daemon.module"] == "pprl_spark._daemon", local
         assert conf["spark.executorEnv.JE_ARROW_MALLOC_CONF"] == "background_thread:false", local
+        assert conf["spark.driver.defaultJavaOptions"] == "-XX:+UseParallelGC", local
     for cluster in ("spark://head:7077", "yarn", "k8s://https://api:6443", "local-cluster[2,1,1024]"):
         conf = S._conf("t", cluster, None, None)
         assert "spark.python.daemon.module" not in conf, cluster
         assert "spark.executorEnv.JE_ARROW_MALLOC_CONF" not in conf, cluster
+        assert "spark.driver.defaultJavaOptions" not in conf, cluster
     stock = {"spark.python.daemon.module": "pyspark.daemon"}
     assert S._conf("t", "local[2]", None, stock)["spark.python.daemon.module"] == "pyspark.daemon"
+
+
+def test_get_spark_leaves_the_collector_to_a_caller_who_picks_one():
+    """A JVM given two collectors refuses to start, so a collector in the
+    caller's ``spark.driver.extraJavaOptions`` leaves ours out; other
+    driver options keep it, and the caller's own
+    ``spark.driver.defaultJavaOptions`` replaces it."""
+    extra = {"spark.driver.extraJavaOptions": "-XX:+UseG1GC -Xss4m"}
+    conf = S._conf("t", "local[2]", None, extra)
+    assert "spark.driver.defaultJavaOptions" not in conf
+    assert conf["spark.driver.extraJavaOptions"] == "-XX:+UseG1GC -Xss4m"
+    for options in ("-Xss4m", "-XX:+UseStringDeduplication", "-XX:+UseGCOverheadLimit"):
+        conf = S._conf("t", "local[2]", None, {"spark.driver.extraJavaOptions": options})
+        assert conf["spark.driver.defaultJavaOptions"] == "-XX:+UseParallelGC", options
+    for options in ("-XX:+UseSerialGC", "-Xss4m -XX:-UseParallelGC", "-XX:+UseZGC -Xss4m"):
+        conf = S._conf("t", "local[2]", None, {"spark.driver.extraJavaOptions": options})
+        assert "spark.driver.defaultJavaOptions" not in conf, options
+    own = {"spark.driver.defaultJavaOptions": "-XX:+UseSerialGC"}
+    assert S._conf("t", "local[2]", None, own)["spark.driver.defaultJavaOptions"] == "-XX:+UseSerialGC"
+
+
+def test_shared_test_session_runs_the_parallel_collector(spark):
+    """The suite's ``get_spark`` session runs its JVM on ParallelGC,
+    whose young and old collectors are ``PS Scavenge`` and
+    ``PS MarkSweep``."""
+    beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    assert sorted(bean.getName() for bean in beans) == ["PS MarkSweep", "PS Scavenge"]
+
+
+_CALLER_COLLECTOR = """
+import json
+from pprl_spark.spark.session import get_spark
+
+spark = get_spark(master="local[2]", extra_conf={"spark.ui.showConsoleProgress": "false",
+                                                 "spark.driver.extraJavaOptions": "-XX:+UseG1GC"})
+beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+print(json.dumps({"collectors": sorted(bean.getName() for bean in beans),
+                  "rows": spark.range(0, 100, 1, 2).count()}))
+spark.stop()
+"""
+
+
+def test_get_spark_starts_with_a_collector_the_caller_picks():
+    """``extra_conf`` selecting G1 starts a session (not one JVM given
+    two collectors) that runs G1."""
+    got = _run_session_script(_CALLER_COLLECTOR)
+    assert got["rows"] == 100, got
+    assert any(name.startswith("G1 ") for name in got["collectors"]), got
+    assert not any(name.startswith("PS ") for name in got["collectors"]), got
 
 
 _PRELOADED_DAEMON = _PROC_WALK + """
